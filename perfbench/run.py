@@ -89,8 +89,7 @@ def run(args) -> dict:
         finally:
             common.stop_spark(spark)
     summary = workload.summary()
-    values = {"pass_s": summary["pass_s"], "op_p50_s": summary["op_p50_s"],
-              "setup_s": setup_s}
+    values = {"pass_s": summary["pass_s"], "setup_s": setup_s}
     attempted = workload.attempted() + checked
     summary.update(peak_rss_mb=rss.peak_mb, setup_s=setup_s,
                    session_s=session_s,
