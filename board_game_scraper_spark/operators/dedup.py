@@ -3,9 +3,15 @@
 Beyond the reference's key-based dedup (A1 merge.py:202-208 / F6 URL
 dedup), a 100 TB corpus pipeline needs *content* dedup.  All operators
 work on a DataFrame with (id_col, text_col) and stay JVM-side (built-in
-functions) except where noted; the LSH band join is the scale path —
-candidate pairs come from equi-joins on band keys, never an O(n²)
-cross join.
+functions, no UDF); the LSH path is the scale path — candidate pairs
+come from grouping on band keys, never an O(n²) cross join.  These are
+the only implementations: the oracle-checked queries in ``queries.py``
+call them with the oracle's sizes.
+
+One portable hash: every content hash is ``h60``, the low 60 bits of
+md5, and band keys are md5 hex strings.  DuckDB computes both
+bit-exactly (``('0x' || substr(md5(x), 1, 15))::BIGINT`` and ``md5``),
+so the oracle SQL reproduces every fingerprint, signature and bucket.
 
 Evaluation-count discipline (guide §1.2 "per-task work", round 7): the
 tokenizer split() and the shingle array are materialized as real
@@ -14,55 +20,53 @@ HOF lambdas re-evaluate their body per element and CollapseProject
 inlines a non-cheap expression referenced once syntactically into the
 lambda — the old inline formulation re-ran the regex split 3x per
 shingle and the whole shingle build once per MinHash permutation
-(measured 24x on the md5 oracle twin of minhash_band).  Signatures are
-likewise computed in ONE pass over the shingles (per shingle all salted
-hashes at once, folded with an elementwise running min — min commutes
-with the fold, so the result equals the per-perm array_min exactly).
+(measured 24x on minhash_band).  Signatures are likewise computed in
+ONE pass over the shingles (per shingle all salted hashes at once,
+folded with an elementwise running min — min commutes with the fold,
+so the result equals the per-perm array_min exactly).
 
 Operators:
 - exact_dedup            md5 hash groupBy (exact duplicates)
-- simhash                64-bit SimHash from token hashes (Charikar)
-- minhash_signatures     K-permutation MinHash via xxhash64(salt+shingle)
-- lsh_bands              banding of the signature for bucket join
-- near_dup_pairs         candidate pairs from shared bands + verified
-                         n-gram Jaccard similarity
+- shingles               k-word shingles over materialized tokens
+- simhash                ``bits``-bit SimHash from token hashes (Charikar)
+- minhash_signatures     ``num_perm`` salted-h60 MinHash signature
+- lsh_bands              banding of the signature into band keys
+- near_dup_pairs         candidate pairs from shared band keys +
+                         verified shingle Jaccard
+- dedup_keep_first       drop every near-dup of a lower id
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _MAX_LONG = (1 << 63) - 1
+
+
+def h60(col):
+    """Low-60-bit md5 hash as a long, reproducible in DuckDB via
+    ``('0x' || substr(md5(x), 1, 15))::BIGINT``."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def tokens_col(text_col):
     return F.split(F.trim(F.lower(text_col)), r"\s+")
 
 
-def shingles_col(text_col, k: int = 3):
-    """k-word shingles as an array column (JVM-side HOFs, no UDF).
+def shingles_from_toks(k: int = 3):
+    """k-word shingles from a MATERIALIZED ``toks`` array column.
 
-    NOTE: inline form — every element_at re-evaluates the split.  Hot
-    paths should materialize tokens first and use
-    ``shingles_from_toks`` (see module docstring)."""
-    toks = tokens_col(text_col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-
-    def make(i):
-        return F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(k)]
-        )
-
-    return F.transform(idx, make)
-
-
-def shingles_from_toks(toks_name: str = "_toks", k: int = 3):
-    """k-word shingles from a MATERIALIZED token-array column.  The
-    multiple syntactic references to the column keep CollapseProject
-    from substituting the split back into the lambda."""
-    tk = F.col(toks_name)
+    The tokenizer split() must be a real column, not an inline
+    expression: interpreted HOF lambdas re-evaluate their body per
+    element, and CollapseProject inlines a non-cheap expression into a
+    lambda when it is referenced once syntactically — so an inline
+    split() runs 3x per shingle (measured 24x slowdown of minhash_band
+    at sf0.1: 7.2s vs 0.30s).  The k+1 syntactic references to ``toks``
+    here (size + k element_at) keep CollapseProject from substituting
+    the split back in (it refuses to duplicate non-cheap expressions,
+    SPARK-36718)."""
+    tk = F.col("toks")
     idx = F.sequence(F.lit(1), F.greatest(F.size(tk) - (k - 1), F.lit(1)))
     return F.transform(
         idx,
@@ -70,6 +74,15 @@ def shingles_from_toks(toks_name: str = "_toks", k: int = 3):
             " ", *[F.element_at(tk, i + j) for j in range(k)]
         ),
     )
+
+
+def shingles(df: DataFrame, id_col: str, text_col: str,
+             k: int = 3) -> DataFrame:
+    """(id, sh): k-word shingles per doc, tokens materialized first.
+    Never empty: split('') yields [''], and element_at past the end is
+    NULL, which concat_ws skips."""
+    tdf = df.select(F.col(id_col), tokens_col(F.col(text_col)).alias("toks"))
+    return tdf.select(F.col(id_col), shingles_from_toks(k).alias("sh"))
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -87,23 +100,24 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
             bits: int = 64) -> DataFrame:
     """SimHash: sign-aggregate of per-token hash bits.
 
-    Pure built-ins: per token t, xxhash64(t) contributes +1/-1 per bit;
-    the fingerprint bit b is 1 iff the sum over tokens is >= 0.  One
-    xxhash64 per distinct token (bound once via a 1-element transform
+    Pure built-ins: per distinct token t, h60(t) contributes +1/-1 per
+    bit; the fingerprint bit b is 1 iff the sum over tokens is >= 0.
+    One md5 per distinct token (bound once via a 1-element transform
     input — HOF inputs are evaluated once, lambda bodies per element),
     its ``bits`` ±1 contributions unrolled into an array, and a single
     aggregate() keeps the running sums elementwise — same sums in the
     same order as the per-bit formulation, so identical fingerprints.
+    Bits 60 and up of h60 are always 0, so those fingerprint bits are 0.
     """
     tdf = df.select(
         F.col(id_col),
-        F.array_distinct(tokens_col(F.col(text_col))).alias("_toks"),
+        F.array_distinct(tokens_col(F.col(text_col))).alias("toks"),
     )
 
     def contrib(t):
         return F.element_at(
             F.transform(
-                F.array(F.xxhash64(t)),
+                F.array(h60(t)),
                 lambda h: F.array(
                     *[
                         F.shiftright(h, b).bitwiseAND(F.lit(1)).cast("int")
@@ -117,16 +131,16 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
         )
 
     sums = F.aggregate(
-        F.col("_toks"),
+        F.col("toks"),
         F.array_repeat(F.lit(0), bits),
         lambda acc, t: F.zip_with(acc, contrib(t), lambda a, b: a + b),
     )
-    sdf = tdf.select(F.col(id_col), sums.alias("_sums"))
+    sdf = tdf.select(F.col(id_col), sums.alias("sums"))
     fingerprint = None
     for b in range(bits):
         # bit 63 is the sign bit of int64: its contribution is -2^63
         term = F.when(
-            F.element_at(F.col("_sums"), b + 1) >= 0,
+            F.element_at(F.col("sums"), b + 1) >= 0,
             F.lit(1 << b if b < 63 else -(1 << 63)).cast("long"),
         ).otherwise(F.lit(0).cast("long"))
         fingerprint = term if fingerprint is None else fingerprint + term
@@ -135,20 +149,18 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
 
 def _minhash_fold(num_perm: int):
     """MinHash signature from a materialized ``sh`` shingle column in
-    one pass: per shingle all num_perm salted hashes, elementwise
-    running min (shingle arrays are never empty — split('') yields ['']
-    — so the max-long seed never survives)."""
+    one pass: per shingle all num_perm salted hashes
+    h60("<p>:<shingle>"), elementwise running min (shingle arrays are
+    never empty, so the max-long seed never survives)."""
     return F.aggregate(
         F.col("sh"),
         F.array_repeat(F.lit(_MAX_LONG).cast("long"), num_perm),
         lambda acc, s: F.zip_with(
             acc,
-            F.array(
-                *[
-                    F.xxhash64(F.lit(str(p)), s)
-                    for p in range(num_perm)
-                ]
-            ),
+            # unrolled literal salts: concat("p:", s) builds the same md5
+            # input bytes as concat(cast(p), ":", s)
+            F.array(*[h60(F.concat(F.lit(f"{p}:"), s))
+                      for p in range(num_perm)]),
             lambda a, b: F.least(a, b),
         ),
     )
@@ -156,79 +168,53 @@ def _minhash_fold(num_perm: int):
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        num_perm: int = 16, shingle_k: int = 3) -> DataFrame:
-    """MinHash signature: min over shingles of xxhash64(perm_salt, shingle)
+    """(id, signature): min over shingles of h60(perm_salt, shingle)
     for each of num_perm salted hash functions — all JVM-side."""
-    tdf = df.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
-    )
-    sh = tdf.select(
-        F.col(id_col), shingles_from_toks(k=shingle_k).alias("sh")
-    )
-    return sh.select(
+    return shingles(df, id_col, text_col, shingle_k).select(
         F.col(id_col), _minhash_fold(num_perm).alias("signature")
+    )
+
+
+def _band_keys(sig, bands: int, rows_per_band: int):
+    """Array of ``bands`` band keys: md5 of the band's signature values
+    joined with ':'."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.md5(
+            F.concat_ws(
+                ":",
+                F.slice(sig, b * rows_per_band + 1, rows_per_band)
+                .cast("array<string>"),
+            )
+        ),
     )
 
 
 def lsh_bands(signatures: DataFrame, id_col: str,
               bands: int = 4, rows_per_band: int = 4) -> DataFrame:
     """Band the signature: (id, band, band_key).  Docs sharing a
-    (band, band_key) are near-dup candidates — found by equi-join, the
-    only approach that survives 10^10 docs."""
-    out = signatures.select(
+    band_key are near-dup candidates — found by grouping, the only
+    approach that survives 10^10 docs."""
+    return signatures.select(
         F.col(id_col),
         F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.concat_ws(
-                        ":",
-                        F.slice(
-                            F.col("signature"),
-                            b * rows_per_band + 1,
-                            rows_per_band,
-                        ).cast("array<string>"),
-                    )
-                ),
-            )
+            _band_keys(F.col("signature"), bands, rows_per_band)
         ).alias("band", "band_key"),
     )
-    return out
 
 
-def ngram_jaccard(a_shingles, b_shingles):
-    """Jaccard over shingle sets (array columns)."""
-    inter = F.size(F.array_intersect(a_shingles, b_shingles))
-    union = F.size(F.array_union(a_shingles, b_shingles))
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+def bucket_pairs(keyed: DataFrame, id_col: str, *keys: str) -> DataFrame:
+    """Distinct id pairs (a < b) sharing at least one bucket ``keys``.
 
-
-def near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.7,
-    num_perm: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Near-duplicate pairs: LSH candidate generation + exact verify.
-
-    1. signatures → bands → GROUP on (band, band_key) and expand
-       ordered in-bucket pairs (a self-join would compute the whole
-       signature pipeline twice — broadcast build side + stream side;
-       grouping shuffles only (band, band_key, id) once and the per-row
-       memory stays O(bucket) via posexplode).  Dedup to one row per
-       (a, b) pair.
-    2. verify with exact shingle Jaccard; keep >= threshold.
-    The verify join re-attaches shingles by id — two broadcast-able or
-    shuffle-hash joins, no cross product anywhere.
-    """
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, shingle_k)
-    banded = lsh_bands(sigs, id_col, bands, num_perm // bands)
-    buckets = banded.groupBy("band", "band_key").agg(
+    Grouping instead of a self-join: the join computed the whole
+    bucketing pipeline twice (broadcast build side + stream side, no
+    exchange reuse).  One shuffle of (keys, id), sorted bucket members,
+    ordered in-bucket pairs via posexplode (per-row memory stays
+    O(bucket)); the pair set equals the self-join's."""
+    buckets = keyed.groupBy(*keys).agg(
         F.array_sort(F.collect_list(id_col)).alias("ids")
     )
-    cand = (
+    return (
         buckets.where(F.size("ids") >= 2)
         .select("ids", F.posexplode("ids").alias("i", "a"))
         .select(
@@ -240,27 +226,51 @@ def near_dup_pairs(
         .where(F.col("a") < F.col("b"))
         .distinct()
     )
-    tdf = df.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
+
+
+def near_dup_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float = 0.7,
+    num_perm: int = 16,
+    bands: int = 4,
+    shingle_k: int = 3,
+) -> DataFrame:
+    """Near-duplicate pairs (a, b, jaccard): LSH candidates + exact
+    verify.
+
+    1. shingles → signatures → band keys; candidate pairs are docs
+       sharing a band_key (``bucket_pairs``).
+    2. verify with exact shingle Jaccard (rounded to 4 places); keep
+       >= threshold.  The verify joins re-attach shingles by id — no
+       cross product anywhere.
+    """
+    sh = shingles(df, id_col, text_col, shingle_k)
+    sig = sh.select(F.col(id_col), _minhash_fold(num_perm).alias("sig"))
+    banded = sig.select(
+        F.col(id_col),
+        F.explode(
+            _band_keys(F.col("sig"), bands, num_perm // bands)
+        ).alias("band_key"),
     )
-    sh = tdf.select(
-        F.col(id_col), shingles_from_toks(k=shingle_k).alias("sh")
-    )
-    verified = (
-        cand.join(sh.select(F.col(id_col).alias("a"),
-                            F.col("sh").alias("sh_a")), "a")
+    return (
+        bucket_pairs(banded, id_col, "band_key")
+        .join(sh.select(F.col(id_col).alias("a"),
+                        F.col("sh").alias("sh_a")), "a")
         .join(sh.select(F.col(id_col).alias("b"),
                         F.col("sh").alias("sh_b")), "b")
         .select(
             "a",
             "b",
-            F.round(ngram_jaccard(F.col("sh_a"), F.col("sh_b")), 4).alias(
-                "jaccard"
-            ),
+            F.round(
+                F.size(F.array_intersect("sh_a", "sh_b"))
+                / F.size(F.array_union("sh_a", "sh_b")),
+                4,
+            ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
-    return verified
 
 
 def dedup_keep_first(df: DataFrame, id_col: str, text_col: str,

@@ -1,27 +1,37 @@
 """Similarity search over embedding columns (training-pipeline additions).
 
-Works on DataFrames with (id_col, vec_col: array<float|double>).  Two
-paths:
+Works on DataFrames with (id_col, vec_col: array<float|double>):
 
-- ``cosine_topk``      exact brute force — per-row dot products via JVM
-                       HOFs (zip_with + aggregate), distributed top-k via
-                       orderBy+limit (TakeOrderedAndProject).  The
-                       correctness baseline.
-- ``ivf_topk``         IVF-style scale path: vectors are bucketed by
-                       nearest centroid (coarse quantizer); a query only
-                       scans its ``nprobe`` closest buckets.  At 10^10
-                       vectors the probe is a partition-pruned scan of
-                       nprobe/nlist of the data instead of 100%.
+- ``cosine_topk``         exact brute force — per-row dot products via
+                          JVM HOFs (zip_with + aggregate), distributed
+                          top-k via orderBy+limit (TakeOrderedAndProject).
+                          The correctness baseline.
+- ``embedding_near_dup``  near-duplicate pairs by multi-table
+                          random-hyperplane LSH (``hyperplane_buckets``)
+                          + exact cosine verify.  The hyperplane weights
+                          derive from md5, like every content hash in
+                          ``operators/dedup.py``, so the DuckDB oracle
+                          reproduces the buckets bit-exactly.
+- ``ivf_topk``            IVF-style scale path: vectors are bucketed by
+                          nearest centroid (coarse quantizer); a query
+                          only scans its ``nprobe`` closest buckets.  At
+                          10^10 vectors the probe is a partition-pruned
+                          scan of nprobe/nlist of the data, not 100%.
 
+The oracle-checked queries in ``queries.py`` call these operators.
 Centroids here come from a deterministic sample + one Lloyd iteration —
 enough to validate the bucketing plumbing; on a real corpus you'd feed
-trained centroids (or use LSH hyperplane bucketing, also provided).
+trained centroids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import hashlib
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import bucket_pairs
 
 
 def dot(a, b):
@@ -65,15 +75,24 @@ def cosine_topk(
     )
 
 
-def _hyperplane_weight(p, d, seed):
-    """Deterministic weight for (plane, dim): xxhash64 → [-1, 1]."""
-    return (
-        F.pmod(
-            F.xxhash64(F.lit(str(p)), F.lit(str(d)), F.lit(str(seed))),
-            F.lit(2000001),
-        )
-        - 1000000
-    ) / 1000000.0
+def _hyperplane_weights(seed: int, p: int, dim: int) -> list[float]:
+    """Plane ``p`` of table ``seed``: weight d is the low 60 bits of
+    md5("seed:p:d") mapped to [-1, 1] in steps of 0.001 — the same
+    bytes and arithmetic the DuckDB oracle evaluates, so both engines
+    get identical doubles.  Folded here in Python: the weights are
+    constants, and Catalyst does not constant-fold through HOF lambdas
+    (an inline formulation re-hashed n_planes*dim md5s per row)."""
+    return [
+        (int(hashlib.md5(f"{seed}:{p}:{d}".encode()).hexdigest()[:15], 16)
+         % 2001 - 1000) / 1000.0
+        for d in range(dim)
+    ]
+
+
+def _width(vectors: DataFrame, vec_col: str) -> int:
+    """Vector width, probed from the first row (one small Spark job)."""
+    head = vectors.select(F.size(F.col(vec_col)).alias("d")).first()
+    return int(head["d"]) if head is not None else 0
 
 
 def hyperplane_buckets(
@@ -84,55 +103,34 @@ def hyperplane_buckets(
     seed: int = 42,
     dim: int | None = None,
 ) -> DataFrame:
-    """LSH bucketing by random-hyperplane signs.
+    """LSH bucketing by random-hyperplane signs: (id, vec, bucket).
 
-    Hyperplanes are pseudo-random but deterministic: plane p, dim d has
-    weight hash(p,d) mapped to [-1,1].  The weights depend only on
-    (p, d, seed) — they are CONSTANTS — but Catalyst does not
-    constant-fold through HOF lambdas, so the old per-row formulation
-    re-ran n_planes*dim xxhash64 calls per vector (512/row for 8x64).
-    They are now evaluated once on a 1-row driver-side job (the same
-    xxhash64 expressions → identical doubles) and inlined as literal
-    arrays; the per-row work is just the n_planes dot products.
+    Hyperplanes are pseudo-random but deterministic
+    (``_hyperplane_weights``), inlined as literal arrays, so the
+    per-row work is just the n_planes dot products.  Bit p is set iff
+    the plane dot, rounded to 6 decimals, is >= 0 — the rounding keeps
+    float noise from flipping a bit in one engine only.
 
-    ``dim`` (vector width) is probed from the first row when not given —
+    ``dim`` (vector width) is probed from the first row when not given;
     vectors are assumed to share one width (true for every embedding
-    table in this repo; rows with FEWER dims still get the same weight
-    prefix via slice).
+    table in this repo).  Pass it to plan without running a job.
     """
-    spark = vectors.sparkSession
     if dim is None:
-        head = vectors.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(head["d"]) if head is not None else 0
+        dim = _width(vectors, vec_col)
     if dim <= 0:
         # empty input: bucket column is never evaluated; keep the plan
         # well-typed with a zero bucket
         return vectors.select(F.col(id_col), F.col(vec_col),
                               F.lit(0).cast("long").alias("bucket"))
-    wrow = spark.range(1).select(
-        F.array(
-            *[
-                F.array(*[_hyperplane_weight(p, d, seed)
-                          for d in range(dim)])
-                for p in range(n_planes)
-            ]
-        ).alias("w")
-    ).first()
-    weights = [[float(v) for v in plane] for plane in wrow["w"]]
-
-    vec = F.col(vec_col)
     bucket = None
     for p in range(n_planes):
-        w = F.array(*[F.lit(v) for v in weights[p]])
-        # rows may be narrower than ``dim``: trim the weight prefix so
-        # zip_with never pads (a padded null would null the dot product)
-        pd_ = dot(vec, F.slice(w, 1, F.size(vec)))
-        term = F.when(pd_ >= 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = term if bucket is None else bucket + term
+        w = F.array(*[F.lit(v) for v in _hyperplane_weights(seed, p, dim)])
+        bit = F.when(
+            F.round(dot(F.col(vec_col), w), 6) >= 0, F.lit(1 << p)
+        ).otherwise(F.lit(0))
+        bucket = bit if bucket is None else bucket + bit
     return vectors.select(F.col(id_col), F.col(vec_col),
-                          bucket.alias("bucket"))
+                          bucket.cast("long").alias("bucket"))
 
 
 def embedding_near_dup(
@@ -143,68 +141,47 @@ def embedding_near_dup(
     n_planes: int = 8,
     n_tables: int = 4,
     round_to: int | None = 4,
+    dim: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via multi-table
-    hyperplane LSH (training-pipeline dedup op).
+    """Embedding-cosine near-duplicate pairs (id_a, id_b, cosine) via
+    multi-table hyperplane LSH (training-pipeline dedup op).
 
     The only all-pairs-free shape that survives 10^10 vectors:
 
-    1. each of ``n_tables`` independent hyperplane tables assigns every
-       vector an ``n_planes``-bit sign bucket (``hyperplane_buckets``,
-       seeded per table — weights are xxhash64-derived JVM-side, no
-       driver matrix);
-    2. candidate pairs = self-EQUI-join on (table, bucket) with
-       ``id_a < id_b`` (never a cartesian — the same banded-join shape
-       as MinHash-LSH in operators/dedup.py);
+    1. each of ``n_tables`` independent hyperplane tables t assigns
+       every vector an ``n_planes``-bit sign bucket
+       (``hyperplane_buckets`` with seed t);
+    2. candidate pairs = ids sharing a (table, bucket), by grouping
+       (``dedup.bucket_pairs`` — the same shape as MinHash-LSH, never a
+       cartesian);
     3. exact cosine verify ``>= threshold`` over the candidates only.
 
     Recall is the standard LSH union over tables (1-(1-p^planes)^tables
     for per-plane agreement p = 1 - angle/pi); misses are possible by
     design — raise ``n_tables`` / lower ``n_planes`` for higher recall.
-    False positives never survive step 3.
+    False positives never survive step 3.  ``dim`` as in
+    ``hyperplane_buckets`` (probed once when not given).
     """
     base = vectors.select(id_col, vec_col)
-    head = base.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim = int(head["d"]) if head is not None else 0
+    if dim is None:
+        dim = _width(base, vec_col)
     sigs = None
     for t in range(n_tables):
         bt = hyperplane_buckets(
-            base, id_col, vec_col, n_planes=n_planes, seed=1000 + t,
-            dim=dim,
+            base, id_col, vec_col, n_planes=n_planes, seed=t, dim=dim,
         ).select(id_col, F.lit(t).alias("t"), "bucket")
         sigs = bt if sigs is None else sigs.unionByName(bt)
-    # candidate pairs by GROUPING on (table, bucket) instead of a
-    # self-join: the join computed every table's bucketing twice
-    # (broadcast build + stream side); one shuffle of (t, bucket, id),
-    # ordered in-bucket pairs via posexplode (per-row memory O(bucket),
-    # pair count identical to the join's output)
-    buckets = sigs.groupBy("t", "bucket").agg(
-        F.array_sort(F.collect_list(id_col)).alias("ids")
-    )
-    cand = (
-        buckets.where(F.size("ids") >= 2)
-        .select("ids", F.posexplode("ids").alias("i", "_ida"))
-        .select(
-            "_ida",
-            F.explode(
-                F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))
-            ).alias("_idb"),
-        )
-        .where(F.col("_ida") < F.col("_idb"))
-        .distinct()
-    )
-    va = base.select(F.col(id_col).alias("_ida"),
-                     F.col(vec_col).alias("_va"))
-    vb = base.select(F.col(id_col).alias("_idb"),
-                     F.col(vec_col).alias("_vb"))
-    cos = cosine(F.col("_va"), F.col("_vb"))
+    va = base.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
+    vb = base.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
+    cos = cosine(F.col("va"), F.col("vb"))
     if round_to is not None:
         cos = F.round(cos, round_to)
     return (
-        cand.join(va, "_ida").join(vb, "_idb")
+        bucket_pairs(sigs, id_col, "t", "bucket")
+        .join(va, "a").join(vb, "b")
         .select(
-            F.col("_ida").alias("id_a"),
-            F.col("_idb").alias("id_b"),
+            F.col("a").alias("id_a"),
+            F.col("b").alias("id_b"),
             cos.alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)

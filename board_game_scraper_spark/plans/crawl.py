@@ -29,7 +29,7 @@ from .. import schemas
 from ..sources.fetch import fetch_from_table
 from ..tables import SnapshotTable
 from .frontier import RETRYABLE, retry_rows, schedule
-from .parse import run_parse, run_parse_flat
+from .parse import run_parse_flat
 from .seen import SnapshotBloom, filter_unseen
 
 
@@ -114,8 +114,6 @@ class CrawlEngine:
         track_last_scraped: bool = False,
         compact_every: int = 8,
         use_ids_seen: bool = False,
-        partition_items: bool = True,
-        native_write: bool = False,
     ):
         self.spark = spark
         self.root = Path(root)
@@ -141,17 +139,6 @@ class CrawlEngine:
         # page-local batch URLs differ), which changes the URL stream the
         # order-equality simulator pins.
         self.use_ids_seen = use_ids_seen
-        self.partition_items = partition_items
-        # Worker-side parquet write for the fused parse stage (see
-        # parse.run_parse_flat_write): separate writer PROCESSES instead
-        # of writer tasks sharing one JVM heap.  Measured interleaved on
-        # the scale-2 replay corpus: the JVM writer (8 MB row groups +
-        # ParallelGC + codec warm-up, session.py) is the faster default
-        # on this box — min-of-N round 100.3s→33.6s (2.99x) vs
-        # native-zstd 111.7s→45.8s (2.44x) — so native stays opt-in;
-        # it exists for deployments where the driver JVM heap is the
-        # proven write bottleneck.
-        self.native_write = native_write
         self.frontier = t("frontier", schemas.FRONTIER)
         self.ids_seen = t("ids_seen", schemas.IDS_SEEN)
         self.seed_requests = t("seed_requests", schemas.SEED_REQUESTS)
@@ -170,8 +157,7 @@ class CrawlEngine:
         # dirs, which need per-dir reads (every other table gets the
         # O(1)-depth multi-path scan — ADVICE r03 #1).
         self.items = SnapshotTable(spark, self.root / "items",
-                                   schemas.PARSE_FLAT,
-                                   hive_dirs=self.partition_items)
+                                   schemas.PARSE_FLAT, hive_dirs=True)
         self.documents = _KindView(
             self.items, "page",
             lambda df: df.select(
@@ -720,7 +706,7 @@ class CrawlEngine:
         # bodies never sit in executor storage.
         fetched_full = fetch_from_table(scheduled, self.pages)
 
-        # (Caching or multi-pass-writing the deep-nested PARSED shape
+        # (Caching or multi-pass-writing a deep-nested per-page shape
         # anti-scales 6x at high parallelism — see schemas.PARSE_FLAT.)
         # The fused write lands DIRECTLY in the items table's next data
         # dir (committed by run_round via add_files once the round is
@@ -729,60 +715,42 @@ class CrawlEngine:
         # item_kind so the per-kind reads (and the _KindView API)
         # partition-prune.
         items_rel, scratch = self.items.new_data_dir()
-        if self.native_write:
-            # Worker-side pyarrow write: the per-kind counts come back
-            # as the stage's (tiny) output rows — one job, no JVM
-            # parquet writers (the r03 8→32-core write anti-scaler).
-            from .parse import reconcile_task_attempts, run_parse_flat_write
-
-            stat_rows = run_parse_flat_write(
-                fetched_full, str(scratch), partition=self.partition_items
-            ).collect()
-            # exactly-once repair: drop files left by superseded task
-            # attempts before the dir is committed (ADVICE r04 #2)
-            reconcile_task_attempts(str(scratch))
-            kc: dict[str, int] = {}
-            for r in stat_rows:
-                kc[r["item_kind"]] = kc.get(r["item_kind"], 0) + int(r["n"])
-            parse_counts: dict = kc
-        else:
-            obs_items = Observation()
-            kind = lambda k: F.sum(
-                (F.col("item_kind") == k).cast("long")
-            ).alias(k)
-            parsed = run_parse_flat(fetched_full)
-            if hint is not None and hint < 3000:
-                # Tail-round write shrink: the corpus-scan join leaves
-                # O(scan partitions) write tasks even when the batch is
-                # a few hundred retry rows — measured 1.1 s of pure
-                # task/commit overhead per tail round at local[32]
-                # (tools/probe_retry).  A post-parse exchange of the
-                # tiny flat output costs ~nothing and cuts the write to
-                # write_coalesce tasks.  Gated on a PROVABLY small
-                # frontier so a real round's parse output (millions of
-                # flat rows) never crosses this exchange; parse
-                # parallelism itself is untouched either way.
-                parsed = parsed.repartition(self.write_coalesce or 4)
-            # 'retryable' mirrors retry_rows' filter EXACTLY (same
-            # RETRYABLE tuple, same attempt bound) so the round can skip
-            # the retries delta write entirely when it would be empty —
-            # no empty data dir in the manifest, no retraction commit
-            # (ADVICE r05 #3), one less Spark job on clean rounds.
-            retryable = F.sum(
-                (
-                    (F.col("item_kind") == "fetch")
-                    & F.col("fetch.status").isin(list(RETRYABLE))
-                    & (F.col("fetch.attempt") + 1 < F.lit(self.max_attempts))
-                ).cast("long")
-            ).alias("retryable")
-            writer = parsed.observe(
-                obs_items, kind("page"), kind("game"), kind("user"),
-                kind("rating"), kind("fetch"), retryable,
-            ).write.mode("overwrite")
-            if self.partition_items:
-                writer = writer.partitionBy("item_kind")
-            writer.parquet(str(scratch))
-            parse_counts = dict(obs_items.get)
+        obs_items = Observation()
+        kind = lambda k: F.sum(
+            (F.col("item_kind") == k).cast("long")
+        ).alias(k)
+        parsed = run_parse_flat(fetched_full)
+        if hint is not None and hint < 3000:
+            # Tail-round write shrink: the corpus-scan join leaves
+            # O(scan partitions) write tasks even when the batch is
+            # a few hundred retry rows — measured 1.1 s of pure
+            # task/commit overhead per tail round at local[32]
+            # (tools/probe_retry).  A post-parse exchange of the
+            # tiny flat output costs ~nothing and cuts the write to
+            # write_coalesce tasks.  Gated on a PROVABLY small
+            # frontier so a real round's parse output (millions of
+            # flat rows) never crosses this exchange; parse
+            # parallelism itself is untouched either way.
+            parsed = parsed.repartition(self.write_coalesce or 4)
+        # 'retryable' mirrors retry_rows' filter EXACTLY (same
+        # RETRYABLE tuple, same attempt bound) so the round can skip
+        # the retries delta write entirely when it would be empty —
+        # no empty data dir in the manifest, no retraction commit
+        # (ADVICE r05 #3), one less Spark job on clean rounds.
+        retryable = F.sum(
+            (
+                (F.col("item_kind") == "fetch")
+                & F.col("fetch.status").isin(list(RETRYABLE))
+                & (F.col("fetch.attempt") + 1 < F.lit(self.max_attempts))
+            ).cast("long")
+        ).alias("retryable")
+        parsed.observe(
+            obs_items, kind("page"), kind("game"), kind("user"),
+            kind("rating"), kind("fetch"), retryable,
+        ).write.mode("overwrite").partitionBy("item_kind").parquet(
+            str(scratch)
+        )
+        parse_counts = dict(obs_items.get)
         return {
             "frontier": frontier, "obs_front": obs_front,
             "scheduled": scheduled, "items_rel": items_rel,
@@ -1115,9 +1083,7 @@ class CrawlEngine:
             )
             # Retries prepare, gated on the parse-observed retryable
             # count (ADVICE r05 #3: a zero-retry round used to commit an
-            # empty delta dir).  The native-write path has no such
-            # observation (per-task stat rows only) — it prepares
-            # unconditionally and drops an empty result pre-commit.
+            # empty delta dir).
             n_retry_hint = parse_counts.get("retryable")
             fut_ret = (
                 pool.submit(

@@ -1,6 +1,6 @@
 """Parse stage — partition-parallel Arrow UDF over fetched pages.
 
-One ``mapInPandas`` stage turns fetched bodies into: interleaved
+One ``mapInArrow`` stage turns fetched bodies into: interleaved
 text+media span sequences (BASELINE.json input_hint), typed item rows,
 and discovered URLs (E4 link harvest — this closes the BSP loop).
 
@@ -28,11 +28,7 @@ from __future__ import annotations
 
 import re
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 from datetime import datetime, timezone
-
-import pandas as pd
-
 from functools import lru_cache
 
 from ..functions.canon import canonicalize_one
@@ -1336,100 +1332,6 @@ def parse_page(url_canon: str, callback_kind: str, body: str) -> dict:
 PARSE_CHUNK_PAGES = 64
 
 
-def parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: FETCHED batches → PARSED batches (chunked)."""
-    cols = ["url_canon", "doc_id", "spans", "games", "users", "ratings",
-            "discovered"]
-    rows: list[dict] = []
-    for pdf in batches:
-        for url_canon, kind, body in zip(
-            pdf["url_canon"], pdf["callback_kind"], pdf["body"]
-        ):
-            parsed = parse_page(url_canon, kind, body)
-            # Canonicalize discoveries batch-locally (C1-C3) so the
-            # downstream dedup joins on canonical keys.
-            disc = []
-            for d in parsed["discovered"]:
-                canon = _canon_cached(d["url"])
-                if canon:
-                    disc.append({"url": canon, "priority": d["priority"],
-                                 "callback_kind": d["callback_kind"]})
-            rows.append(
-                {
-                    "url_canon": url_canon,
-                    "doc_id": url_canon,
-                    "spans": parsed["spans"],
-                    "games": parsed["games"],
-                    "users": parsed["users"],
-                    "ratings": parsed["ratings"],
-                    "discovered": disc,
-                }
-            )
-            if len(rows) >= PARSE_CHUNK_PAGES:
-                yield pd.DataFrame(rows, columns=cols)
-                rows = []
-    if rows:
-        yield pd.DataFrame(rows, columns=cols)
-
-
-def parse_arrow_batches(batches):
-    """mapInArrow kernel: build the nested output columnar, straight to
-    Arrow.  The dict→pandas-object→Arrow path costs ~3x the parse itself
-    (measured: 1.5s compute vs 4.3s emit for 1.8M nested rows);
-    ``pa.array(list_of_lists_of_dicts, type=list<struct>)`` converts in
-    C++ in one pass.
-    """
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from ..schemas import PARSED
-
-    arrow_schema = to_arrow_schema(PARSED)
-    types = {f.name: f.type for f in arrow_schema}
-
-    def emit(rows: list[dict]) -> pa.RecordBatch:
-        arrays = [
-            pa.array([r["url_canon"] for r in rows], types["url_canon"]),
-            pa.array([r["doc_id"] for r in rows], types["doc_id"]),
-        ]
-        for col in ("spans", "games", "users", "ratings", "discovered"):
-            arrays.append(
-                pa.array([r[col] for r in rows], types[col])
-            )
-        return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    rows: list[dict] = []
-    for rb in batches:
-        urls = rb.column(0).to_pylist()
-        kinds = rb.column(1).to_pylist()
-        bodies = rb.column(2).to_pylist()
-        for url_canon, kind, body in zip(urls, kinds, bodies):
-            parsed = parse_page(url_canon, kind, body)
-            disc = []
-            for d in parsed["discovered"]:
-                canon = _canon_cached(d["url"])
-                if canon:
-                    disc.append({"url": canon, "priority": d["priority"],
-                                 "callback_kind": d["callback_kind"]})
-            rows.append(
-                {
-                    "url_canon": url_canon,
-                    "doc_id": url_canon,
-                    "spans": parsed["spans"],
-                    "games": parsed["games"],
-                    "users": parsed["users"],
-                    "ratings": parsed["ratings"],
-                    "discovered": disc,
-                }
-            )
-            if len(rows) >= PARSE_CHUNK_PAGES:
-                yield emit(rows)
-                rows = []
-    if rows:
-        yield emit(rows)
-
-
 def parse_flat_batches(batches):
     """mapInArrow kernel emitting the PARSE_FLAT shape: one 'fetch' row
     per input URL (any status — retries/metrics derive from it), one
@@ -1522,191 +1424,3 @@ def run_parse_flat(fetched, target_partitions: int | None = 0):
     if target_partitions:
         src = src.repartition(target_partitions)
     return src.mapInArrow(parse_flat_batches, PARSE_FLAT)
-
-
-def parse_flat_write_batches(batches, out_dir: str, partition: bool,
-                             codec: str):
-    """Worker-side parquet sink for the fused parse stage: wraps
-    ``parse_flat_batches`` and writes its output straight from the
-    Python worker with pyarrow, yielding only tiny per-kind row counts.
-
-    WHY: at local[32] the JVM parquet writer puts 32 writer tasks in ONE
-    heap — column-writer allocation + codec buffers made the write stage
-    scale only ~1.6x from 8→32 cores while the parse compute scaled
-    3.28x (BENCH/BASELINE.md decomposition, VERDICT r03 'next' #1).
-    Python workers are separate PROCESSES: each writes its own file with
-    its own allocator, which is exactly the per-executor layout a real
-    cluster has.  The JVM side of the stage now only carries the stats
-    rows.
-
-    Files land as ``item_kind=<kind>/part-<task>.parquet`` (hive layout,
-    same as the JVM ``partitionBy`` writer) or flat when ``partition``
-    is false.  Each file is written to a dot-prefixed temp name and
-    renamed on task completion, so a failed/retried task never leaves a
-    half-written file visible to the parquet reader (dot-files are
-    ignored by Spark's file index)."""
-    import os
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyspark import TaskContext
-
-    # Filenames carry (partitionId, attemptNumber) so the DRIVER can
-    # reconcile after the job: a task retried/speculated after its
-    # renames leaves BOTH attempts' files visible (the rename below runs
-    # before Spark marks the task committed — ADVICE r04 #2), and the
-    # parse is deterministic per partition, so keeping exactly one file
-    # per (partition, kind) restores exactly-once output.  See
-    # reconcile_task_attempts().
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx else 0
-    att = ctx.attemptNumber() if ctx else 0
-    task_id = f"{pid:05d}-a{att}-{uuid.uuid4().hex[:8]}"
-    writers: dict[str, tuple] = {}
-    counts: dict[str, int] = {}
-
-    def get_writer(kind: str, schema: pa.Schema):
-        got = writers.get(kind)
-        if got is None:
-            d = (os.path.join(out_dir, f"item_kind={kind}")
-                 if partition else out_dir)
-            os.makedirs(d, exist_ok=True)
-            final = os.path.join(d, f"part-{task_id}-{kind}.parquet")
-            tmp = os.path.join(d, f".tmp-{task_id}-{kind}.parquet")
-            got = (pq.ParquetWriter(tmp, schema, compression=codec),
-                   tmp, final)
-            writers[kind] = got
-        return got[0]
-
-    try:
-        for rb in parse_flat_batches(batches):
-            kinds_col = rb.column(1)  # item_kind
-            for kind in pc.unique(kinds_col).to_pylist():
-                sub = rb.filter(pc.equal(kinds_col, kind))
-                counts[kind] = counts.get(kind, 0) + sub.num_rows
-                tbl = pa.Table.from_batches([sub])
-                if partition:
-                    # the partition value lives in the dir name
-                    tbl = tbl.drop_columns(["item_kind"])
-                    wkey = kind
-                else:
-                    wkey = "_all"
-                get_writer(wkey, tbl.schema).write_table(tbl)
-    finally:
-        for w, tmp, final in writers.values():
-            w.close()
-    for _, tmp, final in writers.values():
-        os.rename(tmp, final)
-    if counts:
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(list(counts.keys()), pa.string()),
-             pa.array([counts[k] for k in counts], pa.int64())],
-            names=["item_kind", "n"],
-        )
-
-
-def reconcile_task_attempts(out_dir: str) -> int:
-    """Driver-side exactly-once repair for the worker-side write.
-
-    ``parse_flat_write_batches`` renames its temp files inside the task
-    (Python workers cannot see Spark's task-commit protocol), so a task
-    attempt that completed its renames but was then retried — failure
-    during result serialization, fetch failure, speculative execution —
-    leaves two attempts' files visible and would duplicate rows
-    (ADVICE r04 #2).  The parse is deterministic per input partition
-    (round-robin repartition is sort-stabilized by
-    spark.sql.execution.sortBeforeRepartition, default on), so every
-    attempt of a partition writes identical rows: keeping exactly ONE
-    file per (partition id, kind) — the highest attempt number —
-    restores exactly-once semantics.  Called by the driver after the
-    job succeeds, before the data dir is committed via ``add_files``.
-    Returns the number of duplicate files removed."""
-    import os
-    import re
-
-    pat = re.compile(r"part-(\d+)-a(\d+)-[0-9a-f]+-(.+)\.parquet$")
-    removed = 0
-    for root, _dirs, names in os.walk(out_dir):
-        best: dict[tuple[str, str], tuple[int, str]] = {}
-        dupes: list[str] = []
-        for name in names:
-            m = pat.match(name)
-            if not m:
-                continue
-            key = (m.group(1), m.group(3))
-            att = int(m.group(2))
-            prev = best.get(key)
-            if prev is None:
-                best[key] = (att, name)
-            elif att > prev[0]:
-                dupes.append(prev[1])
-                best[key] = (att, name)
-            else:
-                dupes.append(name)
-        for name in dupes:
-            os.unlink(os.path.join(root, name))
-            removed += 1
-    return removed
-
-
-def run_parse_flat_write(fetched, out_dir: str, partition: bool = True,
-                         codec: str | None = None,
-                         target_partitions: int | None = 0):
-    """Fused parse + worker-side parquet write: returns a tiny
-    (item_kind, n) stats DataFrame whose materialization runs the whole
-    schedule→fetch→parse→write pipeline as ONE job and lands the
-    PARSE_FLAT rows in ``out_dir`` (the items table's next data dir —
-    committed afterwards via ``SnapshotTable.add_files``).
-
-    Codec default comes from $SPARK_GRAFT_NATIVE_CODEC (else snappy,
-    matching the JVM writer); each worker process compresses
-    independently (no shared-JVM codec contention)."""
-    import os
-    from functools import partial
-
-    if codec is None:
-        codec = os.getenv("SPARK_GRAFT_NATIVE_CODEC", "snappy")
-
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
-    src = fetched.select(
-        "url_canon", "callback_kind", "body", "url_hash", "host",
-        "priority", "attempt", "status", "latency_ms",
-    )
-    if target_partitions is None:
-        target_partitions = (
-            fetched.sparkSession.sparkContext.defaultParallelism * 2
-        )
-    if target_partitions:
-        src = src.repartition(target_partitions)
-    stats_schema = StructType([
-        StructField("item_kind", StringType(), False),
-        StructField("n", LongType(), False),
-    ])
-    fn = partial(parse_flat_write_batches, out_dir=out_dir,
-                 partition=partition, codec=codec)
-    return src.mapInArrow(fn, stats_schema)
-
-
-def run_parse(fetched_ok, target_partitions: int | None = None):
-    """fetched (status==200) → PARSED DataFrame (one Arrow stage).
-
-    ``target_partitions``: AQE sizes the upstream join output by *bytes*
-    (~64MB partitions), which throttles this CPU-bound stage; repartition
-    to ~2x cores so every core parses.  The body shuffle it costs is far
-    cheaper than the serial parse it prevents.
-    """
-    from ..schemas import PARSED
-
-    src = fetched_ok.select("url_canon", "callback_kind", "body")
-    if target_partitions is None:
-        target_partitions = (
-            fetched_ok.sparkSession.sparkContext.defaultParallelism * 2
-        )
-    if target_partitions:
-        src = src.repartition(target_partitions)
-    return src.mapInArrow(parse_arrow_batches, PARSED)

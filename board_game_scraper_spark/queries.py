@@ -21,6 +21,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .operators.dedup import (
+    exact_dedup, lsh_bands, minhash_signatures, near_dup_pairs, shingles,
+    simhash, tokens_col,
+)
+from .operators.similarity import cosine_topk, embedding_near_dup
+from .operators.textstats import (
+    LANG_PROFILES, fingerprint, language_id, quality_score, token_count,
+)
+
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 
@@ -83,9 +92,10 @@ def q_merge_latest_wins(spark, sf_dir):
 def q_dedup_exact(spark, sf_dir):
     """Exact content dedup by hash (training-pipeline op; groupBy md5)."""
     docs = _t(spark, sf_dir, "documents")
-    return docs.groupBy(F.md5(F.col("text")).alias("text_hash")).agg(
-        F.min("doc_id").alias("keep_doc_id"),
-        F.count(F.lit(1)).alias("n_dups"),
+    return exact_dedup(docs, "doc_id", "text").select(
+        F.col("content_hash").alias("text_hash"),
+        F.col("keep_id").alias("keep_doc_id"),
+        "n_dups",
     )
 
 
@@ -325,10 +335,11 @@ def q_token_count(spark, sf_dir):
 def q_quality_score(spark, sf_dir):
     """Document quality scoring: stopword ratio + mean token length."""
     docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     # materialize the split once — inline, each of the 5 references below
     # would re-run the regex split per row (guide §1.2: per-task work)
-    tdf = docs.select("doc_id", "text", toks.alias("toks"))
+    tdf = docs.select(
+        "doc_id", "text", tokens_col(F.col("text")).alias("toks")
+    )
     tk = F.col("toks")
     stop = F.filter(tk, lambda x: x.isin(*STOPWORDS))
     return tdf.select(
@@ -344,36 +355,13 @@ def q_quality_score(spark, sf_dir):
     )
 
 
-def _sh_from_toks(k: int = 3):
-    """k-word shingles from a MATERIALIZED ``toks`` array column.
-
-    The tokenizer split() must be a real column, not an inline
-    expression: interpreted HOF lambdas re-evaluate their body per
-    element, and CollapseProject inlines a non-cheap expression into a
-    lambda when it is referenced once syntactically — so an inline
-    split() runs 3x per shingle (measured 24x slowdown of minhash_band
-    at sf0.1: 7.2s vs 0.30s).  The 4 syntactic references to ``toks``
-    here (size + k element_at) keep CollapseProject from substituting
-    the split back in (it refuses to duplicate non-cheap expressions,
-    SPARK-36718)."""
-    tk = F.col("toks")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(tk) - (k - 1), F.lit(1)))
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(tk, i + j) for j in range(k)]
-        ),
-    )
-
-
 def q_minhash_band(spark, sf_dir):
     """MinHash near-dup bucketing: 3-word shingles → md5 → min per doc;
     docs sharing a band value are near-dup candidates."""
     docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    tdf = docs.select("doc_id", toks.alias("toks"))
-    minhash = F.array_min(F.transform(_sh_from_toks(), F.md5))
-    return tdf.select("doc_id", minhash.alias("minhash"))
+    return shingles(docs, "doc_id", "text").select(
+        "doc_id", F.array_min(F.transform("sh", F.md5)).alias("minhash")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -388,25 +376,9 @@ def q_cosine_topk(spark, sf_dir):
     q = emb.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qvec")
     )
-    joined = emb.where(F.col("vec_id") != 0).crossJoin(F.broadcast(q))
-    dot = F.aggregate(
-        F.zip_with("embedding", "qvec", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm_a = F.sqrt(
-        F.aggregate("embedding", F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    norm_q = F.sqrt(F.aggregate("qvec", F.lit(0.0), lambda acc, x: acc + x * x))
-    cos = F.round(dot / (norm_a * norm_q), 4)
-    # Distributed top-k: orderBy+limit compiles to TakeOrderedAndProject
-    # (per-partition heaps, no single-partition window); the rank window
-    # then runs over only 10 rows.
-    top = (
-        joined.select("vec_id", cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
+    # orderBy+limit inside: TakeOrderedAndProject (per-partition heaps,
+    # no single-partition window)
+    top = cosine_topk(emb.where(F.col("vec_id") != 0), q, k=10)
     # Rank over the 10 surviving rows WITHOUT a global window (keeps
     # the bench tail free of WARN WindowExec noise): rk = 1 + number of
     # rows strictly ahead in (cosine desc, vec_id asc) order — a 10×10
@@ -468,129 +440,25 @@ def q_join_agg(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Content-dedup family v2 (SimHash / MinHash-LSH / near-dup verify).
-# Production operators (operators/dedup.py) use xxhash64; these oracle
-# variants use the low 60 bits of md5 so DuckDB can reproduce the hash
-# exactly — same logic, portable hash.
+# Content-dedup family v2 (SimHash / MinHash-LSH / near-dup verify):
+# thin calls into operators/dedup.py, operators/similarity.py and
+# operators/textstats.py at the oracle's sizes.  Their one hash is the
+# low 60 bits of md5, which DuckDB reproduces exactly.
 # ---------------------------------------------------------------------------
 
-def _h60(col):
-    """Low-60-bit md5 hash, reproducible in DuckDB via
-    ('0x'||substr(md5(x),1,15))::BIGINT."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-_H60_SQL = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
-
-
-def _toks(text_col):
-    return F.split(F.trim(F.lower(text_col)), r"\s+")
-
-
-def _shingles(text_col, k=3):
-    toks = _toks(text_col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(k)]
-        ),
-    )
-
-
 def q_simhash(spark, sf_dir):
-    """SimHash fingerprint (training-pipeline near-dup op): 16-bit
-    sign-aggregate of per-token hashes, all JVM-side HOFs.
-
-    One md5 per distinct token (not one per token PER BIT): each token's
-    hash is bound once via a 1-element transform input (HOF inputs are
-    evaluated once; lambda bodies are re-evaluated per element), its 16
-    ±1 bit contributions are unrolled into an array, and a single
-    aggregate() keeps the 16 running sums elementwise.  Same sums in the
-    same order as the per-bit formulation → identical fingerprints."""
+    """16-bit SimHash fingerprint (training-pipeline near-dup op)."""
     docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
-    tdf = docs.select(
-        "doc_id", F.array_distinct(_toks(F.col("text"))).alias("toks")
-    )
-
-    def contrib(t):
-        # bind h = _h60(t) once per token via the HOF input position
-        return F.element_at(
-            F.transform(
-                F.array(_h60(t)),
-                lambda h: F.array(
-                    *[
-                        F.shiftright(h, b).bitwiseAND(F.lit(1)).cast("int")
-                        * 2
-                        - 1
-                        for b in range(16)
-                    ]
-                ),
-            ),
-            1,
-        )
-
-    sums = F.aggregate(
-        F.col("toks"),
-        F.array_repeat(F.lit(0), 16),
-        lambda acc, t: F.zip_with(acc, contrib(t), lambda a, b: a + b),
-    )
-    sdf = tdf.select("doc_id", sums.alias("sums"))
-    sim = None
-    for b in range(16):
-        term = F.when(
-            F.element_at(F.col("sums"), b + 1) >= 0, F.lit(1 << b)
-        ).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return sdf.select("doc_id", sim.cast("long").alias("simhash"))
-
-
-def _minhash_sig_col():
-    """8-perm MinHash signature from a MATERIALIZED ``sh`` column: ONE
-    pass over the shingles; per shingle all 8 salted hashes at once,
-    folded with an elementwise running min.  min commutes with the fold,
-    so the result equals the per-perm array_min formulation exactly
-    (shingle arrays are never empty: split('') yields [''], and
-    element_at past the end is NULL which concat_ws skips, so the 2^62
-    seed never survives)."""
-    return F.aggregate(
-        F.col("sh"),
-        F.array_repeat(F.lit(1 << 62).cast("long"), 8),
-        lambda acc, s: F.zip_with(
-            acc,
-            # unrolled, pre-merged literal salts: concat("p:", s) builds
-            # the same md5 input bytes as concat(cast(p), ":", s)
-            F.array(*[_h60(F.concat(F.lit(f"{p}:"), s)) for p in range(8)]),
-            lambda a, b: F.least(a, b),
-        ),
-    )
+    return simhash(docs, "doc_id", "text", bits=16)
 
 
 def q_minhash_lsh_bands(spark, sf_dir):
     """MinHash-LSH banding: 8-perm signature → 2 bands of 4 → band key.
-    Docs sharing (band, band_key) are near-dup candidates found by
-    equi-join (the only shape that survives 10^10 docs)."""
+    Docs sharing a band_key are near-dup candidates, found by grouping
+    (the only shape that survives 10^10 docs)."""
     docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
-    tdf = docs.select("doc_id", _toks(F.col("text")).alias("toks"))
-    shdf = tdf.select("doc_id", _sh_from_toks().alias("sh"))
-    sigdf = shdf.select("doc_id", _minhash_sig_col().alias("sig"))
-    banded = sigdf.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(1)),
-                lambda b: F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.slice(F.col("sig"), b * 4 + 1, 4)
-                        .cast("array<string>"),
-                    )
-                ),
-            )
-        ).alias("band", "band_key"),
-    )
-    return banded
+    sigs = minhash_signatures(docs, "doc_id", "text", num_perm=8)
+    return lsh_bands(sigs, "doc_id", bands=2, rows_per_band=4)
 
 
 def _docs_with_near_dups(spark, sf_dir):
@@ -608,79 +476,18 @@ def q_near_dup_pairs(spark, sf_dir):
     """LSH candidate pairs + exact shingle-Jaccard verify >= 0.5 over a
     corpus with planted near-duplicates."""
     docs = _docs_with_near_dups(spark, sf_dir)
-    tdf = docs.select("doc_id", _toks(F.col("text")).alias("toks"))
-    sh = tdf.select("doc_id", _sh_from_toks().alias("sh"))
-    sigdf = sh.select("doc_id", _minhash_sig_col().alias("sig"))
-    banded = sigdf.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(1)),
-                lambda b: F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.slice(F.col("sig"), b * 4 + 1, 4)
-                        .cast("array<string>"),
-                    )
-                ),
-            )
-        ).alias("band_key"),
-    )
-    # Candidate pairs by GROUPING on band_key instead of a self-join:
-    # the join computed the whole signature pipeline twice (broadcast
-    # build side + stream side, no exchange reuse), i.e. ~2x the query's
-    # dominant cost.  One shuffle of (band_key, doc_id), sorted bucket
-    # members, ordered in-bucket pairs via posexplode (per-row memory
-    # stays O(bucket), the pair count is identical to the join's
-    # output).  Same pair set: (a < b) sharing >= 1 band, then distinct.
-    buckets = banded.groupBy("band_key").agg(
-        F.array_sort(F.collect_list("doc_id")).alias("ids")
-    )
-    cand = (
-        buckets.where(F.size("ids") >= 2)
-        .select("ids", F.posexplode("ids").alias("i", "a"))
-        .select(
-            "a",
-            F.explode(
-                F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))
-            ).alias("b"),
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    verified = (
-        cand.join(sh.select(F.col("doc_id").alias("a"),
-                            F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("doc_id").alias("b"),
-                        F.col("sh").alias("sh_b")), "b")
-        .select(
-            "a",
-            "b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= 0.5)
-    )
-    return verified
+    return near_dup_pairs(docs, "doc_id", "text", threshold=0.5,
+                          num_perm=8, bands=2)
 
 
 def q_embedding_near_dup(spark, sf_dir):
     """Embedding-cosine near-dup pairs (training-pipeline dedup op):
     embeddings ∪ deterministic perturbed copies (vec_id+100000, first
     component +0.25) → 4-table × 8-plane hyperplane-LSH bucketing →
-    candidate pairs by (table, bucket) EQUI-join → exact cosine verify
-    >= 0.9.  Same shape as ``operators/similarity.embedding_near_dup``
-    (which derives hyperplane weights from xxhash64); this oracle
-    variant derives them from md5 so DuckDB reproduces the buckets
-    bit-exactly — same production-vs-oracle hash split as the
-    SimHash/MinHash family above.  Bucket bits take the sign of a
-    6-decimal-rounded plane dot so float noise can't flip a bit in one
-    engine only.  LSH recall < 1 by design: BOTH engines drop the same
-    pairs, so the comparison stays exact while the plan stays
-    all-pairs-free (banded equi-join, never a cartesian)."""
+    candidate pairs by (table, bucket) → exact cosine verify >= 0.9.
+    LSH recall < 1 by design: BOTH engines drop the same pairs, so the
+    comparison stays exact while the plan stays all-pairs-free.  The
+    64-dim width is passed, not probed, so planning runs no job."""
     emb = _t(spark, sf_dir, "embeddings")
     e64 = F.col("embedding").cast("array<double>")
     base = emb.select("vec_id", e64.alias("emb")).unionByName(
@@ -692,198 +499,42 @@ def q_embedding_near_dup(spark, sf_dir):
             ).alias("emb"),
         )
     )
-    def plane_dot(t, p):
-        # The hyperplane weights are pure constants — md5 of the literal
-        # "t:p:d" — but Catalyst does not constant-fold through HOF
-        # lambdas, so the inline formulation re-hashed 4*8*64 = 2048
-        # md5+conv PER ROW.  Fold them here in Python (hashlib.md5 of the
-        # same bytes, same % 2001 - 1000 / 1000.0 arithmetic → identical
-        # IEEE doubles → identical bucket bits).
-        import hashlib
-
-        w = F.array(
-            *[
-                F.lit(
-                    (
-                        int(
-                            hashlib.md5(
-                                f"{t}:{p}:{d}".encode()
-                            ).hexdigest()[:15],
-                            16,
-                        )
-                        % 2001
-                        - 1000
-                    )
-                    / 1000.0
-                )
-                for d in range(64)
-            ]
-        )
-        return F.round(
-            F.aggregate(
-                F.zip_with(F.col("emb"), w, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-
-    sigs = None
-    for t in range(4):
-        bucket = None
-        for p in range(8):
-            bit = (
-                F.when(plane_dot(t, p) >= 0, F.lit(1 << p))
-                .otherwise(F.lit(0))
-            )
-            bucket = bit if bucket is None else bucket + bit
-        bt = base.select(
-            "vec_id", F.lit(t).alias("t"), bucket.cast("long").alias("bucket")
-        )
-        sigs = bt if sigs is None else sigs.unionByName(bt)
-    # grouped in-bucket pair expansion instead of a self-join (which
-    # would compute every table's bucketing twice) — same pair set
-    buckets = sigs.groupBy("t", "bucket").agg(
-        F.array_sort(F.collect_list("vec_id")).alias("ids")
-    )
-    cand = (
-        buckets.where(F.size("ids") >= 2)
-        .select("ids", F.posexplode("ids").alias("i", "id_a"))
-        .select(
-            "id_a",
-            F.explode(
-                F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))
-            ).alias("id_b"),
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
-    va = base.select(F.col("vec_id").alias("id_a"), F.col("emb").alias("va"))
-    vb = base.select(F.col("vec_id").alias("id_b"), F.col("emb").alias("vb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate("va", F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate("vb", F.lit(0.0), lambda acc, x: acc + x * x))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(dot / (na * nb), 4).alias("cosine"),
-        )
-        .where(F.col("cosine") >= 0.9)
-    )
+    return embedding_near_dup(base, "vec_id", "emb", dim=64)
 
 
 def q_fingerprint(spark, sf_dir):
     """Winnowing-style document fingerprint: 4 smallest shingle hashes
     combined into one md5 (rolling-hash min-sketch)."""
     docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
-    tdf = docs.select("doc_id", _toks(F.col("text")).alias("toks"))
-    shdf = tdf.select("doc_id", _sh_from_toks().alias("sh"))
-    hashes = F.array_sort(F.transform(F.col("sh"), _h60))
-    mins = F.slice(hashes, 1, 4)
-    return shdf.select(
-        "doc_id",
-        F.md5(F.concat_ws(":", mins.cast("array<string>"))).alias(
-            "fingerprint"
-        ),
-    )
+    return fingerprint(docs, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
 # Text-analysis family v2
 # ---------------------------------------------------------------------------
 
-_LANGS = {
-    "en": ("the", "and", "of", "to", "a", "in", "is", "it", "you", "that"),
-    "de": ("der", "die", "und", "das", "ist", "von", "mit", "den", "ein",
-           "nicht"),
-    "fr": ("le", "la", "et", "les", "des", "un", "une", "du", "est", "que"),
-    "es": ("el", "de", "que", "y", "los", "un", "por", "con", "una", "las"),
-}
-
-
 def q_language_id(spark, sf_dir):
     """Language ID by stopword-profile hits; deterministic tie-break by
     profile order en > de > fr > es."""
     docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
-    # two materialization steps: the split once (not once per language
-    # filter), then the 4 per-language scores once (not once per WHEN arm)
-    tdf = docs.select("doc_id", _toks(F.col("text")).alias("toks"))
-    sdf = tdf.select(
-        "doc_id",
-        F.array(
-            *[
-                F.size(F.filter(F.col("toks"), lambda t: t.isin(*words)))
-                for words in _LANGS.values()
-            ]
-        ).alias("sc"),
-    )
-    sc = {lang: F.element_at(F.col("sc"), i + 1)
-          for i, lang in enumerate(_LANGS)}
-    best = F.greatest(*sc.values())
-    lang = (
-        F.when(best <= 0, F.lit(None).cast("string"))
-        .when(sc["en"] == best, F.lit("en"))
-        .when(sc["de"] == best, F.lit("de"))
-        .when(sc["fr"] == best, F.lit("fr"))
-        .otherwise(F.lit("es"))
-    )
-    return sdf.select(
-        "doc_id", lang.alias("lang_pred"), best.alias("lang_score")
+    return language_id(docs, "doc_id", "text").select(
+        "doc_id", F.col("lang").alias("lang_pred"), "lang_score"
     )
 
 
 def q_bpe_token_count(spark, sf_dir):
     """BPE-ish regex token count (letters / digits / punct runs)."""
     docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
-    pat = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
-    return docs.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(F.trim(F.col("text")), F.lit(pat), 0))
-        .alias("bpe_tokens"),
-        F.size(_toks(F.col("text"))).alias("ws_tokens"),
-    )
+    return token_count(docs, "doc_id", "text")
 
 
 def q_quality_full(spark, sf_dir):
     """Composite quality score: length / stopword / distinct /
     punctuation components (pre-training quality gate)."""
     docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
-    # materialize the split once (inline, the ~10 references below would
-    # each re-run the regex split per row)
-    tdf = docs.select(
-        "doc_id",
-        F.trim(F.col("text")).alias("text"),
-        _toks(F.trim(F.col("text"))).alias("toks"),
-    )
-    text = F.col("text")
-    toks = F.col("toks")
-    n_tok = F.size(toks)
-    n_chars = F.length(text)
-    n_punct = n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
-    stop = F.size(F.filter(toks, lambda t: t.isin(*_LANGS["en"])))
-    distinct_ratio = F.size(F.array_distinct(toks)) / n_tok
-    punct_ratio = n_punct / F.greatest(n_chars, F.lit(1))
-    stop_ratio = stop / n_tok
-    len_score = F.least(n_tok / F.lit(20.0), F.lit(1.0))
-    score = (
-        F.lit(0.25) * len_score
-        + F.lit(0.25) * F.least(stop_ratio * 4, F.lit(1.0))
-        + F.lit(0.25) * distinct_ratio
-        + F.lit(0.25) * (1 - F.least(punct_ratio * 5, F.lit(1.0)))
-    )
-    return tdf.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        F.round(stop_ratio, 4).alias("stop_ratio"),
-        F.round(distinct_ratio, 4).alias("distinct_ratio"),
-        F.round(score, 4).alias("quality"),
+    return quality_score(docs, "doc_id", "text").select(
+        "doc_id", "n_tokens", F.col("stopword_ratio").alias("stop_ratio"),
+        "distinct_ratio", "quality",
     )
 
 
@@ -891,8 +542,8 @@ def q_array_except_stopwords(spark, sf_dir):
     """Per-row set difference (U3, luding.py:91 link-except shape):
     first 5 sorted distinct non-stopword tokens."""
     docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
-    toks = _toks(F.col("text"))
-    stops = F.array(*[F.lit(w) for w in _LANGS["en"]])
+    toks = tokens_col(F.col("text"))
+    stops = F.array(*[F.lit(w) for w in LANG_PROFILES["en"]])
     kept = F.slice(F.array_sort(F.array_except(toks, stops)), 1, 5)
     return docs.select(
         "doc_id", F.concat_ws(",", kept).alias("top_tokens")

@@ -281,24 +281,13 @@ DISCOVERED = StructType(
     ]
 )
 
-PARSED = StructType(
-    [
-        StructField("url_canon", StringType(), False),
-        StructField("doc_id", StringType(), False),
-        StructField("spans", ArrayType(SPAN), False),
-        StructField("games", ArrayType(GAME_ITEM), False),
-        StructField("users", ArrayType(USER_ITEM), False),
-        StructField("ratings", ArrayType(RATING_ITEM), False),
-        StructField("discovered", ArrayType(DISCOVERED), False),
-    ]
-)
-
 # Flat parse output: one row per page ('page' rows carry the span
 # sequence + discovered URLs) and one row per extracted item (struct
-# column set per kind).  Deep ArrayType(StructType) pages (PARSED above)
-# anti-scale when cached/written at high parallelism — Spark's columnar
-# writers serialize badly on them (measured 6x at local[32]); this shape
-# keeps every hot column shallow.
+# column set per kind).  Deep ArrayType(StructType) pages (one row per
+# page holding arrays of span/game/user/rating structs) anti-scale when
+# cached/written at high parallelism — Spark's columnar writers
+# serialize badly on them (measured 6x at local[32]); this shape keeps
+# every hot column shallow.
 # Per-URL fetch outcome carried through the fused parse pass (one 'fetch'
 # row per scheduled URL) so retries, per-host metrics, and last-scraped
 # tracking derive from the already-written scratch parquet instead of

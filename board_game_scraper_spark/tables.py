@@ -475,8 +475,8 @@ class SnapshotTable:
 
         A single multi-path read over partitioned dirs raises
         CONFLICTING_DIRECTORY_STRUCTURES (each dir is its own partition
-        root, and ``basePath`` cannot span sibling roots — verified in
-        tools/probe_r5.py), and one read PER DIR unioned grows the plan
+        root, and ``basePath`` cannot span sibling roots), and one
+        read PER DIR unioned grows the plan
         O(#commits): after a 10^4-round crawl the primary output API
         would analyze a 10^4-way union every read (VERDICT r04 'wrong'
         #1).  Instead, group the LEAF dirs by partition value — every

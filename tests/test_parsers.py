@@ -128,7 +128,7 @@ def test_malformed_bodies_dropped():
 
 
 def test_replay_source_and_parse(spark, tmp_path):
-    from board_game_scraper_spark.plans.parse import run_parse
+    from board_game_scraper_spark.plans.parse import run_parse_flat
     from board_game_scraper_spark.sources.replay import read_archived_pages
 
     synth.write_hotness_archive(tmp_path / "arch", n_files=3)
@@ -136,8 +136,8 @@ def test_replay_source_and_parse(spark, tmp_path):
     rows = fetched.collect()
     assert len(rows) == 3
     assert {r["archived_at"].day for r in rows} == {1, 2, 3}
-    parsed = run_parse(fetched.drop("archived_at"), target_partitions=2)
-    games = parsed.select(F.explode("games")).count()
+    parsed = run_parse_flat(fetched.drop("archived_at"), target_partitions=2)
+    games = parsed.where(F.col("item_kind") == "game").count()
     assert games == 150  # 50 per archived file
 
 

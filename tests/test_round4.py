@@ -1,6 +1,6 @@
 """Round-4 regressions: scale-safe pagination plan, bounded
 connected-components lineage, stranded-retry resume, batch-safe
-seed-request ack, resume-marker isolation, native parse write parity."""
+seed-request ack, resume-marker isolation."""
 
 import pandas as pd
 import pytest
@@ -144,35 +144,3 @@ def test_requeue_does_not_advance_resume_marker(spark, tmp_path):
         pd.DataFrame({"url": [synth.browse_url(1)]}))
     eng.requeue(urls, last + 1, window_rounds=0)
     assert eng.last_round() == last
-
-
-# ------------------------------------------------------- native parse write
-
-def test_native_write_matches_jvm_write(spark, tmp_path):
-    """The worker-side pyarrow parquet sink produces the same committed
-    items table (rows, kinds, per-kind content) as the JVM
-    partitionBy writer."""
-    _, pages_pd = synth.corpus(n_browse=4, n_users=8, n_other=4)
-    seeds_pd = pd.DataFrame(
-        [{"url": synth.browse_url(i), "source": "bgg", "priority": 0}
-         for i in (1, 2)])
-
-    def run(native, sub):
-        eng = _mk(spark, pages_pd, tmp_path / sub, use_bloom=False,
-                  native_write=native)
-        eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
-        eng.crawl(3)
-        items = eng.items.read()
-        kinds = sorted(
-            (r["item_kind"], r["n"]) for r in
-            items.groupBy("item_kind").agg(
-                F.count(F.lit(1)).alias("n")).collect())
-        games = sorted(
-            str(sorted(r.asDict().items()))
-            for r in eng.games.read().collect())
-        docs = sorted(r["doc_id"] for r in eng.documents.read().collect())
-        return kinds, games, docs
-
-    a = run(True, "nw")
-    b = run(False, "jw")
-    assert a == b

@@ -1,7 +1,6 @@
 """Round-5 regressions: O(#kinds) items-table read depth, minor
 (bin-pack) compaction of append-only side tables, no-op delta
-retraction, optimistic (CAS) manifest commits, worker-write
-task-attempt reconciliation."""
+retraction, optimistic (CAS) manifest commits."""
 
 import json
 
@@ -217,27 +216,6 @@ def test_enqueue_between_ack_read_and_replace_survives(
     # the late enqueue's file is still pending, not clobbered
     assert ((snap.get("metrics") or {}).get("pending", 0)) == 1
     assert len(snap["files"]) == 1
-
-
-# ----------------------------------------- worker-write attempt reconcile
-
-def test_reconcile_task_attempts_keeps_one_file_per_partition(tmp_path):
-    from board_game_scraper_spark.plans.parse import (
-        reconcile_task_attempts,
-    )
-
-    d = tmp_path / "out" / "item_kind=game"
-    d.mkdir(parents=True)
-    (d / "part-00003-a0-deadbeef-game.parquet").write_bytes(b"x")
-    (d / "part-00003-a1-cafebabe-game.parquet").write_bytes(b"y")
-    (d / "part-00004-a0-12345678-game.parquet").write_bytes(b"z")
-    removed = reconcile_task_attempts(str(tmp_path / "out"))
-    assert removed == 1
-    left = sorted(p.name for p in d.iterdir())
-    assert left == [
-        "part-00003-a1-cafebabe-game.parquet",
-        "part-00004-a0-12345678-game.parquet",
-    ]
 
 
 def test_manifest_lock_and_prune_preserve_deletes(spark, tmp_path):

@@ -4,6 +4,8 @@ re-sync driven through a FULL crawl (VERDICT r06 next #5)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from board_game_scraper_spark import schemas, synth
@@ -135,6 +137,8 @@ def test_par_spreads_unsplittable_scan_and_keeps_results(spark, monkeypatch):
     import board_game_scraper_spark.queries as q
 
     sf = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf):
+        pytest.skip(f"needs the {sf} single-row-group dataset")
     docs = q._t(spark, sf, "documents")
     n = spark.sparkContext.defaultParallelism
     assert docs.rdd.getNumPartitions() < n  # the premise: unsplittable

@@ -16,9 +16,9 @@ sf0.1 so optimizations can be validated at that scale locally:
   LSH bucket structure, not the exact values, is what costs);
 - dims (nation/region/part/supplier): copied as-is.
 
-NOT part of the driver contract and never read by bench.py or the
-oracle gate; used by bench_extra.py via SPARK_GRAFT_SF_DIR to cite
-stretch-scale numbers in OPTIMIZATION_r07.md.
+NOT part of the driver contract and never read by the oracle gate;
+point bench.py at the output via SPARK_GRAFT_SF_DIR for stretch-scale
+query timings (as cited in OPTIMIZATION_r07.md).
 
 Usage: python tools/make_stretch_sf.py [src_dir] [dst_dir] [copies]
 """
