@@ -9,8 +9,8 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": ...,
    "frontier": {urls, seconds, urls_per_sec, rounds}}
 
-Scaling-efficiency evidence (local[8] vs local[32]) is produced by
-``tools/bench_scaling.py`` → BENCH/BASELINE.md.
+Scaling evidence (local[1] vs local[4]) comes from
+``perfbench/run.py --scaling --workload crawl_bulk --seed 1 --seconds 20``.
 """
 
 from __future__ import annotations
@@ -48,9 +48,9 @@ HEADLINE = [
 # regression (BENCH_r05 vs r04: every query uniformly slower, zero code
 # change on most).  Every invocation appends its raw samples here and
 # the artifact renders POOLED minima over all records with the same
-# (sf, cpus, scale, headline-set) key — the same protocol as
-# tools/bench_scaling.py.  Delete the file whenever measured code
-# changes materially (mixing code states pollutes the minima).
+# (sf, cpus, scale, headline-set) key.  Delete the file whenever
+# measured code changes materially (mixing code states pollutes the
+# minima).
 POOL = Path(__file__).resolve().parent / "BENCH" / "bench_samples.jsonl"
 
 
@@ -66,8 +66,8 @@ def run_frontier_replay(spark, n_browse: int, n_users: int, n_other: int,
     """``reps`` crawl-replay samples (fresh engine root each rep, shared
     corpus).  This VM's hypervisor steal varies identical runs 2-4x, so
     a single sample is noise — the caller pools samples ACROSS
-    invocations and takes min-of-N (same protocol as
-    tools/bench_scaling.py; VERDICT r02 'wrong' #4, r05 'wrong' #1)."""
+    invocations and takes min-of-N (VERDICT r02 'wrong' #4, r05 'wrong'
+    #1)."""
     import shutil
     import tempfile
 
@@ -123,9 +123,8 @@ def run_frontier_replay(spark, n_browse: int, n_users: int, n_other: int,
 def main() -> None:
     sf_dir = os.getenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.getenv("SPARK_GRAFT_CPUS", "32")
-    # Replay scale defaults to 2.0 so the official artifact and the
-    # scaling evidence (tools/bench_scaling.py, BENCH/BASELINE.md) rest
-    # on the same corpus scale (VERDICT r03 'next' #6).
+    # Replay scale defaults to 2.0, the corpus scale of the recorded
+    # BENCH/BASELINE.md scaling evidence (VERDICT r03 'next' #6).
     scale = float(os.getenv("SPARK_GRAFT_BENCH_SCALE", "2.0"))
     spark = get_spark(
         "bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus)

@@ -1,15 +1,26 @@
 """BSP crawl loop (F12/F13) — the flagship end-to-end dataflow.
 
 One round = one superstep (the Spark replacement for the reference's
-Twisted reactor loop, ``__main__.py:91-190``):
+Twisted reactor loop, ``__main__.py:91-190``).  ``CrawlEngine.run_round``
+calls these stages in order:
 
-    frontier ──schedule (F1-F3 politeness top-K)──► scheduled batch
-        scheduled ──fetch (S5/S6 join)──► fetched
-            200s ──parse (Arrow UDF, E1-E16)──► spans + items + discovered
-            retryables ──backoff (F9)──► re-queued frontier rows
-        discovered ──canon (C1-C6) → seen dedup (F6 bloom+anti-join)──►
-            fresh frontier rows
-    commit snapshot: frontier', seen Δ, documents Δ, items Δ, metrics Δ
+1. ``_consume_seed_requests`` — fold queued crawl requests (S10) into
+   the frontier; like ``requeue``, an out-of-band insert.
+2. ``_fused_stage`` (or its speculative run, ``_take_speculation``) —
+   frontier ──schedule (F1-F3 politeness top-K)──► fetch (S5/S6 join)
+   ──► Arrow parse (E1-E16) ──► one uncommitted items write.
+3. ``_idle_round`` — only when nothing was scheduled: report done, or
+   the earliest round a backoff retry (F9) becomes eligible.
+4. ``_discover`` — discovered URLs ──canon (C1-C6) → two-level dedup →
+   seen filter (F6 bloom + anti-join)──► fresh frontier rows.
+5. ``_commit_side_tables`` — the commit pool: the frontier delta's
+   writes (deletes, retries, fresh) and the items, url_seen, metrics
+   (+ opt-in host_state/last_scraped) commits; on a retry-only tail it
+   launches the next round's speculative fused stage.
+6. ``_flip_frontier`` — the frontier delta commit, the resume marker.
+7. ``_compact`` — the ``compact_every`` cadence.
+8. ``_hand_off`` — the carried frontier, fast-forward hint and the
+   round's metric dict.
 
 Every table is a SnapshotTable (Iceberg semantics): the commit at the
 end of a round is atomic per table, and the frontier commit carries the
@@ -20,6 +31,7 @@ the last fully-committed round (reference: JOBDIR resume,
 
 from __future__ import annotations
 
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -77,6 +89,48 @@ def callback_kind_col(url_canon):
         .when(url_canon.contains("spielen.de"), F.lit("spielen_game"))
         .otherwise(F.lit("unknown"))
     )
+
+
+def _frontier_select(df: DataFrame, discovery_round: int,
+                     not_before_round: int) -> DataFrame:
+    """The ``schemas.FRONTIER`` row of each candidate (url, url_canon,
+    url_hash, host, priority, callback_kind): a new generation —
+    attempt 0, no meta — discovered in ``discovery_round`` and
+    schedulable from ``not_before_round``."""
+    return df.select(
+        "url", "url_canon", "url_hash", "host",
+        F.col("priority").cast("int").alias("priority"),
+        F.lit(discovery_round).alias("discovery_round"),
+        F.lit(0).cast("long").alias("discovery_seq"),
+        "callback_kind",
+        F.lit(0).alias("attempt"),
+        F.lit(not_before_round).alias("not_before_round"),
+        F.lit(None).cast("map<string,string>").alias("meta"),
+    )
+
+
+def _canonical_frontier_rows(urls: DataFrame, discovery_round: int,
+                             not_before_round: int) -> DataFrame:
+    """Frontier rows for raw ``url`` + ``priority`` rows (seeds,
+    requeues, seed requests): canonicalized, uncanonicalizable URLs
+    dropped, one row per canonical URL (highest priority wins)."""
+    from ..functions.canon import canonicalize_url
+
+    c = urls.withColumn("_c", canonicalize_url(F.col("url")))
+    rows = _frontier_select(
+        c.where(F.col("_c.url_canon").isNotNull()).select(
+            "url", "priority",
+            F.col("_c.url_canon").alias("url_canon"),
+            F.xxhash64("_c.url_canon").alias("url_hash"),
+            F.col("_c.host").alias("host"),
+            callback_kind_col(F.col("_c.url_canon")).alias("callback_kind"),
+        ),
+        discovery_round, not_before_round,
+    )
+    w = Window.partitionBy("url_hash").orderBy(
+        F.col("priority").desc(), F.col("url_canon"))
+    return (rows.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1).drop("_rn"))
 
 
 class _KindView:
@@ -199,7 +253,7 @@ class CrawlEngine:
         # the cached frontier frame — which double-fires when a
         # broadcast build and the main job materialize the same cached
         # partitions on different executors (see the counts note in
-        # run_round).  None = not yet known (resume); frontier_rows()
+        # _fused_stage).  None = not yet known (resume); frontier_rows()
         # recovers it from the newest manifest carrying the metric.
         self._frontier_rows: int | None = None
         # Exact in-memory frontier for provable retry-only tails — set
@@ -226,36 +280,24 @@ class CrawlEngine:
         self._spec_pool = None
         self._round_window_end: int | None = None
         # diagnostics: how many rounds consumed a speculative fused
-        # stage (pinned by tests/test_round7.py)
+        # stage (pinned by tests/test_crawl.py)
         self._spec_hits = 0
 
     # ------------------------------------------------------------------ seed
 
     def frontier_rows(self) -> int:
         """Exact current frontier row count — manifest arithmetic, no
-        Spark job.  Resume walks to the newest frontier snapshot whose
-        metrics carry ``frontier_rows`` (commits that don't change rows
-        — compact, prune — legitimately lack it); a table written by
-        older code falls back to ONE exact count()."""
-        if self._frontier_rows is not None:
-            return self._frontier_rows
-        import json as _json
-
-        snap = self.frontier.current_snapshot()
-        while snap is not None:
-            m = snap.get("metrics") or {}
-            if "frontier_rows" in m:
-                self._frontier_rows = int(m["frontier_rows"])
-                return self._frontier_rows
-            parent = snap.get("parent")
-            snap = (
-                _json.loads(
-                    (self.frontier.path / "snapshots" / parent).read_text()
-                )
-                if parent
-                else None
-            )
-        self._frontier_rows = int(self.frontier.read().count())
+        Spark job.  Resume takes it from the newest frontier snapshot
+        whose metrics carry ``frontier_rows``; a table written by older
+        code falls back to ONE exact count()."""
+        if self._frontier_rows is None:
+            self._frontier_rows = next(
+                (int(snap["metrics"]["frontier_rows"])
+                 for snap in self.frontier.history()
+                 if "frontier_rows" in (snap.get("metrics") or {})),
+                None)
+        if self._frontier_rows is None:
+            self._frontier_rows = int(self.frontier.read().count())
         return self._frontier_rows
 
     def seed(self, seeds: DataFrame) -> int:
@@ -263,36 +305,7 @@ class CrawlEngine:
 
         Reference: start_requests (bgg.py:198-227) + CSV seeds (S4).
         """
-        from ..functions.canon import canonicalize_url
-
-        c = seeds.withColumn("_c", canonicalize_url(F.col("url")))
-        rows = (
-            c.where(F.col("_c.url_canon").isNotNull())
-            .select(
-                "url",
-                F.col("_c.url_canon").alias("url_canon"),
-                F.xxhash64("_c.url_canon").alias("url_hash"),
-                F.col("_c.host").alias("host"),
-                F.col("priority"),
-                F.lit(0).alias("discovery_round"),
-                F.lit(0).cast("long").alias("discovery_seq"),
-                callback_kind_col(F.col("_c.url_canon")).alias("callback_kind"),
-                F.lit(0).alias("attempt"),
-                F.lit(0).alias("not_before_round"),
-                F.lit(None).cast("map<string,string>").alias("meta"),
-            )
-            # one row per canonical URL (dedup within the seed list)
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("url_hash").orderBy(
-                        F.col("priority").desc(), F.col("url_canon")
-                    )
-                ),
-            )
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        rows = _canonical_frontier_rows(seeds, 0, 0)
         obs = Observation()
         rows = rows.observe(obs, F.count(F.lit(1)).alias("n")).cache()
         # Seen first: its write materializes the cached rows exactly
@@ -365,70 +378,53 @@ class CrawlEngine:
         ``urls``: DataFrame with a raw ``url`` column (+ optional
         priority).  Requires track_last_scraped=True.
         """
-        from ..functions.canon import canonicalize_url
-
-        c = urls.withColumn("_c", canonicalize_url(F.col("url")))
-        prio = (F.col("priority") if "priority" in urls.columns
-                else F.lit(1))
-        cand = c.where(F.col("_c.url_canon").isNotNull()).select(
-            F.col("_c.url_canon").alias("url"),
-            F.col("_c.url_canon").alias("url_canon"),
-            F.xxhash64("_c.url_canon").alias("url_hash"),
-            F.col("_c.host").alias("host"),
-            prio.cast("int").alias("priority"),
-            # round_no + 1, NOT round_no: a URL discovered in round_no,
-            # scheduled+failed in round_no, then requeued in round_no
-            # would otherwise collide with the round's pending equality-
-            # delete tuple (url_hash, 0, round_no) and be silently
-            # dropped at the next compact.  Requeued rows are a distinct
-            # generation, same as fresh discoveries.
-            F.lit(round_no + 1).alias("discovery_round"),
-            F.lit(0).cast("long").alias("discovery_seq"),
-            callback_kind_col(F.col("_c.url_canon")).alias("callback_kind"),
-            F.lit(0).alias("attempt"),
-            F.lit(round_no).alias("not_before_round"),
-            F.lit(None).cast("map<string,string>").alias("meta"),
-        )
+        if "priority" not in urls.columns:
+            urls = urls.withColumn("priority", F.lit(1))
+        # discovery_round = round_no + 1, NOT round_no: a URL discovered
+        # in round_no, scheduled+failed in round_no, then requeued in
+        # round_no would otherwise collide with the round's pending
+        # equality-delete tuple (url_hash, 0, round_no) and be silently
+        # dropped at the next compact.  Requeued rows are a distinct
+        # generation, same as fresh discoveries.
+        rows = _canonical_frontier_rows(urls, round_no + 1, round_no)
         recent = self.last_scraped.read().where(
             F.col("round") > round_no - window_rounds
         ).select("url_hash")
-        fresh = cand.join(recent, "url_hash", "left_anti")
-        # also drop anything already pending in the frontier
-        frontier = self.frontier.read()
+        return self._insert_rows(
+            rows.join(recent, "url_hash", "left_anti"),
+            lineage={"stage": "requeue", "at_round": round_no})
+
+    def _insert_rows(self, rows: DataFrame, lineage: dict) -> int:
+        """Out-of-band frontier insert (requeue, seed-request fold):
+        append the ``rows`` not already pending in the frontier as one
+        delta; returns how many.  ONE action: the count rides the
+        prepared write job as an Observation, so the commit can carry
+        the exact post-commit row count (frontier_rows()).  A delta that
+        observed zero rows is removed, never committed: a no-op insert
+        leaves nothing on disk (ADVICE r04 #3).  ``lineage`` has no
+        "round" key — only end-of-round commits may advance the resume
+        marker (ADVICE r03 #4)."""
         obs = Observation()
-        fresh = fresh.join(frontier.select("url_hash"), "url_hash",
-                           "left_anti").observe(
+        fresh = rows.join(self.frontier.read().select("url_hash"),
+                          "url_hash", "left_anti").observe(
             obs, F.count(F.lit(1)).alias("n"))
-        # Delta append: only the requeued rows hit disk, never the full
-        # frontier (merge-on-read — tables.py).  ONE action: the count
-        # rides the prepared write job as an Observation, so the
-        # manifest commit that follows can carry the exact post-commit
-        # row count (frontier_rows()).  No "round" lineage key —
-        # requeue is an out-of-band insert, and the resume marker must
-        # only advance on end-of-round commits.
         prepared = self.frontier.prepare_delta(
             appends=fresh, coalesce=self.write_coalesce,
         )
         n = int(obs.get["n"] or 0)
-        man = self.frontier.commit_prepared_delta(
-            prepared,
-            lineage={"stage": "requeue", "at_round": round_no},
-            metrics={"frontier_rows": self.frontier_rows() + n},
+        if n == 0:
+            self.frontier.discard_prepared(prepared)
+            return 0
+        rows_after = self.frontier_rows() + n
+        self.frontier.commit_prepared_delta(
+            prepared, lineage=lineage,
+            metrics={"frontier_rows": rows_after},
         )
-        if n == 0 and man.get("added"):
-            # the append observed zero rows — retract the empty data dir
-            # so repeated no-op requeues don't grow the manifest's file
-            # list / read fan-in until the next compact (ADVICE r04 #3)
-            self.frontier.prune_files(
-                man["added"],
-                lineage={"stage": "requeue_noop", "at_round": round_no},
-            )
+        self._frontier_rows = rows_after
         if self._pending_hint is not None:
             self._pending_hint += n
-        self._frontier_rows = self.frontier_rows() + n
-        if n:
-            self._next_frontier = None
-            self._cancel_speculation()
+        self._next_frontier = None
+        self._cancel_speculation()
         return n
 
     # ------------------------------------------------------- S10 seed requests
@@ -495,58 +491,14 @@ class CrawlEngine:
         # AFTER this read land in new files and survive the ack below
         # (an external producer may enqueue mid-round — ADVICE r03 #3).
         consumed_files = list(snap["files"])
-        from ..functions.canon import canonicalize_url
-
         batch = self.spark.read.schema(schemas.SEED_REQUESTS).parquet(
             *[str(self.seed_requests.path / rel) for rel in consumed_files]
         ) if consumed_files else self.spark.createDataFrame(
             [], schemas.SEED_REQUESTS
         )
-        c = batch.withColumn("_c", canonicalize_url(F.col("url")))
-        cand = c.where(F.col("_c.url_canon").isNotNull()).select(
-            "url",
-            F.col("_c.url_canon").alias("url_canon"),
-            F.xxhash64("_c.url_canon").alias("url_hash"),
-            F.col("_c.host").alias("host"),
-            F.col("priority"),
-            F.lit(round_no).alias("discovery_round"),
-            F.lit(0).cast("long").alias("discovery_seq"),
-            callback_kind_col(F.col("_c.url_canon")).alias("callback_kind"),
-            F.lit(0).alias("attempt"),
-            F.lit(round_no).alias("not_before_round"),
-            F.lit(None).cast("map<string,string>").alias("meta"),
-        )
-        w = Window.partitionBy("url_hash").orderBy(
-            F.col("priority").desc(), F.col("url_canon")
-        )
-        cand = (cand.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1).drop("_rn"))
-        obs = Observation()
-        fresh = cand.join(self.frontier.read().select("url_hash"),
-                          "url_hash", "left_anti").observe(
-            obs, F.count(F.lit(1)).alias("n"))
-        # ONE action (count observed on the prepared write job; the
-        # manifest commit then carries the exact post-commit row count
-        # for frontier_rows()).  No "round" lineage key: last_round()
-        # must only advance on the end-of-round frontier commit —
-        # tagging this fold with round_no made a
-        # crash-before-round-commit resume skip straight past round_no
-        # (ADVICE r03 #4).
-        prepared = self.frontier.prepare_delta(
-            appends=fresh, coalesce=self.write_coalesce,
-        )
-        n = int(obs.get["n"] or 0)
-        man = self.frontier.commit_prepared_delta(
-            prepared,
-            lineage={"stage": "seed_requests", "at_round": round_no},
-            metrics={"frontier_rows": self.frontier_rows() + n},
-        )
-        if n == 0 and man.get("added"):
-            self.frontier.prune_files(
-                man["added"],
-                lineage={"stage": "seed_requests_noop",
-                         "at_round": round_no},
-            )
+        n = self._insert_rows(
+            _canonical_frontier_rows(batch, round_no, round_no),
+            lineage={"stage": "seed_requests", "at_round": round_no})
         # ack: drop exactly the consumed files (manifest-only commit);
         # files appended since the consuming read stay pending.  The
         # replace compare-and-swaps on the snapshot the remaining list
@@ -572,12 +524,6 @@ class CrawlEngine:
                 break
             except ConcurrentCommitError:
                 continue
-        if self._pending_hint is not None:
-            self._pending_hint += n
-        self._frontier_rows = self.frontier_rows() + n
-        if n:
-            self._next_frontier = None
-            self._cancel_speculation()
         return n
 
     # ------------------------------------------------------------- F7 ids_seen
@@ -709,11 +655,11 @@ class CrawlEngine:
         # (Caching or multi-pass-writing a deep-nested per-page shape
         # anti-scales 6x at high parallelism — see schemas.PARSE_FLAT.)
         # The fused write lands DIRECTLY in the items table's next data
-        # dir (committed by run_round via add_files once the round is
-        # known to be non-empty) — it is both the round's scratch AND
-        # the durable output, written exactly once, partitioned by
-        # item_kind so the per-kind reads (and the _KindView API)
-        # partition-prune.
+        # dir (committed by _commit_side_tables via add_files once the
+        # round is known to be non-empty) — it is both the round's
+        # scratch AND the durable output, written exactly once,
+        # partitioned by item_kind so the per-kind reads (and the
+        # _KindView API) partition-prune.
         items_rel, scratch = self.items.new_data_dir()
         obs_items = Observation()
         kind = lambda k: F.sum(
@@ -759,28 +705,25 @@ class CrawlEngine:
 
     # ------------------------------------------- round double-buffering
 
-    def _launch_speculation(self, next_round: int, fetch_rows: DataFrame,
-                            round_no: int, hint: int) -> None:
+    def _launch_speculation(self, next_round: int, frontier_expr: DataFrame,
+                            hint: int) -> None:
         """Start round ``next_round``'s fused stage on a background
         thread while the CURRENT round's stage-B commits + manifest flip
         run.  Launched only from a provable retry-only tail (the next
-        frontier is exactly this round's retry rows, the same expression
-        ``_next_frontier`` carries), only inside a crawl() window that
-        will actually run that round, and never under obey_robots (the
-        robots refresh mutates a table).  The speculative job commits
-        NOTHING — consuming it or discarding it is equally safe."""
-        import os as _os
-
+        frontier is exactly ``frontier_expr``, this round's retry rows —
+        the expression ``_next_frontier`` carries), only inside a crawl()
+        window that will actually run that round, and never under
+        obey_robots (the robots refresh mutates a table).  The
+        speculative job commits NOTHING — consuming it or discarding it
+        is equally safe."""
         if (self._round_window_end is None
                 or next_round >= self._round_window_end
-                or self.obey_robots
-                or _os.getenv("SPARK_GRAFT_NO_DOUBLE_BUFFER") == "1"):
+                or self.obey_robots):
             return
         from concurrent.futures import ThreadPoolExecutor as _TPE
 
         if self._spec_pool is None:
             self._spec_pool = _TPE(max_workers=1)
-        frontier_expr = retry_rows(fetch_rows, round_no, self.max_attempts)
 
         def _run() -> dict:
             self.spark.sparkContext.setJobDescription(
@@ -809,8 +752,6 @@ class CrawlEngine:
             return None
 
     def _discard_spec(self, spec: dict) -> None:
-        import shutil as _shutil
-
         try:
             fused = spec["future"].result()
         except Exception:
@@ -820,7 +761,7 @@ class CrawlEngine:
                 df.unpersist()
             except Exception:
                 pass
-        _shutil.rmtree(fused["scratch"], ignore_errors=True)
+        shutil.rmtree(fused["scratch"], ignore_errors=True)
 
     def _cancel_speculation(self) -> None:
         """Invalidate any in-flight speculation (out-of-band frontier
@@ -831,118 +772,92 @@ class CrawlEngine:
             self._discard_spec(spec)
 
     def run_round(self, round_no: int) -> dict:
-        """One BSP superstep.  Returns the round's metric dict."""
-        import os as _os
-        import shutil as _shutil
-        import sys as _sys
-        import time as _time
+        """One BSP superstep: the stage sequence the module docstring
+        lists.  Returns the round's metric dict.
 
-        _trace = _os.getenv("SPARK_GRAFT_STAGE_TIMING") == "1"
-        _t0 = [_time.perf_counter()]
-
-        def _mark(label: str) -> None:
-            if _trace:
-                now = _time.perf_counter()
-                print(f"STAGE {label} {now - _t0[0]:.2f}s",
-                      file=_sys.stderr, flush=True)
-                _t0[0] = now
-
+        COUNTS THAT DRIVE THE LOOP (scheduled, retries, fresh, pending)
+        come only from aggregates riding singly-materialized WRITE jobs
+        and from manifest arithmetic — see ``_fused_stage``."""
         self._consume_seed_requests(round_no)
         fused = self._take_speculation(round_no)
         if fused is not None:
             # the speculative job already computed the carried frontier
             self._next_frontier = None
             self._spec_hits += 1
-            _mark("speculation_consumed")
         else:
             carried, self._next_frontier = self._next_frontier, None
-            frontier_in = (carried if carried is not None
-                           else self.frontier.read())
-            fused = self._fused_stage(round_no, frontier_in,
-                                      self._pending_hint)
-        frontier = fused["frontier"]
-        obs_front = fused["obs_front"]
-        scheduled = fused["scheduled"]
-        items_rel = fused["items_rel"]
-        scratch = fused["scratch"]
-        parse_counts = fused["parse_counts"]
-
-        _mark("parse_scratch_write")
-        n_scheduled = int(parse_counts.get("fetch") or 0)
+            fused = self._fused_stage(
+                round_no,
+                carried if carried is not None else self.frontier.read(),
+                self._pending_hint)
         n_frontier = self.frontier_rows()
-        if self.record_schedule and n_scheduled:
+        if not fused["parse_counts"].get("fetch"):
+            return self._idle_round(round_no, fused, n_frontier)
+        if self.record_schedule:
             log: dict[str, list[str]] = {}
-            for row in scheduled.select(
+            for row in fused["scheduled"].select(
                 "host", "sched_rank", "url_canon"
             ).orderBy("host", "sched_rank").collect():
                 log.setdefault(row["host"], []).append(row["url_canon"])
             self.schedule_log[round_no] = log
-        if n_scheduled == 0:
-            min_nb = obs_front.get["min_nb"]
-            frontier.unpersist()
-            scheduled.unpersist()
-            _shutil.rmtree(scratch, ignore_errors=True)
-            if n_frontier > 0 and min_nb is not None:
-                # NOT done: the frontier still holds SCHEDULABLE rows,
-                # all of them backoff retries gated on a future
-                # not_before_round (anything eligible would have been
-                # scheduled).  A "done" here would permanently strand
-                # those retries — including across resumes, since
-                # nothing commits in this path (ADVICE r03 #2).  Hand
-                # crawl() the earliest eligible round so it
-                # fast-forwards instead.  min_nb is None when the
-                # post-robots frame was EMPTY — n_frontier counts table
-                # rows, so a table holding only robots-blocked rows
-                # (never schedulable) must still terminate as done.
-                next_eligible = max(int(min_nb), round_no + 1)
-                self._pending_hint = n_frontier
-                return {"round": round_no, "scheduled": 0, "fetched": 0,
-                        "parsed_items": 0, "discovered": 0,
-                        "pending": n_frontier,
-                        "next_eligible_round": next_eligible,
-                        "done": False}
-            self._pending_hint = 0
-            return {"round": round_no, "scheduled": 0, "fetched": 0,
-                    "parsed_items": 0, "discovered": 0, "done": True}
-
         flat = self.spark.read.schema(schemas.PARSE_FLAT).parquet(
-            str(scratch)
-        )
-        n_ok = int(parse_counts.get("page") or 0)
-        stats = {
-            "games": int(parse_counts.get("game") or 0),
-            "users": int(parse_counts.get("user") or 0),
-            "ratings": int(parse_counts.get("rating") or 0),
-        }
-        n_items = stats["games"] + stats["users"] + stats["ratings"]
-
-        # fetch-outcome rows (retry/metrics/host-state source — scratch
-        # read, no join re-execution)
+            str(fused["scratch"]))
+        # fetch-outcome rows: the retry / metrics / host-state source (a
+        # scratch read — the fetch join never re-executes)
         fetch_rows = flat.where(F.col("item_kind") == "fetch").select(
-            "url_canon", F.col("fetch.*")
-        )
-        obs_retry = Observation()
-        retries = retry_rows(
-            fetch_rows, round_no, self.max_attempts
-        ).observe(obs_retry, F.count(F.lit(1)).alias("n"),
-                  F.min("not_before_round").alias("min_nb"))
+            "url_canon", F.col("fetch.*"))
+        disc = self._discover(round_no, flat)
+        c = self._commit_side_tables(round_no, fused, fetch_rows, disc,
+                                     n_frontier)
+        self._flip_frontier(round_no, c)
+        self._compact(round_no)
+        return self._hand_off(round_no, fused, disc, c)
 
-        # --- per-kind access: partition-pruned reads of the committed dir --
-        pages_rows = flat.where(F.col("item_kind") == "page")
+    def _idle_round(self, round_no: int, fused: dict,
+                    n_frontier: int) -> dict:
+        """Nothing was scheduled: drop the round's caches and scratch dir
+        (nothing commits) and report done — unless backoff retries are
+        still pending."""
+        min_nb = fused["obs_front"].get["min_nb"]
+        fused["frontier"].unpersist()
+        fused["scheduled"].unpersist()
+        shutil.rmtree(fused["scratch"], ignore_errors=True)
+        idle = {"round": round_no, "scheduled": 0, "fetched": 0,
+                "parsed_items": 0, "discovered": 0}
+        if n_frontier > 0 and min_nb is not None:
+            # NOT done: the frontier still holds SCHEDULABLE rows, all of
+            # them backoff retries gated on a future not_before_round
+            # (anything eligible would have been scheduled).  A "done"
+            # here would permanently strand those retries — including
+            # across resumes, since nothing commits in this path (ADVICE
+            # r03 #2).  Hand crawl() the earliest eligible round so it
+            # fast-forwards instead.  min_nb is None when the post-robots
+            # frame was EMPTY — n_frontier counts table rows, so a table
+            # holding only robots-blocked rows (never schedulable) must
+            # still terminate as done.
+            self._pending_hint = n_frontier
+            return {**idle, "pending": n_frontier,
+                    "next_eligible_round": max(int(min_nb), round_no + 1),
+                    "done": False}
+        self._pending_hint = 0
+        return {**idle, "done": True}
 
-        # --- discoveries → dedup vs seen → fresh frontier rows -------------
+    def _discover(self, round_no: int, flat: DataFrame) -> dict:
+        """Discovered URLs → two-level dedup → seen filter → the round's
+        fresh frontier rows.  Lazy: the fresh-delta prepare in
+        ``_commit_side_tables`` is the branch's single materializer."""
         # obs_disc is REPORTING-ONLY (the metrics table's
         # discovered_urls column): filter_unseen's definite-new and
         # maybe-seen branches each traverse the cached disc frame, so on
         # a multi-executor cluster the count can over-fire when both
         # branches compute the same partition on different executors
         # before either caches it (measured +9% on local-cluster[4,8]).
-        # Nothing that DRIVES the loop reads it — pending/scheduling use
-        # write-job observations and manifest arithmetic only.
+        # Nothing that DRIVES the loop reads it.
         obs_disc = Observation()
         obs_fresh = Observation()
         disc = (
-            pages_rows.select(F.explode("discovered").alias("d"))
+            flat.where(F.col("item_kind") == "page")
+            .select(F.explode("discovered").alias("d"))
             .select(
                 F.col("d.url").alias("url_canon"),
                 F.col("d.priority").alias("priority"),
@@ -974,30 +889,47 @@ class CrawlEngine:
             )
             .observe(obs_disc, F.count(F.lit(1)).alias("n"))
         ).cache()
-        disc_raw = disc
+        cached = [disc]
         if self.use_ids_seen:
             disc = self._rebatch_thing_ids(disc, round_no)
-        fresh = filter_unseen(disc, self.seen.read(), self.bloom).select(
-            F.col("url_canon").alias("url"),
-            "url_canon",
-            "url_hash",
-            "host",
-            "priority",
-            F.lit(round_no + 1).alias("discovery_round"),
-            F.lit(0).cast("long").alias("discovery_seq"),
-            "callback_kind",
-            F.lit(0).alias("attempt"),
-            F.lit(round_no + 1).alias("not_before_round"),
-            F.lit(None).cast("map<string,string>").alias("meta"),
-        )
-        # No cache: the fresh-delta prepare below is the branch's SINGLE
-        # consumer and materializer (obs_fresh rides its write job); the
-        # seen delta is derived from its output file, not recomputed.
-        fresh = fresh.observe(obs_fresh, F.count(F.lit(1)).alias("n"))
+            cached.append(disc)
+        unseen = filter_unseen(disc, self.seen.read(), self.bloom)
+        # No cache: the fresh-delta prepare is this frame's only
+        # consumer (obs_fresh rides its write job); the seen delta is
+        # derived from its output file, not recomputed.
+        fresh = _frontier_select(
+            unseen.withColumn("url", F.col("url_canon")),
+            round_no + 1, round_no + 1,
+        ).observe(obs_fresh, F.count(F.lit(1)).alias("n"))
+        return {"fresh": fresh, "obs_disc": obs_disc,
+                "obs_fresh": obs_fresh, "cached": cached}
 
-        # --- per-host metrics (A5; north_rule lineage requirement) ---------
-        # metrics_rows is assembled inside the commit pool, once the
-        # discovery counts are observed (see _seen_write below).
+    def _commit_side_tables(self, round_no: int, fused: dict,
+                            fetch_rows: DataFrame, disc: dict,
+                            n_frontier: int) -> dict:
+        """The commit pool: every write of the round except the frontier
+        manifest flip.  Returns the round's counts, the frontier delta's
+        prepared parts and — on a retry-only tail — the next frontier.
+
+        All these writes target DIFFERENT tables and read only the
+        committed scratch parquet / caches, so they run CONCURRENTLY
+        (Spark schedules jobs from multiple threads; each SnapshotTable's
+        manifest is touched by exactly one thread).  Until the frontier
+        flip — the resume marker, strictly last — the delta dirs are
+        invisible orphans."""
+        counts = fused["parse_counts"]
+        n_scheduled = int(counts.get("fetch") or 0)
+        n_ok = int(counts.get("page") or 0)
+        stats = {f"{k}s": int(counts.get(k) or 0)
+                 for k in ("game", "user", "rating")}
+        n_items = sum(stats.values())
+        lineage = {"round": round_no, "stage": "round"}
+        retry_expr = retry_rows(fetch_rows, round_no, self.max_attempts)
+        obs_retry = Observation()
+        retries = retry_expr.observe(
+            obs_retry, F.count(F.lit(1)).alias("n"),
+            F.min("not_before_round").alias("min_nb"))
+        # per-host metrics (A5; north_rule lineage requirement)
         host_metrics = (
             fetch_rows.groupBy("host")
             .agg(
@@ -1008,25 +940,12 @@ class CrawlEngine:
             )
             .withColumn("round", F.lit(round_no))
         )
-
-        # --- commit (per-table snapshots; frontier last carries the round
-        # marker used by resume()) ------------------------------------------
-        lineage = {"round": round_no, "stage": "round"}
-
-        # Gate empty writes (late rounds have no items): an empty append
-        # still costs a Spark job + a snapshot commit.  All these commits
-        # target DIFFERENT tables and read only the scratch parquet /
-        # caches, so they run CONCURRENTLY (Spark schedules jobs from
-        # multiple threads; each SnapshotTable's manifest is touched by
-        # exactly one thread).  Only the frontier delta — the resume
-        # marker — must come after all of them.
-        writes = []
         # The round's parse output was already written into items_rel by
-        # the fused stage above; committing it is pure manifest IO (no
-        # Spark job, no rewrite) — Iceberg add_files.
-        writes.append(("items", lambda: self.items.add_files(
-            items_rel, lineage=lineage,
-            metrics={"pages": n_ok, **stats})))
+        # the fused stage; committing it is pure manifest IO (no Spark
+        # job, no rewrite) — Iceberg add_files.
+        writes = [lambda: self.items.add_files(
+            fused["items_rel"], lineage=lineage,
+            metrics={"pages": n_ok, **stats})]
         if self.adaptive_politeness:
             from .frontier import update_host_state
 
@@ -1036,18 +955,18 @@ class CrawlEngine:
             merged = prev_state.join(
                 updated.select("host"), "host", "left_anti"
             ).unionByName(updated)
-            writes.append(("host_state", lambda: self.host_state.overwrite(
-                merged, lineage=lineage, coalesce=1)))
+            writes.append(lambda: self.host_state.overwrite(
+                merged, lineage=lineage, coalesce=1))
         if self.track_last_scraped:
-            writes.append(("last_scraped", lambda: self.last_scraped.append(
+            writes.append(lambda: self.last_scraped.append(
                 fetch_rows.where(F.col("status") == 200).select(
                     "url_hash", "url_canon",
                     F.lit(round_no).alias("round"),
                 ),
-                lineage=lineage, coalesce=self.write_coalesce)))
+                lineage=lineage, coalesce=self.write_coalesce))
         from concurrent.futures import ThreadPoolExecutor
 
-        empty_prep = {"files": [], "dfiles": []}
+        empty = {"files": [], "dfiles": []}
         with ThreadPoolExecutor(max_workers=8) as pool:
             # Frontier delta (merge-on-read): append retries+fresh,
             # equality-delete the scheduled rows.  IO is
@@ -1060,22 +979,17 @@ class CrawlEngine:
             # delete tuples can never shadow newly appended rows.
             #
             # Stage A — everything that depends only on the committed
-            # scratch / caches runs concurrently: the delta's three data
-            # writes (deletes, retries, fresh), the items manifest
-            # commit, and the opt-in host_state/last_scraped writes.
-            # The FRESH prepare is the discovery branch's single
-            # materializer (obs_disc/obs_fresh ride its write job —
-            # driving-safe per the counts note above); the seen append
-            # is derived from its OUTPUT FILE in stage B, so the branch
-            # is computed exactly once and the seen append no longer
-            # serializes ahead of the metrics write (VERDICT r05 next
-            # #6: the commit tail was two full write latencies).  Only
-            # the MANIFEST flip — the resume marker — happens strictly
-            # last, after every write has succeeded; until then the
-            # delta dirs are invisible orphans.
+            # scratch / caches: the delta's three data writes (deletes,
+            # retries, fresh), the items manifest commit, and the opt-in
+            # host_state/last_scraped writes.  The FRESH prepare is the
+            # discovery branch's single materializer (obs_disc/obs_fresh
+            # ride its write job); the seen append is derived from its
+            # OUTPUT FILE in stage B, so the branch is computed exactly
+            # once and the seen append does not serialize ahead of the
+            # metrics write (VERDICT r05 next #6).
             fut_del = pool.submit(
                 lambda: self.frontier.prepare_delta(
-                    deletes=scheduled.select(
+                    deletes=fused["scheduled"].select(
                         "url_hash", "attempt", "discovery_round"
                     ),
                     coalesce=self.write_coalesce,
@@ -1084,7 +998,7 @@ class CrawlEngine:
             # Retries prepare, gated on the parse-observed retryable
             # count (ADVICE r05 #3: a zero-retry round used to commit an
             # empty delta dir).
-            n_retry_hint = parse_counts.get("retryable")
+            n_retry_hint = counts.get("retryable")
             fut_ret = (
                 pool.submit(
                     lambda: self.frontier.prepare_delta(
@@ -1097,35 +1011,28 @@ class CrawlEngine:
             fut_fresh = (
                 pool.submit(
                     lambda: self.frontier.prepare_delta(
-                        appends=fresh, coalesce=self.write_coalesce,
+                        appends=disc["fresh"], coalesce=self.write_coalesce,
                     )
                 )
                 if n_ok
                 else None
             )
-            futures = [(name, pool.submit(fn)) for name, fn in writes]
-            for name, fut in futures:
+            for fut in [pool.submit(fn) for fn in writes]:
                 fut.result()  # propagate the first failure
-                _mark(f"{name}_write")
-            prep_f = (fut_fresh.result() if fut_fresh is not None
-                      else dict(empty_prep))
+            prep_f = fut_fresh.result() if fut_fresh is not None else empty
             # Discovery counts become observable once the fresh prepare
             # (or, with n_ok == 0, nothing) has materialized the branch.
-            n_fresh = int(obs_fresh.get["n"] or 0) if n_ok else 0
-            n_disc = int(obs_disc.get["n"] or 0) if n_ok else 0
-            _mark("fresh_prep")
+            n_fresh = int(disc["obs_fresh"].get["n"] or 0) if n_ok else 0
+            n_disc = int(disc["obs_disc"].get["n"] or 0) if n_ok else 0
 
             # Stage B — two tiny derived appends, concurrent.
             def _seen_write():
                 # Projection of the fresh delta file just written —
                 # re-read (a few small parquet files), never recomputed.
-                fresh_rows = self.spark.read.schema(
-                    schemas.FRONTIER
-                ).parquet(
+                sd = self.spark.read.schema(schemas.FRONTIER).parquet(
                     *[str(self.frontier.path / rel)
                       for rel in prep_f["files"]]
-                )
-                sd = fresh_rows.select(
+                ).select(
                     "url_hash", "url_canon",
                     F.lit(round_no + 1).alias("first_round"),
                 )
@@ -1148,146 +1055,142 @@ class CrawlEngine:
                 )
             )
             prep_del = fut_del.result()
-            if fut_ret is not None:
-                prep_ret = fut_ret.result()
-                retry_stats = obs_retry.get
-            else:
-                prep_ret = dict(empty_prep)
-                retry_stats = {"n": 0, "min_nb": None}
+            prep_ret = fut_ret.result() if fut_ret is not None else empty
+            retry_stats = (obs_retry.get if fut_ret is not None
+                           else {"n": 0, "min_nb": None})
             n_retries = int(retry_stats["n"] or 0)
-            # Round double-buffering (VERDICT r06 next #2): on a
-            # provable retry-only tail the next frontier is EXACTLY this
-            # round's retry rows, so the next round's fused job can
-            # start now — overlapping stage B, the manifest flip and the
-            # compact cadence below.  It reads only the committed
-            # scratch parquet + the pages cache (+ post-stage-A side
-            # tables), never a table mid-commit, and commits nothing.
-            if (n_frontier - n_scheduled == 0 and n_fresh == 0
-                    and n_retries > 0 and self._spec is None):
-                nr = max(int(retry_stats["min_nb"]), round_no + 1)
-                self._launch_speculation(nr, fetch_rows, round_no,
-                                         hint=n_retries)
-                if self._spec is not None:
-                    _mark(f"speculate_launch_r{nr}")
-            # Drop prepared-but-empty delta dirs BEFORE the commit: the
-            # dirs were never referenced by any manifest, so removing
-            # them is safe and quiet rounds add nothing to the read
-            # fan-in (ADVICE r05 #3 — previously an empty retries dir
-            # per quiet round until the compact cadence).
-            for prep, n in ((prep_ret, n_retries), (prep_f, n_fresh)):
-                if n == 0 and prep["files"]:
-                    for rel in prep["files"]:
-                        _shutil.rmtree(self.frontier.path / rel,
-                                       ignore_errors=True)
-                    prep["files"] = []
+            # A provable retry-only tail: this round consumed the whole
+            # frontier (no unscheduled leftover, no fresh discoveries)
+            # and only backoff retries remain, so the committed frontier
+            # will be EXACTLY retry_expr.  The next round's fused job can
+            # then start now — overlapping stage B, the manifest flip
+            # and the compact cadence (VERDICT r06 next #2).  It reads
+            # only the committed scratch parquet + the pages cache (+
+            # post-stage-A side tables), never a table mid-commit, and
+            # commits nothing.
+            tail = (n_frontier == n_scheduled and n_fresh == 0
+                    and n_retries > 0)
+            if tail and self._spec is None:
+                self._launch_speculation(
+                    max(int(retry_stats["min_nb"]), round_no + 1),
+                    retry_expr, hint=n_retries)
+            # An empty delta is removed, never committed: its dirs were
+            # never referenced by any manifest, and quiet rounds add
+            # nothing to the read fan-in (ADVICE r05 #3).
+            if n_retries == 0:
+                self.frontier.discard_prepared(prep_ret)
+                prep_ret = empty
+            if n_fresh == 0:
+                self.frontier.discard_prepared(prep_f)
+                prep_f = empty
             if fut_seen is not None:
                 fut_seen.result()
             fut_m.result()
-            _mark("seen_metrics_write")
-        # Frontier balance, all from write-job observations + manifest
-        # arithmetic (no extra jobs, robust to multi-executor cache
-        # races — see the counts note above): the post-commit row count
-        # rides the commit manifest so frontier_rows() never runs a job.
-        pending = n_frontier - n_scheduled + n_retries + n_fresh
+        return {
+            "n_frontier": n_frontier, "scheduled": n_scheduled,
+            "fetched": n_ok, "parsed_items": n_items,
+            "discovered": n_disc, "fresh": n_fresh, "retries": n_retries,
+            "prepared": [prep_del, prep_ret, prep_f],
+            "next_frontier": retry_expr if tail else None,
+            "retry_min_nb": retry_stats["min_nb"],
+        }
+
+    def _flip_frontier(self, round_no: int, c: dict) -> None:
+        """Commit the frontier delta — the round's resume marker.  The
+        post-commit row count is frontier arithmetic over write-job
+        observations (no extra job, robust to multi-executor cache
+        races) and rides the manifest, so frontier_rows() never runs a
+        job."""
+        pending = (c["n_frontier"] - c["scheduled"] + c["retries"]
+                   + c["fresh"])
         self.frontier.commit_prepared_delta(
-            {"files": (prep_del["files"] + prep_ret["files"]
-                       + prep_f["files"]),
-             "dfiles": (prep_del["dfiles"] + prep_ret["dfiles"]
-                        + prep_f["dfiles"])},
+            {"files": [f for p in c["prepared"] for f in p["files"]],
+             "dfiles": [f for p in c["prepared"] for f in p["dfiles"]]},
             delete_keys=["url_hash", "attempt", "discovery_round"],
-            lineage=lineage,
+            lineage={"round": round_no, "stage": "round"},
             metrics={
-                "scheduled": n_scheduled,
-                "fetched_ok": n_ok,
-                "discovered": n_disc,
-                "fresh": n_fresh,
-                "items": n_items,
+                "scheduled": c["scheduled"],
+                "fetched_ok": c["fetched"],
+                "discovered": c["discovered"],
+                "fresh": c["fresh"],
+                "items": c["parsed_items"],
                 "frontier_rows": pending,
             },
         )
         self._frontier_rows = pending
-        _mark("frontier_delta")
-        if self.compact_every and round_no % self.compact_every == 0:
-            # count_metric: the rewrite job observes the EXACT row count
-            # and records it as frontier_rows, re-syncing the manifest
-            # arithmetic every cadence — a drift (e.g. a delete tuple
-            # matching several rows under a non-unique corpus key) can
-            # never outlive one compaction (ADVICE r05 #1).
-            man_c = self.frontier.compact(
-                lineage={"round": round_no, "stage": "compact"},
-                coalesce=self.write_coalesce,
-                count_metric="frontier_rows",
+
+    def _compact(self, round_no: int) -> None:
+        """Every ``compact_every`` rounds: fold the frontier's deletes,
+        the bloom deltas and the side tables' small files."""
+        if not (self.compact_every and round_no % self.compact_every == 0):
+            return
+        # count_metric: the rewrite job observes the EXACT row count and
+        # records it as frontier_rows, re-syncing the manifest arithmetic
+        # every cadence — a drift (e.g. a delete tuple matching several
+        # rows under a non-unique corpus key) can never outlive one
+        # compaction (ADVICE r05 #1).
+        man_c = self.frontier.compact(
+            lineage={"round": round_no, "stage": "compact"},
+            coalesce=self.write_coalesce,
+            count_metric="frontier_rows",
+        )
+        exact = int(man_c["metrics"]["frontier_rows"])
+        if exact != self._frontier_rows:
+            import warnings
+
+            warnings.warn(
+                f"frontier_rows arithmetic drift at round {round_no}: "
+                f"tracked {self._frontier_rows}, exact {exact} — re-synced",
+                stacklevel=3,
             )
-            exact = int(man_c["metrics"]["frontier_rows"])
-            if exact != pending:
-                import warnings
-
-                warnings.warn(
-                    f"frontier_rows arithmetic drift at round {round_no}: "
-                    f"tracked {pending}, exact {exact} — re-synced",
-                    stacklevel=2,
-                )
-            pending = exact
-            self._frontier_rows = exact
-            if self.bloom is not None:
-                # Fold the O(new-keys) delta rows accumulated since the
-                # last fold into the per-shard bitmaps (same cadence as
-                # the frontier compaction — VERDICT r02 #2).
-                self.bloom.compact()
-            # Bound the append-only side tables' file counts on the same
-            # cadence (VERDICT r04 'wrong' #2: url_seen — scanned every
-            # round by filter_unseen — accumulated ~write_coalesce files
-            # per round forever).  Minor (bin-pack) compaction rewrites
-            # only the small tail since the last fold, never the whole
-            # table — O(rows/round) amortized even at a 10^10-row seen
-            # set.  Lineage is tagged at_round: these must not advance
-            # the resume marker.
-            side_lin = {"stage": "compact_minor", "at_round": round_no}
-            self.seen.compact_minor(
+        self._frontier_rows = exact
+        if self.bloom is not None:
+            # Fold the O(new-keys) delta rows accumulated since the last
+            # fold into the per-shard bitmaps (VERDICT r02 #2).
+            self.bloom.compact()
+        # Bound the append-only side tables' file counts on the same
+        # cadence (VERDICT r04 'wrong' #2: url_seen — scanned every round
+        # by filter_unseen — accumulated ~write_coalesce files per round
+        # forever).  Minor (bin-pack) compaction rewrites only the small
+        # tail since the last fold, never the whole table.  Lineage is
+        # tagged at_round: these must not advance the resume marker.
+        side_lin = {"stage": "compact_minor", "at_round": round_no}
+        self.seen.compact_minor(
+            lineage=side_lin, coalesce=self.write_coalesce)
+        self.metrics.compact_minor(
+            lineage=side_lin, coalesce=self.write_coalesce)
+        if self.track_last_scraped:
+            self.last_scraped.compact_minor(
                 lineage=side_lin, coalesce=self.write_coalesce)
-            self.metrics.compact_minor(
-                lineage=side_lin, coalesce=self.write_coalesce)
-            if self.track_last_scraped:
-                self.last_scraped.compact_minor(
-                    lineage=side_lin, coalesce=self.write_coalesce)
 
-        # Fast-forward hint: when this round consumed the whole frontier
-        # (no unscheduled leftover, no fresh discoveries) and only
-        # backoff retries remain, every round before their earliest
-        # not_before_round is PROVABLY empty — crawl() can jump straight
-        # to it instead of paying a no-op superstep per idle round.
-        leftover = n_frontier - n_scheduled
-        if leftover == 0 and n_fresh == 0 and n_retries > 0:
-            next_eligible = int(retry_stats["min_nb"])
-            # The committed frontier is now PROVABLY exactly the retry
-            # rows this round appended (nothing was left unscheduled,
-            # nothing fresh was discovered) — hand the next round the
-            # in-memory expression so it skips the table scan + two
-            # equality-delete anti-joins of frontier.read().  Lazy and
-            # rooted at the committed scratch parquet, so a crash or
-            # resume simply falls back to the identical table read;
-            # out-of-band inserts (requeue / seed-request folds)
-            # invalidate it below.
-            self._next_frontier = retry_rows(
-                fetch_rows, round_no, self.max_attempts
-            )
-        else:
-            next_eligible = round_no + 1
-            self._next_frontier = None
+    def _hand_off(self, round_no: int, fused: dict, disc: dict,
+                  c: dict) -> dict:
+        """Carry state into the next round and report this one.
 
-        for df in (frontier, scheduled, disc_raw, disc):
+        On a retry-only tail every round before the retries' earliest
+        not_before_round is PROVABLY empty — crawl() jumps straight to it
+        — and the next round is handed the in-memory frontier expression,
+        skipping the table scan + two equality-delete anti-joins of
+        frontier.read().  It is lazy and rooted at the committed scratch
+        parquet, so a crash or resume falls back to the identical table
+        read; out-of-band inserts (requeue / seed-request folds)
+        invalidate it."""
+        self._next_frontier = c["next_frontier"]
+        for df in (fused["frontier"], fused["scheduled"], *disc["cached"]):
             df.unpersist()
-        self._pending_hint = pending
-        # scratch is NOT deleted: it is the committed items data dir.
+        pending = self._pending_hint = self._frontier_rows
+        # fused["scratch"] is NOT deleted: it is the committed items dir.
         return {
             "round": round_no,
-            "scheduled": n_scheduled,
-            "fetched": n_ok,
-            "parsed_items": n_items,
-            "discovered": n_disc,
-            "fresh": n_fresh,
+            "scheduled": c["scheduled"],
+            "fetched": c["fetched"],
+            "parsed_items": c["parsed_items"],
+            "discovered": c["discovered"],
+            "fresh": c["fresh"],
             "pending": pending,
-            "next_eligible_round": next_eligible,
+            "next_eligible_round": (int(c["retry_min_nb"])
+                                    if c["next_frontier"] is not None
+                                    else round_no + 1),
             "done": False,
         }
 
@@ -1298,20 +1201,9 @@ class CrawlEngine:
         whose lineage carries a "round" key.  Out-of-band commits
         (requeue, seed-request folds) are tagged with "at_round" instead
         and are skipped — they must not advance the resume marker."""
-        snap = self.frontier.current_snapshot()
-        while snap is not None:
-            lin = snap.get("lineage") or {}
-            if "round" in lin:
-                return int(lin["round"])
-            parent = snap.get("parent")
-            if not parent:
-                break
-            import json as _json
-
-            snap = _json.loads(
-                (self.frontier.path / "snapshots" / parent).read_text()
-            )
-        return -1
+        return next((int(snap["lineage"]["round"])
+                     for snap in self.frontier.history()
+                     if "round" in (snap.get("lineage") or {})), -1)
 
     def crawl(self, n_rounds: int, start_round: int | None = None) -> list[dict]:
         """Run up to ``n_rounds`` supersteps in [start, start+n_rounds);

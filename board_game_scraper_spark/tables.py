@@ -40,7 +40,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
+from collections.abc import Iterator
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -86,16 +88,19 @@ class SnapshotTable:
         manifest = self.path / "snapshots" / name
         return json.loads(manifest.read_text())
 
-    def snapshots(self) -> list[dict]:
-        """All committed snapshots, oldest first (manifest chain)."""
-        out, snap = [], self.current_snapshot()
+    def history(self) -> Iterator[dict]:
+        """Committed snapshots, newest first: a lazy walk of the
+        manifest parent chain from CURRENT."""
+        snap = self.current_snapshot()
         while snap is not None:
-            out.append(snap)
+            yield snap
             parent = snap.get("parent")
-            if not parent:
-                break
-            snap = json.loads((self.path / "snapshots" / parent).read_text())
-        return list(reversed(out))
+            snap = (json.loads((self.path / "snapshots" / parent).read_text())
+                    if parent else None)
+
+    def snapshots(self) -> list[dict]:
+        """All committed snapshots, oldest first."""
+        return list(reversed(list(self.history())))
 
     def _commit(self, files: list[str], mode: str, lineage: dict | None,
                 metrics: dict | None,
@@ -117,7 +122,7 @@ class SnapshotTable:
         # r05 'wrong' #3).  Iceberg analog: per-file partition tuples
         # in the manifest.
         file_parts = None
-        if self.hive_dirs and mode != "prune":
+        if self.hive_dirs:
             file_parts = {rel: self._scan_leaves(rel) for rel in files}
 
         lock_path = self.path / "snapshots" / ".commit.lock"
@@ -162,12 +167,6 @@ class SnapshotTable:
                     f"CURRENT moved: expected {expected_parent!r}, "
                     f"found {cur_name!r}"
                 )
-        if mode == "prune" and current is None:
-            # Pruning an empty table: the default path below would
-            # commit the to-be-removed rels AS the data file list,
-            # resurrecting them as data (ADVICE r05 #2).  Callers only
-            # prune dirs a prior commit added, so this is a bug.
-            raise ValueError("prune_files on a table with no snapshot")
         snap_id = (current["id"] + 1) if current else 1
         added = list(files)
         parts = dict(file_parts or {})
@@ -179,26 +178,13 @@ class SnapshotTable:
                 delete_files or []
             )
             delete_keys = delete_keys or current.get("delete_keys")
-        elif mode == "prune" and current:
-            # files arg = dirs to REMOVE; everything else — including
-            # pending equality deletes — is preserved (an overwrite here
-            # would silently clear the delete list and resurrect rows).
-            drop = set(files)
-            added = []
-            files = [f for f in current["files"] if f not in drop]
-            parts = {k: v for k, v in
-                     (current.get("file_parts") or {}).items()
-                     if k not in drop}
-            delete_files = current.get("delete_files") or []
-            delete_keys = current.get("delete_keys")
         manifest = {
             "id": snap_id,
             "parent": current["name"] if current else None,
             "name": f"snapshot-{snap_id:06d}.json",
             "mode": mode,
             "files": files,
-            # the dirs THIS commit introduced — lets callers retract a
-            # just-made append that observed zero rows (ADVICE r04 #3)
+            # the data dirs THIS commit introduced
             "added": added,
             "delete_files": delete_files or [],
             "delete_keys": delete_keys or [],
@@ -283,14 +269,6 @@ class SnapshotTable:
         rel = self._write_data(df, partition_by, coalesce)
         return self._commit([rel], "overwrite", lineage, metrics)
 
-    def commit_empty(self, lineage: dict | None = None,
-                     metrics: dict | None = None) -> dict:
-        """Commit a snapshot with no data change (metrics/lineage only)."""
-        current = self.current_snapshot()
-        files = current["files"] if current else []
-        return self._commit(files, "append" if current else "overwrite",
-                            lineage, metrics)
-
     def prepare_delta(self, appends: DataFrame | None = None,
                       deletes: DataFrame | None = None,
                       coalesce: int | None = None) -> dict:
@@ -338,6 +316,14 @@ class SnapshotTable:
                             delete_files=prepared["dfiles"],
                             delete_keys=delete_keys)
 
+    def discard_prepared(self, prepared: dict) -> None:
+        """Remove the dirs of a :meth:`prepare_delta` result that will
+        not be committed (e.g. an append that observed zero rows).  No
+        manifest ever referenced them, so an empty delta leaves nothing
+        behind — neither in the file list nor on disk."""
+        for rel in prepared["files"] + prepared["dfiles"]:
+            shutil.rmtree(self.path / rel, ignore_errors=True)
+
     def delta_commit(self, appends: DataFrame | None = None,
                      deletes: DataFrame | None = None,
                      delete_keys: list[str] | None = None,
@@ -352,14 +338,6 @@ class SnapshotTable:
         prepared = self.prepare_delta(appends, deletes, coalesce)
         return self.commit_prepared_delta(prepared, delete_keys=delete_keys,
                                           lineage=lineage, metrics=metrics)
-
-    def prune_files(self, rels: list[str], lineage: dict | None = None,
-                    metrics: dict | None = None) -> dict:
-        """Manifest-only commit dropping specific data dirs (e.g. a
-        delta append that turned out to hold zero rows), preserving the
-        pending equality-delete list — unlike ``replace_files``, which
-        is an overwrite and would clear it."""
-        return self._commit(list(rels), "prune", lineage, metrics)
 
     def compact_minor(self, keep_largest: int = 1, min_files: int = 8,
                       lineage: dict | None = None,
@@ -564,8 +542,6 @@ class SnapshotTable:
             for rel in snap["files"] + (snap.get("delete_files") or []):
                 target = self.path / rel
                 if rel not in live and target.exists():
-                    import shutil
-
                     shutil.rmtree(target)
                     removed += 1
         return removed

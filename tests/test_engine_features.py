@@ -1,17 +1,14 @@
 """Opt-in engine features: robots obedience (F5), adaptive politeness
-(F4), rescrape/requeue (F11)."""
+(F4), and the out-of-band frontier inserts — rescrape/requeue (F11) and
+seed requests (S10) — with their ack and resume-marker invariants."""
+
+import os
 
 import pandas as pd
-import pytest
+from conftest import make_engine, seed_one
 from pyspark.sql import functions as F
 
 from board_game_scraper_spark import schemas, synth
-from board_game_scraper_spark.plans.crawl import CrawlEngine
-
-
-def _mk(spark, pages_pd, tmp, **kw):
-    pages = spark.createDataFrame(pages_pd, schemas.PAGES)
-    return CrawlEngine(spark, tmp, pages, **kw)
 
 
 def test_robots_blocks_disallowed(spark, tmp_path):
@@ -26,8 +23,8 @@ def test_robots_blocks_disallowed(spark, tmp_path):
          {"url": synth.luding_url(1), "source": "luding", "priority": 0},
          {"url": synth.luding_url(2), "source": "luding", "priority": 0}])
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = _mk(spark, pages_pd, tmp_path / "rb", use_bloom=False,
-              obey_robots=True, record_schedule=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "rb", use_bloom=False,
+                      obey_robots=True, record_schedule=True)
     eng.seed(seeds)
     eng.crawl(2)
     scheduled_hosts = {
@@ -44,12 +41,12 @@ def test_robots_allows_by_default(spark, tmp_path):
     """Default corpus robots (disallow /private/ only) changes nothing."""
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    a = _mk(spark, pages_pd, tmp_path / "a", use_bloom=False,
-            obey_robots=True)
+    a = make_engine(spark, pages_pd, tmp_path / "a", use_bloom=False,
+                    obey_robots=True)
     a.seed(seeds)
     ra = a.crawl(2)
-    b = _mk(spark, pages_pd, tmp_path / "b", use_bloom=False,
-            obey_robots=False)
+    b = make_engine(spark, pages_pd, tmp_path / "b", use_bloom=False,
+                    obey_robots=False)
     b.seed(seeds)
     rb = b.crawl(2)
     assert [m["scheduled"] for m in ra] == [m["scheduled"] for m in rb]
@@ -59,8 +56,8 @@ def test_adaptive_politeness_backoff(spark, tmp_path):
     """429-heavy host doubles its delay → smaller budget next round."""
     seeds_pd, pages_pd = synth.corpus(n_browse=5, n_users=8, n_other=3)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = _mk(spark, pages_pd, tmp_path / "ap", use_bloom=False,
-              adaptive_politeness=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "ap", use_bloom=False,
+                      adaptive_politeness=True)
     eng.seed(seeds)
     eng.run_round(1)
     state = {r["host"]: r for r in eng.host_state.read().collect()}
@@ -77,8 +74,8 @@ def test_adaptive_politeness_backoff(spark, tmp_path):
 def test_requeue_respects_rescrape_window(spark, tmp_path):
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = _mk(spark, pages_pd, tmp_path / "rq", use_bloom=False,
-              track_last_scraped=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "rq", use_bloom=False,
+                      track_last_scraped=True)
     eng.seed(seeds)
     eng.crawl(3)
     last = eng.last_round()
@@ -106,8 +103,8 @@ def test_requeue_same_round_survives_pending_deletes(spark, tmp_path):
     so they survive read-time delete application and compaction."""
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = _mk(spark, pages_pd, tmp_path / "rqs", use_bloom=False,
-              track_last_scraped=True, compact_every=0)
+    eng = make_engine(spark, pages_pd, tmp_path / "rqs", use_bloom=False,
+                      track_last_scraped=True, compact_every=0)
     eng.seed(seeds)
     eng.run_round(1)   # fetches seeds, discovers rows w/ discovery_round=2
     eng.run_round(2)   # schedules them → pending deletes (hash, 0, 2)
@@ -142,7 +139,7 @@ def test_crawl_fast_forwards_empty_rounds(spark, tmp_path):
     seeds = spark.createDataFrame(
         pd.DataFrame({"url": rows.url_canon, "source": "t",
                       "priority": 0}), schemas.SEEDS)
-    eng = _mk(spark, rows, tmp_path / "ff", use_bloom=False)
+    eng = make_engine(spark, rows, tmp_path / "ff", use_bloom=False)
     eng.seed(seeds)
     ms = eng.crawl(6)
     rounds = [m["round"] for m in ms]
@@ -162,8 +159,8 @@ def test_seed_requests_consumed_with_ack(spark, tmp_path):
     ack survives resume."""
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=6, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = _mk(spark, pages_pd, tmp_path / "sr", use_bloom=False,
-              record_schedule=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "sr", use_bloom=False,
+                      record_schedule=True)
     eng.seed(seeds)
     eng.crawl(3)
     last = eng.last_round()
@@ -187,7 +184,7 @@ def test_seed_requests_consumed_with_ack(spark, tmp_path):
               for u in urls]
     assert url not in sched2
     # resume: a fresh engine over the same root sees the ack
-    eng2 = _mk(spark, pages_pd, tmp_path / "sr", use_bloom=False)
+    eng2 = make_engine(spark, pages_pd, tmp_path / "sr", use_bloom=False)
     assert (eng2.seed_requests.current_snapshot()["metrics"]["pending"]
             == 0)
     assert eng2._consume_seed_requests(eng2.last_round() + 1) == 0
@@ -244,3 +241,116 @@ def test_ids_seen_rebatches_overlapping_discoveries(spark, tmp_path):
     assert games.select("bgg_id").distinct().count() == 15
     ids_seen = {r["bgg_id"] for r in eng.ids_seen.read().collect()}
     assert ids_seen == set(range(1, 16))
+
+
+def test_seed_request_enqueued_mid_consume_survives_ack(spark, tmp_path):
+    """A request enqueued between the consuming read and the ack stays
+    pending (the old ack truncated the whole queue — ADVICE r03 #3)."""
+    _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
+    eng = make_engine(spark, pages_pd, tmp_path / "sr", use_bloom=False)
+    seed_one(spark, eng)
+    eng.crawl(6)  # drain the frontier so folds aren't anti-joined away
+
+    # already-crawled URLs: dont_filter semantics admit them regardless
+    url_a = str(pages_pd.url_canon.iloc[0])
+    url_b = str(pages_pd.url_canon.iloc[1])
+    urls_a = spark.createDataFrame(pd.DataFrame({"url": [url_a]}))
+    urls_b = spark.createDataFrame(pd.DataFrame({"url": [url_b]}))
+    assert eng.enqueue_requests(urls_a) == 1
+
+    fired = {"done": False}
+    # the fold commits via commit_prepared_delta (prepare/commit split)
+    orig = eng.frontier.commit_prepared_delta
+
+    def racy(*a, **k):
+        out = orig(*a, **k)
+        if not fired["done"]:
+            fired["done"] = True
+            eng.enqueue_requests(urls_b)  # lands between fold and ack
+        return out
+
+    eng.frontier.commit_prepared_delta = racy
+    try:
+        n = eng._consume_seed_requests(eng.last_round() + 1)
+    finally:
+        eng.frontier.commit_prepared_delta = orig
+    assert n == 1  # batch A folded
+    snap = eng.seed_requests.current_snapshot()
+    assert snap["metrics"]["pending"] == 1  # B survived the ack
+    left = eng.seed_requests.read().collect()
+    assert [r["url"] for r in left] == [url_b]
+
+
+def test_enqueue_between_ack_read_and_replace_survives(
+    spark, tmp_path, monkeypatch
+):
+    """The ack CAS: an enqueue landing inside the ack's manifest-IO
+    window must survive (ADVICE r04 #4)."""
+    _seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
+    eng = make_engine(spark, pages_pd, tmp_path / "c")
+    seeds_pd = pd.DataFrame(
+        [{"url": synth.browse_url(1), "source": "bgg", "priority": 0}])
+    eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
+    eng.enqueue_requests(spark.createDataFrame(
+        pd.DataFrame([{"url": synth.browse_url(2)}])))
+
+    orig = type(eng.seed_requests).replace_files
+    fired = {"n": 0}
+
+    def racy(self, files, lineage=None, metrics=None,
+             expected_parent=None):
+        if fired["n"] == 0:
+            fired["n"] = 1
+            # producer lands between the ack's read and its replace
+            eng.enqueue_requests(spark.createDataFrame(
+                pd.DataFrame([{"url": synth.browse_url(3)}])))
+        return orig(self, files, lineage=lineage, metrics=metrics,
+                    expected_parent=expected_parent)
+
+    monkeypatch.setattr(type(eng.seed_requests), "replace_files", racy)
+    eng._consume_seed_requests(1)
+    monkeypatch.undo()
+    snap = eng.seed_requests.current_snapshot()
+    # the late enqueue's file is still pending, not clobbered
+    assert ((snap.get("metrics") or {}).get("pending", 0)) == 1
+    assert len(snap["files"]) == 1
+
+
+def test_requeue_does_not_advance_resume_marker(spark, tmp_path):
+    """requeue/seed-request folds are out-of-band commits: last_round()
+    must keep pointing at the last fully-committed round (ADVICE r03 #4)."""
+    _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
+    eng = make_engine(spark, pages_pd, tmp_path / "rm", use_bloom=False,
+                      track_last_scraped=True)
+    seed_one(spark, eng)
+    eng.crawl(2)
+    last = eng.last_round()
+    urls = spark.createDataFrame(
+        pd.DataFrame({"url": [synth.browse_url(1)]}))
+    eng.requeue(urls, last + 1, window_rounds=0)
+    assert eng.last_round() == last
+
+
+def test_noop_requeue_does_not_grow_frontier_manifest(spark, tmp_path):
+    _seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
+    eng = make_engine(spark, pages_pd, tmp_path / "c",
+                      track_last_scraped=True)
+    seeds_pd = pd.DataFrame(
+        [{"url": synth.browse_url(1), "source": "bgg", "priority": 0}])
+    eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
+    eng.crawl(2)
+    before = list(eng.frontier.current_snapshot()["files"])
+    data_before = set(os.listdir(eng.frontier.path / "data"))
+    # requeue URLs that are all already pending/recent → n == 0
+    dup = spark.createDataFrame(
+        pd.DataFrame([{"url": synth.browse_url(1)}]))
+    for _ in range(3):
+        n = eng.requeue(dup, eng.last_round(), window_rounds=10_000)
+        assert n == 0
+    after = eng.frontier.current_snapshot()["files"]
+    assert after == before
+    # nor left an uncommitted data dir behind on disk
+    assert set(os.listdir(eng.frontier.path / "data")) == data_before
+    # and the resume marker did not move
+    assert "round" in (eng.frontier.current_snapshot()["lineage"] or {}) \
+        or eng.last_round() >= 0

@@ -7,31 +7,21 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import make_engine, with_retryables
 
 from board_game_scraper_spark import schemas, synth
 from board_game_scraper_spark.plans.crawl import CrawlEngine
 
 
-def _mk(spark, pages_pd, tmp, **kw):
-    pages = spark.createDataFrame(pages_pd, schemas.PAGES)
-    return CrawlEngine(spark, tmp, pages, **kw)
+# ------------------------------------------- double-buffering equivalence
 
-
-def _with_retryables(pages_pd, n=6):
-    """Flip n pages to a retryable status so the crawl has genuine
-    backoff-retry tail rounds (the synth small corpus is all-200)."""
-    pages_pd = pages_pd.copy()
-    pages_pd.loc[pages_pd.index[:n], "status"] = 503
-    return pages_pd
-
-
-def _crawl_all(spark, pages_pd, seeds_pd, tmp, env_off, monkeypatch,
+def _crawl_all(spark, pages_pd, seeds_pd, tmp, spec_off, monkeypatch,
                rounds=8, **kw):
-    if env_off:
-        monkeypatch.setenv("SPARK_GRAFT_NO_DOUBLE_BUFFER", "1")
-    else:
-        monkeypatch.delenv("SPARK_GRAFT_NO_DOUBLE_BUFFER", raising=False)
-    eng = _mk(spark, pages_pd, tmp, window_sec=1e6, **kw)
+    if spec_off:
+        # the reference run never launches a speculative fused stage
+        monkeypatch.setattr(CrawlEngine, "_launch_speculation",
+                            lambda *a, **k: None)
+    eng = make_engine(spark, pages_pd, tmp, window_sec=1e6, **kw)
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
     metrics = eng.crawl(rounds)
     frontier_rows = eng.frontier.read().count()
@@ -39,15 +29,13 @@ def _crawl_all(spark, pages_pd, seeds_pd, tmp, env_off, monkeypatch,
     return eng, metrics, frontier_rows, items_rows
 
 
-# ------------------------------------------- double-buffering equivalence
-
 def test_double_buffer_rounds_identical(spark, tmp_path, monkeypatch):
     """A crawl with the speculative fused stage produces byte-identical
     round metrics and table row counts to one without it — the
     speculation is the SAME expression run earlier, never a different
     computation."""
     seeds_pd, pages_pd = synth.corpus(n_browse=4, n_users=8, n_other=4)
-    pages_pd = _with_retryables(pages_pd)
+    pages_pd = with_retryables(pages_pd)
     eng_on, m_on, f_on, i_on = _crawl_all(
         spark, pages_pd, seeds_pd, tmp_path / "on", False, monkeypatch)
     eng_off, m_off, f_off, i_off = _crawl_all(
@@ -60,18 +48,17 @@ def test_double_buffer_rounds_identical(spark, tmp_path, monkeypatch):
     assert eng_off._spec_hits == 0
 
 
-def test_requeue_cancels_speculation(spark, tmp_path, monkeypatch):
+def test_requeue_cancels_speculation(spark, tmp_path):
     """An out-of-band frontier insert between rounds invalidates the
     in-flight speculation (its frontier is missing the new row); the
     next round falls back to the table read and schedules the insert.
     Manifest arithmetic stays exact throughout."""
     import pandas as pd
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_DOUBLE_BUFFER", raising=False)
     seeds_pd, pages_pd = synth.corpus(n_browse=4, n_users=8, n_other=4)
-    pages_pd = _with_retryables(pages_pd)
-    eng = _mk(spark, pages_pd, tmp_path / "c", window_sec=1e6,
-              track_last_scraped=True)
+    pages_pd = with_retryables(pages_pd)
+    eng = make_engine(spark, pages_pd, tmp_path / "c", window_sec=1e6,
+                      track_last_scraped=True)
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
     # drive rounds manually inside an artificial window so speculation
     # can launch exactly as crawl() would allow
@@ -112,8 +99,8 @@ def test_compact_resync_mid_crawl_converges(spark, tmp_path):
     the arithmetic from the exact count observed on the rewrite job
     within one cadence, and the final state matches the table."""
     seeds_pd, pages_pd = synth.corpus(n_browse=4, n_users=8, n_other=4)
-    eng = _mk(spark, pages_pd, tmp_path / "c", window_sec=1e6,
-              compact_every=2)
+    eng = make_engine(spark, pages_pd, tmp_path / "c", window_sec=1e6,
+                      compact_every=2)
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
     m1 = eng.run_round(1)
     assert m1["scheduled"] > 0

@@ -215,3 +215,39 @@ def test_media_stub_raises(spark):
     )
     with pytest.raises(Exception, match="not available in this sandbox"):
         resize_images(media_from_documents(docs), 64, 64).collect()
+
+
+def test_embedding_near_dup_finds_planted_pairs(spark):
+    """Multi-table hyperplane LSH + exact verify: planted near-identical
+    vectors are found (high recall at 4 tables x 8 planes), dissimilar
+    ones are not, and the plan is a banded equi-join (no cartesian)."""
+    import math
+    import random
+
+    from board_game_scraper_spark.operators.similarity import (
+        embedding_near_dup,
+    )
+
+    rng = random.Random(7)
+    rows = []
+    for i in range(40):
+        v = [rng.gauss(0, 1) for _ in range(16)]
+        n = math.sqrt(sum(x * x for x in v))
+        v = [x / n for x in v]
+        rows.append((i, v))
+        # planted near-dup: tiny deterministic perturbation
+        rows.append((i + 1000, [x + 0.01 * ((j % 3) - 1)
+                                for j, x in enumerate(v)]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = embedding_near_dup(df, threshold=0.98, n_planes=6, n_tables=6)
+    pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
+    planted = {(i, i + 1000) for i in range(40)}
+    found = pairs & planted
+    # LSH recall < 1 by design, but 6x6 tables on near-identical
+    # vectors should recover nearly all planted pairs
+    assert len(found) >= 35, f"recall too low: {len(found)}/40"
+    # nothing else qualifies at 0.98 among random gaussians
+    assert pairs <= planted | {(a, b) for a, b in pairs if a >= 1000}
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
