@@ -14,10 +14,9 @@ Layout
 - ``tables``     snapshot/manifest table layer (Iceberg semantics, Parquet)
 - ``synth``      deterministic synthetic crawl fixtures (seed 42)
 - ``functions``  scalar/vectorized column functions (URL canon, text clean)
-- ``operators``  batch operators (merge/dedup/split/prefixes/text/similarity)
+- ``operators``  batch operators (merge/dedup/split/labels/text/similarity/cluster)
 - ``plans``      crawl planning: frontier scheduling, seen-set, robots, loop
-- ``sources``    readers/writers (JSONL feeds, seed CSV, synthetic fetcher)
-- ``streaming``  incremental (micro-batch) wrappers over the BSP loop
+- ``sources``    the fetch stage (synthetic corpus lookup)
 """
 
 __version__ = "0.1.0"

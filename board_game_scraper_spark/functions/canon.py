@@ -25,7 +25,6 @@ import re
 from urllib.parse import parse_qs, parse_qsl, unquote_plus, urlencode, urlparse
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     IntegerType,
@@ -211,17 +210,4 @@ def canonicalize_url(urls: pd.Series) -> pd.DataFrame:
             "wikidata_id",
             "luding_id",
         ],
-    )
-
-
-def with_canonical_url(df, url_col: str = "url"):
-    """Attach url_canon/host/url_hash columns; url_hash via built-in
-    xxhash64 (JVM-side, no Python)."""
-    out = df.withColumn("_c", canonicalize_url(F.col(url_col)))
-    return (
-        out.withColumn("url_canon", F.col("_c.url_canon"))
-        .withColumn("host", F.col("_c.host"))
-        .withColumn("bgg_id", F.col("_c.bgg_id"))
-        .drop("_c")
-        .withColumn("url_hash", F.xxhash64(F.col("url_canon")))
     )

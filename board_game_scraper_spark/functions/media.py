@@ -1,11 +1,11 @@
 """Multimodal column operators (training-pipeline additions).
 
 Images/audio/video ride as opaque ``binary`` columns with typed metadata
-structs; decode/resize/frame-sample run as Arrow-batched pandas UDFs over
-``mapInPandas``.  The decode kernels are STUBBED in this sandbox (no
-image/audio libraries installed) behind ``_require_codec`` — the
-Spark-side plumbing (schemas, batch shape, partitioning) is real and
-tested with the deterministic fake decoder.
+structs; decode + featurize runs as an Arrow-batched pandas UDF over
+``mapInPandas``.  No image/audio library is a dependency, so the default
+decoder is a deterministic fake (``_fake_decode``); ``extract_features``
+takes a real one.  The Spark-side plumbing (schemas, batch shape,
+partitioning) is the same either way.
 
 Schema convention:
     media(doc_id string, media_ref string, kind string,
@@ -23,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     StringType,
     StructField,
@@ -39,16 +38,6 @@ MEDIA_META = StructType(
     ]
 )
 
-MEDIA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("media_ref", StringType(), False),
-        StructField("kind", StringType(), False),
-        StructField("payload", BinaryType(), True),
-        StructField("meta", MEDIA_META, True),
-    ]
-)
-
 FEATURE_SCHEMA = (
     # feature carries float64: the fake-decoder values are exact 4-decimal
     # rationals (k/10000) which float64 represents exactly but float32
@@ -60,13 +49,6 @@ FEATURE_SCHEMA = (
     "doc_id string, media_ref string, kind string, "
     "feature array<double>, feat_dim int"
 )
-
-
-def _require_codec(name: str):
-    raise NotImplementedError(
-        f"media codec '{name}' is not available in this sandbox; "
-        "swap _fake_decode for a real decoder (PIL/ffmpeg) on a cluster"
-    )
 
 
 def _fake_decode(payload: bytes | None, ref: str, dim: int = 16) -> np.ndarray:
@@ -124,27 +106,3 @@ def extract_features(media: DataFrame, dim: int = 16,
 
     return media.mapInPandas(_batches, FEATURE_SCHEMA)
 
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize stage — STUB: raises at execution time (no codec);
-    the plan (schema/partitioning) is real."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf):
-                _require_codec("image-resize")
-            yield pdf
-
-    return media.mapInPandas(_batches, MEDIA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling — STUB (no codec); plumbing real."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf):
-                _require_codec("video-frame-sample")
-            yield pdf
-
-    return media.mapInPandas(_batches, MEDIA)

@@ -18,10 +18,7 @@ from __future__ import annotations
 import html
 import re
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 # utils.py:37-38
 REGEX_ENTITIES = re.compile(r"(&#(\d+);)+")
@@ -72,12 +69,6 @@ def clean_text_one(value: str | None) -> str | None:
     return out if out else None
 
 
-@pandas_udf(StringType())
-def clean_text(values: pd.Series) -> pd.Series:
-    """Vectorized C7 chain (Arrow batch; loaders.py:14-46 default input)."""
-    return values.map(clean_text_one, na_action="ignore")
-
-
 def clear_list(values) -> list | None:
     """Order-preserving dedupe + drop falsey; [] → None.
 
@@ -93,30 +84,6 @@ def clear_list(values) -> list | None:
     return out or None
 
 
-def clear_list_col(col):
-    """Column version of clear_list: array_distinct(filter(non-falsey)),
-    NULL when empty — pure built-ins (JVM-side), SURVEY §2.10."""
-    cleaned = F.array_distinct(
-        F.filter(col, lambda e: e.isNotNull() & (e != F.lit("")))
-    )
-    return F.when(F.size(cleaned) > 0, cleaned)
-
-
-def validate_range_col(col, lower=None, upper=None):
-    """Value in [lower, upper] else NULL (utils.py:190-197, C8)."""
-    cond = F.lit(True)
-    if lower is not None:
-        cond = cond & (col >= F.lit(lower))
-    if upper is not None:
-        cond = cond & (col <= F.lit(upper))
-    return F.when(cond, col)
-
-
-def normalize_space_col(col):
-    """JVM-side normalize-space (no UDF) for already-tagless text."""
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
 def limit_images_col(col, n: int):
     """C11 (pipelines.py:187-239): copy first n URLs; 0 → none (NULL),
     -1 → all."""
@@ -130,7 +97,6 @@ def limit_images_col(col, n: int):
 
 # C12 (pipelines.py:146-184 ResolveImagePipeline): dbpedia/wikidata file
 # pages → commons Special:Redirect.  regex mirrors pipelines.py:157.
-_COMMONS_PATH_RE = r"^/(resource/File:|wiki/Special:EntityData/)(.+)$"
 _COMMONS_URL = "https://commons.wikimedia.org/wiki/Special:Redirect/file/"
 
 

@@ -142,19 +142,3 @@ def page_rows(
         )
         .drop("_gid", "_total")
     )
-
-
-def write_pages(
-    df: DataFrame,
-    path: str,
-    size: int,
-    order_keys: Sequence[str],
-    fields: Sequence[str] | None = None,
-    descending: bool = False,
-) -> None:
-    """Write one JSON dir per page (reference writes one file per page)."""
-    paged = page_rows(df, size=size, order_keys=order_keys, descending=descending)
-    if fields:
-        keep = [c for c in fields if c in df.columns]
-        paged = paged.select(*keep, "page", "count", "previous", "next")
-    paged.write.mode("overwrite").partitionBy("page").json(path)

@@ -46,7 +46,6 @@ BGG = "https://boardgamegeek.com"
 
 _RE_GAME_LINK = re.compile(r'<a href="/boardgame/(\d+)/[^"]*">([^<]*)</a>')
 _RE_NEXT_PAGE = re.compile(r'<a title="next page" href="([^"]+)"')
-_RE_H1 = re.compile(r"<h1>([^<]*)</h1>")
 _RE_PLAYERS = re.compile(r"(\d+)(\s*-\s*(\d+))?")
 
 # Deterministic "scraped_at" (the reference stamps now(), utils.py:99-103;

@@ -25,10 +25,12 @@ from .operators.dedup import (
     exact_dedup, lsh_bands, minhash_signatures, near_dup_pairs, shingles,
     simhash, tokens_col,
 )
-from .operators.similarity import cosine_topk, embedding_near_dup
+from .operators.merge import merge_latest_wins
+from .operators.similarity import cosine_topk, embedding_near_dup, ivf_topk
 from .operators.textstats import (
     LANG_PROFILES, fingerprint, language_id, quality_score, token_count,
 )
+from .plans.frontier import batch_api_ids
 
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
@@ -77,15 +79,9 @@ def q_merge_latest_wins(spark, sf_dir):
     (merge.py:202-208 reduceByKey argmax; ties → larger event_id, mirroring
     the later-file-wins tie-break merge.py:62-67)."""
     ev = _t(spark, sf_dir, "events")
-    payload = F.struct(*[F.col(c) for c in ev.columns])
-    ordering = F.struct(F.col("ts"), F.col("event_id"))
-    out = ev.groupBy("user_id").agg(F.max_by(payload, ordering).alias("_r"))
-    return out.select(
-        F.col("user_id").alias("user_id"),
-        F.col("_r.event_id").alias("event_id"),
-        F.col("_r.ts").alias("ts"),
-        F.col("_r.event_type").alias("event_type"),
-        F.col("_r.value").alias("value"),
+    return merge_latest_wins(
+        ev, ["user_id"], ["ts"], file_seq_col="event_id",
+        fieldnames=["user_id", "event_id", "ts", "event_type", "value"],
     )
 
 
@@ -122,16 +118,8 @@ def q_batchify(spark, sf_dir):
     """Request batching (F8, bgg.py:251-294: ≤10 ids per API URL,
     comma-joined): bucket ordered ids per group into batches of 10."""
     ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("event_id")
-    rn = F.row_number().over(w)
-    batched = ev.select(
-        "event_type",
-        "event_id",
-        F.floor((rn - 1) / 10).cast("int").alias("batch"),
-    )
-    return batched.groupBy("event_type", "batch").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.concat_ws(",", F.array_sort(F.collect_list("event_id"))).alias("ids_csv"),
+    return batch_api_ids(ev, "event_id", "event_type").select(
+        "event_type", "batch", "n", "ids_csv"
     )
 
 
@@ -804,11 +792,7 @@ def q_ann_ivf_topk(spark, sf_dir):
     (``ivf_build`` → parquet partitioned by list_id) and the query is a
     partition-pruned scan of the 2 probed lists + exact rerank — the
     corpus is never re-assigned per query."""
-    import tempfile
-
-    from .operators.similarity import (
-        ivf_build, ivf_topk_indexed, make_centroids,
-    )
+    from .operators.similarity import make_centroids
 
     emb = _t(spark, sf_dir, "embeddings")
     query = emb.where(F.col("vec_id") == 0).select(
@@ -816,13 +800,7 @@ def q_ann_ivf_topk(spark, sf_dir):
     )
     vectors = emb.where(F.col("vec_id") != 0)
     centroids = make_centroids(vectors, nlist=4, strat="id")
-    # Fresh dir per invocation: a fixed shared path raced when two
-    # harness processes ran the query concurrently on same-named
-    # datasets (one overwrites while the other's lazy scan reads —
-    # ADVICE r03).  The dir leaks until tmp cleanup; it is small.
-    index = tempfile.mkdtemp(prefix="bgs_ivf_index_")
-    ivf_build(vectors, centroids, index)
-    return ivf_topk_indexed(spark, index, query, centroids, k=10, nprobe=2)
+    return ivf_topk(vectors, query, centroids, k=10, nprobe=2)
 
 
 def q_hotness_extract(spark, sf_dir):

@@ -1,12 +1,11 @@
 """Fetch stage (S5/S6) — the only true external boundary.
 
-In production this is a ``mapInPandas`` stage partitioned by host whose
-workers issue rate-limited HTTP GETs (politeness already enforced by the
-scheduler's budget window, so each partition can fetch its batch as fast
-as the per-host delay allows).  The sandbox has no network, so the
-default fetcher joins the scheduled batch against a synthetic ``pages``
-table on canonical URL — exactly the response-cache lookup shape (J3,
-settings.py:237-242: cache hit = no network).
+A networked fetcher would be a ``mapInPandas`` stage partitioned by host
+whose workers issue rate-limited HTTP GETs (politeness already enforced by
+the scheduler's budget window).  This engine has no HTTP fetcher:
+``fetch_from_table`` joins the scheduled batch against a synthetic
+``pages`` table on canonical URL — exactly the response-cache lookup shape
+(J3, settings.py:237-242: cache hit = no network).
 
 Missing pages surface as status 404 (dropped by the loop, like Scrapy's
 default non-200 handling).
@@ -14,16 +13,8 @@ default non-200 handling).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-FETCH_COLS = [
-    "url_canon", "url_hash", "host", "priority", "callback_kind", "attempt",
-    "status", "content_type", "body", "latency_ms",
-]
 
 
 def fetch_from_table(scheduled: DataFrame, pages: DataFrame,
@@ -69,27 +60,3 @@ def fetch_from_table(scheduled: DataFrame, pages: DataFrame,
     )
     return hits.unionByName(misses)
 
-
-def fetch_http(scheduled: DataFrame, timeout_sec: float = 30.0) -> DataFrame:
-    """Real HTTP fetch stage — mapInPandas per (host) partition.
-
-    STUB in this sandbox (no network); the Spark-side plumbing (schema,
-    host partitioning, Arrow batch shape) is real and tested via
-    ``fetch_from_table``.  On a cluster, replace ``_fetch_batch`` with a
-    urllib/requests session honoring the per-host delay carried in the
-    batch (header auth per middlewares.py:9-27).
-    """
-
-    def _fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            raise NotImplementedError(
-                "network fetch not available in sandbox; use fetch_from_table"
-            )
-        yield pd.DataFrame(columns=FETCH_COLS)  # pragma: no cover
-
-    schema = (
-        "url_canon string, url_hash long, host string, priority int, "
-        "callback_kind string, attempt int, status int, content_type string, "
-        "body string, latency_ms int"
-    )
-    return scheduled.repartition("host").mapInPandas(_fetch_batch, schema)

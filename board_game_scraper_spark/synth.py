@@ -831,22 +831,6 @@ def rankings_corpus(dates=("20100215000000", "20100315000000",
     return pd.DataFrame(pages)
 
 
-def write_hotness_archive(dir_path, n_files: int = 3) -> list[str]:
-    """Archived hotness XML files (S9 local replay,
-    bgg_hotness.py:43-74: date comes from the file name)."""
-    from pathlib import Path
-
-    out = []
-    d = Path(dir_path)
-    d.mkdir(parents=True, exist_ok=True)
-    for i in range(n_files):
-        label = f"2024010{i + 1}000000"
-        p = d / f"hotness-{label}.xml"
-        p.write_text(hotness_body(label))
-        out.append(str(p))
-    return out
-
-
 def callback_kind_for(url_canon: str) -> str:
     """Dispatch column: which parser handles this URL (the reference's
     Request.callback, bgg.py:284-291, as data)."""

@@ -1,9 +1,4 @@
-"""Feed IO (S1-S3) and entity resolution (J5)."""
-
-import json
-
-import pytest
-from pyspark.sql import functions as F
+"""Entity resolution (J5)."""
 
 from board_game_scraper_spark.operators.cluster import (
     connected_components,
@@ -11,75 +6,6 @@ from board_game_scraper_spark.operators.cluster import (
     fuzzy_name_edges,
     resolve_entities,
 )
-from board_game_scraper_spark.sources.feeds import (
-    read_jsonl,
-    read_seed_csv,
-    write_jsonl,
-)
-
-
-@pytest.fixture()
-def feed_dir(tmp_path):
-    # three feed files, later-named file should get higher _file_seq;
-    # one malformed line (DROPMALFORMED path, merge.py:170)
-    rows_a = [{"bgg_id": 1, "name": "A v1", "scraped_at": "2024-01-01"},
-              {"bgg_id": 2, "name": "B v1", "scraped_at": "2024-01-01"}]
-    rows_b = [{"bgg_id": 1, "name": "A v2", "scraped_at": "2024-01-02"}]
-    (tmp_path / "feed-2024-01-01.jl").write_text(
-        "\n".join(json.dumps(r) for r in rows_a) + "\nNOT JSON{{{\n")
-    (tmp_path / "feed-2024-01-02.jl").write_text(
-        "\n".join(json.dumps(r) for r in rows_b) + "\n")
-    return tmp_path
-
-
-def test_read_jsonl_drops_malformed_and_orders_files(spark, feed_dir):
-    df = read_jsonl(
-        spark,
-        [str(feed_dir / "feed-2024-01-01.jl"),
-         str(feed_dir / "feed-2024-01-02.jl")],
-        schema="bgg_id long, name string, scraped_at string",
-    )
-    rows = {(r["bgg_id"], r["name"]): r["_file_seq"] for r in df.collect()}
-    assert len(rows) == 3  # malformed line dropped
-    assert rows[(1, "A v1")] == 1 and rows[(1, "A v2")] == 2
-
-
-def test_feed_merge_roundtrip(spark, feed_dir, tmp_path):
-    """S1 read → A1 merge (file_seq tie-break) → S2 write."""
-    from board_game_scraper_spark.operators.merge import merge_latest_wins
-
-    df = read_jsonl(
-        spark,
-        [str(feed_dir / "feed-2024-01-01.jl"),
-         str(feed_dir / "feed-2024-01-02.jl")],
-        schema="bgg_id long, name string, scraped_at string",
-    )
-    merged = merge_latest_wins(
-        df, keys=["bgg_id"], latest=["scraped_at"], latest_types=["date"],
-        file_seq_col="_file_seq", fieldnames_exclude=["_file_seq"],
-    )
-    got = {r["bgg_id"]: r["name"] for r in merged.collect()}
-    assert got == {1: "A v2", 2: "B v1"}
-    out = tmp_path / "out"
-    write_jsonl(merged, str(out), single_file=True)
-    parts = list(out.glob("part-*"))
-    assert len(parts) == 1
-
-
-def test_read_seed_csv(spark, tmp_path):
-    p = tmp_path / "seeds.csv"
-    p.write_text("bgg_user_name\nAlice\nbob\n")
-    seeds = read_seed_csv(
-        spark, str(p),
-        "https://boardgamegeek.com/xmlapi2/user?name={id}",
-        "bgg_user_name", priority=3,
-    )
-    urls = {r["url"] for r in seeds.collect()}
-    assert urls == {
-        "https://boardgamegeek.com/xmlapi2/user?name=Alice",
-        "https://boardgamegeek.com/xmlapi2/user?name=bob",
-    }
-
 
 RECORDS = [
     # rec_id, name, year, bgg_id, wikidata_id, luding_id

@@ -1,5 +1,5 @@
 """Extended extractors: polls (E6/E7), add_rank (E9), wikidata (E3),
-SPARQL (E5/S8), rank history (E16), hotness replay (S9/E14),
+SPARQL (E5/S8), rank history (E16), hotness pages (E14),
 autothrottle (F4), image ops (C11/C12)."""
 
 import statistics
@@ -127,18 +127,20 @@ def test_malformed_bodies_dropped():
         assert out["games"] == [] and out["discovered"] == []
 
 
-def test_replay_source_and_parse(spark, tmp_path):
+def test_parse_flat_hotness_pages(spark):
     from board_game_scraper_spark.plans.parse import run_parse_flat
-    from board_game_scraper_spark.sources.replay import read_archived_pages
+    from board_game_scraper_spark.schemas import FETCHED
 
-    synth.write_hotness_archive(tmp_path / "arch", n_files=3)
-    fetched = read_archived_pages(spark, str(tmp_path / "arch"))
-    rows = fetched.collect()
-    assert len(rows) == 3
-    assert {r["archived_at"].day for r in rows} == {1, 2, 3}
-    parsed = run_parse_flat(fetched.drop("archived_at"), target_partitions=2)
+    fetched = spark.createDataFrame(
+        [(f"https://boardgamegeek.com/hotness/archive/{label}", i,
+          "boardgamegeek.com", 0, "bgg_hotness", 0, 200, "text/xml",
+          synth.hotness_body(label), 0)
+         for i, label in enumerate(f"2024010{d}000000" for d in (1, 2, 3))],
+        FETCHED,
+    )
+    parsed = run_parse_flat(fetched, target_partitions=2)
     games = parsed.where(F.col("item_kind") == "game").count()
-    assert games == 150  # 50 per archived file
+    assert games == 150  # 50 per hotness page
 
 
 def test_update_host_state(spark):

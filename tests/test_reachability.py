@@ -1,0 +1,70 @@
+"""Every package module is reached from code outside ``tests/``.
+
+The entry points are the query entry module (``__spark_entry__.py``),
+``bench.py``, ``tools/`` and ``perfbench/``.  A module counts as reached
+when an entry point imports it, directly or through package modules that
+are themselves reached.  Imports are read with ``ast`` from every
+``import``/``from`` statement, at module level or inside functions, with
+relative imports resolved.  A module that only tests import is code
+nothing runs; delete it with its tests instead of keeping it alive.
+"""
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "board_game_scraper_spark"
+ENTRY_POINTS = [
+    ROOT / "__spark_entry__.py",
+    ROOT / "bench.py",
+    *sorted((ROOT / "tools").glob("*.py")),
+    *sorted((ROOT / "perfbench").glob("*.py")),
+]
+
+
+def module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    if parts[-1] == "__init__":
+        parts = parts[:-1]
+    return ".".join(parts)
+
+
+def imported_modules(path: Path, known: set[str]) -> set[str]:
+    """The modules of ``known`` that ``path`` imports anywhere."""
+    name = module_name(path)
+    package = name if path.name == "__init__.py" else name.rpartition(".")[0]
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            targets = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = package.split(".")
+                parent = parent[:len(parent) - (node.level - 1)]
+                base = ".".join(parent + ([base] if base else []))
+            # ``from pkg import mod`` imports the submodule ``pkg.mod``
+            targets = [base] + [f"{base}.{a.name}" for a in node.names]
+        else:
+            continue
+        for target in targets:
+            parts = target.split(".")
+            # importing a.b.c also imports the packages a and a.b
+            found.update(m for m in (".".join(parts[:i])
+                                     for i in range(1, len(parts) + 1))
+                         if m in known)
+    return found
+
+
+def test_every_package_module_is_reached_outside_tests():
+    files = {module_name(p): p for p in PKG.rglob("*.py")}
+    known = set(files)
+    reached = set()
+    todo = set().union(*(imported_modules(p, known) for p in ENTRY_POINTS))
+    while todo:
+        mod = todo.pop()
+        reached.add(mod)
+        todo |= imported_modules(files[mod], known) - reached
+    unreached = sorted(m for m, p in files.items()
+                       if p.name != "__init__.py" and m not in reached)
+    assert unreached == []

@@ -137,6 +137,47 @@ def test_ivf_persisted_index_matches_inline(spark, vectors, tmp_path):
     assert "PartitionFilters" in plan and "list_id" in plan
 
 
+IVF_CLEANUP_SCRIPT = """
+import glob, os, sys, tempfile
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+from board_game_scraper_spark.operators.similarity import (
+    ivf_topk, make_centroids)
+from board_game_scraper_spark.session import get_spark
+
+spark = get_spark("ivf-cleanup", master="local[1]", shuffle_partitions=1)
+vecs = spark.createDataFrame(
+    [(i, [float(i % 4), 1.0, i / 10.0]) for i in range(12)],
+    "vec_id long, embedding array<double>")
+q = vecs.where("vec_id = 0").select(F.col("embedding").alias("qvec"))
+cents = make_centroids(vecs, nlist=2)
+for _ in range(2):
+    assert len(ivf_topk(vecs, q, cents, k=3, nprobe=1).collect()) == 3
+assert glob.glob(os.path.join(tempfile.gettempdir(), "bgs_ivf*"))
+spark.stop()
+"""
+
+
+def test_ivf_index_dirs_removed_at_exit(tmp_path):
+    """Every ``ivf_topk`` call builds its index in a fresh dir; none of
+    them is left under TMPDIR once the process has exited."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_DRIVER_MEM="1g",
+               SPARK_GRAFT_NO_WARM="1")
+    root = str(Path(__file__).resolve().parent.parent)
+    done = subprocess.run(
+        [sys.executable, "-c", IVF_CLEANUP_SCRIPT, root], env=env,
+        capture_output=True, text=True, timeout=300)
+    assert done.returncode == 0, done.stderr[-2000:]
+    assert sorted(p.name for p in tmp.glob("bgs_ivf*")) == []
+
+
 def test_hyperplane_buckets_deterministic(spark, vectors):
     a = {(r["vec_id"], r["bucket"])
          for r in hyperplane_buckets(vectors).collect()}
@@ -199,22 +240,6 @@ def test_media_feature_plumbing(spark):
     # deterministic fake decoder → stable features
     feats2 = extract_features(media, dim=8).collect()
     assert feats[0]["feature"] == feats2[0]["feature"]
-
-
-def test_media_stub_raises(spark):
-    from board_game_scraper_spark.functions.media import (
-        media_from_documents,
-        resize_images,
-    )
-    from board_game_scraper_spark import schemas
-
-    docs = spark.createDataFrame(
-        [("d1", [{"kind": "image", "text": None,
-                  "media_ref": "img://1", "offset": 0}])],
-        schemas.DOCUMENTS,
-    )
-    with pytest.raises(Exception, match="not available in this sandbox"):
-        resize_images(media_from_documents(docs), 64, 64).collect()
 
 
 def test_embedding_near_dup_finds_planted_pairs(spark):
