@@ -38,8 +38,7 @@ def entry(spark: SparkSession) -> DataFrame:
     pages = spark.createDataFrame(pages_pd, schemas.PAGES)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
     root = tempfile.mkdtemp(prefix="entry_crawl_")
-    eng = CrawlEngine(spark, root, pages, window_sec=3600.0,
-                      bloom_shards=8)
+    eng = CrawlEngine(spark, root, pages, window_sec=3600.0)
     eng.seed(seeds)
     eng.crawl(2)
     return eng.documents.read()

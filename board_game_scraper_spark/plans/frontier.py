@@ -144,6 +144,8 @@ def batch_api_ids(
 
 
 RETRYABLE = (429, 500, 502, 503, 504, 408, 202)  # settings.py:244-253
+# Fetch attempts per URL before a retryable failure is dropped.
+MAX_ATTEMPTS = 3
 
 # F4 AutoThrottle (settings.py:221-233): start 2x delay (>=5s), max 60s,
 # back off on throttle codes, ease toward the base delay otherwise.
@@ -154,7 +156,6 @@ EWMA_ALPHA = 0.3
 
 def update_host_state(
     host_state: DataFrame, fetched: DataFrame, round_no: int,
-    budgets: dict | None = None,
 ) -> DataFrame:
     """Recompute per-host adaptive delay from this round's outcomes.
 
@@ -163,10 +164,9 @@ def update_host_state(
     otherwise decay 25% toward the configured base delay.  The result
     feeds ``schedule(budgets=...)`` next round via ``budget_k``.
     """
-    table = budgets or HOST_BUDGETS
     spark = fetched.sparkSession
     base = spark.createDataFrame(
-        [(h, d, c) for h, (d, c) in sorted(table.items())],
+        [(h, d, c) for h, (d, c) in sorted(HOST_BUDGETS.items())],
         "host string, base_delay double, concurrency int",
     )
     obs = fetched.groupBy("host").agg(
@@ -214,7 +214,7 @@ def update_host_state(
 
 
 def retry_rows(
-    fetched: DataFrame, round_no: int, max_attempts: int = 3
+    fetched: DataFrame, round_no: int, max_attempts: int = MAX_ATTEMPTS
 ) -> DataFrame:
     """Failed fetches → re-queued frontier rows with exponential backoff
     (F9: priority-1, not_before = now + delay*2^attempt, attempt+1)."""

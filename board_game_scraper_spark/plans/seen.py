@@ -69,10 +69,10 @@ class SnapshotBloom:
     (0 on bitmap rows) so pandas keeps exact int64 — a nullable long
     would decay to float64 and corrupt hashes above 2^53.
 
-    This is the engine's ONLY bloom variant: a legacy file-based
-    ShardedBloom (shared-POSIX-filesystem bitmaps) was retired to
-    tests/legacy_bloom.py in round 6 — it shares the bit math
-    (``_bit_positions``) and false-positive-only semantics.
+    This is the repo's only bloom; the crawl engine keeps one per root
+    with the default 64 shards.  A key's shard is
+    ``pmod(url_hash, n_shards)``, so ``n_shards`` must not change over a
+    table's life.
     """
 
     def __init__(self, spark, path: str | Path, n_shards: int = 64,

@@ -17,7 +17,7 @@ from urllib.parse import urlparse
 
 from .. import synth
 from ..functions.canon import canonicalize_one
-from .frontier import RETRYABLE, budget_k
+from .frontier import MAX_ATTEMPTS, RETRYABLE, budget_k
 
 
 @dataclass
@@ -74,8 +74,7 @@ def simulate(
     n_browse: int,
     n_users: int,
     window_sec: float = 60.0,
-    budgets: dict | None = None,
-    max_attempts: int = 3,
+    max_attempts: int = MAX_ATTEMPTS,
     comments_per_game: int = 2,
 ) -> SimResult:
     """Replay the crawl.  ``seeds`` = [(raw_url, priority), ...]."""
@@ -103,7 +102,7 @@ def simulate(
         for host, rows in by_host.items():
             rows.sort(key=lambda r: (-r.priority, r.discovery_round,
                                      r.url_canon))
-            k = budget_k(host, window_sec, budgets)
+            k = budget_k(host, window_sec)
             batch = rows[:k]
             res.schedule[(rnd, host)] = [r.url_canon for r in batch]
             scheduled.extend(batch)

@@ -13,8 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Sized for the sandbox (local[32], 128 GiB).  On a real cluster these are
-# overridden by spark-submit conf; everything here is safe to override.
+# Sized for one box in local mode (tuned at local[32], run at local[4] on
+# 4 vCPU / 15 GB).  On a real cluster these are overridden by spark-submit
+# conf; everything here is safe to override.
 _DEFAULTS = {
     # Adaptive execution: coalesce small post-shuffle partitions, split
     # skewed ones (boardgamegeek.com hot-host skew — SURVEY.md §4).
@@ -96,7 +97,9 @@ def get_spark(
                     os.environ["MALLOC_ARENA_MAX"])
     # Local mode runs everything in the driver JVM: the 1g default heap
     # collapses under 32 concurrent tasks (GC-bound, 32 cores slower
-    # than 8).  Reference uses 16G (merge.py:38-48); sandbox has 128 GiB.
+    # than 8).  Reference uses 16G (merge.py:38-48).  The 24g default is
+    # a ceiling, not a reservation: on a 4 vCPU / 15 GB box the crawl
+    # benchmark peaks at 4.7 GB RSS; SPARK_GRAFT_DRIVER_MEM lowers it.
     if master.startswith("local["):
         conf.setdefault("spark.driver.memory",
                         os.getenv("SPARK_GRAFT_DRIVER_MEM", "24g"))
@@ -122,14 +125,6 @@ def get_spark(
         # ship the package, the programmatic equivalent of the
         # north_rule's `spark-submit --py-files`.
         _ship_package(spark)
-    if (master.startswith("local[")
-            and os.getenv("SPARK_GRAFT_NO_WARM") != "1"
-            and not getattr(spark, "_bgs_codec_warm", False)):
-        # Single-JVM local mode only: with many task threads in one heap
-        # the first concurrent codec use contends (see _warm_parquet_codec);
-        # multi-executor JVMs have few threads each and don't need it.
-        _warm_parquet_codec(spark, shuffle_partitions)
-        spark._bgs_codec_warm = True
     return spark
 
 
@@ -146,30 +141,3 @@ def _ship_package(spark: SparkSession) -> None:
         str(base), "zip", root_dir=pkg_dir.parent, base_dir=pkg_dir.name
     )
     spark.sparkContext.addPyFile(zip_path)
-
-
-def _warm_parquet_codec(spark: SparkSession, n: int) -> None:
-    """Prime every task thread's parquet compression codec once.
-
-    Measured at local[32] (scale-2 replay corpus): the FIRST parquet
-    write that runs snappy concurrently from 32 task threads pays
-    ~37 s of native-lib/direct-buffer init contention (45.3 s vs
-    7-8 s for every subsequent identical write; at 8 threads the first
-    write shows no spike).  A tiny full-width write at session start
-    moves that one-time cost out of the measured/first crawl round.
-    Local mode only — a real cluster has few task threads per executor
-    JVM, where first-use init is noise."""
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="codec_warm_")
-    try:
-        (
-            spark.range(n * 4)
-            .repartition(n)
-            .selectExpr("id", "repeat('x', 4096) AS pad")
-            .write.mode("overwrite")
-            .parquet(d)
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

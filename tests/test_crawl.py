@@ -185,7 +185,7 @@ def test_frontier_delta_commits_are_incremental(spark, tmp_path):
     pages = spark.createDataFrame(pages_pd, schemas.PAGES)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
     eng = CrawlEngine(spark, tmp_path / "mor", pages, window_sec=3600.0,
-                      use_bloom=False, compact_every=0)
+                      compact_every=0)
     eng.seed(seeds)
     snap0 = eng.frontier.current_snapshot()
     assert snap0["mode"] == "overwrite" and snap0["delete_files"] == []
@@ -223,7 +223,7 @@ def test_future_retries_not_stranded(spark, tmp_path):
     must not report done: crawl() fast-forwards to their eligibility
     round and fetches them (ADVICE r03 #2)."""
     _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
-    eng = make_engine(spark, pages_pd, tmp_path / "fr", use_bloom=False)
+    eng = make_engine(spark, pages_pd, tmp_path / "fr")
     seed_one(spark, eng)
     # Push the seeded row's eligibility to round 5 (a backoff retry shape).
     delayed = eng.frontier.read().withColumn(
@@ -247,7 +247,7 @@ def test_crawl_side_table_file_counts_bounded(spark, tmp_path):
     'wrong' #2)."""
     _seeds_pd, pages_pd = synth.corpus(n_browse=4, n_users=8, n_other=4)
     eng = make_engine(spark, pages_pd, tmp_path / "c", compact_every=3,
-                      write_coalesce=2, track_last_scraped=True)
+                      track_last_scraped=True)
     seeds_pd = pd.DataFrame(
         [{"url": synth.browse_url(1), "source": "bgg", "priority": 0}])
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
@@ -296,7 +296,7 @@ def test_frontier_rows_manifest_arithmetic_and_resume(spark, tmp_path):
     partitions on different executors (measured on local-cluster[4,8]:
     scheduled reported 4895 of 2463 rows, pending went negative)."""
     _, pages_pd = synth.corpus(n_browse=4, n_users=6, n_other=2)
-    eng = make_engine(spark, pages_pd, tmp_path / "fr", use_bloom=False)
+    eng = make_engine(spark, pages_pd, tmp_path / "fr")
     seeds_pd = pd.DataFrame(
         {"url": pages_pd.url_canon, "source": "t", "priority": 0})
     n = eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
@@ -318,7 +318,7 @@ def test_frontier_rows_manifest_arithmetic_and_resume(spark, tmp_path):
     assert walked == eng.frontier_rows()
 
     # a fresh engine (resume) recovers the count without a Spark job
-    eng2 = make_engine(spark, pages_pd, tmp_path / "fr", use_bloom=False)
+    eng2 = make_engine(spark, pages_pd, tmp_path / "fr")
     assert eng2.frontier_rows() == eng.frontier_rows()
 
     # scheduled counts come from the write job's fetch rows, not the

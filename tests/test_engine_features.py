@@ -23,8 +23,8 @@ def test_robots_blocks_disallowed(spark, tmp_path):
          {"url": synth.luding_url(1), "source": "luding", "priority": 0},
          {"url": synth.luding_url(2), "source": "luding", "priority": 0}])
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = make_engine(spark, pages_pd, tmp_path / "rb", use_bloom=False,
-                      obey_robots=True, record_schedule=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "rb", obey_robots=True,
+                      record_schedule=True)
     eng.seed(seeds)
     eng.crawl(2)
     scheduled_hosts = {
@@ -41,12 +41,10 @@ def test_robots_allows_by_default(spark, tmp_path):
     """Default corpus robots (disallow /private/ only) changes nothing."""
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    a = make_engine(spark, pages_pd, tmp_path / "a", use_bloom=False,
-                    obey_robots=True)
+    a = make_engine(spark, pages_pd, tmp_path / "a", obey_robots=True)
     a.seed(seeds)
     ra = a.crawl(2)
-    b = make_engine(spark, pages_pd, tmp_path / "b", use_bloom=False,
-                    obey_robots=False)
+    b = make_engine(spark, pages_pd, tmp_path / "b", obey_robots=False)
     b.seed(seeds)
     rb = b.crawl(2)
     assert [m["scheduled"] for m in ra] == [m["scheduled"] for m in rb]
@@ -56,7 +54,7 @@ def test_adaptive_politeness_backoff(spark, tmp_path):
     """429-heavy host doubles its delay → smaller budget next round."""
     seeds_pd, pages_pd = synth.corpus(n_browse=5, n_users=8, n_other=3)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = make_engine(spark, pages_pd, tmp_path / "ap", use_bloom=False,
+    eng = make_engine(spark, pages_pd, tmp_path / "ap",
                       adaptive_politeness=True)
     eng.seed(seeds)
     eng.run_round(1)
@@ -74,7 +72,7 @@ def test_adaptive_politeness_backoff(spark, tmp_path):
 def test_requeue_respects_rescrape_window(spark, tmp_path):
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = make_engine(spark, pages_pd, tmp_path / "rq", use_bloom=False,
+    eng = make_engine(spark, pages_pd, tmp_path / "rq",
                       track_last_scraped=True)
     eng.seed(seeds)
     eng.crawl(3)
@@ -103,7 +101,7 @@ def test_requeue_same_round_survives_pending_deletes(spark, tmp_path):
     so they survive read-time delete application and compaction."""
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = make_engine(spark, pages_pd, tmp_path / "rqs", use_bloom=False,
+    eng = make_engine(spark, pages_pd, tmp_path / "rqs",
                       track_last_scraped=True, compact_every=0)
     eng.seed(seeds)
     eng.run_round(1)   # fetches seeds, discovers rows w/ discovery_round=2
@@ -139,7 +137,7 @@ def test_crawl_fast_forwards_empty_rounds(spark, tmp_path):
     seeds = spark.createDataFrame(
         pd.DataFrame({"url": rows.url_canon, "source": "t",
                       "priority": 0}), schemas.SEEDS)
-    eng = make_engine(spark, rows, tmp_path / "ff", use_bloom=False)
+    eng = make_engine(spark, rows, tmp_path / "ff")
     eng.seed(seeds)
     ms = eng.crawl(6)
     rounds = [m["round"] for m in ms]
@@ -159,8 +157,7 @@ def test_seed_requests_consumed_with_ack(spark, tmp_path):
     ack survives resume."""
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=6, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = make_engine(spark, pages_pd, tmp_path / "sr", use_bloom=False,
-                      record_schedule=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "sr", record_schedule=True)
     eng.seed(seeds)
     eng.crawl(3)
     last = eng.last_round()
@@ -184,7 +181,7 @@ def test_seed_requests_consumed_with_ack(spark, tmp_path):
               for u in urls]
     assert url not in sched2
     # resume: a fresh engine over the same root sees the ack
-    eng2 = make_engine(spark, pages_pd, tmp_path / "sr", use_bloom=False)
+    eng2 = make_engine(spark, pages_pd, tmp_path / "sr")
     assert (eng2.seed_requests.current_snapshot()["metrics"]["pending"]
             == 0)
     assert eng2._consume_seed_requests(eng2.last_round() + 1) == 0
@@ -232,7 +229,7 @@ def test_ids_seen_rebatches_overlapping_discoveries(spark, tmp_path):
         schemas.SEEDS,
     )
     eng = CrawlEngine(spark, tmp_path / "ids", pages, window_sec=3600.0,
-                      use_bloom=False, use_ids_seen=True)
+                      use_ids_seen=True)
     eng.seed(seeds)
     eng.crawl(2)
     games = eng.games.read()
@@ -247,7 +244,7 @@ def test_seed_request_enqueued_mid_consume_survives_ack(spark, tmp_path):
     """A request enqueued between the consuming read and the ack stays
     pending (the old ack truncated the whole queue — ADVICE r03 #3)."""
     _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
-    eng = make_engine(spark, pages_pd, tmp_path / "sr", use_bloom=False)
+    eng = make_engine(spark, pages_pd, tmp_path / "sr")
     seed_one(spark, eng)
     eng.crawl(6)  # drain the frontier so folds aren't anti-joined away
 
@@ -320,7 +317,7 @@ def test_requeue_does_not_advance_resume_marker(spark, tmp_path):
     """requeue/seed-request folds are out-of-band commits: last_round()
     must keep pointing at the last fully-committed round (ADVICE r03 #4)."""
     _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
-    eng = make_engine(spark, pages_pd, tmp_path / "rm", use_bloom=False,
+    eng = make_engine(spark, pages_pd, tmp_path / "rm",
                       track_last_scraped=True)
     seed_one(spark, eng)
     eng.crawl(2)

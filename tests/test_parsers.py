@@ -206,7 +206,7 @@ def test_extended_crawl_wikidata(spark, tmp_path):
     seeds = spark.createDataFrame(
         [(synth.sparql_url(1), "wikidata", 0)], schemas.SEEDS
     )
-    eng = CrawlEngine(spark, tmp_path / "wd", pages, use_bloom=False)
+    eng = CrawlEngine(spark, tmp_path / "wd", pages)
     eng.seed(seeds)
     ms = eng.crawl(2)
     assert ms[0]["discovered"] == 8
@@ -334,8 +334,7 @@ def test_dbpedia_spider_contract_and_crawl(spark, tmp_path):
                       "source": ["dbpedia"], "priority": [1]}),
         schemas.SEEDS,
     )
-    eng = CrawlEngine(spark, tmp_path / "dbp", pages, window_sec=3600.0,
-                      use_bloom=False)
+    eng = CrawlEngine(spark, tmp_path / "dbp", pages, window_sec=3600.0)
     eng.seed(seeds)
     eng.crawl(3)
     games = eng.games.read()

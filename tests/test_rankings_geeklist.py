@@ -134,8 +134,7 @@ def test_rankings_crawl_integration(spark, tmp_path):
         }),
         schemas.SEEDS,
     )
-    eng = CrawlEngine(spark, tmp_path / "rk", pages, window_sec=3600.0,
-                      use_bloom=False)
+    eng = CrawlEngine(spark, tmp_path / "rk", pages, window_sec=3600.0)
     eng.seed(seeds)
     metrics = eng.crawl(4)
     games = eng.games.read()

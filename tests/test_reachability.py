@@ -7,6 +7,10 @@ are themselves reached.  Imports are read with ``ast`` from every
 ``import``/``from`` statement, at module level or inside functions, with
 relative imports resolved.  A module that only tests import is code
 nothing runs; delete it with its tests instead of keeping it alive.
+
+The same holds for ``CrawlEngine`` options: each one is passed by keyword
+by at least one caller, in code or in a test, or it is a path nothing
+selects.
 """
 
 import ast
@@ -68,3 +72,25 @@ def test_every_package_module_is_reached_outside_tests():
     unreached = sorted(m for m, p in files.items()
                        if p.name != "__init__.py" and m not in reached)
     assert unreached == []
+
+
+def test_crawl_engine_options_have_callers():
+    crawl = ast.parse((PKG / "plans" / "crawl.py").read_text())
+    init = next(
+        f for c in crawl.body
+        if isinstance(c, ast.ClassDef) and c.name == "CrawlEngine"
+        for f in c.body
+        if isinstance(f, ast.FunctionDef) and f.name == "__init__")
+    params = [a.arg for a in init.args.args]
+    options = params[params.index("pages") + 1:]
+    sources = [*PKG.rglob("*.py"), *ENTRY_POINTS,
+               *sorted((ROOT / "tests").glob("*.py"))]
+    passed = set()
+    for path in sources:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "attr", getattr(node.func, "id", None))
+            if name in ("CrawlEngine", "make_engine"):
+                passed.update(k.arg for k in node.keywords if k.arg)
+    assert [o for o in options if o not in passed] == []

@@ -1,37 +1,46 @@
 """URL-seen set: bloom has no false negatives; filter_unseen ≡ set oracle."""
 
 import numpy as np
-import pytest
+import pandas as pd
 from pyspark.sql import functions as F
 
-from legacy_bloom import ShardedBloom
-
-from board_game_scraper_spark.plans.seen import filter_unseen
+from board_game_scraper_spark.plans.seen import SnapshotBloom, filter_unseen
 
 
-def test_bloom_no_false_negatives(tmp_path):
-    bloom = ShardedBloom(tmp_path, n_shards=4, shard_capacity=10_000)
+def _hashes(spark, keys):
+    return spark.createDataFrame(pd.DataFrame({"url_hash": keys}),
+                                 "url_hash long")
+
+
+def _maybe_seen(bloom, spark, keys):
+    """The bloom's ``maybe_seen`` flag for every key, in key order."""
+    flagged = bloom.prefilter(_hashes(spark, keys)).toPandas()
+    return flagged.set_index("url_hash").loc[keys, "maybe_seen"].to_numpy()
+
+
+def test_bloom_no_false_negatives(spark, tmp_path):
+    bloom = SnapshotBloom(spark, tmp_path / "b", n_shards=4,
+                          shard_capacity=10_000)
     rng = np.random.default_rng(42)
     keys = rng.integers(-(2**62), 2**62, size=5_000, dtype=np.int64)
-    for shard in range(4):
-        mask = keys % 4 == shard
-        bloom.add_hashes(shard, keys[mask])
-    for shard in range(4):
-        mask = keys % 4 == shard
-        assert bloom.maybe_contains(shard, keys[mask]).all()
+    bloom.add(_hashes(spark, keys))
+    bloom.compact()
+    assert _maybe_seen(bloom, spark, keys).all()
 
 
-def test_bloom_low_false_positive_rate(tmp_path):
-    bloom = ShardedBloom(tmp_path, n_shards=1, shard_capacity=100_000)
+def test_bloom_low_false_positive_rate(spark, tmp_path):
+    bloom = SnapshotBloom(spark, tmp_path / "b", n_shards=1,
+                          shard_capacity=100_000)
     rng = np.random.default_rng(7)
     inserted = rng.integers(0, 2**62, size=50_000, dtype=np.int64)
-    bloom.add_hashes(0, inserted)
+    bloom.add(_hashes(spark, inserted))
+    bloom.compact()
     probe = rng.integers(-(2**62), -1, size=50_000, dtype=np.int64)
-    fp = bloom.maybe_contains(0, probe).mean()
+    fp = _maybe_seen(bloom, spark, probe).mean()
     assert fp < 0.01  # 14 bits/key, 7 hashes → ~0.1% design point
 
 
-def test_filter_unseen_matches_set_oracle(spark, tmp_path):
+def test_filter_unseen_matches_set_oracle(spark):
     cand = spark.createDataFrame(
         [(i, f"u{i}") for i in range(200)], "url_hash long, url_canon string"
     )
@@ -45,19 +54,11 @@ def test_filter_unseen_matches_set_oracle(spark, tmp_path):
     got = {r["url_hash"] for r in filter_unseen(cand, seen).collect()}
     assert got == expected
 
-    # bloom-accelerated path — identical result
-    bloom = ShardedBloom(tmp_path / "b", n_shards=4, shard_capacity=1000)
-    bloom.add(seen)
-    got2 = {r["url_hash"] for r in filter_unseen(cand, seen, bloom).collect()}
-    assert got2 == expected
-
 
 def test_snapshot_bloom_matches_set_oracle(spark, tmp_path):
     """Cluster-safe bloom (SnapshotTable rows + cogroup applyInPandas):
     identical membership semantics to the exact path, including
     incremental adds touching only their shards."""
-    from board_game_scraper_spark.plans.seen import SnapshotBloom
-
     seen1 = spark.range(0, 120, 3).select(F.col("id").alias("url_hash"))
     seen2 = spark.range(120, 200, 3).select(F.col("id").alias("url_hash"))
     seen = seen1.union(seen2)
@@ -88,8 +89,6 @@ def test_snapshot_bloom_storage_is_o_new_hashes(spark, tmp_path):
     rows), never per-shard bitmap rewrites; compact() folds deltas into
     one bitmap row per shard and bounds the data-file count."""
     import os
-
-    from board_game_scraper_spark.plans.seen import SnapshotBloom
 
     def data_bytes(table):
         total = 0
@@ -136,8 +135,7 @@ def test_engine_compacts_bloom_on_cadence(spark, tmp_path):
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
     pages = spark.createDataFrame(pages_pd, schemas.PAGES)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = CrawlEngine(spark, tmp_path / "eng", pages, use_bloom=True,
-                      compact_every=2, bloom_shards=4)
+    eng = CrawlEngine(spark, tmp_path / "eng", pages, compact_every=2)
     eng.seed(seeds)
     eng.crawl(2)
     t = eng.bloom.table.read()
