@@ -2,10 +2,10 @@
 
 Images/audio/video ride as opaque ``binary`` columns with typed metadata
 structs; decode + featurize runs as an Arrow-batched pandas UDF over
-``mapInPandas``.  No image/audio library is a dependency, so the default
-decoder is a deterministic fake (``_fake_decode``); ``extract_features``
-takes a real one.  The Spark-side plumbing (schemas, batch shape,
-partitioning) is the same either way.
+``mapInPandas``.  No image/audio library is a dependency, so the decoder
+is a deterministic fake (``_fake_decode``); a real codec would replace it
+without changing the Spark-side plumbing (schemas, batch shape,
+partitioning).
 
 Schema convention:
     media(doc_id string, media_ref string, kind string,
@@ -21,22 +21,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MEDIA_META = StructType(
-    [
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-        StructField("mime", StringType(), True),
-    ]
-)
 
 FEATURE_SCHEMA = (
     # feature carries float64: the fake-decoder values are exact 4-decimal
@@ -63,37 +47,13 @@ def _fake_decode(payload: bytes | None, ref: str, dim: int = 16) -> np.ndarray:
     return (raw % 10_000).astype(np.float64) / 10_000.0
 
 
-def media_from_documents(documents: DataFrame) -> DataFrame:
-    """Explode media spans out of the interleaved documents table into
-    the media table shape (payload empty until a fetch stage fills it)."""
-    spans = documents.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).where(F.col("s.media_ref").isNotNull())
-    return spans.select(
-        "doc_id",
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.kind").alias("kind"),
-        F.lit(None).cast("binary").alias("payload"),
-        F.lit(None).cast(MEDIA_META.simpleString()).alias("meta"),
-    )
-
-
-def extract_features(media: DataFrame, dim: int = 16,
-                     real_decoder=None) -> DataFrame:
-    """Decode + featurize each media item (mapInPandas, Arrow batches).
-
-    ``real_decoder(payload, ref) -> np.ndarray`` plugs in a real codec;
-    default is the deterministic fake (sandbox).
-    """
-    decoder = real_decoder or _fake_decode
+def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
+    """Decode + featurize each media item (mapInPandas, Arrow batches)."""
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            feats = [
-                decoder(p, r, dim) if decoder is not _fake_decode
-                else _fake_decode(p, r, dim)
-                for p, r in zip(pdf["payload"], pdf["media_ref"])
-            ]
+            feats = [_fake_decode(p, r, dim)
+                     for p, r in zip(pdf["payload"], pdf["media_ref"])]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],

@@ -69,32 +69,6 @@ def clean_text_one(value: str | None) -> str | None:
     return out if out else None
 
 
-def clear_list(values) -> list | None:
-    """Order-preserving dedupe + drop falsey; [] → None.
-
-    Reference: pytility.clear_list used ~20x (items.py:81-82, bgg.py:203).
-    """
-    if values is None:
-        return None
-    seen, out = set(), []
-    for v in values:
-        if v and v not in seen:
-            seen.add(v)
-            out.append(v)
-    return out or None
-
-
-def limit_images_col(col, n: int):
-    """C11 (pipelines.py:187-239): copy first n URLs; 0 → none (NULL),
-    -1 → all."""
-    if n == 0:
-        return F.lit(None).cast("array<string>")
-    if n < 0:
-        return col
-    limited = F.slice(col, 1, n)
-    return F.when(F.size(limited) > 0, limited)
-
-
 # C12 (pipelines.py:146-184 ResolveImagePipeline): dbpedia/wikidata file
 # pages → commons Special:Redirect.  regex mirrors pipelines.py:157.
 _COMMONS_URL = "https://commons.wikimedia.org/wiki/Special:Redirect/file/"
@@ -118,8 +92,3 @@ def commons_image_url_col(col):
         F.lit(_COMMONS_URL), F.regexp_replace(file_id, " ", "_")
     )
     return F.when(file_id != "", rewritten).otherwise(col)
-
-
-def commons_image_urls_col(arr_col):
-    """C12 over an array column (image_url is array<string>)."""
-    return F.transform(arr_col, commons_image_url_col)

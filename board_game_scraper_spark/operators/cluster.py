@@ -48,12 +48,11 @@ def _name_tokens(col):
     )
 
 
-def exact_id_edges(records: DataFrame, rec_id: str = "rec_id",
-                   namespaces=ID_NAMESPACES) -> DataFrame:
+def exact_id_edges(records: DataFrame, rec_id: str = "rec_id") -> DataFrame:
     """Edges between records sharing any external id (fields.yaml Exact
     comparators).  One self-equi-join per namespace, unioned."""
     edges = None
-    for ns in namespaces:
+    for ns in ID_NAMESPACES:
         if ns not in records.columns:
             continue
         keyed = records.select(rec_id, ns).where(F.col(ns).isNotNull())
@@ -76,13 +75,12 @@ def fuzzy_name_edges(
     name_col: str = "name",
     year_col: str | None = "year",
     threshold: float = 0.5,
-    max_block: int = 200,
 ) -> DataFrame:
     """Blocked fuzzy edges: block on each name token, score candidates.
 
     Score (mirrors the reference's comparator mix cluster.py:39-43):
       0.7 * token-Jaccard(name) + 0.3 * year-proximity(1/(1+|Δyear|)).
-    Blocks larger than ``max_block`` records are dropped (stopword-ish
+    Blocks larger than 200 records are dropped (stopword-ish
     tokens — the reference's dedupe library does the same via predicate
     selection), bounding the join fan-out.
     """
@@ -100,7 +98,7 @@ def fuzzy_name_edges(
     # prune hot blocks
     block_sizes = blocked.groupBy("block").count()
     blocked = blocked.join(
-        F.broadcast(block_sizes.where(F.col("count") <= max_block)
+        F.broadcast(block_sizes.where(F.col("count") <= 200)
                     .select("block")),
         "block",
     )
@@ -203,7 +201,6 @@ def resolve_entities(
     rec_id: str = "rec_id",
     name_col: str = "name",
     year_col: str | None = "year",
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Full J5 pipeline → (rec_id, canonical_id).
 
@@ -211,8 +208,8 @@ def resolve_entities(
     (cluster.py:315-321 emits singleton clusters implicitly).
     """
     edges = exact_id_edges(records, rec_id).unionByName(
-        fuzzy_name_edges(records, rec_id, name_col, year_col,
-                         threshold).select("a", "b")
+        fuzzy_name_edges(records, rec_id, name_col,
+                         year_col).select("a", "b")
     ).distinct()
     comps = connected_components(edges)
     return (

@@ -27,13 +27,12 @@ so the result equals the per-perm array_min exactly).
 
 Operators:
 - exact_dedup            md5 hash groupBy (exact duplicates)
-- shingles               k-word shingles over materialized tokens
+- shingles               3-word shingles over materialized tokens
 - simhash                ``bits``-bit SimHash from token hashes (Charikar)
 - minhash_signatures     ``num_perm`` salted-h60 MinHash signature
 - lsh_bands              banding of the signature into band keys
 - near_dup_pairs         candidate pairs from shared band keys +
                          verified shingle Jaccard
-- dedup_keep_first       drop every near-dup of a lower id
 """
 
 from __future__ import annotations
@@ -54,35 +53,34 @@ def tokens_col(text_col):
     return F.split(F.trim(F.lower(text_col)), r"\s+")
 
 
-def shingles_from_toks(k: int = 3):
-    """k-word shingles from a MATERIALIZED ``toks`` array column.
+def shingles_from_toks():
+    """3-word shingles from a MATERIALIZED ``toks`` array column.
 
     The tokenizer split() must be a real column, not an inline
     expression: interpreted HOF lambdas re-evaluate their body per
     element, and CollapseProject inlines a non-cheap expression into a
     lambda when it is referenced once syntactically — so an inline
     split() runs 3x per shingle (measured 24x slowdown of minhash_band
-    at sf0.1: 7.2s vs 0.30s).  The k+1 syntactic references to ``toks``
-    here (size + k element_at) keep CollapseProject from substituting
+    at sf0.1: 7.2s vs 0.30s).  The 4 syntactic references to ``toks``
+    here (size + 3 element_at) keep CollapseProject from substituting
     the split back in (it refuses to duplicate non-cheap expressions,
     SPARK-36718)."""
     tk = F.col("toks")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(tk) - (k - 1), F.lit(1)))
+    idx = F.sequence(F.lit(1), F.greatest(F.size(tk) - 2, F.lit(1)))
     return F.transform(
         idx,
         lambda i: F.concat_ws(
-            " ", *[F.element_at(tk, i + j) for j in range(k)]
+            " ", *[F.element_at(tk, i + j) for j in range(3)]
         ),
     )
 
 
-def shingles(df: DataFrame, id_col: str, text_col: str,
-             k: int = 3) -> DataFrame:
-    """(id, sh): k-word shingles per doc, tokens materialized first.
+def shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, sh): 3-word shingles per doc, tokens materialized first.
     Never empty: split('') yields [''], and element_at past the end is
     NULL, which concat_ws skips."""
     tdf = df.select(F.col(id_col), tokens_col(F.col(text_col)).alias("toks"))
-    return tdf.select(F.col(id_col), shingles_from_toks(k).alias("sh"))
+    return tdf.select(F.col(id_col), shingles_from_toks().alias("sh"))
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -167,10 +165,10 @@ def _minhash_fold(num_perm: int):
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       num_perm: int = 16, shingle_k: int = 3) -> DataFrame:
+                       num_perm: int = 16) -> DataFrame:
     """(id, signature): min over shingles of h60(perm_salt, shingle)
     for each of num_perm salted hash functions — all JVM-side."""
-    return shingles(df, id_col, text_col, shingle_k).select(
+    return shingles(df, id_col, text_col).select(
         F.col(id_col), _minhash_fold(num_perm).alias("signature")
     )
 
@@ -235,7 +233,6 @@ def near_dup_pairs(
     threshold: float = 0.7,
     num_perm: int = 16,
     bands: int = 4,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Near-duplicate pairs (a, b, jaccard): LSH candidates + exact
     verify.
@@ -246,7 +243,7 @@ def near_dup_pairs(
        >= threshold.  The verify joins re-attach shingles by id — no
        cross product anywhere.
     """
-    sh = shingles(df, id_col, text_col, shingle_k)
+    sh = shingles(df, id_col, text_col)
     sig = sh.select(F.col(id_col), _minhash_fold(num_perm).alias("sig"))
     banded = sig.select(
         F.col(id_col),
@@ -271,12 +268,3 @@ def near_dup_pairs(
         )
         .where(F.col("jaccard") >= threshold)
     )
-
-
-def dedup_keep_first(df: DataFrame, id_col: str, text_col: str,
-                     threshold: float = 0.7) -> DataFrame:
-    """Corpus-level near-dup removal: drop every doc that is a near-dup
-    of a lower-id doc (greedy canonical-min rule — deterministic)."""
-    pairs = near_dup_pairs(df, id_col, text_col, threshold)
-    losers = pairs.select(F.col("b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")

@@ -5,75 +5,21 @@ The reference resolves Q-ids in ``designer``/``artist``/``publisher`` by
 fetching ``Special:EntityData/{Q}.json`` per id at crawl time and
 replacing each id with its labels (all languages, priority-ordered, "en"
 first, deduped).  A per-item fetch loop dies at scale; the Spark-native
-design is:
+design joins a ``labels(qid, labels array<string>)`` dim table instead —
+tiny, one row per distinct entity, labels already in priority order.
 
-1. ``build_labels_dim``: one Arrow-batch pass over already-crawled
-   EntityData pages → a ``labels(qid, labels array<string>)`` dim table.
-   At 10^10 docs this is a normal parse stage; the dim is tiny (one row
-   per distinct entity).
-2. ``resolve_labels``: per field, posexplode the id array, broadcast-join
-   the dim, flatten labels in (id-position, label-priority) order, dedup
-   preserving first occurrence (pytility ``clear_list`` semantics), and
-   re-attach.  All JVM-side after the join — no Python in the hot path.
+``resolve_labels``: per field, posexplode the id array, broadcast-join
+the dim, flatten labels in (id-position, label-priority) order, dedup
+preserving first occurrence (pytility ``clear_list`` semantics), and
+re-attach.  All JVM-side after the join — no Python in the hot path.
 """
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 LABEL_FIELDS = ("designer", "artist", "publisher")  # wikidata.py:80
-LANG_PRIORITIES = ("en",)  # wikidata.py:81
-
-
-def _extract_labels_one(body: str, lang_priorities) -> list[tuple[str, list[str]]]:
-    """pipelines.py:87-100 _extract_labels, per page: every entity in the
-    page → (qid, labels sorted by language priority, falsey removed)."""
-    import json
-
-    prio = {lang: i for i, lang in enumerate(lang_priorities)}
-    try:
-        doc = json.loads(body)
-    except (ValueError, TypeError):
-        return []
-    out = []
-    for qid, ent in (doc.get("entities") or {}).items():
-        labels = ent.get("labels") or {}
-        ordered = sorted(
-            labels.values(),
-            key=lambda lb: prio.get(lb.get("language"), math.inf),
-        )
-        vals = [lb.get("value") for lb in ordered if lb.get("value")]
-        out.append((qid, vals))
-    return out
-
-
-def build_labels_dim(
-    pages: DataFrame,
-    lang_priorities: tuple[str, ...] = LANG_PRIORITIES,
-) -> DataFrame:
-    """EntityData pages (``url_canon``, ``body``) → ``(qid, labels)``.
-
-    Arrow-batched mapInPandas; duplicate crawls of the same entity (e.g.
-    re-scrapes) dedup to the lexically-first label list — deterministic.
-    """
-    langs = tuple(lang_priorities)
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for body in pdf["body"]:
-                rows.extend(_extract_labels_one(body, langs))
-            yield pd.DataFrame(rows, columns=["qid", "labels"])
-
-    raw = pages.select("body").mapInPandas(
-        _kernel, "qid string, labels array<string>"
-    )
-    return raw.groupBy("qid").agg(F.min("labels").alias("labels"))
 
 
 def resolve_labels(

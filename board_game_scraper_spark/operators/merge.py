@@ -10,8 +10,9 @@ Reference semantics (``/root/reference/board_game_scraper/merge.py``):
   ``_compare`` (merge.py:62-67) keeps the *second* row iff its ``_latest``
   array is lexicographically >= the first's — i.e. ties favor the
   later-encountered row, and rows whose first has no ``_latest`` lose.
-- ``merge.py:210-241``: sort by keys/latest/fields, drop helper columns,
-  project to explicit or sorted column names.
+- ``merge.py:234-241``: drop helper columns, project to explicit or
+  sorted column names.  The reference's optional output sorts
+  (``merge.py:210-232``) are not ported: no caller asks for one.
 - ``merge.py:81-93`` (``_remove_empty``): null-out empty strings/arrays.
 
 The RDD island is the reference's scalability bug: it breaks Catalyst
@@ -63,17 +64,12 @@ def merge_latest_wins(
     df: DataFrame,
     keys: Sequence[str],
     latest: Sequence[str],
-    key_types: Sequence[str | None] | None = None,
     latest_types: Sequence[str | None] | None = None,
     latest_min=None,
     latest_required: bool = False,
     file_seq_col: str | None = None,
     fieldnames: Sequence[str] | None = None,
     fieldnames_exclude: Sequence[str] | None = None,
-    sort_keys: bool = False,
-    sort_latest: bool = False,
-    sort_fields: Sequence[str] | None = None,
-    sort_descending: bool = False,
 ) -> DataFrame:
     """Deduplicate: keep the latest row per key (merge.py:96-241 semantics).
 
@@ -82,15 +78,12 @@ def merge_latest_wins(
     (later row wins).  When None, ties break arbitrarily-but-
     deterministically on the latest array alone.
     """
-    key_types = list(key_types or []) + [None] * (len(keys) - len(key_types or []))
     latest_types = list(latest_types or []) + [None] * (
         len(latest) - len(latest_types or [])
     )
 
-    key_cols = [
-        _typed_column(F.col(c), t).cast("string").alias(f"_key_{i}")
-        for i, (c, t) in enumerate(zip(keys, key_types))
-    ]
+    key_cols = [F.col(c).cast("string").alias(f"_key_{i}")
+                for i, c in enumerate(keys)]
     latest_cols = [
         _typed_column(F.col(c), t).cast("string").alias(f"_latest_{i}")
         for i, (c, t) in enumerate(zip(latest, latest_types))
@@ -123,19 +116,6 @@ def merge_latest_wins(
         F.max_by(payload, ordering).alias("_row")
     )
     merged = merged.select("_row.*")
-
-    if sort_keys:
-        merged = merged.orderBy(
-            *[F.col(c) for c in keys], ascending=not sort_descending
-        )
-    elif sort_latest:
-        merged = merged.orderBy(
-            *[F.col(c) for c in latest], ascending=not sort_descending
-        )
-    elif sort_fields:
-        merged = merged.orderBy(
-            *[F.col(c) for c in sort_fields], ascending=not sort_descending
-        )
 
     # Projection — merge.py:234-241: explicit order, else sorted names.
     columns = set(merged.columns) - set(fieldnames_exclude or [])

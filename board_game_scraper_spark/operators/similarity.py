@@ -1,6 +1,8 @@
 """Similarity search over embedding columns (training-pipeline additions).
 
-Works on DataFrames with (id_col, vec_col: array<float|double>):
+Works on DataFrames with an id column and an array<float|double> vector
+column: ``(vec_id, embedding)`` for the top-k paths, caller-named for
+the near-dup path:
 
 - ``cosine_topk``         exact brute force — per-row dot products via
                           JVM HOFs (zip_with + aggregate), distributed
@@ -56,27 +58,20 @@ def cosine(a, b):
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_topk(
-    vectors: DataFrame,
-    query: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    round_to: int | None = 4,
-) -> DataFrame:
-    """Exact top-k by cosine against a single query vector.
+def cosine_topk(vectors: DataFrame, query: DataFrame,
+                k: int = 10) -> DataFrame:
+    """Exact top-k by cosine (rounded to 4 decimals) against a single
+    query vector.
 
     ``query``: one-row DataFrame with column ``qvec``.  Broadcast — the
     scan side never shuffles; orderBy+limit compiles to per-partition
     heaps + driver merge.
     """
     scored = vectors.crossJoin(F.broadcast(query))
-    cos = cosine(F.col(vec_col), F.col("qvec"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
+    cos = F.round(cosine(F.col("embedding"), F.col("qvec")), 4)
     return (
-        scored.select(F.col(id_col), cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        scored.select(F.col("vec_id"), cos.alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -146,11 +141,11 @@ def embedding_near_dup(
     threshold: float = 0.9,
     n_planes: int = 8,
     n_tables: int = 4,
-    round_to: int | None = 4,
     dim: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a, id_b, cosine) via
-    multi-table hyperplane LSH (training-pipeline dedup op).
+    """Embedding-cosine near-duplicate pairs (id_a, id_b, cosine rounded
+    to 4 decimals) via multi-table hyperplane LSH (training-pipeline
+    dedup op).
 
     The only all-pairs-free shape that survives 10^10 vectors:
 
@@ -179,9 +174,7 @@ def embedding_near_dup(
         sigs = bt if sigs is None else sigs.unionByName(bt)
     va = base.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
     vb = base.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
-    cos = cosine(F.col("va"), F.col("vb"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
+    cos = F.round(cosine(F.col("va"), F.col("vb")), 4)
     return (
         bucket_pairs(sigs, id_col, "t", "bucket")
         .join(va, "a").join(vb, "b")
@@ -194,26 +187,21 @@ def embedding_near_dup(
     )
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign each vector to its nearest centroid (broadcast join +
     max_by over cosine) → (id, vec, list_id).  The write side of an IVF
     index; persist partitioned by list_id for partition-pruned probes."""
     joined = vectors.crossJoin(F.broadcast(centroids))
-    sim = F.round(cosine(F.col(vec_col), F.col("cvec")), 9)
+    sim = F.round(cosine(F.col("embedding"), F.col("cvec")), 9)
     # tie-break on list_id so assignment is total-ordered (needed for the
     # cross-engine oracle and for idempotent re-assignment)
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("vec_id")
         .agg(
             F.max_by(F.col("list_id"),
                      F.struct(sim.alias("s"),
                               F.col("list_id").alias("l"))).alias("list_id"),
-            F.first(vec_col).alias(vec_col),
+            F.first("embedding").alias("embedding"),
         )
     )
 
@@ -221,8 +209,6 @@ def ivf_assign(
 def make_centroids(
     vectors: DataFrame,
     nlist: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     strat: str = "hash",
 ) -> DataFrame:
     """Deterministic coarse centroids: nlist seed vectors picked by
@@ -237,18 +223,18 @@ def make_centroids(
     bucket assignment — is bit-reproducible.  Quantization error 1e-6 is
     noise for a coarse quantizer."""
     if strat == "hash":
-        list_of = F.pmod(F.xxhash64(F.col(id_col)), F.lit(nlist))
+        list_of = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(nlist))
     else:
-        list_of = F.pmod(F.col(id_col), F.lit(nlist))
+        list_of = F.pmod(F.col("vec_id"), F.lit(nlist))
     seeds = (
         vectors.withColumn("list_id", list_of.cast("long"))
         .groupBy("list_id")
-        .agg(F.min_by(F.col(vec_col), F.col(id_col)).alias("cvec"))
+        .agg(F.min_by(F.col("embedding"), F.col("vec_id")).alias("cvec"))
     )
-    assigned = ivf_assign(vectors, seeds, id_col, vec_col)
+    assigned = ivf_assign(vectors, seeds)
     # one Lloyd step: element-wise quantized mean per list
     exploded = assigned.select(
-        "list_id", F.posexplode(vec_col).alias("pos", "v")
+        "list_id", F.posexplode("embedding").alias("pos", "v")
     )
     means = (
         exploded.groupBy("list_id", "pos")
@@ -268,21 +254,15 @@ def make_centroids(
     return means
 
 
-def ivf_build(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    path,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
+def ivf_build(vectors: DataFrame, centroids: DataFrame, path) -> str:
     """Build + PERSIST the IVF index: one assignment pass over the
     corpus, written ``partitionBy(list_id)``.  This is the write side;
     ``ivf_topk_indexed`` then reads only the probed partitions.  At
     10^10 vectors the corpus is assigned exactly once — queries never
     re-scan or re-assign it (VERDICT r02 "what's wrong" #2)."""
-    assigned = ivf_assign(vectors, centroids, id_col, vec_col)
+    assigned = ivf_assign(vectors, centroids)
     (
-        assigned.select(id_col, vec_col, "list_id")
+        assigned.select("vec_id", "embedding", "list_id")
         .write.mode("overwrite")
         .partitionBy("list_id")
         .parquet(str(path))
@@ -314,9 +294,6 @@ def ivf_topk_indexed(
     centroids: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int | None = 4,
 ) -> DataFrame:
     """ANN top-k over a persisted IVF index: the nprobe list ids become
     a STATIC partition filter, so the parquet scan reads nprobe/nlist of
@@ -327,7 +304,7 @@ def ivf_topk_indexed(
     index = spark.read.parquet(str(index_path)).where(
         F.col("list_id").isin(lists)
     )
-    return cosine_topk(index, query, id_col, vec_col, k, round_to)
+    return cosine_topk(index, query, k)
 
 
 @functools.cache
@@ -345,9 +322,6 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int | None = 4,
 ) -> DataFrame:
     """ANN top-k convenience wrapper: builds the persisted IVF index in
     a fresh dir under ``_index_root()`` and probes it via
@@ -360,9 +334,6 @@ def ivf_topk(
     more than one query should ``ivf_build`` once themselves and probe
     the index per query."""
     path = tempfile.mkdtemp(prefix="index_", dir=_index_root())
-    ivf_build(vectors, centroids, path, id_col, vec_col)
+    ivf_build(vectors, centroids, path)
     return ivf_topk_indexed(
-        vectors.sparkSession, path, query, centroids,
-        k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-        round_to=round_to,
-    )
+        vectors.sparkSession, path, query, centroids, k=k, nprobe=nprobe)

@@ -32,7 +32,7 @@ re-splitting ONE consumer's shuffle read while leaving the other —
 guaranteed today because ``repartitionByRange(num, ...)`` is a
 user-specified REPARTITION_BY_NUM, which AQE's coalesce/skew rules
 must not re-shape.  If either ever changes, offsets and per-partition
-ranks would disagree silently; ``tests/test_round6.py::
+ranks would disagree silently; ``tests/test_split.py::
 test_global_row_ids_permutation_when_overpartitioned`` pins the
 permutation property at num_partitions >> data partitions so a
 Spark-upgrade regression fails loudly.
@@ -49,16 +49,15 @@ from pyspark.sql import functions as F
 def global_row_ids(
     df: DataFrame,
     order_keys: Sequence[str],
-    descending: bool = False,
     num_partitions: int | None = None,
-    id_col: str = "_gid",
     total_col: str | None = None,
 ) -> DataFrame:
-    """Add a 1-based global position column in ``order_keys`` order.
+    """Add a 1-based global position column ``_gid`` in ascending
+    ``order_keys`` order.
 
     Scale-safe zipWithIndex: every stage is partition-parallel and the
     result is a single lazy plan (see module docstring).  Used by
-    pagination (below) and the feed-file sequence numbering (S1).
+    pagination (below).
 
     When ``total_col`` is given, a grand-total column is attached too —
     it rides the SAME P-row broadcast dim as the offsets (every count
@@ -66,8 +65,7 @@ def global_row_ids(
     separate count-the-table join.
     """
     spark = df.sparkSession
-    order = [F.col(c).desc() if descending else F.col(c).asc()
-             for c in order_keys]
+    order = [F.col(c).asc() for c in order_keys]
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
     parted = (
@@ -99,7 +97,7 @@ def global_row_ids(
     out = (
         parted.join(F.broadcast(dim), "_pid", "left")
         .withColumn(
-            id_col,
+            "_gid",
             F.row_number().over(w) + F.coalesce(F.col("_off"), F.lit(0)),
         )
     )
@@ -112,8 +110,6 @@ def page_rows(
     df: DataFrame,
     size: int,
     order_keys: Sequence[str],
-    descending: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign page metadata to every row.
 
@@ -123,9 +119,7 @@ def page_rows(
       previous  page-1 or null on first page
       next      page+1 or null on last page
     """
-    ids = global_row_ids(
-        df, order_keys, descending, num_partitions, total_col="_total"
-    )
+    ids = global_row_ids(df, order_keys, total_col="_total")
     page = F.floor((F.col("_gid") - F.lit(1)) / F.lit(size)).cast("int")
     last_page = F.floor((F.col("_total") - F.lit(1)) / F.lit(size)).cast(
         "int"

@@ -114,13 +114,11 @@ def token_count(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def fingerprint(df: DataFrame, id_col: str, text_col: str,
-                shingle_k: int = 3, sketch: int = 4) -> DataFrame:
+def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, fingerprint): winnowing-style document signature — md5 of
-    the ``sketch`` smallest h60 values over k-word shingles, joined
-    with ':'."""
+    the 4 smallest h60 values over 3-word shingles, joined with ':'."""
     hashes = F.array_sort(F.transform(F.col("sh"), h60))
-    mins = F.slice(hashes, 1, sketch).cast("array<string>")
-    return shingles(df, id_col, text_col, shingle_k).select(
+    mins = F.slice(hashes, 1, 4).cast("array<string>")
+    return shingles(df, id_col, text_col).select(
         F.col(id_col), F.md5(F.concat_ws(":", mins)).alias("fingerprint")
     )

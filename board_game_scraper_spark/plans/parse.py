@@ -84,7 +84,7 @@ def _span(kind, offset, text=None, media_ref=None):
 MIN_VOTES = 20  # bgg.py:147
 
 
-def _median_grouped(values: list[float], interval: float = 1.0):
+def _median_grouped(values: list[float]):
     """statistics.median_grouped — exact formula L + ((n/2 - cf)/f)*h
     (E7, bgg.py:73-83; not equal to percentile_approx, so computed here
     bit-for-bit)."""
@@ -92,7 +92,7 @@ def _median_grouped(values: list[float], interval: float = 1.0):
 
     if not values:
         return None
-    return float(statistics.median_grouped(values, interval))
+    return float(statistics.median_grouped(values))
 
 
 def _expand_votes(pairs: list[tuple[float, int]]) -> list[float]:
@@ -105,10 +105,10 @@ def _expand_votes(pairs: list[tuple[float, int]]) -> list[float]:
 
 
 def _filter_votes(votes_best: int, votes_rec: int, votes_not: int,
-                  best: bool, min_votes: int = MIN_VOTES) -> bool:
-    """bgg.py:323-334: drop rows with < min_votes/2 total; majority rule
+                  best: bool) -> bool:
+    """bgg.py:323-334: drop rows with < MIN_VOTES/2 total; majority rule
     (Recommended counts as 'true' unless scoring Best)."""
-    if votes_best + votes_rec + votes_not < min_votes / 2:
+    if votes_best + votes_rec + votes_not < MIN_VOTES / 2:
         return False
     votes_true, votes_false = votes_best, votes_not
     if best:
@@ -184,10 +184,10 @@ def _remove_rank_suffix(value: str | None) -> str | None:
     return value
 
 
-def batchify(ids: list[int], size: int = 10) -> list[list[int]]:
-    """bgg.py:263 batching: sorted ids in chunks of `size`."""
+def batchify(ids: list[int]) -> list[list[int]]:
+    """bgg.py:263 batching: sorted ids in chunks of 10."""
     s = sorted(ids)
-    return [s[i : i + size] for i in range(0, len(s), size)]
+    return [s[i : i + 10] for i in range(0, len(s), 10)]
 
 
 def _thing_url(ids: list[int]) -> str:
@@ -452,22 +452,6 @@ def _interval(text: str | None) -> tuple[int | None, int | None]:
     return lo, hi
 
 
-def _simple_game_row(url_canon: str, **kw) -> dict:
-    game = {k: None for k in (
-        "bgg_id", "alt_name", "year", "description", "designer", "artist",
-        "publisher", "image_url", "video_url", "min_players_rec",
-        "max_players_rec", "min_players_best", "max_players_best", "min_age",
-        "max_age", "min_age_rec", "min_time", "max_time", "category",
-        "mechanic", "cooperative", "compilation", "compilation_of", "family",
-        "expansion", "implementation", "integration", "rank", "add_rank",
-        "num_votes", "avg_rating", "stddev_rating", "bayes_rating",
-        "complexity", "language_dependency", "published_at",
-        "min_players", "max_players", "name")}
-    game.update({"url": url_canon, "scraped_at": SCRAPED_AT})
-    game.update(kw)
-    return game
-
-
 def parse_luding(url_canon: str, body: str) -> dict:
     """luding.py:52-107 parse_game: labeled-table-row extraction over the
     stdlib DOM engine (E2) — name, year, description, designer/artist/
@@ -502,8 +486,8 @@ def parse_luding(url_canon: str, body: str) -> dict:
     images = [img.get("src") for img in doc.select("table img")
               if img.get("src")]
     images = [_urljoin(url_canon, i) for i in images]
-    game = _simple_game_row(
-        url_canon,
+    game = _game_row(
+        url=url_canon,
         name=name,
         year=_lenient_int(cell_text("Year:")),
         description=cell_text("Box text:"),
@@ -599,8 +583,8 @@ def parse_spielen(url_canon: str, body: str) -> dict:
             n_before += 1
         complexity = float(n_before + 1)
 
-    game = _simple_game_row(
-        url_canon,
+    game = _game_row(
+        url=url_canon,
         name=name,
         description=desc,
         year=_lenient_int(labeled_text("Erscheinungsjahr:")),

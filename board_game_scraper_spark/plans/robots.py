@@ -12,13 +12,17 @@ is a broadcast join + a JVM ``exists`` over the prefix array — no UDF,
 no per-row Python.
 
 Hosts with no robots row are allowed (Scrapy's default when the fetch
-404s); per-host opt-out mirrors wikidata.py:78 via ``ignore_hosts``.
+404s); per-host opt-out mirrors wikidata.py:78 via ``IGNORE_HOSTS``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Hosts whose robots.txt is not obeyed: the wikidata spider sets
+# ``ROBOTSTXT_OBEY = False`` (wikidata.py:78).
+IGNORE_HOSTS = ("www.wikidata.org",)
 
 
 def parse_robots_body(body: str | None) -> list[str]:
@@ -63,11 +67,7 @@ def robots_table(fetched_robots: DataFrame, round_no: int) -> DataFrame:
     )
 
 
-def filter_allowed(
-    candidates: DataFrame,
-    robots: DataFrame,
-    ignore_hosts: tuple[str, ...] = ("www.wikidata.org",),
-) -> DataFrame:
+def filter_allowed(candidates: DataFrame, robots: DataFrame) -> DataFrame:
     """Drop candidates whose canonical path starts with a disallowed
     prefix for their host.  Broadcast join (robots is per-host tiny);
     the prefix test is a JVM ``exists`` HOF over the prefix array.
@@ -78,7 +78,7 @@ def filter_allowed(
     joined = candidates.join(F.broadcast(robots), "host", "left")
     blocked = (
         F.col("disallow_prefixes").isNotNull()
-        & ~F.col("host").isin(*ignore_hosts)
+        & ~F.col("host").isin(*IGNORE_HOSTS)
         & F.exists(
             "disallow_prefixes", lambda p: path.startswith(p)
         )

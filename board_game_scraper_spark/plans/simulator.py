@@ -74,7 +74,6 @@ def simulate(
     n_browse: int,
     n_users: int,
     window_sec: float = 60.0,
-    max_attempts: int = MAX_ATTEMPTS,
     comments_per_game: int = 2,
 ) -> SimResult:
     """Replay the crawl.  ``seeds`` = [(raw_url, priority), ...]."""
@@ -121,7 +120,7 @@ def simulate(
                     prev = discovered.get(canon)
                     if prev is None or prio > prev[0]:
                         discovered[canon] = (prio, kind)
-            elif status in RETRYABLE and r.attempt + 1 < max_attempts:
+            elif status in RETRYABLE and r.attempt + 1 < MAX_ATTEMPTS:
                 backoff = min(2 ** (r.attempt + 1), 4)
                 frontier[r.url_canon] = SimRow(
                     r.url_canon, r.host, r.priority - 1, rnd,

@@ -17,8 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def fetch_from_table(scheduled: DataFrame, pages: DataFrame,
-                     broadcast_scheduled: bool = True) -> DataFrame:
+def fetch_from_table(scheduled: DataFrame, pages: DataFrame) -> DataFrame:
     """Synthetic fetch: scheduled batch → pages corpus lookup.
 
     The corpus is the big side (at 100 TB it IS the response cache, S6);
@@ -29,23 +28,9 @@ def fetch_from_table(scheduled: DataFrame, pages: DataFrame,
     at local[32]).  Misses are recovered with a key-only anti-join
     (column-pruned — bodies again never move) and surface as status 404
     (Scrapy's default non-200 handling).
-
-    ``broadcast_scheduled=False`` falls back to the plain shuffle join —
-    use when one round schedules more than fits in a broadcast (then the
-    corpus table should be bucketed by url_canon so only the batch side
-    shuffles).
     """
     sched_cols = ["url_canon", "url_hash", "host", "priority",
                   "callback_kind", "attempt"]
-    if not broadcast_scheduled:
-        joined = scheduled.join(pages, "url_canon", "left")
-        return joined.select(
-            *sched_cols,
-            F.coalesce(F.col("status"), F.lit(404)).alias("status"),
-            "content_type",
-            "body",
-            "latency_ms",
-        )
     hits = pages.join(F.broadcast(scheduled), "url_canon").select(
         *sched_cols, "status", "content_type", "body", "latency_ms"
     )

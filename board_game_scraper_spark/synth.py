@@ -323,13 +323,13 @@ def rank_history_body(gid: int, n_points: int = 12) -> str:
     return json.dumps({"data": data})
 
 
-def hotness_body(ts_label: str, n: int = 50) -> str:
+def hotness_body(ts_label: str) -> str:
     """Hotness XML (bgg_hotness.py:76-99 shape; 50 items contract)."""
     items = "".join(
         f'<item id="{1 + _h(f"hot:{ts_label}:{i}") % 5000}" rank="{i + 1}">'
         f'<name value="Hot Game {i + 1}"/>'
         f"<thumbnail value=\"https://cf.geekdo-images.com/t{i}.jpg\"/></item>"
-        for i in range(n)
+        for i in range(50)
     )
     return f'<?xml version="1.0"?><items>{items}</items>'
 
@@ -557,8 +557,8 @@ def dbpedia_game_body(g: int) -> str:
     )
 
 
-def dbpedia_corpus(game_type: str = "http://dbpedia.org/ontology/BoardGame",
-                   n_games: int = 12) -> pd.DataFrame:
+def dbpedia_corpus(n_games: int = 12) -> pd.DataFrame:
+    game_type = "http://dbpedia.org/ontology/BoardGame"
     pages = []
 
     def add(url, body):
@@ -765,8 +765,7 @@ def corpus(
     return pd.DataFrame(seeds), pages_df
 
 
-def extended_corpus(n_entities: int = 20, n_rank_histories: int = 10,
-                    n_games: int = 300) -> pd.DataFrame:
+def extended_corpus(n_entities: int = 20) -> pd.DataFrame:
     """Extra page types (wikidata SPARQL + EntityData, rank history) —
     kept out of the default corpus so the crawl-equality tests' simulator
     stays minimal; parser/crawl tests opt in."""
@@ -784,22 +783,20 @@ def extended_corpus(n_entities: int = 20, n_rank_histories: int = 10,
     for i in range(n_entities):
         qid = 100 + 100 + i  # page-1 ids
         add(wikidata_entity_url(qid), "application/json",
-            wikidata_entity_body(qid, n_games))
-    for g in range(1, n_rank_histories + 1):
+            wikidata_entity_body(qid, 300))
+    for g in range(1, 11):
         add(rank_history_url(g), "application/json", rank_history_body(g))
     return pd.DataFrame(pages)
 
 
-def rankings_corpus(dates=("20100215000000", "20100315000000",
-                           "20100415000000"),
-                    per_page: int = 10,
-                    geeklist_id: int = 30543,
-                    geeklist_pages: int = 3,
-                    geeklist_items: int = 8) -> pd.DataFrame:
+def rankings_corpus() -> pd.DataFrame:
     """Pages for the bgg_rankings + bgg_geeklist spiders: a chain of
     archived /browse/boardgame snapshots linked by wayback-toolbar nav
     (bgg_rankings.py:345-354), the three legacy layouts, and a paginated
     geeklist with child lists (bgg_geeklist.py:76-84)."""
+    dates = ("20100215000000", "20100315000000", "20100415000000")
+    per_page = 10
+    geeklist_id, geeklist_pages, geeklist_items = 30543, 3, 8
     pages = []
 
     def add(url, ctype, body):

@@ -13,8 +13,8 @@ network), so this module emulates the Iceberg commit protocol:
   pointer; readers only ever see a fully-committed snapshot
 - resume = read CURRENT; an interrupted commit leaves CURRENT untouched,
   so re-running the round is idempotent (deterministic inputs).
-- **merge-on-read deltas** (Iceberg v2 equality deletes): a
-  ``delta_commit`` appends new data files AND "delete files" — parquet of
+- **merge-on-read deltas** (Iceberg v2 equality deletes): a delta
+  commit appends new data files AND "delete files" — parquet of
   key tuples whose matching rows are excluded at read time via a
   ``left_anti`` join.  A 10^10-row frontier thus commits O(scheduled +
   discovered) bytes per crawl round instead of rewriting the whole table
@@ -264,9 +264,8 @@ class SnapshotTable:
 
     def overwrite(self, df: DataFrame, lineage: dict | None = None,
                   metrics: dict | None = None,
-                  partition_by: list[str] | None = None,
                   coalesce: int | None = None) -> dict:
-        rel = self._write_data(df, partition_by, coalesce)
+        rel = self._write_data(df, None, coalesce)
         return self._commit([rel], "overwrite", lineage, metrics)
 
     def prepare_delta(self, appends: DataFrame | None = None,
@@ -277,32 +276,23 @@ class SnapshotTable:
         round overlap the frontier delta's writes with the other table
         commits while the manifest flip — the resume marker — still
         happens strictly last (the files are invisible orphans until
-        then).  Two prepared dicts merge by concatenating their lists."""
+        then).  Two prepared dicts merge by concatenating their lists.
+
+        A delta is appended rows + equality-deleted keys (Iceberg v2
+        merge-on-read): ``deletes`` holds exactly the commit's
+        ``delete_keys`` columns, and at read time any row matching a
+        delete tuple is dropped.  IO cost is O(|appends| + |deletes|),
+        never O(table) — the point of the design at 10^10 frontier
+        rows."""
         files: list[str] = []
         dfiles: list[str] = []
-
-        def _write_deletes() -> None:
+        if deletes is not None:
             rel = f"data/del-{uuid.uuid4().hex}"
             # repartition, not coalesce — see _write_data
             d = deletes.repartition(coalesce) if coalesce else deletes
             d.write.mode("overwrite").parquet(str(self.path / rel))
             dfiles.append(rel)
-
-        if deletes is not None and appends is not None:
-            # Both sides are independent small writes; run them as
-            # concurrent Spark jobs (each ~0.5-1 s of mostly driver/commit
-            # latency — serializing them doubles the frontier-delta floor
-            # in every crawl round).
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fd = pool.submit(_write_deletes)
-                fa = pool.submit(self._write_data, appends, None, coalesce)
-                fd.result()
-                files.append(fa.result())
-        elif deletes is not None:
-            _write_deletes()
-        elif appends is not None:
+        if appends is not None:
             files.append(self._write_data(appends, None, coalesce))
         return {"files": files, "dfiles": dfiles}
 
@@ -323,21 +313,6 @@ class SnapshotTable:
         behind — neither in the file list nor on disk."""
         for rel in prepared["files"] + prepared["dfiles"]:
             shutil.rmtree(self.path / rel, ignore_errors=True)
-
-    def delta_commit(self, appends: DataFrame | None = None,
-                     deletes: DataFrame | None = None,
-                     delete_keys: list[str] | None = None,
-                     lineage: dict | None = None,
-                     metrics: dict | None = None,
-                     coalesce: int | None = None) -> dict:
-        """One atomic commit of appended rows + equality-deleted keys
-        (Iceberg v2 merge-on-read).  ``deletes`` holds exactly the
-        ``delete_keys`` columns; at read time any row matching a delete
-        tuple is dropped.  IO cost is O(|appends| + |deletes|), never
-        O(table) — the point of the design at 10^10 frontier rows."""
-        prepared = self.prepare_delta(appends, deletes, coalesce)
-        return self.commit_prepared_delta(prepared, delete_keys=delete_keys,
-                                          lineage=lineage, metrics=metrics)
 
     def compact_minor(self, keep_largest: int = 1, min_files: int = 8,
                       lineage: dict | None = None,
@@ -390,7 +365,6 @@ class SnapshotTable:
             return None
 
     def compact(self, lineage: dict | None = None,
-                metrics: dict | None = None,
                 coalesce: int | None = None,
                 count_metric: str | None = None) -> dict:
         """Fold pending equality deletes + small files into one data dir
@@ -405,7 +379,7 @@ class SnapshotTable:
         corpus key making one delete tuple match several rows) can never
         persist past one cadence (ADVICE r05 #1)."""
         df = self.read()
-        obs = None
+        obs = metrics = None
         if count_metric is not None:
             from pyspark.sql import Observation
             from pyspark.sql import functions as F
@@ -414,8 +388,7 @@ class SnapshotTable:
             df = df.observe(obs, F.count(F.lit(1)).alias("n"))
         rel = self._write_data(df, None, coalesce)
         if obs is not None:
-            metrics = {**(metrics or {}),
-                       count_metric: int(obs.get["n"] or 0)}
+            metrics = {count_metric: int(obs.get["n"] or 0)}
         return self._commit([rel], "overwrite", lineage, metrics)
 
     def pending_delete_files(self) -> int:

@@ -17,7 +17,6 @@ from board_game_scraper_spark.functions.canon import (
 )
 from board_game_scraper_spark.functions.text import (
     clean_text_one,
-    clear_list,
     normalize_space,
     replace_all_entities,
 )
@@ -105,13 +104,6 @@ def test_clean_text_chain():
 
 def test_normalize_space():
     assert normalize_space(" a  b\n c ") == "a b c"
-
-
-def test_clear_list():
-    # pytility clear_list semantics: order-preserving dedupe, drop falsey
-    assert clear_list(["b", "a", "b", "", None, "a"]) == ["b", "a"]
-    assert clear_list([]) is None
-    assert clear_list(None) is None
 
 
 def test_canonicalize_udf_vectorized(spark):

@@ -1,11 +1,9 @@
-"""The content queries — thin calls into operators/dedup.py, textstats.py
-and similarity.py — match their DuckDB oracle SQL hash-exactly on the
-in-repo sf0.01 dataset (the same row-count / column / value-hash
-comparison as tools/check_oracle.py); and ``queries._par`` scan spreading
-leaves query results unchanged."""
+"""Every query in ``queries.QUERIES`` matches its DuckDB oracle SQL
+hash-exactly on the in-repo sf0.01 dataset (the same row-count / column /
+value-hash comparison as tools/check_oracle.py); and ``queries._par``
+scan spreading leaves query results unchanged."""
 
 import importlib.util
-import os
 from pathlib import Path
 
 import pytest
@@ -22,14 +20,6 @@ _spec = importlib.util.spec_from_file_location(
 check_oracle = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(check_oracle)
 
-CONTENT_QUERIES = (
-    "dedup_exact", "quality_score", "minhash_band", "cosine_topk",
-    "simhash", "minhash_lsh_bands", "near_dup_pairs", "embedding_near_dup",
-    "fingerprint", "language_id", "bpe_token_count", "quality_full",
-    "array_except_stopwords",
-)
-
-
 @pytest.fixture(scope="module")
 def con():
     c = duckdb.connect()
@@ -40,7 +30,7 @@ def con():
     c.close()
 
 
-@pytest.mark.parametrize("name", CONTENT_QUERIES)
+@pytest.mark.parametrize("name", list(QUERIES))
 def test_content_query_matches_duckdb_oracle(spark, con, name):
     got = check_oracle.normalize(QUERIES[name](spark, str(DATA)).toPandas())
     want = check_oracle.normalize(con.execute(ORACLES[name]).fetchdf())
@@ -57,9 +47,7 @@ def test_par_spreads_unsplittable_scan_and_keeps_results(spark, monkeypatch):
     the input already has enough partitions (no shuffle added at scale)."""
     import board_game_scraper_spark.queries as q
 
-    sf = "/root/testdata/sf0.001"
-    if not os.path.isdir(sf):
-        pytest.skip(f"needs the {sf} single-row-group dataset")
+    sf = str(DATA)  # every table is a single row group
     docs = q._t(spark, sf, "documents")
     n = spark.sparkContext.defaultParallelism
     assert docs.rdd.getNumPartitions() < n  # the premise: unsplittable

@@ -1,6 +1,6 @@
 """Extended extractors: polls (E6/E7), add_rank (E9), wikidata (E3),
 SPARQL (E5/S8), rank history (E16), hotness pages (E14),
-autothrottle (F4), image ops (C11/C12)."""
+autothrottle (F4), label resolution (C13)."""
 
 import statistics
 import xml.etree.ElementTree as ET
@@ -169,33 +169,6 @@ def test_update_host_state(spark):
     assert lud["backoff_until_round"] == 0
 
 
-def test_limit_and_commons_cols(spark):
-    from board_game_scraper_spark.functions.text import (
-        commons_image_urls_col,
-        limit_images_col,
-    )
-
-    df = spark.createDataFrame(
-        [(["http://dbpedia.org/resource/File:A b.jpg",
-           "https://example.com/x.png",
-           "https://www.wikidata.org/wiki/Special:EntityData/Q1.png"],)],
-        "urls array<string>",
-    )
-    got = df.select(
-        limit_images_col(F.col("urls"), 2).alias("two"),
-        limit_images_col(F.col("urls"), 0).alias("none"),
-        limit_images_col(F.col("urls"), -1).alias("all"),
-        commons_image_urls_col(F.col("urls")).alias("resolved"),
-    ).collect()[0]
-    assert len(got["two"]) == 2 and got["none"] is None
-    assert len(got["all"]) == 3
-    assert got["resolved"][0] == (
-        "https://commons.wikimedia.org/wiki/Special:Redirect/file/A_b.jpg")
-    assert got["resolved"][1] == "https://example.com/x.png"
-    assert got["resolved"][2] == (
-        "https://commons.wikimedia.org/wiki/Special:Redirect/file/Q1.png")
-
-
 def test_extended_crawl_wikidata(spark, tmp_path):
     """SPARQL seed → entity discovery → parsed wikidata games (2 rounds)."""
     from board_game_scraper_spark import schemas
@@ -216,23 +189,22 @@ def test_extended_crawl_wikidata(spark, tmp_path):
 
 
 def test_labels_dim_and_resolve(spark, tmp_path):
-    """C13 (pipelines.py:61-143): crawl wikidata entity pages, build the
-    labels dim, resolve designer Q-ids on wikidata-sourced game items."""
+    """C13 (pipelines.py:61-143): resolve designer Q-ids on
+    wikidata-sourced game items against a labels dim."""
     from board_game_scraper_spark import schemas
-    from board_game_scraper_spark.operators.labels import (
-        build_labels_dim,
-        resolve_labels,
-    )
+    from board_game_scraper_spark.operators.labels import resolve_labels
 
-    # entity pages: Q201..Q220 (extended_corpus page-1 ids)
+    # entity pages: Q201..Q208 (extended_corpus page-1 ids); their
+    # labels (en first, then de) as a dim
     pages = spark.createDataFrame(
         synth.extended_corpus(n_entities=8), schemas.PAGES
     )
     ent_pages = pages.where(F.col("url_canon").contains("EntityData"))
-    dim = build_labels_dim(ent_pages)
-    rows = {r["qid"]: r["labels"] for r in dim.collect()}
-    # synth labels: en + de, en first per RESOLVE_LABEL_LANGUAGE_PRIORITIES
-    assert rows["Q201"] == ["WD Game 201", "WD Spiel 201"]
+    dim = spark.createDataFrame(
+        [(f"Q{q}", [f"WD Game {q}", f"WD Spiel {q}"])
+         for q in range(201, 209)],
+        "qid string, labels array<string>",
+    )
 
     # wikidata-parsed games carry designer Q-ids (P287, parse.py):
     parsed = [

@@ -10,7 +10,11 @@ nothing runs; delete it with its tests instead of keeping it alive.
 
 The same holds for ``CrawlEngine`` options: each one is passed by keyword
 by at least one caller, in code or in a test, or it is a path nothing
-selects.
+selects.  Package-wide, every defaulted parameter is passed by some call,
+and every public function (plus the public methods of ``SnapshotTable``
+and ``SnapshotBloom``) is referenced outside ``tests/``; ``synth.py`` is
+exempt from the second rule as the corpus generator tests and
+``perfbench/`` share.
 """
 
 import ast
@@ -94,3 +98,73 @@ def test_crawl_engine_options_have_callers():
             if name in ("CrawlEngine", "make_engine"):
                 passed.update(k.arg for k in node.keywords if k.arg)
     assert [o for o in options if o not in passed] == []
+
+
+def _defs():
+    """(path, class name or None, def) for every module-level function and
+    class method of the package."""
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef):
+                yield path, None, node
+            elif isinstance(node, ast.ClassDef):
+                for f in node.body:
+                    if isinstance(f, ast.FunctionDef):
+                        yield path, node.name, f
+
+
+def _passes(call: ast.Call, pos: int | None, arg: str) -> bool:
+    """Whether ``call`` passes parameter ``arg`` (positional index ``pos``,
+    None when keyword-only); ``*args``/``**kwargs`` pass everything."""
+    return (any(isinstance(a, ast.Starred) for a in call.args)
+            or any(k.arg in (None, arg) for k in call.keywords)
+            or (pos is not None and pos < len(call.args)))
+
+
+def test_package_parameters_have_callers():
+    calls = {}
+    for path in [*PKG.rglob("*.py"), *ENTRY_POINTS,
+                 *sorted((ROOT / "tests").glob("*.py"))]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "attr",
+                               getattr(node.func, "id", None))
+                calls.setdefault(name, []).append(node)
+    unpassed = []
+    for path, cls, f in _defs():
+        a = f.args
+        positional = a.posonlyargs + a.args
+        # a bound method's call sites do not pass self/cls
+        bound = int(cls is not None and not any(
+            getattr(d, "id", None) == "staticmethod"
+            for d in f.decorator_list))
+        first = len(positional) - len(a.defaults)
+        defaulted = [(i - bound, p.arg) for i, p in enumerate(positional)
+                     if i >= first]
+        defaulted += [(None, p.arg) for p, d in zip(a.kwonlyargs,
+                                                    a.kw_defaults)
+                      if d is not None]
+        name = cls if f.name == "__init__" else f.name
+        unpassed += [
+            f"{path.relative_to(ROOT)}:{f.lineno} {f.name}({arg})"
+            for pos, arg in defaulted
+            if not any(_passes(c, pos, arg) for c in calls.get(name, []))]
+    assert unpassed == []
+
+
+def test_public_functions_have_non_test_callers():
+    referenced = set()
+    for path in [*PKG.rglob("*.py"), *ENTRY_POINTS]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                referenced.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                referenced.add(node.attr)
+            elif isinstance(node, ast.alias):
+                referenced.add(node.name)
+    unreferenced = [
+        f"{path.relative_to(ROOT)} {f.name}" for path, cls, f in _defs()
+        if path.name != "synth.py" and not f.name.startswith("_")
+        and cls in (None, "SnapshotTable", "SnapshotBloom")
+        and f.name not in referenced]
+    assert unreferenced == []

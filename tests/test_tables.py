@@ -178,8 +178,8 @@ def test_compact_minor_preserves_metrics_and_respects_deletes(
             metrics={"pending": i},
         )
     # pending equality deletes force the full compact path
-    t.delta_commit(
-        deletes=spark.createDataFrame([(0,)], "k long"),
+    t.commit_prepared_delta(
+        t.prepare_delta(deletes=spark.createDataFrame([(0,)], "k long")),
         delete_keys=["k"],
     )
     man = t.compact_minor(min_files=2, coalesce=1)
@@ -190,13 +190,15 @@ def test_compact_minor_preserves_metrics_and_respects_deletes(
 
 def test_delta_commit_applies_deletes_on_read(spark, tmp_path):
     t = SnapshotTable(spark, tmp_path / "t", FLAT)
-    man = t.delta_commit(
+    man = t.commit_prepared_delta(t.prepare_delta(
         appends=spark.createDataFrame([(1, "a"), (2, "b")], FLAT)
         .repartition(1),
-    )
-    t.delta_commit(
-        appends=spark.createDataFrame([(3, "c")], FLAT).repartition(1),
-        deletes=spark.createDataFrame([(1,)], "k long"),
+    ))
+    t.commit_prepared_delta(
+        t.prepare_delta(
+            appends=spark.createDataFrame([(3, "c")], FLAT).repartition(1),
+            deletes=spark.createDataFrame([(1,)], "k long"),
+        ),
         delete_keys=["k"],
     )
     assert {r["k"] for r in t.read().collect()} == {2, 3}

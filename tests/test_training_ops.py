@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from board_game_scraper_spark.operators.dedup import (
-    dedup_keep_first,
     exact_dedup,
     minhash_signatures,
     near_dup_pairs,
@@ -60,13 +59,6 @@ def test_minhash_near_dup_pairs(docs):
     assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
     assert all(a < b for a, b in pairs)
     assert (1, 5) not in pairs and (4, 5) not in pairs
-
-
-def test_dedup_keep_first(docs):
-    kept = {r["id"] for r in
-            dedup_keep_first(docs, "id", "text", threshold=0.9).collect()}
-    assert 1 in kept and 2 not in kept  # exact dup of 1 removed
-    assert 4 in kept and 5 in kept
 
 
 @pytest.fixture(scope="module")
@@ -218,23 +210,14 @@ def test_fingerprint_stability(docs):
 
 
 def test_media_feature_plumbing(spark):
-    from board_game_scraper_spark.functions.media import (
-        extract_features,
-        media_from_documents,
-    )
-    from board_game_scraper_spark import schemas
+    from board_game_scraper_spark.functions.media import extract_features
 
-    docs = spark.createDataFrame(
-        [("d1", [{"kind": "text", "text": "t", "media_ref": None,
-                  "offset": 0},
-                 {"kind": "image", "text": None,
-                  "media_ref": "img://1", "offset": 1}])],
-        schemas.DOCUMENTS,
+    media = spark.createDataFrame(
+        [("d1", "img://1", "image", None)],
+        "doc_id string, media_ref string, kind string, payload binary",
     )
-    media = media_from_documents(docs)
-    rows = media.collect()
-    assert len(rows) == 1 and rows[0]["media_ref"] == "img://1"
     feats = extract_features(media, dim=8).collect()
+    assert len(feats) == 1 and feats[0]["media_ref"] == "img://1"
     assert feats[0]["feat_dim"] == 8
     # deterministic fake decoder → stable features
     feats2 = extract_features(media, dim=8).collect()

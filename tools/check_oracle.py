@@ -5,6 +5,8 @@ DuckDB at the given sf dir, compares row count, sorted-column schema, and
 an order-insensitive value hash.  Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
+
+``sf_dir`` defaults to the in-repo ``perfbench/data/sf0.01``.
 """
 
 from __future__ import annotations
@@ -16,7 +18,8 @@ from pathlib import Path
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from board_game_scraper_spark.session import get_spark  # noqa: E402
@@ -52,7 +55,8 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = (sys.argv[1] if len(sys.argv) > 1
+              else str(ROOT / "perfbench" / "data" / "sf0.01"))
     only = set(sys.argv[2:])
 
     spark = get_spark("oracle-check")

@@ -6,6 +6,8 @@ ReadSchema), WholeStageCodegen spans exist, broadcast joins are chosen
 for dim tables, and no query's plan contains a CartesianProduct.
 
 Usage: python tools/check_plans.py [sf_dir]
+
+``sf_dir`` defaults to the in-repo ``perfbench/data/sf0.01``.
 """
 
 from __future__ import annotations
@@ -15,7 +17,8 @@ import sys
 from contextlib import redirect_stdout
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from board_game_scraper_spark import queries as q  # noqa: E402
 from board_game_scraper_spark.session import get_spark  # noqa: E402
@@ -64,7 +67,8 @@ NESTED_LOOP_ALLOWED = {"cosine_topk", "ann_ivf_topk", "media_features"}
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = (sys.argv[1] if len(sys.argv) > 1
+              else str(ROOT / "perfbench" / "data" / "sf0.01"))
     spark = get_spark("plan-check")
     failures = []
     for name, fn in q.QUERIES.items():
