@@ -224,11 +224,7 @@ class CrawlEngine:
         # scratch parquet and rewriting it) are gone, along with their
         # manifest commits (VERDICT r02 "next round" #1b).  Per-kind
         # access is a partition-pruned view.
-        # hive_dirs: the fused parse write lands partitionBy(item_kind)
-        # dirs, which need per-dir reads (every other table gets the
-        # O(1)-depth multi-path scan — ADVICE r03 #1).
-        self.items = SnapshotTable(spark, self.root / "items",
-                                   schemas.PARSE_FLAT, hive_dirs=True)
+        self.items = t("items", schemas.PARSE_FLAT)
         self.documents = _KindView(
             self.items, "page",
             lambda df: df.select(
@@ -237,8 +233,6 @@ class CrawlEngine:
         )
         self.games = _KindView(self.items, "game",
                                lambda df: df.select("game.*"))
-        self.users = _KindView(self.items, "user",
-                               lambda df: df.select("user.*"))
         self.ratings = _KindView(self.items, "rating",
                                  lambda df: df.select("rating.*"))
         self.metrics = t("metrics", schemas.METRICS)
@@ -267,7 +261,7 @@ class CrawlEngine:
         # broadcast build and the main job materialize the same cached
         # partitions on different executors (see the counts note in
         # _fused_stage).  None = not yet known (resume); frontier_rows()
-        # recovers it from the newest manifest carrying the metric.
+        # reads it from the current manifest.
         self._frontier_rows: int | None = None
         # Exact in-memory frontier for provable retry-only tails — set
         # at the end of a round whose commit left ONLY that round's
@@ -300,17 +294,13 @@ class CrawlEngine:
 
     def frontier_rows(self) -> int:
         """Exact current frontier row count — manifest arithmetic, no
-        Spark job.  Resume takes it from the newest frontier snapshot
-        whose metrics carry ``frontier_rows``; a table written by older
-        code falls back to ONE exact count()."""
+        Spark job.  Every frontier commit (seed, insert, round flip,
+        compact) carries it as a metric, so resume reads it from the
+        current snapshot (0 before the first commit)."""
         if self._frontier_rows is None:
-            self._frontier_rows = next(
-                (int(snap["metrics"]["frontier_rows"])
-                 for snap in self.frontier.history()
-                 if "frontier_rows" in (snap.get("metrics") or {})),
-                None)
-        if self._frontier_rows is None:
-            self._frontier_rows = int(self.frontier.read().count())
+            snap = self.frontier.current_snapshot()
+            self._frontier_rows = int(
+                snap["metrics"]["frontier_rows"] if snap else 0)
         return self._frontier_rows
 
     def seed(self, seeds: DataFrame) -> int:
@@ -499,11 +489,7 @@ class CrawlEngine:
         # AFTER this read land in new files and survive the ack below
         # (an external producer may enqueue mid-round — ADVICE r03 #3).
         consumed_files = list(snap["files"])
-        batch = self.spark.read.schema(schemas.SEED_REQUESTS).parquet(
-            *[str(self.seed_requests.path / rel) for rel in consumed_files]
-        ) if consumed_files else self.spark.createDataFrame(
-            [], schemas.SEED_REQUESTS
-        )
+        batch = self.seed_requests.read_files(consumed_files)
         n = self._insert_rows(
             _canonical_frontier_rows(batch, round_no, round_no),
             lineage={"stage": "seed_requests", "at_round": round_no})
@@ -808,8 +794,7 @@ class CrawlEngine:
             ).orderBy("host", "sched_rank").collect():
                 log.setdefault(row["host"], []).append(row["url_canon"])
             self.schedule_log[round_no] = log
-        flat = self.spark.read.schema(schemas.PARSE_FLAT).parquet(
-            str(fused["scratch"]))
+        flat = self.items.read_files([fused["items_rel"]])
         # fetch-outcome rows: the retry / metrics / host-state source (a
         # scratch read — the fetch join never re-executes)
         fetch_rows = flat.where(F.col("item_kind") == "fetch").select(
@@ -1003,14 +988,13 @@ class CrawlEngine:
             # Retries prepare, gated on the parse-observed retryable
             # count (ADVICE r05 #3: a zero-retry round used to commit an
             # empty delta dir).
-            n_retry_hint = counts.get("retryable")
             fut_ret = (
                 pool.submit(
                     lambda: self.frontier.prepare_delta(
                         appends=retries, coalesce=WRITE_COALESCE,
                     )
                 )
-                if (n_retry_hint is None or int(n_retry_hint))
+                if int(counts["retryable"])
                 else None
             )
             fut_fresh = (
@@ -1034,10 +1018,7 @@ class CrawlEngine:
             def _seen_write():
                 # Projection of the fresh delta file just written —
                 # re-read (a few small parquet files), never recomputed.
-                sd = self.spark.read.schema(schemas.FRONTIER).parquet(
-                    *[str(self.frontier.path / rel)
-                      for rel in prep_f["files"]]
-                ).select(
+                sd = self.frontier.read_files(prep_f["files"]).select(
                     "url_hash", "url_canon",
                     F.lit(round_no + 1).alias("first_round"),
                 )
@@ -1078,12 +1059,12 @@ class CrawlEngine:
                 self._launch_speculation(
                     max(int(retry_stats["min_nb"]), round_no + 1),
                     retry_expr, hint=n_retries)
-            # An empty delta is removed, never committed: its dirs were
-            # never referenced by any manifest, and quiet rounds add
-            # nothing to the read fan-in (ADVICE r05 #3).
-            if n_retries == 0:
-                self.frontier.discard_prepared(prep_ret)
-                prep_ret = empty
+            # An empty fresh delta is removed, never committed: its dirs
+            # were never referenced by any manifest, and quiet rounds add
+            # nothing to the read fan-in (ADVICE r05 #3).  The retries
+            # delta is never empty: it is prepared only when the parse
+            # observed a retryable row, and ``retryable`` mirrors
+            # retry_rows' filter.
             if n_fresh == 0:
                 self.frontier.discard_prepared(prep_f)
                 prep_f = empty

@@ -97,12 +97,14 @@ def get_spark(
                     os.environ["MALLOC_ARENA_MAX"])
     # Local mode runs everything in the driver JVM: the 1g default heap
     # collapses under 32 concurrent tasks (GC-bound, 32 cores slower
-    # than 8).  Reference uses 16G (merge.py:38-48).  The 24g default is
-    # a ceiling, not a reservation: on a 4 vCPU / 15 GB box the crawl
-    # benchmark peaks at 4.7 GB RSS; SPARK_GRAFT_DRIVER_MEM lowers it.
+    # than 8).  Reference uses 16G (merge.py:38-48).  The heap is half
+    # of physical RAM, a ceiling that leaves the other half to the
+    # Python workers and the page cache (7g on a 4 vCPU / 15 GB box,
+    # where the crawl benchmark peaks at 4.7 GB RSS).
     if master.startswith("local["):
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
         conf.setdefault("spark.driver.memory",
-                        os.getenv("SPARK_GRAFT_DRIVER_MEM", "24g"))
+                        f"{max((ram // 2) >> 30, 1)}g")
         # G1 (the JDK17 default) collapses under 32 concurrent tasks
         # allocating large strings + nested rows in one big heap:
         # measured 64-73s for the fused fetch→parse→write stage at

@@ -287,6 +287,30 @@ def test_quiet_rounds_commit_no_empty_frontier_dirs(spark, tmp_path):
         assert n > 0, f"empty delta dir committed: {rel}"
 
 
+def test_committed_layout_reads_without_spark(spark, tmp_path):
+    """The on-disk layout readers outside Spark rely on (perfbench's
+    output checks read it with pyarrow): every items dir a round adds
+    has an ``item_kind=fetch`` leaf, and the url_seen dirs the manifest
+    lists hold exactly the seen set."""
+    import pyarrow.parquet as pq
+
+    _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
+    eng = make_engine(spark, pages_pd, tmp_path / "lay")
+    seed_one(spark, eng)
+    eng.crawl(2)
+    added = [rel for snap in eng.items.snapshots()
+             for rel in snap["added"]]
+    assert len(added) == 2
+    for rel in added:
+        fetch = pq.read_table(eng.items.path / rel / "item_kind=fetch")
+        assert fetch.num_rows > 0
+    seen = set()
+    for rel in eng.seen.current_snapshot()["files"]:
+        seen.update(pq.read_table(eng.seen.path / rel, columns=["url_canon"])
+                    .column("url_canon").to_pylist())
+    assert seen == {r["url_canon"] for r in eng.seen.read().collect()}
+
+
 def test_frontier_rows_manifest_arithmetic_and_resume(spark, tmp_path):
     """Driving counts must be execution-count-independent: the frontier
     row count is maintained by manifest arithmetic (seed n, then

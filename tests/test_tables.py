@@ -1,6 +1,7 @@
-"""SnapshotTable: hive-partitioned reads at O(#kinds) plan depth and
-without filesystem walks, minor (bin-pack) compaction, merge-on-read
-deletes and optimistic (CAS) manifest commits."""
+"""SnapshotTable: one pinned-schema scan over any number of committed
+``snap=`` dirs (partitioned or not, no Spark job to build it, no
+filesystem walk), minor (bin-pack) compaction, merge-on-read deletes and
+optimistic (CAS) manifest commits."""
 
 import os
 
@@ -30,19 +31,42 @@ NESTED = StructType([
 ])
 
 
+def _add_partitioned(t, rows, *cols):
+    """Commit ``rows`` the way the crawl engine commits ``items``: a
+    caller-side ``partitionBy`` write into ``new_data_dir`` +
+    ``add_files``."""
+    rel, root = t.new_data_dir()
+    (t.spark.createDataFrame(rows, t.schema).repartition(1)
+     .write.partitionBy(*cols).parquet(str(root)))
+    t.add_files(rel)
+
+
+def _kinded_rows(i, n):
+    return [(i * 10 + j, "page" if j % 2 == 0 else "game")
+            for j in range(n)]
+
+
+def _jobs_to_build(spark, group, build):
+    """Spark jobs run while ``build()`` constructs (not collects) a
+    DataFrame, counted under the job group ``group``; and the frame."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "build a read")
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+
 def test_hive_read_plan_depth_constant_in_commit_count(spark, tmp_path):
     """The items-table read path must not grow a union per commit: after
-    N add_files commits of hive-partitioned dirs, plan depth is bounded
-    by the partition-value cardinality (VERDICT r04 'wrong' #1)."""
-    t = SnapshotTable(spark, tmp_path / "t", KINDED, hive_dirs=True)
+    N add_files commits of hive-partitioned dirs the read is ONE file
+    scan (VERDICT r04 'wrong' #1)."""
+    t = SnapshotTable(spark, tmp_path / "t", KINDED)
     plans = []
     for i in range(8):
-        df = spark.createDataFrame(
-            [(i * 10 + j, "page" if j % 2 == 0 else "game")
-             for j in range(10)],
-            KINDED,
-        ).repartition(1)
-        t.append(df, partition_by=["item_kind"])
+        _add_partitioned(t, _kinded_rows(i, 10), "item_kind")
         plans.append(
             t.read()._jdf.queryExecution().executedPlan().toString()
         )
@@ -50,37 +74,25 @@ def test_hive_read_plan_depth_constant_in_commit_count(spark, tmp_path):
     rows = {r["k"]: r["item_kind"] for r in t.read().collect()}
     assert len(rows) == 80
     assert rows[0] == "page" and rows[1] == "game" and rows[75] == "game"
-    # plan depth constant: the 8-commit plan is no deeper than the
-    # 2-commit plan (both are one scan per kind + one union)
+    # plan depth constant: the 8-commit plan is one scan, no union, and
+    # no deeper than the 2-commit plan
+    assert plans[-1].count("FileScan") == 1 and "Union" not in plans[-1]
     assert plans[-1].count("Union") == plans[1].count("Union")
     assert len(plans[-1].splitlines()) == len(plans[1].splitlines())
-
-
-def test_hive_read_single_dir_and_flat_fallback(spark, tmp_path):
-    t = SnapshotTable(spark, tmp_path / "t", KINDED, hive_dirs=True)
-    df = spark.createDataFrame([(1, "page"), (2, "game")], KINDED)
-    t.append(df.repartition(1), partition_by=["item_kind"])
-    # a commit written WITHOUT partitionBy must still be readable
-    t.append(
-        spark.createDataFrame([(3, "user")], KINDED).repartition(1)
-    )
-    got = {r["k"]: r["item_kind"] for r in t.read().collect()}
-    assert got == {1: "page", 2: "game", 3: "user"}
+    # a filter on the partition column prunes at the scan
+    pruned = (t.read().where("item_kind = 'game'")._jdf.queryExecution()
+              .executedPlan().toString())
+    assert "PartitionFilters: [isnotnull(item_kind" in pruned
 
 
 def test_hive_read_does_no_listdir(spark, tmp_path, monkeypatch):
-    """The leaf-partition map is recorded in the manifest at commit time
-    (one listdir per commit); the READ path must never walk the
-    filesystem — at 10^4 commits the old path ran 10^4 driver listdirs
-    per read (VERDICT r05 'wrong' #3)."""
-    t = SnapshotTable(spark, tmp_path / "t", KINDED, hive_dirs=True)
+    """Reads take the committed dirs from the manifest and hand them to
+    one scan; the READ path never walks the table in Python — at 10^4
+    commits a per-read walk was 10^4 driver listdirs (VERDICT r05
+    'wrong' #3)."""
+    t = SnapshotTable(spark, tmp_path / "t", KINDED)
     for i in range(12):
-        df = spark.createDataFrame(
-            [(i * 10 + j, "page" if j % 2 == 0 else "game")
-             for j in range(10)],
-            KINDED,
-        ).repartition(1)
-        t.append(df, partition_by=["item_kind"])
+        _add_partitioned(t, _kinded_rows(i, 10), "item_kind")
 
     calls = []
     real_listdir = os.listdir
@@ -98,47 +110,43 @@ def test_hive_read_does_no_listdir(spark, tmp_path, monkeypatch):
     assert rows[0] == "page" and rows[1] == "game"
 
 
-def test_hive_read_listdir_fallback_for_old_manifests(spark, tmp_path):
-    """A manifest written by older code (no file_parts) still reads
-    correctly — per-rel listdir fallback."""
-    t = SnapshotTable(spark, tmp_path / "t", KINDED, hive_dirs=True)
-    for i in range(3):
-        df = spark.createDataFrame(
-            [(i * 10 + j, "page" if j % 2 == 0 else "game")
-             for j in range(4)],
-            KINDED,
-        ).repartition(1)
-        t.append(df, partition_by=["item_kind"])
-    # simulate an old manifest: strip the leaf map
-    import json
-
-    snap = t.current_snapshot()
-    mpath = t.path / "snapshots" / snap["name"]
-    snap.pop("file_parts", None)
-    mpath.write_text(json.dumps(snap))
-    assert t.read().count() == 12
-
-
 def test_nested_hive_partitioning_reads_standalone(spark, tmp_path):
-    """Nested partitionBy (two hive levels) must not go through the
-    leaf-merging path (it would misattribute the inner keys) — such
-    dirs are read standalone as their own partition roots (ADVICE r05
-    #5)."""
-    t = SnapshotTable(spark, tmp_path / "t", NESTED, hive_dirs=True)
+    """Nested partitionBy (two hive levels below ``snap=``) reads with
+    every inner key attributed to its own rows (ADVICE r05 #5)."""
+    t = SnapshotTable(spark, tmp_path / "t", NESTED)
     for i in range(2):
-        df = spark.createDataFrame(
-            [(i * 10 + j, "page" if j % 2 == 0 else "game",
-              "a" if j < 2 else "b") for j in range(4)],
-            NESTED,
-        ).repartition(1)
-        t.append(df, partition_by=["item_kind", "sub"])
+        _add_partitioned(
+            t, [(i * 10 + j, "page" if j % 2 == 0 else "game",
+                 "a" if j < 2 else "b") for j in range(4)],
+            "item_kind", "sub")
     rows = {(r["k"]): (r["item_kind"], r["sub"])
             for r in t.read().collect()}
     assert len(rows) == 8
     assert rows[0] == ("page", "a") and rows[3] == ("game", "b")
-    # the manifest marks these dirs as nested (null leaf list)
-    parts = t.current_snapshot()["file_parts"]
-    assert all(v is None for v in parts.values())
+
+
+def test_reads_build_without_spark_jobs(spark, tmp_path):
+    """Building ``read()`` runs no Spark job: the data and the
+    equality-delete scans are both schema-pinned, however the table is
+    laid out."""
+    flat = SnapshotTable(spark, tmp_path / "flat", FLAT)
+    flat.append(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], FLAT)
+                .repartition(1))
+    flat.commit_prepared_delta(
+        flat.prepare_delta(deletes=spark.createDataFrame([(2,)], "k long")),
+        delete_keys=["k"],
+    )
+    jobs, df = _jobs_to_build(spark, "read-flat", flat.read)
+    assert jobs == 0
+    assert sorted(r["k"] for r in df.collect()) == [1, 3]
+
+    kinded = SnapshotTable(spark, tmp_path / "kinded", KINDED)
+    for i in range(3):
+        _add_partitioned(kinded, _kinded_rows(i, 4), "item_kind")
+    jobs, df = _jobs_to_build(spark, "read-kinded", kinded.read)
+    assert jobs == 0
+    assert {r["k"]: r["item_kind"] for r in df.collect()} == {
+        k: kind for i in range(3) for k, kind in _kinded_rows(i, 4)}
 
 
 def test_compact_minor_bounds_files_without_full_rewrite(spark, tmp_path):

@@ -160,7 +160,7 @@ def test_ivf_index_dirs_removed_at_exit(tmp_path):
 
     tmp = tmp_path / "tmp"
     tmp.mkdir()
-    env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_DRIVER_MEM="1g")
+    env = dict(os.environ, TMPDIR=str(tmp))
     root = str(Path(__file__).resolve().parent.parent)
     done = subprocess.run(
         [sys.executable, "-c", IVF_CLEANUP_SCRIPT, root], env=env,
