@@ -15,12 +15,11 @@ calls these stages in order:
    seen filter (F6 bloom + anti-join)──► fresh frontier rows.
 5. ``_commit_side_tables`` — the commit pool: the frontier delta's
    writes (deletes, retries, fresh) and the items, url_seen, metrics
-   (+ opt-in host_state/last_scraped) commits; on a retry-only tail it
-   launches the next round's speculative fused stage.
+   (+ opt-in host_state) commits; on a retry-only tail it launches the
+   next round's speculative fused stage.
 6. ``_flip_frontier`` — the frontier delta commit, the resume marker.
 7. ``_compact`` — the ``compact_every`` cadence.
-8. ``_hand_off`` — the carried frontier, fast-forward hint and the
-   round's metric dict.
+8. ``_hand_off`` — the fast-forward hint and the round's metric dict.
 
 Every table is a SnapshotTable (Iceberg semantics): the commit at the
 end of a round is atomic per table, and the frontier commit carries the
@@ -41,8 +40,7 @@ from .. import schemas
 from ..sources.fetch import fetch_from_table
 from ..tables import SnapshotTable
 from .frontier import (
-    HOST_BUDGETS, MAX_ATTEMPTS, RETRYABLE, retry_rows, schedule,
-    update_host_state,
+    HOST_BUDGETS, retry_rows, retryable, schedule, update_host_state,
 )
 from .parse import run_parse_flat
 from .seen import SnapshotBloom, filter_unseen
@@ -172,8 +170,6 @@ class CrawlEngine:
       ``test_robots_blocks_disallowed``);
     - ``adaptive_politeness``: per-host AutoThrottle budgets (F4;
       ``test_adaptive_politeness_backoff``);
-    - ``track_last_scraped``: the ``last_scraped`` table that
-      ``requeue`` reads (F11; ``test_requeue_respects_rescrape_window``);
     - ``compact_every``: the frontier/bloom/side-table fold cadence, 0 =
       never (``test_engine_compacts_bloom_on_cadence``);
     - ``use_ids_seen``: item-level id dedup (F7;
@@ -189,7 +185,6 @@ class CrawlEngine:
         record_schedule: bool = False,
         obey_robots: bool = False,
         adaptive_politeness: bool = False,
-        track_last_scraped: bool = False,
         compact_every: int = 8,
         use_ids_seen: bool = False,
     ):
@@ -203,7 +198,6 @@ class CrawlEngine:
         t = lambda name, schema: SnapshotTable(spark, self.root / name, schema)
         self.obey_robots = obey_robots
         self.adaptive_politeness = adaptive_politeness
-        self.track_last_scraped = track_last_scraped
         # F7: item-level id dedup (bgg.py:229-242,256-261 _ids_seen) —
         # opt-in because it re-packs API batches at the engine level
         # (ids discovered on overlapping pages fetch once even when the
@@ -216,7 +210,6 @@ class CrawlEngine:
         self.seen = t("url_seen", schemas.URL_SEEN)
         self.robots = t("robots", schemas.ROBOTS)
         self.host_state = t("host_state", schemas.HOST_STATE)
-        self.last_scraped = t("last_scraped", schemas.LAST_SCRAPED)
         # ONE combined round-output table, partitioned by item_kind: the
         # fused parse stage writes its output directly into this table's
         # next data dir and the round commits it via add_files — the four
@@ -243,16 +236,6 @@ class CrawlEngine:
         # {host: [url_canon in sched_rank order]}.
         self.record_schedule = record_schedule
         self.schedule_log: dict[int, dict[str, list[str]]] = {}
-        # Frontier-size hint carried between rounds (from the previous
-        # round's observations — no extra job).  When the pending set is
-        # provably small, schedule() drops its phase-1 salted skew guard
-        # (one window + shuffle saved): the guard exists for 10^6+-row
-        # hot hosts, and tail retry rounds — the measured flat floor of
-        # the N→4N scaling runs — schedule a few thousand rows.  None
-        # (unknown, e.g. first round after resume) always takes the full
-        # skew-safe plan; the lean plan is result-identical because the
-        # salt prune is lossless.
-        self._pending_hint: int | None = None
         # Exact frontier row count, maintained by manifest arithmetic
         # (seed count, then +appended −deleted per commit) and persisted
         # as a ``frontier_rows`` metric in every frontier manifest the
@@ -263,13 +246,6 @@ class CrawlEngine:
         # _fused_stage).  None = not yet known (resume); frontier_rows()
         # reads it from the current manifest.
         self._frontier_rows: int | None = None
-        # Exact in-memory frontier for provable retry-only tails — set
-        # at the end of a round whose commit left ONLY that round's
-        # retry rows pending; the next round then skips the frontier
-        # table scan + equality-delete anti-joins.  Purely an
-        # optimization: identical rows come back from frontier.read()
-        # on resume, and any out-of-band insert invalidates it.
-        self._next_frontier: DataFrame | None = None
         # Round double-buffering (VERDICT r06 next #2): on a provable
         # retry-only tail, the NEXT round's fused schedule→fetch→parse→
         # scratch-write job is launched on a background thread while the
@@ -279,10 +255,9 @@ class CrawlEngine:
         # mid-commit.  Nothing is committed speculatively: the scratch
         # dir is an invisible orphan until the consuming round's
         # add_files, so crash/resume semantics are unchanged.  Any
-        # out-of-band frontier insert cancels it (same invalidation
-        # points as _next_frontier).  Only active inside crawl() —
-        # _round_window_end gates the launch so a speculation is never
-        # started for a round the loop won't run.
+        # out-of-band frontier insert cancels it.  Only active inside
+        # crawl() — _round_window_end gates the launch so a speculation
+        # is never started for a round the loop won't run.
         self._spec: dict | None = None
         self._spec_pool = None
         self._round_window_end: int | None = None
@@ -326,7 +301,6 @@ class CrawlEngine:
                                 metrics={"frontier_rows": n},
                                 coalesce=WRITE_COALESCE)
         self.bloom.add(seen_rows)
-        self._pending_hint = n
         self._frontier_rows = n
         return n
 
@@ -374,7 +348,10 @@ class CrawlEngine:
         ``window_rounds`` rounds (PREVENT_RESCRAPE_FOR analog).
 
         ``urls``: DataFrame with a raw ``url`` column (+ optional
-        priority).  Requires track_last_scraped=True.
+        priority).  The successful fetches are the status-200 'fetch'
+        rows of the items data dirs committed in the window — read from
+        the items table itself (partition-pruned to ``item_kind=fetch``),
+        so no second copy of crawl state is kept for this.
         """
         if "priority" not in urls.columns:
             urls = urls.withColumn("priority", F.lit(1))
@@ -385,9 +362,14 @@ class CrawlEngine:
         # dropped at the next compact.  Requeued rows are a distinct
         # generation, same as fresh discoveries.
         rows = _canonical_frontier_rows(urls, round_no + 1, round_no)
-        recent = self.last_scraped.read().where(
-            F.col("round") > round_no - window_rounds
-        ).select("url_hash")
+        # items is append-only (add_files), so each committed dir is the
+        # "added" dir of exactly one round-tagged snapshot
+        rels = [rel for snap in self.items.history()
+                if snap["lineage"]["round"] > round_no - window_rounds
+                for rel in snap["added"]]
+        recent = self.items.read_files(rels).where(
+            (F.col("item_kind") == "fetch") & (F.col("fetch.status") == 200)
+        ).select(F.col("fetch.url_hash").alias("url_hash"))
         return self._insert_rows(
             rows.join(recent, "url_hash", "left_anti"),
             lineage={"stage": "requeue", "at_round": round_no})
@@ -419,9 +401,6 @@ class CrawlEngine:
             metrics={"frontier_rows": rows_after},
         )
         self._frontier_rows = rows_after
-        if self._pending_hint is not None:
-            self._pending_hint += n
-        self._next_frontier = None
         self._cancel_speculation()
         return n
 
@@ -593,14 +572,20 @@ class CrawlEngine:
     # ----------------------------------------------------------------- round
 
     def _fused_stage(self, round_no: int, frontier: DataFrame,
-                     hint: int | None) -> dict:
+                     hint: int) -> dict:
         """The round's single heavy Spark job, run to completion:
         schedule → fetch → parse → scratch write.  Pure compute plus one
         UNCOMMITTED write into a reserved items data dir — no manifest
         is touched — so it is safe to run speculatively for round r+1
         while round r's stage-B commits land (``run_round`` consumes the
         result either way; an abandoned scratch dir is an invisible
-        orphan)."""
+        orphan).
+
+        ``hint`` is the frontier's row count (manifest arithmetic, or
+        a speculation's retry count).  A small frontier
+        takes schedule()'s lean plan: the phase-1 salted skew guard
+        exists for 10^6+-row hot hosts, and the lean plan is
+        result-identical because the salt prune is lossless."""
         if self.obey_robots:
             from .robots import filter_allowed
 
@@ -634,16 +619,16 @@ class CrawlEngine:
             schedule(
                 frontier, round_no, self.window_sec,
                 self._current_budgets(),
-                lean=(hint is not None and hint < 100_000),
+                lean=hint < 100_000,
             )
             .cache()
         )
 
         # Fused fetch→parse: ONE pass over the bodies.  Per-URL 'fetch'
         # rows ride along in the scratch output, so retries, per-host
-        # metrics, host-state, and last-scraped all become filtered reads
-        # of the scratch parquet — the fetch join never re-executes and
-        # bodies never sit in executor storage.
+        # metrics and host-state all become filtered reads of the
+        # scratch parquet — the fetch join never re-executes and bodies
+        # never sit in executor storage.
         fetched_full = fetch_from_table(scheduled, self.pages)
 
         # (Caching or multi-pass-writing a deep-nested per-page shape
@@ -660,7 +645,7 @@ class CrawlEngine:
             (F.col("item_kind") == k).cast("long")
         ).alias(k)
         parsed = run_parse_flat(fetched_full)
-        if hint is not None and hint < 3000:
+        if hint < 3000:
             # Tail-round write shrink: the corpus-scan join leaves
             # O(scan partitions) write tasks even when the batch is
             # a few hundred retry rows — measured 1.1 s of pure
@@ -672,21 +657,20 @@ class CrawlEngine:
             # flat rows) never crosses this exchange; parse
             # parallelism itself is untouched either way.
             parsed = parsed.repartition(WRITE_COALESCE)
-        # 'retryable' mirrors retry_rows' filter EXACTLY (same
-        # RETRYABLE tuple, same MAX_ATTEMPTS) so the round can skip
-        # the retries delta write entirely when it would be empty —
-        # no empty data dir in the manifest, no retraction commit
-        # (ADVICE r05 #3), one less Spark job on clean rounds.
-        retryable = F.sum(
+        # 'retryable' counts the rows retry_rows keeps (the same
+        # predicate) so the round can skip the retries delta write
+        # entirely when it would be empty — no empty data dir in the
+        # manifest, no retraction commit (ADVICE r05 #3), one less Spark
+        # job on clean rounds.
+        n_retryable = F.sum(
             (
                 (F.col("item_kind") == "fetch")
-                & F.col("fetch.status").isin(list(RETRYABLE))
-                & (F.col("fetch.attempt") + 1 < F.lit(MAX_ATTEMPTS))
+                & retryable(F.col("fetch.status"), F.col("fetch.attempt"))
             ).cast("long")
         ).alias("retryable")
         parsed.observe(
             obs_items, kind("page"), kind("game"), kind("user"),
-            kind("rating"), kind("fetch"), retryable,
+            kind("rating"), kind("fetch"), n_retryable,
         ).write.mode("overwrite").partitionBy("item_kind").parquet(
             str(scratch)
         )
@@ -704,12 +688,11 @@ class CrawlEngine:
         """Start round ``next_round``'s fused stage on a background
         thread while the CURRENT round's stage-B commits + manifest flip
         run.  Launched only from a provable retry-only tail (the next
-        frontier is exactly ``frontier_expr``, this round's retry rows —
-        the expression ``_next_frontier`` carries), only inside a crawl()
-        window that will actually run that round, and never under
-        obey_robots (the robots refresh mutates a table).  The
-        speculative job commits NOTHING — consuming it or discarding it
-        is equally safe."""
+        frontier is exactly ``frontier_expr``, this round's retry rows),
+        only inside a crawl() window that will actually run that round,
+        and never under obey_robots (the robots refresh mutates a
+        table).  The speculative job commits NOTHING — consuming it or
+        discarding it is equally safe."""
         if (self._round_window_end is None
                 or next_round >= self._round_window_end
                 or self.obey_robots):
@@ -759,8 +742,7 @@ class CrawlEngine:
 
     def _cancel_speculation(self) -> None:
         """Invalidate any in-flight speculation (out-of-band frontier
-        inserts change what the next round must schedule — the same
-        invalidation points as ``_next_frontier``)."""
+        inserts change what the next round must schedule)."""
         spec, self._spec = self._spec, None
         if spec is not None:
             self._discard_spec(spec)
@@ -773,18 +755,13 @@ class CrawlEngine:
         come only from aggregates riding singly-materialized WRITE jobs
         and from manifest arithmetic — see ``_fused_stage``."""
         self._consume_seed_requests(round_no)
+        n_frontier = self.frontier_rows()
         fused = self._take_speculation(round_no)
         if fused is not None:
-            # the speculative job already computed the carried frontier
-            self._next_frontier = None
             self._spec_hits += 1
         else:
-            carried, self._next_frontier = self._next_frontier, None
-            fused = self._fused_stage(
-                round_no,
-                carried if carried is not None else self.frontier.read(),
-                self._pending_hint)
-        n_frontier = self.frontier_rows()
+            fused = self._fused_stage(round_no, self.frontier.read(),
+                                      n_frontier)
         if not fused["parse_counts"].get("fetch"):
             return self._idle_round(round_no, fused, n_frontier)
         if self.record_schedule:
@@ -828,11 +805,9 @@ class CrawlEngine:
             # frame was EMPTY — n_frontier counts table rows, so a table
             # holding only robots-blocked rows (never schedulable) must
             # still terminate as done.
-            self._pending_hint = n_frontier
             return {**idle, "pending": n_frontier,
                     "next_eligible_round": max(int(min_nb), round_no + 1),
                     "done": False}
-        self._pending_hint = 0
         return {**idle, "done": True}
 
     def _discover(self, round_no: int, flat: DataFrame) -> dict:
@@ -902,7 +877,7 @@ class CrawlEngine:
                             n_frontier: int) -> dict:
         """The commit pool: every write of the round except the frontier
         manifest flip.  Returns the round's counts, the frontier delta's
-        prepared parts and — on a retry-only tail — the next frontier.
+        prepared parts and whether the round is a retry-only tail.
 
         All these writes target DIFFERENT tables and read only the
         committed scratch parquet / caches, so they run CONCURRENTLY
@@ -947,13 +922,6 @@ class CrawlEngine:
             ).unionByName(updated)
             writes.append(lambda: self.host_state.overwrite(
                 merged, lineage=lineage, coalesce=1))
-        if self.track_last_scraped:
-            writes.append(lambda: self.last_scraped.append(
-                fetch_rows.where(F.col("status") == 200).select(
-                    "url_hash", "url_canon",
-                    F.lit(round_no).alias("round"),
-                ),
-                lineage=lineage, coalesce=WRITE_COALESCE))
         from concurrent.futures import ThreadPoolExecutor
 
         empty = {"files": [], "dfiles": []}
@@ -971,12 +939,12 @@ class CrawlEngine:
             # Stage A — everything that depends only on the committed
             # scratch / caches: the delta's three data writes (deletes,
             # retries, fresh), the items manifest commit, and the opt-in
-            # host_state/last_scraped writes.  The FRESH prepare is the
-            # discovery branch's single materializer (obs_disc/obs_fresh
-            # ride its write job); the seen append is derived from its
-            # OUTPUT FILE in stage B, so the branch is computed exactly
-            # once and the seen append does not serialize ahead of the
-            # metrics write (VERDICT r05 next #6).
+            # host_state write.  The FRESH prepare is the discovery
+            # branch's single materializer (obs_disc/obs_fresh ride its
+            # write job); the seen append is derived from its OUTPUT FILE
+            # in stage B, so the branch is computed exactly once and the
+            # seen append does not serialize ahead of the metrics write
+            # (VERDICT r05 next #6).
             fut_del = pool.submit(
                 lambda: self.frontier.prepare_delta(
                     deletes=fused["scheduled"].select(
@@ -1063,8 +1031,8 @@ class CrawlEngine:
             # were never referenced by any manifest, and quiet rounds add
             # nothing to the read fan-in (ADVICE r05 #3).  The retries
             # delta is never empty: it is prepared only when the parse
-            # observed a retryable row, and ``retryable`` mirrors
-            # retry_rows' filter.
+            # observed a retryable row, counted with retry_rows'
+            # predicate.
             if n_fresh == 0:
                 self.frontier.discard_prepared(prep_f)
                 prep_f = empty
@@ -1076,8 +1044,7 @@ class CrawlEngine:
             "fetched": n_ok, "parsed_items": n_items,
             "discovered": n_disc, "fresh": n_fresh, "retries": n_retries,
             "prepared": [prep_del, prep_ret, prep_f],
-            "next_frontier": retry_expr if tail else None,
-            "retry_min_nb": retry_stats["min_nb"],
+            "tail": tail, "retry_min_nb": retry_stats["min_nb"],
         }
 
     def _flip_frontier(self, round_no: int, c: dict) -> None:
@@ -1143,26 +1110,16 @@ class CrawlEngine:
             lineage=side_lin, coalesce=WRITE_COALESCE)
         self.metrics.compact_minor(
             lineage=side_lin, coalesce=WRITE_COALESCE)
-        if self.track_last_scraped:
-            self.last_scraped.compact_minor(
-                lineage=side_lin, coalesce=WRITE_COALESCE)
 
     def _hand_off(self, round_no: int, fused: dict, disc: dict,
                   c: dict) -> dict:
-        """Carry state into the next round and report this one.
+        """Release the round's caches and report it.
 
         On a retry-only tail every round before the retries' earliest
-        not_before_round is PROVABLY empty — crawl() jumps straight to it
-        — and the next round is handed the in-memory frontier expression,
-        skipping the table scan + two equality-delete anti-joins of
-        frontier.read().  It is lazy and rooted at the committed scratch
-        parquet, so a crash or resume falls back to the identical table
-        read; out-of-band inserts (requeue / seed-request folds)
-        invalidate it."""
-        self._next_frontier = c["next_frontier"]
+        not_before_round is PROVABLY empty — crawl() jumps straight to
+        it."""
         for df in (fused["frontier"], fused["scheduled"], *disc["cached"]):
             df.unpersist()
-        pending = self._pending_hint = self._frontier_rows
         # fused["scratch"] is NOT deleted: it is the committed items dir.
         return {
             "round": round_no,
@@ -1171,9 +1128,8 @@ class CrawlEngine:
             "parsed_items": c["parsed_items"],
             "discovered": c["discovered"],
             "fresh": c["fresh"],
-            "pending": pending,
-            "next_eligible_round": (int(c["retry_min_nb"])
-                                    if c["next_frontier"] is not None
+            "pending": self._frontier_rows,
+            "next_eligible_round": (int(c["retry_min_nb"]) if c["tail"]
                                     else round_no + 1),
             "done": False,
         }

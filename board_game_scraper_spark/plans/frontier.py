@@ -213,15 +213,17 @@ def update_host_state(
     )
 
 
-def retry_rows(
-    fetched: DataFrame, round_no: int, max_attempts: int = MAX_ATTEMPTS
-) -> DataFrame:
+def retryable(status, attempt):
+    """The one retry predicate (F9), as a Column over ``status`` and
+    ``attempt`` Columns: a ``RETRYABLE`` status with an attempt left
+    before ``MAX_ATTEMPTS``."""
+    return status.isin(list(RETRYABLE)) & (attempt + 1 < F.lit(MAX_ATTEMPTS))
+
+
+def retry_rows(fetched: DataFrame, round_no: int) -> DataFrame:
     """Failed fetches → re-queued frontier rows with exponential backoff
     (F9: priority-1, not_before = now + delay*2^attempt, attempt+1)."""
-    f = fetched.where(
-        F.col("status").isin(list(RETRYABLE))
-        & (F.col("attempt") + 1 < F.lit(max_attempts))
-    )
+    f = fetched.where(retryable(F.col("status"), F.col("attempt")))
     backoff = F.least(
         F.pow(F.lit(2.0), F.col("attempt") + 1).cast("int"), F.lit(4)
     )

@@ -33,6 +33,7 @@ from functools import lru_cache
 
 from ..functions.canon import canonicalize_one
 from ..functions.text import clean_text_one
+from ..schemas import GAME_ITEM, PARSE_FLAT
 
 # Discovered URLs repeat heavily across pages of one batch (the same
 # user/collection URLs appear on every thing page mentioning the user) —
@@ -282,61 +283,52 @@ def parse_thing(url_canon: str, body: str) -> dict:
                 "statistics/ratings/ranks/rank[@type='family']"
             )
         ]
-        game = {
-            "bgg_id": gid,
-            "name": name,
-            "alt_name": None,
-            "year": year,
-            "description": desc,
-            "designer": _link_values(item, "boardgamedesigner") or None,
-            "artist": _link_values(item, "boardgameartist") or None,
-            "publisher": _link_values(item, "boardgamepublisher") or None,
-            "url": f"{BGG}/boardgame/{gid}/",
-            "image_url": [image_el.text] if image_el is not None else None,
-            "video_url": [v.get("link") for v in video_els] or None,
-            "min_players": min_p,
-            "max_players": max_p,
-            "min_players_rec": min_rec,
-            "max_players_rec": max_rec,
-            "min_players_best": min_best,
-            "max_players_best": max_best,
-            "min_age": _validate_range(attr_val("minage"), 0, 21),
-            "max_age": None,
-            "min_age_rec": _validate_range(
+        game = _game_row(
+            bgg_id=gid,
+            name=name,
+            year=year,
+            description=desc,
+            designer=_link_values(item, "boardgamedesigner") or None,
+            artist=_link_values(item, "boardgameartist") or None,
+            publisher=_link_values(item, "boardgamepublisher") or None,
+            url=f"{BGG}/boardgame/{gid}/",
+            image_url=[image_el.text] if image_el is not None else None,
+            video_url=[v.get("link") for v in video_els] or None,
+            min_players=min_p,
+            max_players=max_p,
+            min_players_rec=min_rec,
+            max_players_rec=max_rec,
+            min_players_best=min_best,
+            max_players_best=max_best,
+            min_age=_validate_range(attr_val("minage"), 0, 21),
+            min_age_rec=_validate_range(
                 _poll_stat(item, "suggested_playerage"), 0, 21),
-            "min_time": _validate_range(attr_val("playingtime"), 1, None),
-            "max_time": _validate_range(attr_val("playingtime"), 1, None),
-            "category": _link_values(item, "boardgamecategory") or None,
-            "mechanic": _link_values(item, "boardgamemechanic") or None,
-            "cooperative": None,
-            "compilation": None,
-            "compilation_of": None,
-            "family": _link_values(item, "boardgamefamily") or None,
-            "expansion": _link_values(item, "boardgameexpansion") or None,
-            "implementation": None,
-            "integration": None,
-            "rank": _int(rank_el.get("value")) if rank_el is not None else None,
-            "add_rank": add_rank or None,
-            "num_votes": _validate_range(
+            min_time=_validate_range(attr_val("playingtime"), 1, None),
+            max_time=_validate_range(attr_val("playingtime"), 1, None),
+            category=_link_values(item, "boardgamecategory") or None,
+            mechanic=_link_values(item, "boardgamemechanic") or None,
+            family=_link_values(item, "boardgamefamily") or None,
+            expansion=_link_values(item, "boardgameexpansion") or None,
+            rank=_int(rank_el.get("value")) if rank_el is not None else None,
+            add_rank=add_rank or None,
+            num_votes=_validate_range(
                 attr_val("usersrated", el=ratings_el) if ratings_el is not None else None,
                 0, None),
-            "avg_rating": _validate_range(avg, 1, 10),
-            "stddev_rating": _validate_range(
+            avg_rating=_validate_range(avg, 1, 10),
+            stddev_rating=_validate_range(
                 attr_val("stddev", _float, ratings_el) if ratings_el is not None else None,
                 0, None),
-            "bayes_rating": _validate_range(
+            bayes_rating=_validate_range(
                 attr_val("bayesaverage", _float, ratings_el) if ratings_el is not None else None,
                 0, 10),
-            "complexity": _validate_range(
+            complexity=_validate_range(
                 attr_val("averageweight", _float, ratings_el) if ratings_el is not None else None,
                 1, 5),
-            "language_dependency": _validate_range(
+            language_dependency=_validate_range(
                 _poll_stat(item, "language_dependence", attr="level",
                            enum=True),
                 1, 5),
-            "published_at": None,
-            "scraped_at": SCRAPED_AT,
-        }
+        )
         games.append(game)
 
         # Interleaved spans: text, text, image, video per item (input_hint).
@@ -685,28 +677,15 @@ def parse_wikidata_entity(url_canon: str, body: str) -> dict:
             return _int(raw.lstrip("+")) if raw else None
 
         image = _first(jmes_path(ent, "claims.P18[].mainsnak.datavalue.value"))
-        game = {k: None for k in (
-            "alt_name", "year", "description", "artist", "publisher",
-            "video_url", "min_players_rec", "max_players_rec",
-            "min_players_best", "max_players_best", "min_age", "max_age",
-            "min_age_rec", "min_time", "max_time", "category", "mechanic",
-            "cooperative", "compilation", "compilation_of", "family",
-            "expansion", "implementation", "integration", "rank",
-            "add_rank", "num_votes", "avg_rating", "stddev_rating",
-            "bayes_rating", "complexity", "language_dependency",
-            "published_at")}
-        game.update(
-            {
-                "bgg_id": bgg_id,
-                "name": name,
-                "alt_name": alt or None,
-                "designer": designer or None,
-                "url": url_canon,
-                "image_url": [image] if image else None,
-                "min_players": _validate_range(amount("P1872"), 1, None),
-                "max_players": _validate_range(amount("P1873"), 1, None),
-                "scraped_at": SCRAPED_AT,
-            }
+        game = _game_row(
+            bgg_id=bgg_id,
+            name=name,
+            alt_name=alt or None,
+            designer=designer or None,
+            url=url_canon,
+            image_url=[image] if image else None,
+            min_players=_validate_range(amount("P1872"), 1, None),
+            max_players=_validate_range(amount("P1873"), 1, None),
         )
         games.append(game)
         spans.append(_span("text", len(spans), text=name))
@@ -752,25 +731,12 @@ def parse_rank_history(url_canon: str, body: str) -> dict:
     spans, games = [], []
     for ms, rank in doc.get("data", []):
         ts = datetime.utcfromtimestamp(ms / 1000.0)
-        game = {k: None for k in (
-            "alt_name", "year", "description", "designer", "artist",
-            "publisher", "image_url", "video_url", "min_players",
-            "max_players", "min_players_rec", "max_players_rec",
-            "min_players_best", "max_players_best", "min_age", "max_age",
-            "min_age_rec", "min_time", "max_time", "category", "mechanic",
-            "cooperative", "compilation", "compilation_of", "family",
-            "expansion", "implementation", "integration", "add_rank",
-            "num_votes", "avg_rating", "stddev_rating", "bayes_rating",
-            "complexity", "language_dependency")}
-        game.update(
-            {
-                "bgg_id": gid,
-                "name": f"game-{gid}",
-                "url": url_canon,
-                "rank": _int(rank),
-                "published_at": ts,
-                "scraped_at": SCRAPED_AT,
-            }
+        game = _game_row(
+            bgg_id=gid,
+            name=f"game-{gid}",
+            url=url_canon,
+            rank=_int(rank),
+            published_at=ts,
         )
         games.append(game)
         spans.append(
@@ -790,25 +756,12 @@ def parse_hotness(url_canon: str, body: str) -> dict:
         thumb_el = item.find("thumbnail")
         name = clean_text_one(name_el.get("value")) if name_el is not None else None
         thumb = thumb_el.get("value") if thumb_el is not None else None
-        game = {k: None for k in (
-            "alt_name", "year", "description", "designer", "artist",
-            "publisher", "video_url", "min_players", "max_players",
-            "min_players_rec", "max_players_rec", "min_players_best",
-            "max_players_best", "min_age", "max_age", "min_age_rec",
-            "min_time", "max_time", "category", "mechanic", "cooperative",
-            "compilation", "compilation_of", "family", "expansion",
-            "implementation", "integration", "add_rank", "num_votes",
-            "avg_rating", "stddev_rating", "bayes_rating", "complexity",
-            "language_dependency", "published_at")}
-        game.update(
-            {
-                "bgg_id": gid,
-                "name": name,
-                "url": url_canon,
-                "rank": _int(item.get("rank")),
-                "image_url": [thumb] if thumb else None,
-                "scraped_at": SCRAPED_AT,
-            }
+        game = _game_row(
+            bgg_id=gid,
+            name=name,
+            url=url_canon,
+            rank=_int(item.get("rank")),
+            image_url=[thumb] if thumb else None,
         )
         games.append(game)
         spans.append(_span("text", len(spans), text=name))
@@ -818,17 +771,7 @@ def parse_hotness(url_canon: str, body: str) -> dict:
             "discovered": []}
 
 
-_GAME_FIELDS = (
-    "bgg_id", "name", "alt_name", "year", "description", "designer",
-    "artist", "publisher", "url", "image_url", "video_url", "min_players",
-    "max_players", "min_players_rec", "max_players_rec", "min_players_best",
-    "max_players_best", "min_age", "max_age", "min_age_rec", "min_time",
-    "max_time", "category", "mechanic", "cooperative", "compilation",
-    "compilation_of", "family", "expansion", "implementation", "integration",
-    "rank", "add_rank", "num_votes", "avg_rating", "stddev_rating",
-    "bayes_rating", "complexity", "language_dependency", "published_at",
-    "scraped_at",
-)
+_GAME_FIELDS = tuple(GAME_ITEM.fieldNames())
 
 
 def _game_row(**kw) -> dict:
@@ -1324,8 +1267,6 @@ def parse_flat_batches(batches):
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from ..schemas import PARSE_FLAT
-
     arrow_schema = to_arrow_schema(PARSE_FLAT)
     types = {f.name: f.type for f in arrow_schema}
 
@@ -1381,29 +1322,18 @@ def parse_flat_batches(batches):
         yield emit(rows)
 
 
-def run_parse_flat(fetched, target_partitions: int | None = 0):
+def run_parse_flat(fetched):
     """fetched (ALL statuses) → PARSE_FLAT DataFrame — the crawl loop's
     single fused parse pass.  Designed to be written ONCE: no nested
     page-level arrays for items, and per-URL 'fetch' rows ride along so
     every downstream consumer (item tables, metrics, retries, discovery)
     is a cheap filtered read of the one scratch parquet.
 
-    ``target_partitions=0`` (default): NO repartition — the fetch stage
-    is a broadcast semi-join over the corpus scan, so the input already
-    has scan-width partitioning and repartitioning would shuffle every
-    page body (the exact exchange the broadcast fetch exists to avoid).
-    Pass an explicit width only when the input is known to be skewed or
-    narrower than the cluster."""
-    from ..schemas import PARSE_FLAT
-
-    src = fetched.select(
+    No repartition: the fetch stage is a broadcast semi-join over the
+    corpus scan, so the input already has scan-width partitioning and
+    repartitioning would shuffle every page body (the exact exchange the
+    broadcast fetch exists to avoid)."""
+    return fetched.select(
         "url_canon", "callback_kind", "body", "url_hash", "host",
         "priority", "attempt", "status", "latency_ms",
-    )
-    if target_partitions is None:
-        target_partitions = (
-            fetched.sparkSession.sparkContext.defaultParallelism * 2
-        )
-    if target_partitions:
-        src = src.repartition(target_partitions)
-    return src.mapInArrow(parse_flat_batches, PARSE_FLAT)
+    ).mapInArrow(parse_flat_batches, PARSE_FLAT)

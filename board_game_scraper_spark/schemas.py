@@ -156,15 +156,6 @@ ROBOTS = StructType(
     ]
 )
 
-# Rescrape suppression state (F11): last successful fetch per URL.
-LAST_SCRAPED = StructType(
-    [
-        StructField("url_hash", LongType(), False),
-        StructField("url_canon", StringType(), False),
-        StructField("round", IntegerType(), False),
-    ]
-)
-
 # Per-round, per-host crawl metrics (A5; north_rule requires per-partition
 # lineage + fetch/parse metrics on every snapshot).
 METRICS = StructType(

@@ -246,13 +246,12 @@ def test_crawl_side_table_file_counts_bounded(spark, tmp_path):
     forever — the compact_every cadence now folds them too (VERDICT r04
     'wrong' #2)."""
     _seeds_pd, pages_pd = synth.corpus(n_browse=4, n_users=8, n_other=4)
-    eng = make_engine(spark, pages_pd, tmp_path / "c", compact_every=3,
-                      track_last_scraped=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "c", compact_every=3)
     seeds_pd = pd.DataFrame(
         [{"url": synth.browse_url(1), "source": "bgg", "priority": 0}])
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
     eng.crawl(8)
-    for table in (eng.seen, eng.metrics, eng.last_scraped):
+    for table in (eng.seen, eng.metrics):
         snap = table.current_snapshot()
         if snap is None:
             continue
@@ -311,7 +310,8 @@ def test_committed_layout_reads_without_spark(spark, tmp_path):
     assert seen == {r["url_canon"] for r in eng.seen.read().collect()}
 
 
-def test_frontier_rows_manifest_arithmetic_and_resume(spark, tmp_path):
+def test_frontier_rows_manifest_arithmetic_and_resume(spark, tmp_path,
+                                                      monkeypatch):
     """Driving counts must be execution-count-independent: the frontier
     row count is maintained by manifest arithmetic (seed n, then
     +appended −deleted per commit) and persisted in each frontier
@@ -344,6 +344,20 @@ def test_frontier_rows_manifest_arithmetic_and_resume(spark, tmp_path):
     # a fresh engine (resume) recovers the count without a Spark job
     eng2 = make_engine(spark, pages_pd, tmp_path / "fr")
     assert eng2.frontier_rows() == eng.frontier_rows()
+    # ...and plans its first round from it as the uninterrupted engine
+    # would: the small frontier takes schedule()'s lean plan
+    from board_game_scraper_spark.plans import crawl
+
+    leans = []
+
+    def recording_schedule(*args, **kwargs):
+        leans.append(kwargs.get("lean"))
+        return orig_schedule(*args, **kwargs)
+
+    orig_schedule = crawl.schedule
+    monkeypatch.setattr(crawl, "schedule", recording_schedule)
+    eng2.run_round(eng2.last_round() + 1)
+    assert leans[:1] == [True]
 
     # scheduled counts come from the write job's fetch rows, not the
     # raced frame: round 1 scheduled exactly the seeded URLs
@@ -413,8 +427,7 @@ def test_requeue_cancels_speculation(spark, tmp_path):
 
     seeds_pd, pages_pd = synth.corpus(n_browse=4, n_users=8, n_other=4)
     pages_pd = with_retryables(pages_pd)
-    eng = make_engine(spark, pages_pd, tmp_path / "c", window_sec=1e6,
-                      track_last_scraped=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "c", window_sec=1e6)
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
     # drive rounds manually inside an artificial window so speculation
     # can launch exactly as crawl() would allow

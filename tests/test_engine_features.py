@@ -72,13 +72,14 @@ def test_adaptive_politeness_backoff(spark, tmp_path):
 def test_requeue_respects_rescrape_window(spark, tmp_path):
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = make_engine(spark, pages_pd, tmp_path / "rq",
-                      track_last_scraped=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "rq")
     eng.seed(seeds)
     eng.crawl(3)
     last = eng.last_round()
-    ok_urls = [r["url_canon"] for r in
-               eng.last_scraped.read().limit(3).collect()]
+    # successful fetches are the items table's status-200 fetch rows
+    ok_urls = [r["url_canon"] for r in eng.items.read().where(
+        (F.col("item_kind") == "fetch") & (F.col("fetch.status") == 200)
+    ).limit(3).collect()]
     assert ok_urls
     urls = spark.createDataFrame([(u,) for u in ok_urls], "url string")
     # within the window → suppressed (extensions.py:137-145)
@@ -101,13 +102,15 @@ def test_requeue_same_round_survives_pending_deletes(spark, tmp_path):
     so they survive read-time delete application and compaction."""
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = make_engine(spark, pages_pd, tmp_path / "rqs",
-                      track_last_scraped=True, compact_every=0)
+    eng = make_engine(spark, pages_pd, tmp_path / "rqs", compact_every=0)
     eng.seed(seeds)
     eng.run_round(1)   # fetches seeds, discovers rows w/ discovery_round=2
     eng.run_round(2)   # schedules them → pending deletes (hash, 0, 2)
-    ok2 = [r["url_canon"] for r in eng.last_scraped.read()
-           .where(F.col("round") == 2).limit(2).collect()]
+    # round 2's items dir: its status-200 fetch rows
+    round2 = eng.items.current_snapshot()["added"]
+    ok2 = [r["url_canon"] for r in eng.items.read_files(round2).where(
+        (F.col("item_kind") == "fetch") & (F.col("fetch.status") == 200)
+    ).limit(2).collect()]
     assert ok2
     urls = spark.createDataFrame([(u,) for u in ok2], "url string")
     n = eng.requeue(urls, 2, window_rounds=0)
@@ -317,8 +320,7 @@ def test_requeue_does_not_advance_resume_marker(spark, tmp_path):
     """requeue/seed-request folds are out-of-band commits: last_round()
     must keep pointing at the last fully-committed round (ADVICE r03 #4)."""
     _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
-    eng = make_engine(spark, pages_pd, tmp_path / "rm",
-                      track_last_scraped=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "rm")
     seed_one(spark, eng)
     eng.crawl(2)
     last = eng.last_round()
@@ -330,8 +332,7 @@ def test_requeue_does_not_advance_resume_marker(spark, tmp_path):
 
 def test_noop_requeue_does_not_grow_frontier_manifest(spark, tmp_path):
     _seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
-    eng = make_engine(spark, pages_pd, tmp_path / "c",
-                      track_last_scraped=True)
+    eng = make_engine(spark, pages_pd, tmp_path / "c")
     seeds_pd = pd.DataFrame(
         [{"url": synth.browse_url(1), "source": "bgg", "priority": 0}])
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))

@@ -96,7 +96,7 @@ def test_retry_rows_backoff(spark):
         "callback_kind string, attempt int, status int, content_type string, "
         "body string, latency_ms int",
     )
-    got = {r["url_canon"]: r for r in retry_rows(fetched, 3, 3).collect()}
+    got = {r["url_canon"]: r for r in retry_rows(fetched, 3).collect()}
     assert set(got) == {"u1", "u4"}
     assert got["u1"]["priority"] == 4 and got["u1"]["attempt"] == 1
     assert got["u1"]["not_before_round"] == 5   # 3 + 2^1
@@ -106,7 +106,7 @@ def test_retry_rows_backoff(spark):
 def test_schedule_lean_matches_full(spark):
     # lean=True skips the phase-1 salt prune; the prune is lossless so
     # ranks must be bit-identical (the crawl driver switches to the lean
-    # plan whenever the previous round observed a small frontier).
+    # plan whenever the manifest frontier row count is small).
     rows = [_row(f"https://boardgamegeek.com/g/{i:04d}",
                  "boardgamegeek.com", i % 7, h=i * 2654435761 % (2**40))
             for i in range(300)]

@@ -138,7 +138,7 @@ def test_parse_flat_hotness_pages(spark):
          for i, label in enumerate(f"2024010{d}000000" for d in (1, 2, 3))],
         FETCHED,
     )
-    parsed = run_parse_flat(fetched, target_partitions=2)
+    parsed = run_parse_flat(fetched)
     games = parsed.where(F.col("item_kind") == "game").count()
     assert games == 150  # 50 per hotness page
 
