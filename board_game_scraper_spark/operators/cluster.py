@@ -16,8 +16,8 @@ Spark-first two-stage plan (SURVEY.md §2.5 J5):
 2. **Blocked fuzzy linking**: candidate pairs from a blocking-key
    equi-join (name-token blocks), scored with cheap JVM similarity
    (token Jaccard + year distance), thresholded.
-3. **Connected components** over the edge union via iterative
-   min-label propagation (small-step Pregel on DataFrames) →
+3. **Connected components** over the edge union by one union-find in
+   a single pandas call (the reference also clusters in plain Python) →
    canonical_id = min member id per component.
 
 No cross joins anywhere; every candidate set comes from an equi-join.
@@ -25,8 +25,14 @@ No cross joins anywhere; every candidate set comes from an equi-join.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Records carry ``rec_id``, ``name`` and ``year`` columns plus any of the
+# id namespaces below.  The link threshold is the reference's
+# (cluster.py:306).
+THRESHOLD = 0.5
 
 ID_NAMESPACES = (
     "bgg_id",
@@ -48,16 +54,16 @@ def _name_tokens(col):
     )
 
 
-def exact_id_edges(records: DataFrame, rec_id: str = "rec_id") -> DataFrame:
+def exact_id_edges(records: DataFrame) -> DataFrame:
     """Edges between records sharing any external id (fields.yaml Exact
     comparators).  One self-equi-join per namespace, unioned."""
     edges = None
     for ns in ID_NAMESPACES:
         if ns not in records.columns:
             continue
-        keyed = records.select(rec_id, ns).where(F.col(ns).isNotNull())
-        left = keyed.select(F.col(rec_id).alias("a"), F.col(ns).alias("k"))
-        right = keyed.select(F.col(rec_id).alias("b"), F.col(ns).alias("k"))
+        keyed = records.select("rec_id", ns).where(F.col(ns).isNotNull())
+        left = keyed.select(F.col("rec_id").alias("a"), F.col(ns).alias("k"))
+        right = keyed.select(F.col("rec_id").alias("b"), F.col(ns).alias("k"))
         e = (
             left.join(right, "k")
             .where(F.col("a") < F.col("b"))
@@ -69,32 +75,18 @@ def exact_id_edges(records: DataFrame, rec_id: str = "rec_id") -> DataFrame:
     return edges.distinct()
 
 
-def fuzzy_name_edges(
-    records: DataFrame,
-    rec_id: str = "rec_id",
-    name_col: str = "name",
-    year_col: str | None = "year",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Blocked fuzzy edges: block on each name token, score candidates.
+def fuzzy_name_edges(records: DataFrame) -> DataFrame:
+    """Blocked fuzzy edges: block on each ``name`` token, score candidates.
 
     Score (mirrors the reference's comparator mix cluster.py:39-43):
-      0.7 * token-Jaccard(name) + 0.3 * year-proximity(1/(1+|Δyear|)).
-    Blocks larger than 200 records are dropped (stopword-ish
-    tokens — the reference's dedupe library does the same via predicate
-    selection), bounding the join fan-out.
+      0.7 * token-Jaccard(name) + 0.3 * year-proximity(1/(1+|Δyear|)),
+    kept at >= ``THRESHOLD``.  Blocks larger than 200 records are dropped
+    (stopword-ish tokens — the reference's dedupe library does the same
+    via predicate selection), bounding the join fan-out.
     """
-    toks = records.select(
-        F.col(rec_id),
-        _name_tokens(F.col(name_col)).alias("_toks"),
-        *( [F.col(year_col)] if year_col and year_col in records.columns
-           else [] ),
-    )
-    blocked = toks.select(
-        rec_id, "_toks",
-        *( [year_col] if year_col and year_col in records.columns else [] ),
-        F.explode("_toks").alias("block"),
-    )
+    blocked = records.select(
+        "rec_id", _name_tokens(F.col("name")).alias("_toks"), "year",
+    ).select("rec_id", "_toks", "year", F.explode("_toks").alias("block"))
     # prune hot blocks
     block_sizes = blocked.groupBy("block").count()
     blocked = blocked.join(
@@ -104,15 +96,15 @@ def fuzzy_name_edges(
     )
     l = blocked.select(
         F.col("block"),
-        F.col(rec_id).alias("a"),
+        F.col("rec_id").alias("a"),
         F.col("_toks").alias("ta"),
-        *( [F.col(year_col).alias("ya")] if year_col else [] ),
+        F.col("year").alias("ya"),
     )
     r = blocked.select(
         F.col("block"),
-        F.col(rec_id).alias("b"),
+        F.col("rec_id").alias("b"),
         F.col("_toks").alias("tb"),
-        *( [F.col(year_col).alias("yb")] if year_col else [] ),
+        F.col("year").alias("yb"),
     )
     cand = (
         l.join(r, "block")
@@ -123,100 +115,73 @@ def fuzzy_name_edges(
     jac = F.size(F.array_intersect("ta", "tb")) / F.size(
         F.array_union("ta", "tb")
     )
-    if year_col:
-        year_sim = F.when(
-            F.col("ya").isNotNull() & F.col("yb").isNotNull(),
-            1.0 / (1.0 + F.abs(F.col("ya") - F.col("yb"))),
-        ).otherwise(F.lit(0.5))
-        score = 0.7 * jac + 0.3 * year_sim
-    else:
-        score = jac
+    year_sim = F.when(
+        F.col("ya").isNotNull() & F.col("yb").isNotNull(),
+        1.0 / (1.0 + F.abs(F.col("ya") - F.col("yb"))),
+    ).otherwise(F.lit(0.5))
+    score = 0.7 * jac + 0.3 * year_sim
     return (
         cand.select("a", "b", F.round(score, 4).alias("score"))
-        .where(F.col("score") >= threshold)
+        .where(F.col("score") >= THRESHOLD)
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 10
-) -> DataFrame:
-    """Min-label propagation: (node, component) with component = min
-    reachable node id.  Converges in O(diameter) joins; entity-link
-    components are tiny (a handful of sources per game), so a few
-    iterations suffice — iteration stops early when labels fix.
+def _union_find(edges: pd.DataFrame) -> pd.DataFrame:
+    """(node, comp) for one whole edge list; every root is the smallest
+    id of its set, so comp is the component's minimum node id."""
+    parent: dict[int, int] = {}
 
-    Each iteration costs exactly ONE action: the new labels are
-    ``localCheckpoint``-ed (truncating lineage so the plan does not
-    deepen per iteration — at 10^9 edges an un-truncated loop re-plans
-    the whole chain every pass) and the converged? signal rides on that
-    same job as an Observation instead of a second join+count
-    (VERDICT r03 'wrong' #3).
+    def find(x: int) -> int:
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(edges["a"].tolist(), edges["b"].tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    return pd.DataFrame({"node": nodes, "comp": [find(n) for n in nodes]},
+                        dtype="int64")
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(node, comp) with comp = the smallest node id in the node's
+    component, by one union-find over the whole edge list in a single
+    ``applyInPandas`` call on one constant group.
+
+    Entity-link components are tiny (a handful of sources per game), and
+    so is the edge list: 4,500 edges over 4,500 records at sf0.01.  The
+    trade-off is that one task holds every edge; in exchange building
+    the frame runs no Spark job, running it is one shuffle and one
+    Python call, and the labels are exact at any component diameter.
     """
-    from pyspark.sql import Observation
-
-    sym = edges.select("a", "b").union(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    return (
+        edges.select("a", "b")
+        # aliased: a bare integer literal is read as a GROUP BY ordinal
+        .groupBy(F.lit(0).alias("_group"))
+        .applyInPandas(_union_find, "node long, comp long")
     )
-    # The edge list is scanned by every iteration's join — truncate its
-    # lineage once so each pass starts from a materialized RDD.
-    sym = sym.localCheckpoint(eager=False)
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["b"] == labels["node"])
-            .groupBy(sym["a"].alias("node2"))
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        obs = Observation()
-        new_labels = (
-            labels.join(neighbor_min,
-                        labels["node"] == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))
-                ).alias("comp"),
-                (F.coalesce(F.col("ncomp"), F.col("comp"))
-                 < F.col("comp")).cast("long").alias("_chg"),
-            )
-            .observe(obs, F.sum("_chg").alias("changed"))
-            .select("node", "comp")
-            # eager: the ONE action per iteration — materializes the new
-            # labels (fixed-depth plan) and fills the observation.
-            .localCheckpoint()
-        )
-        labels = new_labels
-        if int(obs.get["changed"] or 0) == 0:
-            break
-    return labels
 
 
-def resolve_entities(
-    records: DataFrame,
-    rec_id: str = "rec_id",
-    name_col: str = "name",
-    year_col: str | None = "year",
-) -> DataFrame:
+def resolve_entities(records: DataFrame) -> DataFrame:
     """Full J5 pipeline → (rec_id, canonical_id).
 
     Records not linked to anything keep themselves as canonical
     (cluster.py:315-321 emits singleton clusters implicitly).
     """
-    edges = exact_id_edges(records, rec_id).unionByName(
-        fuzzy_name_edges(records, rec_id, name_col,
-                         year_col).select("a", "b")
+    edges = exact_id_edges(records).unionByName(
+        fuzzy_name_edges(records).select("a", "b")
     ).distinct()
     comps = connected_components(edges)
     return (
-        records.select(rec_id)
-        .join(comps, records[rec_id] == comps["node"], "left")
+        records.select("rec_id")
+        .join(comps, records["rec_id"] == comps["node"], "left")
         .select(
-            F.col(rec_id),
-            F.coalesce(F.col("comp"), F.col(rec_id)).alias("canonical_id"),
+            F.col("rec_id"),
+            F.coalesce(F.col("comp"), F.col("rec_id")).alias("canonical_id"),
         )
     )

@@ -90,19 +90,14 @@ def _hyperplane_weights(seed: int, p: int, dim: int) -> list[float]:
     ]
 
 
-def _width(vectors: DataFrame, vec_col: str) -> int:
-    """Vector width, probed from the first row (one small Spark job)."""
-    head = vectors.select(F.size(F.col(vec_col)).alias("d")).first()
-    return int(head["d"]) if head is not None else 0
-
-
 def hyperplane_buckets(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_planes: int = 8,
     seed: int = 42,
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """LSH bucketing by random-hyperplane signs: (id, vec, bucket).
 
@@ -112,20 +107,14 @@ def hyperplane_buckets(
     the plane dot, rounded to 6 decimals, is >= 0 — the rounding keeps
     float noise from flipping a bit in one engine only.
 
-    ``dim`` (vector width) is probed from the first row when not given;
-    vectors are assumed to share one width (true for every embedding
-    table in this repo).  Pass it to plan without running a job.
+    ``dim`` is the width every vector shares.  Each plane is one SQL
+    array literal: ``repr`` round-trips a double exactly, and the ``D``
+    suffix keeps Spark from reading ``0.123`` as a DECIMAL.
     """
-    if dim is None:
-        dim = _width(vectors, vec_col)
-    if dim <= 0:
-        # empty input: bucket column is never evaluated; keep the plan
-        # well-typed with a zero bucket
-        return vectors.select(F.col(id_col), F.col(vec_col),
-                              F.lit(0).cast("long").alias("bucket"))
     bucket = None
     for p in range(n_planes):
-        w = F.array(*[F.lit(v) for v in _hyperplane_weights(seed, p, dim)])
+        w = F.expr("array(" + ", ".join(
+            f"{v!r}D" for v in _hyperplane_weights(seed, p, dim)) + ")")
         bit = F.when(
             F.round(dot(F.col(vec_col), w), 6) >= 0, F.lit(1 << p)
         ).otherwise(F.lit(0))
@@ -141,7 +130,8 @@ def embedding_near_dup(
     threshold: float = 0.9,
     n_planes: int = 8,
     n_tables: int = 4,
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a, id_b, cosine rounded
     to 4 decimals) via multi-table hyperplane LSH (training-pipeline
@@ -161,11 +151,9 @@ def embedding_near_dup(
     for per-plane agreement p = 1 - angle/pi); misses are possible by
     design — raise ``n_tables`` / lower ``n_planes`` for higher recall.
     False positives never survive step 3.  ``dim`` as in
-    ``hyperplane_buckets`` (probed once when not given).
+    ``hyperplane_buckets``.
     """
     base = vectors.select(id_col, vec_col)
-    if dim is None:
-        dim = _width(base, vec_col)
     sigs = None
     for t in range(n_tables):
         bt = hyperplane_buckets(

@@ -474,8 +474,7 @@ def q_embedding_near_dup(spark, sf_dir):
     component +0.25) → 4-table × 8-plane hyperplane-LSH bucketing →
     candidate pairs by (table, bucket) → exact cosine verify >= 0.9.
     LSH recall < 1 by design: BOTH engines drop the same pairs, so the
-    comparison stays exact while the plan stays all-pairs-free.  The
-    64-dim width is passed, not probed, so planning runs no job."""
+    comparison stays exact while the plan stays all-pairs-free."""
     emb = _t(spark, sf_dir, "embeddings")
     e64 = F.col("embedding").cast("array<double>")
     base = emb.select("vec_id", e64.alias("emb")).unionByName(
@@ -746,7 +745,7 @@ def q_entity_resolution(spark, sf_dir):
         year.alias("year"),
     )
     records = a.unionByName(b).unionByName(c)
-    return resolve_entities(records, "rec_id", "name", "year")
+    return resolve_entities(records)
 
 
 def q_labels_resolve(spark, sf_dir):

@@ -23,6 +23,19 @@ def corpus_small():
     return synth.corpus(n_browse=5, n_users=10, n_other=5)
 
 
+def jobs_to_build(spark, group, build):
+    """Spark jobs run while ``build()`` constructs (not collects) a
+    DataFrame, counted under the job group ``group``; and the frame."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "build a frame")
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+
 def make_engine(spark, pages_pd, tmp, **kw):
     """A CrawlEngine over a pandas pages corpus, rooted at ``tmp``."""
     pages = spark.createDataFrame(pages_pd, schemas.PAGES)

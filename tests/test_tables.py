@@ -6,6 +6,7 @@ optimistic (CAS) manifest commits."""
 import os
 
 import pytest
+from conftest import jobs_to_build
 from pyspark.sql.types import (
     LongType, StringType, StructField, StructType,
 )
@@ -44,19 +45,6 @@ def _add_partitioned(t, rows, *cols):
 def _kinded_rows(i, n):
     return [(i * 10 + j, "page" if j % 2 == 0 else "game")
             for j in range(n)]
-
-
-def _jobs_to_build(spark, group, build):
-    """Spark jobs run while ``build()`` constructs (not collects) a
-    DataFrame, counted under the job group ``group``; and the frame."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "build a read")
-    try:
-        df = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), df
 
 
 def test_hive_read_plan_depth_constant_in_commit_count(spark, tmp_path):
@@ -136,14 +124,14 @@ def test_reads_build_without_spark_jobs(spark, tmp_path):
         flat.prepare_delta(deletes=spark.createDataFrame([(2,)], "k long")),
         delete_keys=["k"],
     )
-    jobs, df = _jobs_to_build(spark, "read-flat", flat.read)
+    jobs, df = jobs_to_build(spark, "read-flat", flat.read)
     assert jobs == 0
     assert sorted(r["k"] for r in df.collect()) == [1, 3]
 
     kinded = SnapshotTable(spark, tmp_path / "kinded", KINDED)
     for i in range(3):
         _add_partitioned(kinded, _kinded_rows(i, 4), "item_kind")
-    jobs, df = _jobs_to_build(spark, "read-kinded", kinded.read)
+    jobs, df = jobs_to_build(spark, "read-kinded", kinded.read)
     assert jobs == 0
     assert {r["k"]: r["item_kind"] for r in df.collect()} == {
         k: kind for i in range(3) for k, kind in _kinded_rows(i, 4)}

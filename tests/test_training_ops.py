@@ -171,9 +171,9 @@ def test_ivf_index_dirs_removed_at_exit(tmp_path):
 
 def test_hyperplane_buckets_deterministic(spark, vectors):
     a = {(r["vec_id"], r["bucket"])
-         for r in hyperplane_buckets(vectors).collect()}
+         for r in hyperplane_buckets(vectors, dim=4).collect()}
     b = {(r["vec_id"], r["bucket"])
-         for r in hyperplane_buckets(vectors).collect()}
+         for r in hyperplane_buckets(vectors, dim=4).collect()}
     assert a == b  # same planes every run (hash-derived, seeded)
     # equal vectors land in the same bucket
     dup = spark.createDataFrame(
@@ -182,7 +182,7 @@ def test_hyperplane_buckets_deterministic(spark, vectors):
         "vec_id long, embedding array<double>",
     )
     got = {r["vec_id"]: r["bucket"]
-           for r in hyperplane_buckets(dup).collect()}
+           for r in hyperplane_buckets(dup, dim=4).collect()}
     assert got[100] == got[200]
     assert got[100] != got[300]  # opposite vector flips every plane
 
@@ -246,7 +246,8 @@ def test_embedding_near_dup_finds_planted_pairs(spark):
         rows.append((i + 1000, [x + 0.01 * ((j % 3) - 1)
                                 for j, x in enumerate(v)]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = embedding_near_dup(df, threshold=0.98, n_planes=6, n_tables=6)
+    out = embedding_near_dup(df, threshold=0.98, n_planes=6, n_tables=6,
+                             dim=16)
     pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
     planted = {(i, i + 1000) for i in range(40)}
     found = pairs & planted
