@@ -194,26 +194,18 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def make_centroids(
-    vectors: DataFrame,
-    nlist: int = 8,
-    strat: str = "hash",
-) -> DataFrame:
-    """Deterministic coarse centroids: nlist seed vectors picked by
-    stratified sampling (``strat='hash'``: pmod(xxhash64(id), N) — the
-    production default, decorrelates from id assignment order;
-    ``strat='id'``: pmod(id, N) — SQL-expressible, used by the DuckDB
-    oracle), refined with one Lloyd mean step.
+def make_centroids(vectors: DataFrame, nlist: int = 8) -> DataFrame:
+    """Deterministic coarse centroids: nlist seed vectors, the smallest
+    ``vec_id`` of each stratum ``pmod(vec_id, nlist)`` (SQL-expressible,
+    so the DuckDB oracle rebuilds the same seeds), refined with one Lloyd
+    mean step.
 
     The mean is computed over 1e-6-quantized components (integer sums):
     float summation order differs between engines/partitionings, so an
     exact integer sum is the only way the centroid — and therefore the
     bucket assignment — is bit-reproducible.  Quantization error 1e-6 is
     noise for a coarse quantizer."""
-    if strat == "hash":
-        list_of = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(nlist))
-    else:
-        list_of = F.pmod(F.col("vec_id"), F.lit(nlist))
+    list_of = F.pmod(F.col("vec_id"), F.lit(nlist))
     seeds = (
         vectors.withColumn("list_id", list_of.cast("long"))
         .groupBy("list_id")

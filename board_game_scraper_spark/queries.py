@@ -6,6 +6,12 @@ parquet tables.  Every query exercises one operator family from
 SURVEY.md §2 (reference file:line in each docstring); together they are
 the engine's regression surface.
 
+Inputs: every table read goes through ``_t``, which pins the schema
+from the parquet footer (so building a plan runs no Spark job) and, given
+spread keys, hash-spreads the one-row-group scan to the session's
+parallelism.  The four parser-backed extractions map one Python row
+function over their source columns with ``_map_rows``.
+
 Column-name discipline: every computed column is aliased identically in
 the Spark plan and the SQL oracle (driver hashes values under sorted
 column names).
@@ -18,8 +24,10 @@ hash.
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .operators.dedup import (
     exact_dedup, lsh_bands, minhash_signatures, near_dup_pairs, shingles,
@@ -35,39 +43,44 @@ from .plans.frontier import batch_api_ids
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+def _t(spark: SparkSession, sf_dir: str, name: str, *spread: str) -> DataFrame:
+    """Table ``name`` of ``sf_dir`` as a query input.
 
+    The schema comes from the parquet footer, read on the driver, so
+    building a plan runs no Spark job (``prefer_timestamp_ntz`` matches
+    Spark's own inference: ``events.ts`` is ``timestamp_ntz``).
 
-def _par(df: DataFrame, *keys: str) -> DataFrame:
-    """Scale-adaptive scan spreading (guide §2.5, "input skew: one huge
-    unsplittable file ... repartition immediately after the read").
-
-    The sandbox testdata tables are single-file single-ROW-GROUP parquet
-    (verified with pyarrow: sf0.1 lineitem = 600k rows in 1 row group),
-    which Spark cannot split — so every operator between such a scan and
-    the first exchange runs as ONE task no matter how many cores the
-    session has.  For compute-dense pipelines (per-row md5/shingle HOFs,
-    embedding dot products, Python parse kernels) that serializes the
-    dominant cost: measured at 10x-sf0.1 stretch scale, the
-    near_dup_pairs signature stage is 19.1 s serial vs 2.3 s after a
-    hash repartition, minhash_band 2.6 s vs 0.4 s.
-
-    Only fires when the scan yields fewer partitions than the session's
-    parallelism — at real scale (many files / row groups) it is the
-    identity and adds NO shuffle.  The explicit numPartitions keeps AQE
-    from coalescing the tiny exchange back to one partition; hashing on
-    the table's unique key avoids round-robin's sort-before-repartition.
-    Row order changes, results do not (every consumer is a key
-    aggregation, equi-join, or row-wise projection; the oracle hash is
-    order-insensitive).  Applied only where per-row compute outweighs
-    one narrow-payload shuffle — NOT to plain scan+partial-agg queries
-    (lineitem_agg, dedup_exact ...), where shuffling full rows out of
-    the same serial scan would cost more than it distributes."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
+    ``spread`` keys hash-repartition the scan to the session's
+    parallelism.  Every supported table is one file with one row group,
+    which Spark scans as one task; queries with per-row compute (hashing,
+    shingles, Python kernels) spread it so that work is not serial.  The
+    repartition is unconditional: a row-group-count test would only cover
+    multi-row-group inputs, which no supported dataset has.  The explicit
+    count keeps AQE from coalescing the exchange back to one partition;
+    row order changes, results do not."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
+    df = spark.read.schema(schema).parquet(path)
+    if not spread:
         return df
-    return df.repartition(n, *[F.col(k) for k in keys])
+    return df.repartition(spark.sparkContext.defaultParallelism, *spread)
+
+
+def _map_rows(src: DataFrame, row, schema: str) -> DataFrame:
+    """``row(*values)`` over each row of ``src``'s columns, in Arrow
+    batches (``mapInPandas``); a ``None`` result drops the row, a tuple
+    is one output row of the DDL ``schema``."""
+    cols = [f.split()[0] for f in schema.split(",")]
+
+    def _kernel(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            out = map(row, *(pdf[c] for c in pdf.columns))
+            yield pd.DataFrame([r for r in out if r is not None],
+                               columns=cols)
+
+    return src.mapInPandas(_kernel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -268,7 +281,7 @@ def q_archive_date(spark, sf_dir):
 def q_clean_text(spark, sf_dir):
     """normalize-space cleanup (C7 JVM-side tail + C10 _remove_empty,
     merge.py:81-93): collapse whitespace, NULL when empty."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     cleaned = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
     return docs.select(
         "doc_id",
@@ -298,7 +311,7 @@ def q_pagination(spark, sf_dir):
 def q_prefix_count(spark, sf_dir):
     """Adaptive prefix counting (A2, prefixes.py:53-68): counts per
     sanitized 2-char key prefix ([^a-z] → '_', prefixes.py:27-30)."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     key = F.regexp_replace(F.lower(F.col("text")), "[^a-z]", "_")
     return docs.groupBy(F.substring(key, 1, 2).alias("prefix")).agg(
         F.count(F.lit(1)).alias("n")
@@ -311,7 +324,7 @@ def q_prefix_count(spark, sf_dir):
 
 def q_token_count(spark, sf_dir):
     """Token counting over documents (whitespace tokenizer)."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     toks = F.split(F.trim(F.col("text")), r"\s+")
     return docs.select(
         "doc_id",
@@ -322,7 +335,7 @@ def q_token_count(spark, sf_dir):
 
 def q_quality_score(spark, sf_dir):
     """Document quality scoring: stopword ratio + mean token length."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     # materialize the split once — inline, each of the 5 references below
     # would re-run the regex split per row (guide §1.2: per-task work)
     tdf = docs.select(
@@ -346,7 +359,7 @@ def q_quality_score(spark, sf_dir):
 def q_minhash_band(spark, sf_dir):
     """MinHash near-dup bucketing: 3-word shingles → md5 → min per doc;
     docs sharing a band value are near-dup candidates."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     return shingles(docs, "doc_id", "text").select(
         "doc_id", F.array_min(F.transform("sh", F.md5)).alias("minhash")
     )
@@ -436,7 +449,7 @@ def q_join_agg(spark, sf_dir):
 
 def q_simhash(spark, sf_dir):
     """16-bit SimHash fingerprint (training-pipeline near-dup op)."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     return simhash(docs, "doc_id", "text", bits=16)
 
 
@@ -444,7 +457,7 @@ def q_minhash_lsh_bands(spark, sf_dir):
     """MinHash-LSH banding: 8-perm signature → 2 bands of 4 → band key.
     Docs sharing a band_key are near-dup candidates, found by grouping
     (the only shape that survives 10^10 docs)."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     sigs = minhash_signatures(docs, "doc_id", "text", num_perm=8)
     return lsh_bands(sigs, "doc_id", bands=2, rows_per_band=4)
 
@@ -452,7 +465,7 @@ def q_minhash_lsh_bands(spark, sf_dir):
 def _docs_with_near_dups(spark, sf_dir):
     """documents ∪ mutated copies (first token dropped, doc_id+100000) —
     deterministic near-duplicates for pair detection."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id").select("doc_id", "text")
+    docs = _t(spark, sf_dir, "documents", "doc_id").select("doc_id", "text")
     mutated = docs.select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.regexp_replace(F.trim(F.col("text")), r"^\S+\s+", "").alias("text"),
@@ -492,7 +505,7 @@ def q_embedding_near_dup(spark, sf_dir):
 def q_fingerprint(spark, sf_dir):
     """Winnowing-style document fingerprint: 4 smallest shingle hashes
     combined into one md5 (rolling-hash min-sketch)."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     return fingerprint(docs, "doc_id", "text")
 
 
@@ -503,7 +516,7 @@ def q_fingerprint(spark, sf_dir):
 def q_language_id(spark, sf_dir):
     """Language ID by stopword-profile hits; deterministic tie-break by
     profile order en > de > fr > es."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     return language_id(docs, "doc_id", "text").select(
         "doc_id", F.col("lang").alias("lang_pred"), "lang_score"
     )
@@ -511,14 +524,14 @@ def q_language_id(spark, sf_dir):
 
 def q_bpe_token_count(spark, sf_dir):
     """BPE-ish regex token count (letters / digits / punct runs)."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     return token_count(docs, "doc_id", "text")
 
 
 def q_quality_full(spark, sf_dir):
     """Composite quality score: length / stopword / distinct /
     punctuation components (pre-training quality gate)."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     return quality_score(docs, "doc_id", "text").select(
         "doc_id", "n_tokens", F.col("stopword_ratio").alias("stop_ratio"),
         "distinct_ratio", "quality",
@@ -528,7 +541,7 @@ def q_quality_full(spark, sf_dir):
 def q_array_except_stopwords(spark, sf_dir):
     """Per-row set difference (U3, luding.py:91 link-except shape):
     first 5 sorted distinct non-stopword tokens."""
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     toks = tokens_col(F.col("text"))
     stops = F.array(*[F.lit(w) for w in LANG_PROFILES["en"]])
     kept = F.slice(F.array_sort(F.array_except(toks, stops)), 1, 5)
@@ -593,7 +606,7 @@ def q_rankings_extract(spark, sf_dir):
     oracle recomputes the planted ground truth directly."""
     from .plans.parse import parse_bgg_rankings
 
-    part = _par(_t(spark, sf_dir, "part"), "p_partkey")
+    part = _t(spark, sf_dir, "part", "p_partkey")
     pk = F.col("p_partkey")
     rank_s = (pk % 997 + 1).cast("string")
     bayes_s = F.concat(
@@ -609,29 +622,16 @@ def q_rankings_extract(spark, sf_dir):
         F.lit("</a></td><td>"), bayes_s,
         F.lit("</td></tr></table></div></body></html>"),
     )
-    src = part.select("p_partkey", body.alias("body"))
 
-    def _kernel(batches):
-        import pandas as pd
+    def _row(k, b):
+        games = parse_bgg_rankings(
+            "https://boardgamegeek.com/rankbrowse.php3", b)["games"]
+        if games:
+            g = games[0]
+            return int(k), g["bgg_id"], g["rank"], g["name"], g["bayes_rating"]
 
-        for pdf in batches:
-            rows = []
-            for k, b in zip(pdf["p_partkey"], pdf["body"]):
-                games = parse_bgg_rankings(
-                    "https://boardgamegeek.com/rankbrowse.php3", b
-                )["games"]
-                if games:
-                    g = games[0]
-                    rows.append((int(k), g["bgg_id"], g["rank"], g["name"],
-                                 g["bayes_rating"]))
-            yield pd.DataFrame(
-                rows,
-                columns=["p_partkey", "bgg_id", "rank", "name",
-                         "bayes_rating"],
-            )
-
-    return src.mapInPandas(
-        _kernel,
+    return _map_rows(
+        part.select("p_partkey", body.alias("body")), _row,
         "p_partkey long, bgg_id long, rank int, name string, "
         "bayes_rating double",
     )
@@ -643,7 +643,7 @@ def q_geeklist_extract(spark, sf_dir):
     parsed by the real parser; oracle recomputes ground truth."""
     from .plans.parse import parse_bgg_geeklist
 
-    cust = _par(_t(spark, sf_dir, "customer"), "c_custkey")
+    cust = _t(spark, sf_dir, "customer", "c_custkey")
     ck = F.col("c_custkey")
     gid = F.when(ck % 100 == 0, F.lit(197551)).otherwise(ck).cast("string")
     rank_s = (ck % 500 + 1).cast("string")
@@ -654,26 +654,17 @@ def q_geeklist_extract(spark, sf_dir):
         F.lit('<a href="/boardgame/'), gid, F.lit('/g">Game '), gid,
         F.lit("</a></div></div></body></html>"),
     )
-    src = cust.select("c_custkey", body.alias("body"))
 
-    def _kernel(batches):
-        import pandas as pd
+    def _row(k, b):
+        games = parse_bgg_geeklist(
+            "https://boardgamegeek.com/geeklist/1/x", b)["games"]
+        if games:
+            g = games[0]
+            return int(k), g["bgg_id"], g["rank"], g["name"]
 
-        for pdf in batches:
-            rows = []
-            for k, b in zip(pdf["c_custkey"], pdf["body"]):
-                games = parse_bgg_geeklist(
-                    "https://boardgamegeek.com/geeklist/1/x", b
-                )["games"]
-                if games:
-                    g = games[0]
-                    rows.append((int(k), g["bgg_id"], g["rank"], g["name"]))
-            yield pd.DataFrame(
-                rows, columns=["c_custkey", "bgg_id", "rank", "name"]
-            )
-
-    return src.mapInPandas(
-        _kernel, "c_custkey long, bgg_id long, rank int, name string"
+    return _map_rows(
+        cust.select("c_custkey", body.alias("body")), _row,
+        "c_custkey long, bgg_id long, rank int, name string",
     )
 
 
@@ -685,31 +676,16 @@ def q_dbpedia_extract(spark, sf_dir):
     from .plans.parse import parse_dbpedia_game
     from .synth import dbpedia_game_body
 
-    cust = _par(_t(spark, sf_dir, "customer"), "c_custkey")
-    src = cust.select("c_custkey")
+    cust = _t(spark, sf_dir, "customer", "c_custkey")
 
-    def _kernel(batches):
-        import pandas as pd
+    def _row(k):
+        k = int(k)
+        g = parse_dbpedia_game(f"dbp://{k}", dbpedia_game_body(k))["games"][0]
+        return (k, g["bgg_id"], g["name"], g["year"], g["designer"][0],
+                g["publisher"][0], g["min_players"], g["min_age"])
 
-        for pdf in batches:
-            rows = []
-            for k in pdf["c_custkey"]:
-                k = int(k)
-                g = parse_dbpedia_game(
-                    f"dbp://{k}", dbpedia_game_body(k)
-                )["games"][0]
-                rows.append((k, g["bgg_id"], g["name"], g["year"],
-                             g["designer"][0], g["publisher"][0],
-                             g["min_players"], g["min_age"]))
-            yield pd.DataFrame(
-                rows,
-                columns=["c_custkey", "bgg_id", "name", "year",
-                         "designer", "publisher", "min_players",
-                         "min_age"],
-            )
-
-    return src.mapInPandas(
-        _kernel,
+    return _map_rows(
+        cust.select("c_custkey"), _row,
         "c_custkey long, bgg_id long, name string, year int, "
         "designer string, publisher string, min_players int, min_age int",
     )
@@ -798,7 +774,7 @@ def q_ann_ivf_topk(spark, sf_dir):
         F.col("embedding").alias("qvec")
     )
     vectors = emb.where(F.col("vec_id") != 0)
-    centroids = make_centroids(vectors, nlist=4, strat="id")
+    centroids = make_centroids(vectors, nlist=4)
     return ivf_topk(vectors, query, centroids, k=10, nprobe=2)
 
 
@@ -809,7 +785,7 @@ def q_hotness_extract(spark, sf_dir):
     the oracle recomputes the planted ground truth directly."""
     from .plans.parse import parse_hotness
 
-    part = _par(_t(spark, sf_dir, "part"), "p_partkey")
+    part = _t(spark, sf_dir, "part", "p_partkey")
     pk = F.col("p_partkey")
     gid_s = (pk + 1).cast("string")
     rank_s = (pk % 50 + 1).cast("string")
@@ -820,30 +796,17 @@ def q_hotness_extract(spark, sf_dir):
         F.lit('"/><thumbnail value="https://cf.geekdo-images.com/thumb/'),
         gid_s, F.lit('.jpg"/></item></items>'),
     )
-    src = part.select("p_partkey", body.alias("body"))
 
-    def _kernel(batches):
-        import pandas as pd
+    def _row(k, b):
+        d = parse_hotness(
+            "https://boardgamegeek.com/xmlapi2/hot?type=boardgame", b)
+        if d["games"]:
+            g = d["games"][0]
+            return (int(k), g["bgg_id"], g["rank"], g["name"],
+                    g["image_url"][0], len(d["spans"]))
 
-        for pdf in batches:
-            rows = []
-            for k, b in zip(pdf["p_partkey"], pdf["body"]):
-                d = parse_hotness(
-                    "https://boardgamegeek.com/xmlapi2/hot?type=boardgame",
-                    b,
-                )
-                if d["games"]:
-                    g = d["games"][0]
-                    rows.append((int(k), g["bgg_id"], g["rank"], g["name"],
-                                 g["image_url"][0], len(d["spans"])))
-            yield pd.DataFrame(
-                rows,
-                columns=["p_partkey", "bgg_id", "rank", "name", "thumb",
-                         "n_spans"],
-            )
-
-    return src.mapInPandas(
-        _kernel,
+    return _map_rows(
+        part.select("p_partkey", body.alias("body")), _row,
         "p_partkey long, bgg_id long, rank int, name string, "
         "thumb string, n_spans int",
     )
@@ -854,7 +817,7 @@ def q_media_features(spark, sf_dir):
     (deterministic fake decoder standing in for image codecs)."""
     from .functions.media import extract_features
 
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = _t(spark, sf_dir, "documents", "doc_id")
     media = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.concat(F.lit("img://"), F.col("doc_id").cast("string")).alias(

@@ -73,12 +73,6 @@ def get_spark(
     the local core count so small-scale runs don't schedule 200 empty
     tasks; on a cluster pass ~2-3x total cores.
     """
-    # glibc malloc creates up to 8*ncores arenas under thread/process
-    # churn; with 32 cores the Python workers' allocator traffic turns
-    # into a kernel-time storm (measured 2.3x slowdown of the parse
-    # stage).  Two arenas per worker is plenty for Arrow batch work.
-    os.environ.setdefault("MALLOC_ARENA_MAX", "2")
-
     master = master or os.getenv("SPARK_MASTER")
     if not master:
         cpus = os.getenv("SPARK_GRAFT_CPUS", "*")
@@ -93,8 +87,6 @@ def get_spark(
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
-    conf.setdefault("spark.executorEnv.MALLOC_ARENA_MAX",
-                    os.environ["MALLOC_ARENA_MAX"])
     # Local mode runs everything in the driver JVM: the 1g default heap
     # collapses under 32 concurrent tasks (GC-bound, 32 cores slower
     # than 8).  Reference uses 16G (merge.py:38-48).  The heap is half

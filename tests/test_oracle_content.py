@@ -1,7 +1,8 @@
 """Every query in ``queries.QUERIES`` matches its DuckDB oracle SQL
 hash-exactly on the in-repo sf0.01 dataset (the same row-count / column /
-value-hash comparison as tools/check_oracle.py); and ``queries._par``
-scan spreading leaves query results unchanged."""
+value-hash comparison as tools/check_oracle.py); building a query plan
+runs no Spark job; and ``queries._t``'s scan spreading leaves query
+results unchanged."""
 
 import importlib.util
 from pathlib import Path
@@ -11,6 +12,7 @@ import pytest
 duckdb = pytest.importorskip("duckdb")
 
 from board_game_scraper_spark.queries import ORACLES, QUERIES  # noqa: E402
+from conftest import jobs_to_build  # noqa: E402
 
 ROOT = Path(__file__).resolve().parent.parent
 DATA = ROOT / "perfbench" / "data" / "sf0.01"
@@ -40,28 +42,44 @@ def test_content_query_matches_duckdb_oracle(spark, con, name):
             == check_oracle.value_hash(want)), name
 
 
+def test_query_plans_build_without_spark_jobs(spark):
+    """``_t`` pins each table's schema from the parquet footer, so every
+    query plan builds with no Spark job, except ``ann_ivf_topk``, whose
+    plan builds the IVF index it probes; the pinned schema is the one
+    Spark infers (``events.ts`` stays ``timestamp_ntz``)."""
+    import board_game_scraper_spark.queries as q
+
+    sf = str(DATA)
+    jobs = {name: jobs_to_build(spark, f"plan-{name}",
+                                lambda fn=fn: fn(spark, sf))[0]
+            for name, fn in QUERIES.items() if name != "ann_ivf_topk"}
+    assert len(jobs) == 41
+    assert {k: v for k, v in jobs.items() if v} == {}
+    for path in sorted(DATA.glob("*.parquet")):
+        assert (q._t(spark, sf, path.stem).schema
+                == spark.read.parquet(str(path)).schema), path.name
+
+
 def test_par_spreads_unsplittable_scan_and_keeps_results(spark, monkeypatch):
-    """Round-7 _par (guide §2.5 one-huge-unsplittable-file): single-file
-    single-row-group scans are hash-spread to the session's parallelism,
-    results bit-identical with and without, and _par is the identity when
-    the input already has enough partitions (no shuffle added at scale)."""
+    """``_t``'s spread keys hash-spread a single-file single-row-group
+    scan (guide §2.5 one-huge-unsplittable-file) to the session's
+    parallelism, and query results are identical with the spread off."""
     import board_game_scraper_spark.queries as q
 
     sf = str(DATA)  # every table is a single row group
-    docs = q._t(spark, sf, "documents")
     n = spark.sparkContext.defaultParallelism
-    assert docs.rdd.getNumPartitions() < n  # the premise: unsplittable
-    spread = q._par(docs, "doc_id")
+    assert q._t(spark, sf, "documents").rdd.getNumPartitions() < n
+    spread = q._t(spark, sf, "documents", "doc_id")
     assert spread.rdd.getNumPartitions() == n
-    # identity when already parallel enough: no second exchange on top
-    assert q._par(spread, "doc_id") is spread
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    with_par = {name: rows(q.QUERIES[name](spark, sf))
-                for name in ("minhash_band", "near_dup_pairs",
-                             "language_id", "rankings_extract")}
-    monkeypatch.setattr(q, "_par", lambda df, *k: df)
-    for name, expect in with_par.items():
+    spread_rows = {name: rows(q.QUERIES[name](spark, sf))
+                   for name in ("minhash_band", "near_dup_pairs",
+                                "language_id", "rankings_extract")}
+    t = q._t
+    monkeypatch.setattr(
+        q, "_t", lambda spark, sf_dir, name, *keys: t(spark, sf_dir, name))
+    for name, expect in spread_rows.items():
         assert rows(q.QUERIES[name](spark, sf)) == expect, name
