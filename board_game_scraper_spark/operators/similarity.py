@@ -22,10 +22,11 @@ the near-dup path:
                           Each index is written to its own dir under one
                           per-process temp root, removed at exit.
 
-The oracle-checked queries in ``queries.py`` call these operators.
-Centroids here come from a deterministic sample + one Lloyd iteration —
-enough to validate the bucketing plumbing; on a real corpus you'd feed
-trained centroids.
+The hyperplanes and the centroids are computed once on the driver and
+enter the plan as one SQL array literal each (``_matrix``), so a row's
+work is one ``transform`` over it, with no join and no union.
+Centroids come from a deterministic sample + one Lloyd iteration; on a
+real corpus you'd feed trained centroids.
 """
 
 from __future__ import annotations
@@ -58,6 +59,17 @@ def cosine(a, b):
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _matrix(rows, elem: str):
+    """The vectors ``rows`` as one ``array<array<elem>>`` literal: ``repr``
+    round-trips a double exactly, and the ``D`` suffix keeps Spark from
+    reading ``0.123`` as a DECIMAL; narrowing to ``float`` is exact for
+    values collected from a float column."""
+    return F.expr(
+        "CAST(array(" + ", ".join(
+            "array(" + ", ".join(f"{v!r}D" for v in row) + ")"
+            for row in rows) + f") AS array<array<{elem}>>)")
+
+
 def cosine_topk(vectors: DataFrame, query: DataFrame,
                 k: int = 10) -> DataFrame:
     """Exact top-k by cosine (rounded to 4 decimals) against a single
@@ -76,15 +88,15 @@ def cosine_topk(vectors: DataFrame, query: DataFrame,
     )
 
 
-def _hyperplane_weights(seed: int, p: int, dim: int) -> list[float]:
-    """Plane ``p`` of table ``seed``: weight d is the low 60 bits of
-    md5("seed:p:d") mapped to [-1, 1] in steps of 0.001 — the same
-    bytes and arithmetic the DuckDB oracle evaluates, so both engines
-    get identical doubles.  Folded here in Python: the weights are
+def _hyperplane_weights(t: int, p: int, dim: int) -> list[float]:
+    """Plane ``p`` of table ``t``: weight d is the low 60 bits of
+    md5("t:p:d") mapped to [-1, 1] in steps of 0.001 — the same bytes
+    and arithmetic the DuckDB oracle evaluates, so both engines get
+    identical doubles.  Folded here in Python: the weights are
     constants, and Catalyst does not constant-fold through HOF lambdas
     (an inline formulation re-hashed n_planes*dim md5s per row)."""
     return [
-        (int(hashlib.md5(f"{seed}:{p}:{d}".encode()).hexdigest()[:15], 16)
+        (int(hashlib.md5(f"{t}:{p}:{d}".encode()).hexdigest()[:15], 16)
          % 2001 - 1000) / 1000.0
         for d in range(dim)
     ]
@@ -95,32 +107,34 @@ def hyperplane_buckets(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_planes: int = 8,
-    seed: int = 42,
+    n_tables: int = 4,
     *,
     dim: int,
 ) -> DataFrame:
-    """LSH bucketing by random-hyperplane signs: (id, vec, bucket).
-
-    Hyperplanes are pseudo-random but deterministic
-    (``_hyperplane_weights``), inlined as literal arrays, so the
-    per-row work is just the n_planes dot products.  Bit p is set iff
-    the plane dot, rounded to 6 decimals, is >= 0 — the rounding keeps
-    float noise from flipping a bit in one engine only.
-
-    ``dim`` is the width every vector shares.  Each plane is one SQL
-    array literal: ``repr`` round-trips a double exactly, and the ``D``
-    suffix keeps Spark from reading ``0.123`` as a DECIMAL.
+    """LSH bucketing by random-hyperplane signs: one ``(id, t, bucket)``
+    row per vector and table ``t``.  All planes (``_hyperplane_weights``)
+    form one ``tables × planes × dim`` literal, and every table's bucket
+    comes from one ``transform``.  Bit p is set iff the plane dot,
+    rounded to 6 decimals, is >= 0 — the rounding keeps float noise from
+    flipping a bit in one engine only.  ``dim``: every vector's width.
     """
-    bucket = None
-    for p in range(n_planes):
-        w = F.expr("array(" + ", ".join(
-            f"{v!r}D" for v in _hyperplane_weights(seed, p, dim)) + ")")
-        bit = F.when(
-            F.round(dot(F.col(vec_col), w), 6) >= 0, F.lit(1 << p)
-        ).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return vectors.select(F.col(id_col), F.col(vec_col),
-                          bucket.cast("long").alias("bucket"))
+    planes = F.array(*[
+        _matrix([_hyperplane_weights(t, p, dim) for p in range(n_planes)],
+                "double")
+        for t in range(n_tables)
+    ])
+    one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
+
+    def bucket(table):
+        bits = F.transform(table, lambda w, p: F.when(
+            F.round(dot(F.col(vec_col), w), 6) >= 0,
+            F.call_function("shiftleft", one, p)).otherwise(zero))
+        return F.aggregate(bits, zero, lambda acc, b: acc + b)
+
+    return vectors.select(
+        F.col(id_col),
+        F.posexplode(F.transform(planes, bucket)).alias("t", "bucket"),
+    )
 
 
 def embedding_near_dup(
@@ -141,7 +155,7 @@ def embedding_near_dup(
 
     1. each of ``n_tables`` independent hyperplane tables t assigns
        every vector an ``n_planes``-bit sign bucket
-       (``hyperplane_buckets`` with seed t);
+       (``hyperplane_buckets``, all tables in one pass);
     2. candidate pairs = ids sharing a (table, bucket), by grouping
        (``dedup.bucket_pairs`` — the same shape as MinHash-LSH, never a
        cartesian);
@@ -154,12 +168,8 @@ def embedding_near_dup(
     ``hyperplane_buckets``.
     """
     base = vectors.select(id_col, vec_col)
-    sigs = None
-    for t in range(n_tables):
-        bt = hyperplane_buckets(
-            base, id_col, vec_col, n_planes=n_planes, seed=t, dim=dim,
-        ).select(id_col, F.lit(t).alias("t"), "bucket")
-        sigs = bt if sigs is None else sigs.unionByName(bt)
+    sigs = hyperplane_buckets(base, id_col, vec_col, n_planes, n_tables,
+                              dim=dim)
     va = base.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
     vb = base.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
     cos = F.round(cosine(F.col("va"), F.col("vb")), 4)
@@ -175,74 +185,69 @@ def embedding_near_dup(
     )
 
 
-def ivf_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Assign each vector to its nearest centroid (broadcast join +
-    max_by over cosine) → (id, vec, list_id).  The write side of an IVF
-    index; persist partitioned by list_id for partition-pruned probes."""
-    joined = vectors.crossJoin(F.broadcast(centroids))
-    sim = F.round(cosine(F.col("embedding"), F.col("cvec")), 9)
-    # tie-break on list_id so assignment is total-ordered (needed for the
-    # cross-engine oracle and for idempotent re-assignment)
-    return (
-        joined.groupBy("vec_id")
+def ivf_assign(vec, centroids, elem: str):
+    """The ``list_id`` of the centroid nearest vector column ``vec`` by
+    cosine rounded to 9 decimals, one column over the driver-held
+    ``centroids`` ``[(list_id, vector), …]`` (a ``_matrix`` of ``elem``):
+    no join, no groupBy.  Ties go to the larger list_id (``array_max``
+    over ``(sim, list_id)``), so assignment is total-ordered, as the
+    cross-engine oracle (``list_id DESC``) and re-assignment need."""
+    sims = F.zip_with(
+        _matrix([c for _, c in centroids], elem),
+        F.array(*[F.lit(i).cast("long") for i, _ in centroids]),
+        lambda c, i: F.named_struct(
+            F.lit("sim"), F.round(cosine(vec, c), 9), F.lit("list_id"), i))
+    return F.array_max(sims)["list_id"]
+
+
+def make_centroids(vectors: DataFrame, nlist: int = 8) -> list:
+    """Deterministic coarse centroids ``[(list_id, vector), …]``, held on
+    the driver: nlist seed vectors, the smallest ``vec_id`` of each
+    stratum ``pmod(vec_id, nlist)`` (SQL-expressible, so the DuckDB
+    oracle rebuilds the same seeds), refined with one Lloyd mean step.
+    Seeds keep the embeddings' element type, so the seed assignment
+    multiplies in the oracle's precision.  The mean is computed over
+    1e-6-quantized components (integer sums): float summation order
+    differs between engines/partitionings, so an exact integer sum is
+    the only way the centroid — and therefore the bucket assignment — is
+    bit-reproducible.  Quantization error 1e-6 is noise for a coarse
+    quantizer."""
+    elem = vectors.schema["embedding"].dataType.elementType.simpleString()
+    seeds = sorted(map(tuple, vectors.groupBy(
+        F.pmod(F.col("vec_id"), F.lit(nlist)).cast("long")
+    ).agg(F.min_by(F.col("embedding"), F.col("vec_id"))).collect()))
+    # one Lloyd step: element-wise quantized mean per list.  Assign
+    # before the explode: a column selected beside posexplode is
+    # evaluated once per generated row, not once per vector.
+    cells = (
+        vectors.select(
+            ivf_assign(F.col("embedding"), seeds, elem).alias("list_id"),
+            "embedding",
+        )
+        .select("list_id", F.posexplode("embedding").alias("pos", "v"))
+        .groupBy("list_id", "pos")
         .agg(
-            F.max_by(F.col("list_id"),
-                     F.struct(sim.alias("s"),
-                              F.col("list_id").alias("l"))).alias("list_id"),
-            F.first("embedding").alias("embedding"),
+            F.sum(F.floor(F.col("v").cast("double") * 1e6).cast("long"))
+            / F.count(F.lit(1)) / F.lit(1e6)
         )
+        .collect()
     )
+    means: dict[int, list[float]] = {}
+    for list_id, _, m in sorted(cells):
+        means.setdefault(list_id, []).append(m)
+    return list(means.items())
 
 
-def make_centroids(vectors: DataFrame, nlist: int = 8) -> DataFrame:
-    """Deterministic coarse centroids: nlist seed vectors, the smallest
-    ``vec_id`` of each stratum ``pmod(vec_id, nlist)`` (SQL-expressible,
-    so the DuckDB oracle rebuilds the same seeds), refined with one Lloyd
-    mean step.
-
-    The mean is computed over 1e-6-quantized components (integer sums):
-    float summation order differs between engines/partitionings, so an
-    exact integer sum is the only way the centroid — and therefore the
-    bucket assignment — is bit-reproducible.  Quantization error 1e-6 is
-    noise for a coarse quantizer."""
-    list_of = F.pmod(F.col("vec_id"), F.lit(nlist))
-    seeds = (
-        vectors.withColumn("list_id", list_of.cast("long"))
-        .groupBy("list_id")
-        .agg(F.min_by(F.col("embedding"), F.col("vec_id")).alias("cvec"))
-    )
-    assigned = ivf_assign(vectors, seeds)
-    # one Lloyd step: element-wise quantized mean per list
-    exploded = assigned.select(
-        "list_id", F.posexplode("embedding").alias("pos", "v")
-    )
-    means = (
-        exploded.groupBy("list_id", "pos")
-        .agg(
-            (
-                F.sum(F.floor(F.col("v").cast("double") * 1e6).cast("long"))
-                / F.count(F.lit(1)) / F.lit(1e6)
-            ).alias("m")
-        )
-        .groupBy("list_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select(
-            "list_id",
-            F.transform(F.col("pm"), lambda s: s["m"]).alias("cvec"),
-        )
-    )
-    return means
-
-
-def ivf_build(vectors: DataFrame, centroids: DataFrame, path) -> str:
-    """Build + PERSIST the IVF index: one assignment pass over the
-    corpus, written ``partitionBy(list_id)``.  This is the write side;
-    ``ivf_topk_indexed`` then reads only the probed partitions.  At
-    10^10 vectors the corpus is assigned exactly once — queries never
-    re-scan or re-assign it (VERDICT r02 "what's wrong" #2)."""
-    assigned = ivf_assign(vectors, centroids)
+def ivf_build(vectors: DataFrame, centroids: list, path) -> str:
+    """Build + PERSIST the IVF index: one shuffle-free assignment pass
+    over the corpus, written ``partitionBy(list_id)``; queries
+    (``ivf_topk_indexed``) read only the probed partitions."""
     (
-        assigned.select("vec_id", "embedding", "list_id")
+        vectors.select(
+            "vec_id", "embedding",
+            ivf_assign(F.col("embedding"), centroids, "double")
+            .alias("list_id"),
+        )
         .write.mode("overwrite")
         .partitionBy("list_id")
         .parquet(str(path))
@@ -250,28 +255,25 @@ def ivf_build(vectors: DataFrame, centroids: DataFrame, path) -> str:
     return str(path)
 
 
-def probe_lists(query: DataFrame, centroids: DataFrame,
+def probe_lists(query: DataFrame, centroids: list,
                 nprobe: int = 2) -> list[int]:
-    """The nprobe list ids nearest the query — resolved driver-side
-    (nlist rows, a per-query planning decision, like FAISS's coarse
-    quantizer probe)."""
-    rows = (
-        centroids.crossJoin(F.broadcast(query))
-        .select("list_id",
-                F.round(cosine(F.col("cvec"), F.col("qvec")), 9)
-                .alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col("list_id").asc())
-        .limit(nprobe)
-        .collect()
-    )
-    return [int(r["list_id"]) for r in rows]
+    """The nprobe list ids nearest the query — resolved driver-side, like
+    FAISS's coarse quantizer probe: one collect of the query's nlist
+    similarities, ranked by (similarity desc, list_id asc)."""
+    sims = query.select(F.transform(
+        _matrix([c for _, c in centroids], "double"),
+        lambda c: F.round(cosine(c, F.col("qvec")), 9),
+    )).first()[0]
+    ranked = sorted(zip(sims, (i for i, _ in centroids)),
+                    key=lambda s: (-s[0], s[1]))
+    return [i for _, i in ranked[:nprobe]]
 
 
 def ivf_topk_indexed(
     spark,
     index_path,
     query: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     k: int = 10,
     nprobe: int = 2,
 ) -> DataFrame:
@@ -299,20 +301,17 @@ def _index_root() -> str:
 def ivf_topk(
     vectors: DataFrame,
     query: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     k: int = 10,
     nprobe: int = 2,
 ) -> DataFrame:
     """ANN top-k convenience wrapper: builds the persisted IVF index in
     a fresh dir under ``_index_root()`` and probes it via
     ``ivf_topk_indexed``.  Fresh per call: a fixed shared path raced when
-    two harness processes ran the ANN query concurrently on same-named
-    datasets (one overwrites while the other's lazy scan reads — ADVICE
-    r03).  There is deliberately NO inline (per-query re-assignment)
-    variant — it was an O(corpus·nlist)-per-query scale trap one import
-    away from the correct path (VERDICT r03 'wrong' #4).  Callers issuing
+    two processes ran the ANN query concurrently on same-named datasets
+    (one overwrites while the other's lazy scan reads).  Callers issuing
     more than one query should ``ivf_build`` once themselves and probe
-    the index per query."""
+    the index per query, rather than re-assign the corpus each time."""
     path = tempfile.mkdtemp(prefix="index_", dir=_index_root())
     ivf_build(vectors, centroids, path)
     return ivf_topk_indexed(

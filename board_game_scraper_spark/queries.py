@@ -761,12 +761,10 @@ def q_ann_ivf_topk(spark, sf_dir):
     """IVF-bucketed approximate nearest neighbors (scale path of the
     similarity-search family; centroid quantizer + nprobe pruning).
     Oracle-checked end-to-end: id-stratified seeds + quantized Lloyd
-    means make the whole index build reproducible in DuckDB.
-
-    Production shape (VERDICT r02 #3): the index is BUILT once
-    (``ivf_build`` → parquet partitioned by list_id) and the query is a
-    partition-pruned scan of the 2 probed lists + exact rerank — the
-    corpus is never re-assigned per query."""
+    means make the whole index build reproducible in DuckDB.  The index
+    is built once (``ivf_build`` → parquet partitioned by list_id) and
+    the query is a partition-pruned scan of the 2 probed lists + exact
+    rerank."""
     from .operators.similarity import make_centroids
 
     emb = _t(spark, sf_dir, "embeddings")

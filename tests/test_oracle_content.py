@@ -45,15 +45,18 @@ def test_content_query_matches_duckdb_oracle(spark, con, name):
 def test_query_plans_build_without_spark_jobs(spark):
     """``_t`` pins each table's schema from the parquet footer, so every
     query plan builds with no Spark job, except ``ann_ivf_topk``, whose
-    plan builds the IVF index it probes; the pinned schema is the one
+    plan builds the IVF index it probes: two collects for the
+    driver-held centroids, one shuffle-free index write and one collect
+    for the probed lists, at most 8 jobs; the pinned schema is the one
     Spark infers (``events.ts`` stays ``timestamp_ntz``)."""
     import board_game_scraper_spark.queries as q
 
     sf = str(DATA)
     jobs = {name: jobs_to_build(spark, f"plan-{name}",
                                 lambda fn=fn: fn(spark, sf))[0]
-            for name, fn in QUERIES.items() if name != "ann_ivf_topk"}
-    assert len(jobs) == 41
+            for name, fn in QUERIES.items()}
+    assert len(jobs) == 42
+    assert jobs.pop("ann_ivf_topk") <= 8
     assert {k: v for k, v in jobs.items() if v} == {}
     for path in sorted(DATA.glob("*.parquet")):
         assert (q._t(spark, sf, path.stem).schema
