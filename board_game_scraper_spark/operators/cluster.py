@@ -8,19 +8,22 @@ abs-diff ``cluster.py:39-43``), logistic scoring with threshold 0.5
 (``cluster.py:315-321``).  That implementation holds the whole gazetteer
 in driver memory — a non-starter at scale.
 
-Spark-first two-stage plan (SURVEY.md §2.5 J5):
+Spark-first plan (SURVEY.md §2.5 J5), every candidate pair from the one
+blocking operator ``dedup.bucket_pairs``:
 
-1. **Exact-id linking**: equi-joins on any shared id namespace
-   (bgg_id, wikidata_id, luding_id, ...).  Each is a plain shuffle join;
-   results union into an edge list.
-2. **Blocked fuzzy linking**: candidate pairs from a blocking-key
-   equi-join (name-token blocks), scored with cheap JVM similarity
-   (token Jaccard + year distance), thresholded.
-3. **Connected components** over the edge union by one union-find in
-   a single pandas call (the reference also clusters in plain Python) →
-   canonical_id = min member id per component.
+1. **Exact-id linking**: each record's non-null ids become
+   ``"<namespace>:<value>"`` keys (bgg_id, wikidata_id, luding_id, ...),
+   and records sharing a key are linked — one grouping for every
+   namespace.
+2. **Blocked fuzzy linking**: name-token blocks, each in-block pair
+   scored with cheap JVM similarity (token Jaccard + year distance),
+   thresholded.
+3. **Connected components** over the edge union, plus one self-edge per
+   record, by one union-find in a single pandas call (the reference
+   also clusters in plain Python) → canonical_id = min member id per
+   component; an unlinked record is its own component.
 
-No cross joins anywhere; every candidate set comes from an equi-join.
+No join anywhere: candidates are found and scored inside their block.
 """
 
 from __future__ import annotations
@@ -29,10 +32,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import bucket_pairs, jaccard
+
 # Records carry ``rec_id``, ``name`` and ``year`` columns plus any of the
 # id namespaces below.  The link threshold is the reference's
-# (cluster.py:306).
+# (cluster.py:306).  Name-token blocks larger than MAX_BLOCK are dropped.
 THRESHOLD = 0.5
+MAX_BLOCK = 200
 
 ID_NAMESPACES = (
     "bgg_id",
@@ -55,73 +61,50 @@ def _name_tokens(col):
 
 
 def exact_id_edges(records: DataFrame) -> DataFrame:
-    """Edges between records sharing any external id (fields.yaml Exact
-    comparators).  One self-equi-join per namespace, unioned."""
-    edges = None
-    for ns in ID_NAMESPACES:
-        if ns not in records.columns:
-            continue
-        keyed = records.select("rec_id", ns).where(F.col(ns).isNotNull())
-        left = keyed.select(F.col("rec_id").alias("a"), F.col(ns).alias("k"))
-        right = keyed.select(F.col("rec_id").alias("b"), F.col(ns).alias("k"))
-        e = (
-            left.join(right, "k")
-            .where(F.col("a") < F.col("b"))
-            .select("a", "b")
-        )
-        edges = e if edges is None else edges.unionByName(e)
-    if edges is None:
+    """Edges (a, b) between records sharing any external id (fields.yaml
+    Exact comparators): one ``bucket_pairs`` over ``"<namespace>:<value>"``
+    keys, so a pair sharing two ids is still one edge."""
+    present = [ns for ns in ID_NAMESPACES if ns in records.columns]
+    if not present:
         raise ValueError("no id namespace columns present")
-    return edges.distinct()
+    ids = F.array(*[
+        F.concat(F.lit(f"{ns}:"), F.col(ns).cast("string"))
+        for ns in present
+    ])
+    keyed = records.select(
+        "rec_id", F.explode(F.filter(ids, lambda k: k.isNotNull())).alias("k")
+    )
+    return bucket_pairs(keyed, "rec_id", "rec_id", lambda a, b: F.lit(1.0),
+                        "k").select("a", "b")
 
 
 def fuzzy_name_edges(records: DataFrame) -> DataFrame:
-    """Blocked fuzzy edges: block on each ``name`` token, score candidates.
+    """Blocked fuzzy edges: block on each ``name`` token, score each
+    in-block pair.
 
     Score (mirrors the reference's comparator mix cluster.py:39-43):
       0.7 * token-Jaccard(name) + 0.3 * year-proximity(1/(1+|Δyear|)),
-    kept at >= ``THRESHOLD``.  Blocks larger than 200 records are dropped
-    (stopword-ish tokens — the reference's dedupe library does the same
-    via predicate selection), bounding the join fan-out.
+    kept at >= ``THRESHOLD``.  Blocks of more than ``MAX_BLOCK`` records
+    yield no pairs (stopword-ish tokens — the reference's dedupe library
+    does the same via predicate selection), bounding the pair fan-out.
     """
     blocked = records.select(
-        "rec_id", _name_tokens(F.col("name")).alias("_toks"), "year",
-    ).select("rec_id", "_toks", "year", F.explode("_toks").alias("block"))
-    # prune hot blocks
-    block_sizes = blocked.groupBy("block").count()
-    blocked = blocked.join(
-        F.broadcast(block_sizes.where(F.col("count") <= 200)
-                    .select("block")),
-        "block",
-    )
-    l = blocked.select(
-        F.col("block"),
-        F.col("rec_id").alias("a"),
-        F.col("_toks").alias("ta"),
-        F.col("year").alias("ya"),
-    )
-    r = blocked.select(
-        F.col("block"),
-        F.col("rec_id").alias("b"),
-        F.col("_toks").alias("tb"),
-        F.col("year").alias("yb"),
-    )
-    cand = (
-        l.join(r, "block")
-        .where(F.col("a") < F.col("b"))
-        .drop("block")
-        .distinct()
-    )
-    jac = F.size(F.array_intersect("ta", "tb")) / F.size(
-        F.array_union("ta", "tb")
-    )
-    year_sim = F.when(
-        F.col("ya").isNotNull() & F.col("yb").isNotNull(),
-        1.0 / (1.0 + F.abs(F.col("ya") - F.col("yb"))),
-    ).otherwise(F.lit(0.5))
-    score = 0.7 * jac + 0.3 * year_sim
+        "rec_id",
+        F.struct(_name_tokens(F.col("name")).alias("toks"),
+                 "year").alias("rec"),
+    ).select("rec_id", "rec", F.explode("rec.toks").alias("block"))
+
+    def score(ra, rb):
+        ya, yb = ra["year"], rb["year"]
+        year_sim = F.when(
+            ya.isNotNull() & yb.isNotNull(), 1.0 / (1.0 + F.abs(ya - yb))
+        ).otherwise(F.lit(0.5))
+        return F.round(0.7 * jaccard(ra["toks"], rb["toks"])
+                       + 0.3 * year_sim, 4).alias("score")
+
     return (
-        cand.select("a", "b", F.round(score, 4).alias("score"))
+        bucket_pairs(blocked, "rec_id", "rec", score, "block",
+                     max_size=MAX_BLOCK)
         .where(F.col("score") >= THRESHOLD)
     )
 
@@ -170,18 +153,15 @@ def connected_components(edges: DataFrame) -> DataFrame:
 def resolve_entities(records: DataFrame) -> DataFrame:
     """Full J5 pipeline → (rec_id, canonical_id).
 
-    Records not linked to anything keep themselves as canonical
-    (cluster.py:315-321 emits singleton clusters implicitly).
+    One self-edge per record puts every record in the union-find, so a
+    record linked to nothing keeps itself as canonical (cluster.py:315-321
+    emits singleton clusters implicitly).
     """
-    edges = exact_id_edges(records).unionByName(
-        fuzzy_name_edges(records).select("a", "b")
-    ).distinct()
-    comps = connected_components(edges)
-    return (
-        records.select("rec_id")
-        .join(comps, records["rec_id"] == comps["node"], "left")
-        .select(
-            F.col("rec_id"),
-            F.coalesce(F.col("comp"), F.col("rec_id")).alias("canonical_id"),
-        )
+    edges = (
+        exact_id_edges(records)
+        .unionByName(fuzzy_name_edges(records).select("a", "b"))
+        .unionByName(records.select(F.col("rec_id").alias("a"),
+                                    F.col("rec_id").alias("b")))
     )
+    return connected_components(edges).select(
+        F.col("node").alias("rec_id"), F.col("comp").alias("canonical_id"))

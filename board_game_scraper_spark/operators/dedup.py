@@ -31,8 +31,11 @@ Operators:
 - simhash                ``bits``-bit SimHash from token hashes (Charikar)
 - minhash_signatures     ``num_perm`` salted-h60 MinHash signature
 - lsh_bands              banding of the signature into band keys
-- near_dup_pairs         candidate pairs from shared band keys +
-                         verified shingle Jaccard
+- bucket_pairs           pairs sharing a bucket, scored inside it from
+                         each member's payload (every pair operator's
+                         candidates, here and in similarity/cluster)
+- near_dup_pairs         ``bucket_pairs`` over band keys, scored by
+                         exact shingle Jaccard
 """
 
 from __future__ import annotations
@@ -201,27 +204,41 @@ def lsh_bands(signatures: DataFrame, id_col: str,
     )
 
 
-def bucket_pairs(keyed: DataFrame, id_col: str, *keys: str) -> DataFrame:
-    """Distinct id pairs (a < b) sharing at least one bucket ``keys``.
+def jaccard(a, b):
+    """Jaccard similarity of two array columns, as sets."""
+    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
 
-    Grouping instead of a self-join: the join computed the whole
-    bucketing pipeline twice (broadcast build side + stream side, no
-    exchange reuse).  One shuffle of (keys, id), sorted bucket members,
-    ordered in-bucket pairs via posexplode (per-row memory stays
-    O(bucket)); the pair set equals the self-join's."""
-    buckets = keyed.groupBy(*keys).agg(
-        F.array_sort(F.collect_list(id_col)).alias("ids")
-    )
+
+def bucket_pairs(keyed: DataFrame, id_col: str, val_col: str, sim,
+                 *keys: str, max_size: int | None = None) -> DataFrame:
+    """Distinct ``(a, b, sim(val_a, val_b))`` for id pairs a < b that
+    share at least one bucket ``keys``; ``sim`` builds a Column from the
+    two payload Columns, and its alias names the score column.
+
+    Block, then verify inside the block: one shuffle collects each
+    bucket's ``struct(id, val)`` members sorted by id, and posexplode
+    emits the ordered in-bucket pairs (per-row memory stays
+    O(bucket)), so no payload is joined back by id.  ``sim`` must be
+    deterministic: a pair sharing k buckets is scored k times, and
+    ``distinct`` over the score keeps it once.  Buckets of more than
+    ``max_size`` members yield no pairs; they are still collected whole
+    before the size filter drops them."""
+    members = F.collect_list(F.struct(F.col(id_col).alias("id"),
+                                      F.col(val_col).alias("val")))
+    m = F.col("m")
+    kept = F.size(m) >= 2
+    if max_size is not None:
+        kept &= F.size(m) <= max_size
+    x, y = F.col("x"), F.col("y")
     return (
-        buckets.where(F.size("ids") >= 2)
-        .select("ids", F.posexplode("ids").alias("i", "a"))
-        .select(
-            "a",
-            F.explode(
-                F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))
-            ).alias("b"),
-        )
-        .where(F.col("a") < F.col("b"))
+        keyed.groupBy(*keys).agg(F.array_sort(members).alias("m"))
+        .where(kept)
+        .select("m", F.posexplode("m").alias("i", "x"))
+        .select("x", F.explode(F.slice(m, F.col("i") + 2, F.size(m)))
+                .alias("y"))
+        .where(x["id"] < y["id"])
+        .select(x["id"].alias("a"), y["id"].alias("b"),
+                sim(x["val"], y["val"]))
         .distinct()
     )
 
@@ -237,34 +254,26 @@ def near_dup_pairs(
     """Near-duplicate pairs (a, b, jaccard): LSH candidates + exact
     verify.
 
-    1. shingles → signatures → band keys; candidate pairs are docs
-       sharing a band_key (``bucket_pairs``).
-    2. verify with exact shingle Jaccard (rounded to 4 places); keep
-       >= threshold.  The verify joins re-attach shingles by id — no
-       cross product anywhere.
+    1. shingles → signatures → band keys, each doc's shingles carried
+       along as its payload;
+    2. ``bucket_pairs`` over the band keys scores every in-bucket pair
+       with the exact shingle Jaccard (rounded to 4 places); keep
+       >= threshold.  No cross product and no join anywhere.
     """
     sh = shingles(df, id_col, text_col)
-    sig = sh.select(F.col(id_col), _minhash_fold(num_perm).alias("sig"))
+    sig = sh.select(F.col(id_col), "sh",
+                    _minhash_fold(num_perm).alias("sig"))
     banded = sig.select(
         F.col(id_col),
+        "sh",
         F.explode(
             _band_keys(F.col("sig"), bands, num_perm // bands)
         ).alias("band_key"),
     )
     return (
-        bucket_pairs(banded, id_col, "band_key")
-        .join(sh.select(F.col(id_col).alias("a"),
-                        F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col(id_col).alias("b"),
-                        F.col("sh").alias("sh_b")), "b")
-        .select(
-            "a",
-            "b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ).alias("jaccard"),
-        )
+        bucket_pairs(
+            banded, id_col, "sh",
+            lambda sa, sb: F.round(jaccard(sa, sb), 4).alias("jaccard"),
+            "band_key")
         .where(F.col("jaccard") >= threshold)
     )

@@ -10,7 +10,8 @@ the near-dup path:
                           The correctness baseline.
 - ``embedding_near_dup``  near-duplicate pairs by multi-table
                           random-hyperplane LSH (``hyperplane_buckets``)
-                          + exact cosine verify.  The hyperplane weights
+                          + exact cosine verify inside each bucket
+                          (``dedup.bucket_pairs``).  The hyperplane weights
                           derive from md5, like every content hash in
                           ``operators/dedup.py``, so the DuckDB oracle
                           reproduces the buckets bit-exactly.
@@ -111,12 +112,14 @@ def hyperplane_buckets(
     *,
     dim: int,
 ) -> DataFrame:
-    """LSH bucketing by random-hyperplane signs: one ``(id, t, bucket)``
-    row per vector and table ``t``.  All planes (``_hyperplane_weights``)
-    form one ``tables × planes × dim`` literal, and every table's bucket
-    comes from one ``transform``.  Bit p is set iff the plane dot,
-    rounded to 6 decimals, is >= 0 — the rounding keeps float noise from
-    flipping a bit in one engine only.  ``dim``: every vector's width.
+    """LSH bucketing by random-hyperplane signs: one ``(id, vec, t,
+    bucket)`` row per vector and table ``t``; the vector is the payload
+    ``embedding_near_dup`` scores pairs from.  All planes
+    (``_hyperplane_weights``) form one ``tables × planes × dim``
+    literal, and every table's bucket comes from one ``transform``.
+    Bit p is set iff the plane dot, rounded to 6 decimals, is >= 0 — the
+    rounding keeps float noise from flipping a bit in one engine only.
+    ``dim``: every vector's width.
     """
     planes = F.array(*[
         _matrix([_hyperplane_weights(t, p, dim) for p in range(n_planes)],
@@ -133,6 +136,7 @@ def hyperplane_buckets(
 
     return vectors.select(
         F.col(id_col),
+        F.col(vec_col),
         F.posexplode(F.transform(planes, bucket)).alias("t", "bucket"),
     )
 
@@ -156,31 +160,25 @@ def embedding_near_dup(
     1. each of ``n_tables`` independent hyperplane tables t assigns
        every vector an ``n_planes``-bit sign bucket
        (``hyperplane_buckets``, all tables in one pass);
-    2. candidate pairs = ids sharing a (table, bucket), by grouping
-       (``dedup.bucket_pairs`` — the same shape as MinHash-LSH, never a
-       cartesian);
-    3. exact cosine verify ``>= threshold`` over the candidates only.
+    2. ``dedup.bucket_pairs`` groups on (table, bucket), the same
+       operator as MinHash-LSH (never a cartesian), and scores each
+       in-bucket pair by exact cosine from the vectors the buckets
+       carry; keep ``>= threshold``.
 
     Recall is the standard LSH union over tables (1-(1-p^planes)^tables
     for per-plane agreement p = 1 - angle/pi); misses are possible by
     design — raise ``n_tables`` / lower ``n_planes`` for higher recall.
-    False positives never survive step 3.  ``dim`` as in
+    False positives never survive step 2.  ``dim`` as in
     ``hyperplane_buckets``.
     """
-    base = vectors.select(id_col, vec_col)
-    sigs = hyperplane_buckets(base, id_col, vec_col, n_planes, n_tables,
-                              dim=dim)
-    va = base.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
-    vb = base.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
-    cos = F.round(cosine(F.col("va"), F.col("vb")), 4)
+    sigs = hyperplane_buckets(vectors, id_col, vec_col, n_planes,
+                              n_tables, dim=dim)
     return (
-        bucket_pairs(sigs, id_col, "t", "bucket")
-        .join(va, "a").join(vb, "b")
-        .select(
-            F.col("a").alias("id_a"),
-            F.col("b").alias("id_b"),
-            cos.alias("cosine"),
-        )
+        bucket_pairs(sigs, id_col, vec_col,
+                     lambda va, vb: F.round(cosine(va, vb), 4).alias("cosine"),
+                     "t", "bucket")
+        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"),
+                "cosine")
         .where(F.col("cosine") >= threshold)
     )
 

@@ -696,8 +696,9 @@ def q_entity_resolution(spark, sf_dir):
     real operator pipeline: exact-id edges + blocked fuzzy-name edges +
     connected components.  Planted cross-source triples per customer —
     two records share a bgg_id (exact edge), a third links only by name
-    similarity (fuzzy edge, token-block join) — so every component and
-    canonical id is known in closed form for the oracle."""
+    similarity (fuzzy edge, scored inside its name-token block) — so
+    every component and canonical id is known in closed form for the
+    oracle."""
     from .operators.cluster import resolve_entities
 
     cust = _t(spark, sf_dir, "customer")

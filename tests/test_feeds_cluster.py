@@ -23,9 +23,13 @@ SCHEMA = ("rec_id long, name string, year int, bgg_id long, "
 
 
 def test_exact_id_edges(spark):
-    df = spark.createDataFrame(RECORDS, SCHEMA)
-    edges = {(r["a"], r["b"]) for r in exact_id_edges(df).collect()}
-    assert edges == {(1, 2), (2, 3)}
+    # 7 and 8 share both bgg_id and wikidata_id: still one edge
+    df = spark.createDataFrame(
+        RECORDS + [(7, "Go", -2000, 99, "Q11", None),
+                   (8, "Weiqi", -2000, 99, "Q11", None)], SCHEMA)
+    edges = [(r["a"], r["b"]) for r in exact_id_edges(df).collect()]
+    assert len(edges) == len(set(edges))
+    assert set(edges) == {(1, 2), (2, 3), (7, 8)}
 
 
 def test_fuzzy_name_edges(spark):
@@ -65,3 +69,18 @@ def test_connected_components_long_chain_builds_without_jobs(spark):
     assert jobs == 0
     got = {r["node"]: r["comp"] for r in labels.collect()}
     assert got == {**{i: 0 for i in range(13)}, 50: 50, 51: 50}
+
+
+def test_hot_block_boundary(spark):
+    """Records whose only shared name token is one block link through it
+    while the block holds at most 200 records; a 201st record makes it a
+    hot block, which yields no pairs, so nothing links."""
+    def labels(n):
+        df = spark.createDataFrame(
+            [(i, f"hotblock n{i:03d}", 2000, None) for i in range(n)],
+            "rec_id long, name string, year int, bgg_id long")
+        return {r["rec_id"]: r["canonical_id"]
+                for r in resolve_entities(df).collect()}
+
+    assert labels(200) == {i: 0 for i in range(200)}
+    assert labels(201) == {i: i for i in range(201)}

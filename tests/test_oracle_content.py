@@ -63,6 +63,20 @@ def test_query_plans_build_without_spark_jobs(spark):
                 == spark.read.parquet(str(path)).schema), path.name
 
 
+@pytest.mark.parametrize("name, most", [
+    ("near_dup_pairs", 4), ("embedding_near_dup", 3),
+    ("entity_resolution", 6),
+])
+def test_pair_queries_run_jobs(spark, name, most):
+    """The candidate-pair queries score each pair inside its bucket
+    (``dedup.bucket_pairs``) and join no payload back, so building and
+    collecting each runs at most ``most`` Spark jobs."""
+    jobs, _ = jobs_to_build(
+        spark, f"run-{name}",
+        lambda: QUERIES[name](spark, str(DATA)).collect())
+    assert jobs <= most
+
+
 def test_par_spreads_unsplittable_scan_and_keeps_results(spark, monkeypatch):
     """``_t``'s spread keys hash-spread a single-file single-row-group
     scan (guide §2.5 one-huge-unsplittable-file) to the session's

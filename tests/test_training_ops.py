@@ -52,11 +52,15 @@ def test_simhash_near_texts_close(docs):
     assert ham_13 < ham_15
 
 
-def test_minhash_near_dup_pairs(docs):
-    pairs = {(r["a"], r["b"]): r["jaccard"]
-             for r in near_dup_pairs(docs, "id", "text",
-                                     threshold=0.4).collect()}
+def test_minhash_near_dup_pairs(spark, docs):
+    # doc 6 repeats doc 5, so (5, 6) shares every band
+    more = docs.unionByName(
+        spark.createDataFrame([(6, DOCS[4][1])], "id long, text string"))
+    rows = near_dup_pairs(more, "id", "text", threshold=0.4).collect()
+    pairs = {(r["a"], r["b"]): r["jaccard"] for r in rows}
+    assert len(pairs) == len(rows)  # each pair once
     assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
+    assert pairs[(5, 6)] == 1.0
     assert all(a < b for a, b in pairs)
     assert (1, 5) not in pairs and (4, 5) not in pairs
 

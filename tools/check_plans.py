@@ -3,7 +3,8 @@
 Asserts the properties that matter at 100 TB on key query plans:
 filters and column pruning reach the parquet scan (PushedFilters /
 ReadSchema), WholeStageCodegen spans exist, broadcast joins are chosen
-for dim tables, and no query's plan contains a CartesianProduct.
+for dim tables, no query's plan contains a CartesianProduct, and the
+candidate-pair queries contain no join at all.
 
 Usage: python tools/check_plans.py [sf_dir]
 
@@ -13,6 +14,7 @@ Usage: python tools/check_plans.py [sf_dir]
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -61,6 +63,9 @@ CHECKS = {
 }
 
 FORBIDDEN = ("CartesianProduct",)
+# candidate pairs are scored inside their bucket (dedup.bucket_pairs):
+# no payload is joined back by id.
+NO_JOIN = {"near_dup_pairs", "embedding_near_dup", "entity_resolution"}
 # cosine_topk legitimately broadcasts a 1-row query vector via
 # BroadcastNestedLoopJoin; anything else nested-loop is a bug.
 NESTED_LOOP_ALLOWED = {"cosine_topk", "ann_ivf_topk", "media_features"}
@@ -79,6 +84,8 @@ def main() -> int:
         if ("BroadcastNestedLoopJoin" in plan
                 and name not in NESTED_LOOP_ALLOWED):
             failures.append((name, "unexpected BroadcastNestedLoopJoin"))
+        if name in NO_JOIN and re.search(r"\w*Join\b", plan):
+            failures.append((name, "unexpected join in a pair query"))
         for needle, why in CHECKS.get(name, []):
             if needle not in plan:
                 failures.append((name, f"missing '{needle}' ({why})"))
