@@ -40,7 +40,7 @@ Operators:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _MAX_LONG = (1 << 63) - 1
@@ -221,18 +221,20 @@ def bucket_pairs(keyed: DataFrame, id_col: str, val_col: str, sim,
     O(bucket)), so no payload is joined back by id.  ``sim`` must be
     deterministic: a pair sharing k buckets is scored k times, and
     ``distinct`` over the score keeps it once.  Buckets of more than
-    ``max_size`` members yield no pairs; they are still collected whole
-    before the size filter drops them."""
+    ``max_size`` members yield no pairs: a ``count(*)`` window over the
+    bucket keys (the same hash exchange as the ``groupBy``) drops their
+    rows before any bucket is collected."""
     members = F.collect_list(F.struct(F.col(id_col).alias("id"),
                                       F.col(val_col).alias("val")))
     m = F.col("m")
-    kept = F.size(m) >= 2
     if max_size is not None:
-        kept &= F.size(m) <= max_size
+        n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+        keyed = (keyed.withColumn("_n", n)
+                 .where(F.col("_n").between(2, max_size)).drop("_n"))
     x, y = F.col("x"), F.col("y")
     return (
         keyed.groupBy(*keys).agg(F.array_sort(members).alias("m"))
-        .where(kept)
+        .where(F.size(m) >= 2)
         .select("m", F.posexplode("m").alias("i", "x"))
         .select("x", F.explode(F.slice(m, F.col("i") + 2, F.size(m)))
                 .alias("y"))

@@ -294,12 +294,10 @@ def q_clean_text(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def q_pagination(spark, sf_dir):
-    """Paginated split (S11, split.py:113-117: count/previous/next/page).
-
-    Runs the scale-safe two-pass operator (operators/split.py): global
-    positions come from a range-partitioned sort + per-partition
-    row_number + broadcast offsets — no single-partition WindowExec
-    anywhere in the plan (VERDICT r03 'wrong' #2)."""
+    """Paginated split (S11, split.py:113-117: count/previous/next/page):
+    25-row pages by ``row_number()`` over doc_id and ``count(*)`` over
+    the whole table, the oracle's two global windows
+    (operators/split.py)."""
     from .operators.split import page_rows
 
     docs = _t(spark, sf_dir, "documents")
@@ -372,31 +370,16 @@ def q_minhash_band(spark, sf_dir):
 def q_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-10 against the vec_id=0 query vector
     (training-pipeline ANN baseline; exact, rounded for cross-engine
-    float stability)."""
+    float stability), ranked 1..10 by ``row_number()`` over
+    (cosine desc, vec_id asc) on the 10 rows ``cosine_topk`` keeps."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qvec")
     )
-    # orderBy+limit inside: TakeOrderedAndProject (per-partition heaps,
-    # no single-partition window)
     top = cosine_topk(emb.where(F.col("vec_id") != 0), q, k=10)
-    # Rank over the 10 surviving rows WITHOUT a global window (keeps
-    # the bench tail free of WARN WindowExec noise): rk = 1 + number of
-    # rows strictly ahead in (cosine desc, vec_id asc) order — a 10×10
-    # broadcast self-join.
-    ahead = top.select(F.col("cosine").alias("_c2"),
-                       F.col("vec_id").alias("_v2"))
-    return (
-        top.join(
-            F.broadcast(ahead),
-            (F.col("_c2") > F.col("cosine"))
-            | ((F.col("_c2") == F.col("cosine"))
-               & (F.col("_v2") < F.col("vec_id"))),
-            "left",
-        )
-        .groupBy("vec_id", "cosine")
-        .agg((F.count("_v2") + 1).cast("int").alias("rk"))
-    )
+    rank = Window.orderBy(F.col("cosine").desc(), "vec_id")
+    return top.select("vec_id", "cosine",
+                      F.row_number().over(rank).alias("rk"))
 
 
 # ---------------------------------------------------------------------------

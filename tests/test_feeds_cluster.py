@@ -84,3 +84,26 @@ def test_hot_block_boundary(spark):
 
     assert labels(200) == {i: 0 for i in range(200)}
     assert labels(201) == {i: i for i in range(201)}
+
+
+def test_hot_block_dropped_before_collect(spark):
+    """``bucket_pairs`` counts each bucket before collecting it, so a
+    3,000-member block over ``max_size`` never reaches the
+    ``collect_list`` aggregate: a filter on the bucket count sits below
+    it, and only the small bucket yields pairs."""
+    from pyspark.sql import functions as F
+
+    from board_game_scraper_spark.operators.dedup import bucket_pairs
+
+    keyed = spark.range(3003).select(
+        "id", F.when(F.col("id") < 3000, "hot").otherwise("cold").alias("k"))
+    pairs = bucket_pairs(keyed, "id", "id", lambda a, b: F.lit(1.0), "k",
+                         max_size=200)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    lines = plan.splitlines()
+    agg = next(i for i, line in enumerate(lines)
+               if "Aggregate" in line and "collect_list" in line)
+    assert any("Filter" in line and "_n" in line
+               for line in lines[agg + 1:]), plan
+    assert sorted((r["a"], r["b"]) for r in pairs.collect()) == [
+        (3000, 3001), (3000, 3002), (3001, 3002)]

@@ -65,12 +65,13 @@ def test_query_plans_build_without_spark_jobs(spark):
 
 @pytest.mark.parametrize("name, most", [
     ("near_dup_pairs", 4), ("embedding_near_dup", 3),
-    ("entity_resolution", 6),
+    ("entity_resolution", 6), ("pagination", 2), ("cosine_topk", 2),
 ])
-def test_pair_queries_run_jobs(spark, name, most):
-    """The candidate-pair queries score each pair inside its bucket
-    (``dedup.bucket_pairs``) and join no payload back, so building and
-    collecting each runs at most ``most`` Spark jobs."""
+def test_queries_run_jobs(spark, name, most):
+    """Building and collecting each query runs at most ``most`` Spark
+    jobs: the candidate-pair queries score each pair inside its bucket
+    (``dedup.bucket_pairs``) and join no payload back; pagination and
+    the cosine rank are each one global window, as in their oracles."""
     jobs, _ = jobs_to_build(
         spark, f"run-{name}",
         lambda: QUERIES[name](spark, str(DATA)).collect())
