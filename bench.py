@@ -2,7 +2,8 @@
 
 Runs (a) the headline operator queries at $SPARK_GRAFT_SF_DIR and (b) a
 frontier crawl replay (the BASELINE.json north metric: URLs
-scheduled+fetched+parsed per second), on local[$SPARK_GRAFT_CPUS].
+scheduled+fetched+parsed per second), on local[$SPARK_GRAFT_CPUS]
+(default: the machine's core count).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total suite sec>, "unit": "sec",
@@ -25,6 +26,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from board_game_scraper_spark import queries as q  # noqa: E402
 from board_game_scraper_spark.session import get_spark  # noqa: E402
+from perfbench.common import code_hash  # noqa: E402
 
 HEADLINE = [
     "merge_latest_wins",
@@ -48,9 +50,8 @@ HEADLINE = [
 # regression (BENCH_r05 vs r04: every query uniformly slower, zero code
 # change on most).  Every invocation appends its raw samples here and
 # the artifact renders POOLED minima over all records with the same
-# (sf, cpus, scale, headline-set) key.  Delete the file whenever
-# measured code changes materially (mixing code states pollutes the
-# minima).
+# (code, sf, cpus, scale, headline-set) key; ``code`` is the hash of the
+# package sources, so samples of different code never pool.
 POOL = Path(__file__).resolve().parent / "BENCH" / "bench_samples.jsonl"
 
 
@@ -122,7 +123,7 @@ def run_frontier_replay(spark, n_browse: int, n_users: int, n_other: int,
 
 def main() -> None:
     sf_dir = os.getenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.getenv("SPARK_GRAFT_CPUS", "32")
+    cpus = os.getenv("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     # Replay scale defaults to 2.0, the corpus scale of the recorded
     # BENCH/BASELINE.md scaling evidence (VERDICT r03 'next' #6).
     scale = float(os.getenv("SPARK_GRAFT_BENCH_SCALE", "2.0"))
@@ -154,7 +155,7 @@ def main() -> None:
     )
 
     # ---- pool this invocation's raw samples, render pooled minima ----
-    key = {"sf": sf, "cpus": int(cpus), "scale": scale,
+    key = {"code": code_hash(), "sf": sf, "cpus": int(cpus), "scale": scale,
            "headline": sorted(HEADLINE)}
     rec = {
         "ts": round(time.time(), 1),

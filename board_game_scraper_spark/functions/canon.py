@@ -14,6 +14,10 @@ Reference behavior reproduced (all in /root/reference/board_game_scraper):
   dbpedia, luding, spielen, freebase) with unquote + lowercase rules.
 - ``utils.py:370-381`` (extract_ids): fan one URL into 7 id namespaces.
 
+It also holds the builders of the URLs a parser discovers (thing, user,
+collection, wikidata EntityData, dbpedia property table), shared by the
+parse stage, the corpus generator and the crawl simulator.
+
 Everything is a *vectorized* pandas UDF (Arrow batches; the per-element
 Python work is confined to urllib inside the batch — no per-row Spark
 round-trip, per BASELINE.json input_hint "no per-row Python").
@@ -81,6 +85,49 @@ def canonicalize_one(url: str | None) -> str | None:
     path = p.path or "/"
     query = urlencode(sorted(parse_qsl(p.query, keep_blank_values=True)))
     return f"{scheme}://{host}{port}{path}" + (f"?{query}" if query else "")
+
+
+BGG = "https://boardgamegeek.com"
+WIKIDATA = "https://www.wikidata.org"
+DBPEDIA_SPARQL = "http://dbpedia.org/sparql"
+
+
+def thing_url(ids: list[int]) -> str:
+    """Canonical thing-API URL — sorted params like bgg.py:244-249."""
+    params = urlencode(
+        sorted({"id": ",".join(map(str, sorted(ids))), "stats": "1"}.items())
+    )
+    return f"{BGG}/xmlapi2/thing?{params}"
+
+
+def user_url(name: str) -> str:
+    params = urlencode(sorted({"name": name}.items()))
+    return f"{BGG}/xmlapi2/user?{params}"
+
+
+def collection_url(name: str) -> str:
+    params = urlencode(
+        sorted({"username": name, "stats": "1", "version": "0"}.items())
+    )
+    return f"{BGG}/xmlapi2/collection?{params}"
+
+
+def wikidata_entity_url(qid: int) -> str:
+    return f"{WIKIDATA}/wiki/Special:EntityData/Q{qid}.json"
+
+
+def dbpedia_game_uri(g: int) -> str:
+    return f"http://dbpedia.org/resource/Game_{g}"
+
+
+def dbpedia_game_url(g: int) -> str:
+    """Game URI → property-table SPARQL query URL (dbpedia.py:356-372)."""
+    q = (
+        f"SELECT ?property ?value ?label WHERE {{ <{dbpedia_game_uri(g)}> "
+        "?property ?value . OPTIONAL { ?value "
+        "<http://www.w3.org/2000/01/rdf-schema#label> ?label . } }"
+    )
+    return f"{DBPEDIA_SPARQL}?{urlencode(sorted({'query': q, 'format': 'text/xml'}.items()))}"
 
 
 def extract_bgg_id_one(url: str | None) -> int | None:

@@ -40,7 +40,8 @@ from .. import schemas
 from ..sources.fetch import fetch_from_table
 from ..tables import SnapshotTable
 from .frontier import (
-    HOST_BUDGETS, retry_rows, retryable, schedule, update_host_state,
+    HOST_BUDGETS, batch_api_ids, retry_rows, retryable, schedule,
+    update_host_state,
 )
 from .parse import run_parse_flat
 from .seen import SnapshotBloom, filter_unseen
@@ -119,7 +120,8 @@ def _canonical_frontier_rows(urls: DataFrame, discovery_round: int,
                              not_before_round: int) -> DataFrame:
     """Frontier rows for raw ``url`` + ``priority`` rows (seeds,
     requeues, seed requests): canonicalized, uncanonicalizable URLs
-    dropped, one row per canonical URL (highest priority wins)."""
+    dropped, one row per canonical URL (highest priority wins; on a tie
+    the least raw ``url``, so the stored row is deterministic)."""
     from ..functions.canon import canonicalize_url
 
     c = urls.withColumn("_c", canonicalize_url(F.col("url")))
@@ -134,7 +136,7 @@ def _canonical_frontier_rows(urls: DataFrame, discovery_round: int,
         discovery_round, not_before_round,
     )
     w = Window.partitionBy("url_hash").orderBy(
-        F.col("priority").desc(), F.col("url_canon"))
+        F.col("priority").desc(), F.col("url_canon"), F.col("url"))
     return (rows.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1).drop("_rn"))
 
@@ -286,21 +288,27 @@ class CrawlEngine:
         rows = _canonical_frontier_rows(seeds, 0, 0)
         obs = Observation()
         rows = rows.observe(obs, F.count(F.lit(1)).alias("n")).cache()
-        # Seen first: its write materializes the cached rows exactly
-        # once and fills the count observation, so the frontier commit
-        # can carry the exact post-commit row count in its manifest
-        # (frontier_rows()).  A crash between the two re-runs seed();
-        # both writes are overwrites, so the retry is idempotent.
-        seen_rows = rows.select(
-            "url_hash", "url_canon", F.lit(0).alias("first_round")
-        )
-        self.seen.overwrite(seen_rows, lineage={"round": 0, "stage": "seed"},
-                            coalesce=WRITE_COALESCE)
-        n = int(obs.get["n"] or 0)
-        self.frontier.overwrite(rows, lineage={"round": 0, "stage": "seed"},
-                                metrics={"frontier_rows": n},
+        try:
+            # Seen first: its write materializes the cached rows exactly
+            # once and fills the count observation, so the frontier
+            # commit can carry the exact post-commit row count in its
+            # manifest (frontier_rows()).  A crash between the two
+            # re-runs seed(); both writes are overwrites, so the retry
+            # is idempotent.
+            seen_rows = rows.select(
+                "url_hash", "url_canon", F.lit(0).alias("first_round")
+            )
+            self.seen.overwrite(seen_rows,
+                                lineage={"round": 0, "stage": "seed"},
                                 coalesce=WRITE_COALESCE)
-        self.bloom.add(seen_rows)
+            n = int(obs.get["n"] or 0)
+            self.frontier.overwrite(rows,
+                                    lineage={"round": 0, "stage": "seed"},
+                                    metrics={"frontier_rows": n},
+                                    coalesce=WRITE_COALESCE)
+            self.bloom.add(seen_rows)
+        finally:
+            rows.unpersist()
         self._frontier_rows = n
         return n
 
@@ -505,8 +513,9 @@ class CrawlEngine:
         """F7 (bgg.py:229-242,256-261): explode discovered thing-API
         batch URLs back to game ids, drop ids ever batched before
         (ids_seen left_anti), re-pack survivors into fresh ≤10-id batch
-        URLs.  Ids rediscovered on overlapping pages fetch exactly once
-        even when the page-local batch URLs differ.
+        URLs (F8, ``batch_api_ids``).  Ids rediscovered on overlapping
+        pages fetch exactly once even when the page-local batch URLs
+        differ.
 
         Batches are windowed per 10k-id block (partition-parallel — a
         global sort window would bottleneck one task at 10^10 ids);
@@ -533,25 +542,15 @@ class CrawlEngine:
             .agg(F.max("priority").alias("priority"))
         )
         new_ids = ids.join(self.ids_seen.read(), "bgg_id", "left_anti").cache()
-        w = Window.partitionBy("_g").orderBy("bgg_id")
-        batches = (
-            new_ids.withColumn("_g", F.floor(F.col("bgg_id") / 10000))
-            .withColumn("_b", F.floor((F.row_number().over(w) - 1) / 10))
-            .groupBy("_g", "_b")
-            .agg(
-                F.concat_ws(
-                    "%2C",
-                    F.array_sort(F.collect_list("bgg_id")).cast(
-                        "array<string>"
-                    ),
-                ).alias("ids_csv"),
-                F.max("priority").alias("priority"),
-            )
+        batches = batch_api_ids(
+            new_ids.withColumn("_g", F.floor(F.col("bgg_id") / 10000)),
+            "bgg_id", "_g", extra_aggs=[F.max("priority").alias("priority")],
         )
         rebatched = batches.select(
             F.concat(
                 F.lit("https://boardgamegeek.com/xmlapi2/thing?id="),
-                F.col("ids_csv"), F.lit("&stats=1"),
+                F.replace("ids_csv", F.lit(","), F.lit("%2C")),
+                F.lit("&stats=1"),
             ).alias("url_canon"),
             "priority",
             F.lit("bgg_thing").alias("callback_kind"),

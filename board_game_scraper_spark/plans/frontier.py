@@ -120,25 +120,24 @@ def schedule(
 
 
 def batch_api_ids(
-    ids: DataFrame, id_col: str, group_col: str, batch_size: int = 10
+    ids: DataFrame, id_col: str, group_col: str, batch_size: int = 10,
+    extra_aggs=(),
 ) -> DataFrame:
     """Request batching (F8, bgg.py:251-294): pack ≤batch_size ids per
     API URL, comma-joined in sorted order.  Returns (group, batch,
-    ids_csv, n)."""
+    ids_csv, n) plus one column per ``extra_aggs`` aggregate."""
     w = Window.partitionBy(group_col).orderBy(id_col)
     rn = F.row_number().over(w)
     return (
-        ids.select(
-            group_col,
-            F.col(id_col),
-            F.floor((rn - 1) / batch_size).cast("int").alias("batch"),
-        )
+        ids.withColumn(
+            "batch", F.floor((rn - 1) / batch_size).cast("int"))
         .groupBy(group_col, "batch")
         .agg(
             F.concat_ws(
                 ",", F.array_sort(F.collect_list(id_col))
             ).alias("ids_csv"),
             F.count(F.lit(1)).alias("n"),
+            *extra_aggs,
         )
     )
 

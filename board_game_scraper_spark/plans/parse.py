@@ -4,6 +4,20 @@ One ``mapInArrow`` stage turns fetched bodies into: interleaved
 text+media span sequences (BASELINE.json input_hint), typed item rows,
 and discovered URLs (E4 link harvest — this closes the BSP loop).
 
+The page shape.  Every parser returns ``_page(spans, games=, users=,
+ratings=, discovered=)``, a dict of exactly those five keys.  Spans come
+in as ``(kind, value)`` pairs in document order (value = the text of a
+``text`` span, the media_ref of an ``image``/``video`` span) and leave
+as ``schemas.SPAN`` dicts; ``_page`` is the one place offsets are
+numbered: offset = position.
+
+The span rule.  The 8 game parsers (thing, luding, spielen, wikidata
+entity, hotness, rankings, geeklist, dbpedia game) take their spans from
+their game rows through ``_game_spans``: per row, in order, the name and
+the description when non-empty, one span per ``image_url``, one per
+``video_url``.  The other 6 parsers emit their own text spans.
+Discovered-URL builders come from ``functions/canon.py``.
+
 Reference parse callbacks reproduced (behavior, not code):
 
 - ``spiders/bgg.py:399-427``  parse (browse HTML): harvest game links +
@@ -31,7 +45,10 @@ import xml.etree.ElementTree as ET
 from datetime import datetime, timezone
 from functools import lru_cache
 
-from ..functions.canon import canonicalize_one
+from ..functions.canon import (
+    BGG, canonicalize_one, collection_url, dbpedia_game_url, thing_url,
+    user_url, wikidata_entity_url,
+)
 from ..functions.text import clean_text_one
 from ..schemas import GAME_ITEM, PARSE_FLAT
 
@@ -42,8 +59,6 @@ _canon_cached = lru_cache(maxsize=1_000_000)(canonicalize_one)
 # Names/descriptions repeat across overlapping batches; the C7 chain is
 # pure → memoize (bit-identical output, just cached).
 clean_text_one = lru_cache(maxsize=500_000)(clean_text_one)
-
-BGG = "https://boardgamegeek.com"
 
 _RE_GAME_LINK = re.compile(r'<a href="/boardgame/(\d+)/[^"]*">([^<]*)</a>')
 _RE_NEXT_PAGE = re.compile(r'<a title="next page" href="([^"]+)"')
@@ -77,9 +92,33 @@ def _float(v):
         return None
 
 
-def _span(kind, offset, text=None, media_ref=None):
-    return {"kind": kind, "text": text, "media_ref": media_ref,
-            "offset": offset}
+def _page(spans=(), games=(), users=(), ratings=(), discovered=()) -> dict:
+    """The one page shape: ``spans`` are ``(kind, value)`` pairs in
+    document order, numbered here (offset = position)."""
+    return {
+        "spans": [
+            {"kind": kind, "text": value if kind == "text" else None,
+             "media_ref": None if kind == "text" else value, "offset": i}
+            for i, (kind, value) in enumerate(spans)
+        ],
+        "games": list(games), "users": list(users),
+        "ratings": list(ratings), "discovered": list(discovered),
+    }
+
+
+def _game_spans(games):
+    """The span rule of every game parser: per game row, its name and
+    description (when non-empty), then one span per image_url and one
+    per video_url."""
+    for g in games:
+        if g["name"]:
+            yield "text", g["name"]
+        if g["description"]:
+            yield "text", g["description"]
+        for ref in g["image_url"] or ():
+            yield "image", ref
+        for ref in g["video_url"] or ():
+            yield "video", ref
 
 
 MIN_VOTES = 20  # bgg.py:147
@@ -191,36 +230,18 @@ def batchify(ids: list[int]) -> list[list[int]]:
     return [s[i : i + 10] for i in range(0, len(s), 10)]
 
 
-def _thing_url(ids: list[int]) -> str:
-    from ..synth import thing_url
-
-    return thing_url(ids)
-
-
-def _collection_url(name: str) -> str:
-    from ..synth import collection_url
-
-    return collection_url(name)
-
-
-def _user_url(name: str) -> str:
-    from ..synth import user_url
-
-    return user_url(name)
-
-
 def parse_browse(url_canon: str, body: str) -> dict:
     """bgg.py:399-427: 0 items, requests for games + next page."""
     spans, discovered, seen_ids, order = [], [], set(), []
     for m in _RE_GAME_LINK.finditer(body):
         gid = int(m.group(1))
-        spans.append(_span("text", len(spans), text=clean_text_one(m.group(2))))
+        spans.append(("text", clean_text_one(m.group(2))))
         if gid not in seen_ids:
             seen_ids.add(gid)
             order.append(gid)
     for batch in batchify(order):
         discovered.append(
-            {"url": _thing_url(batch), "priority": 0,
+            {"url": thing_url(batch), "priority": 0,
              "callback_kind": "bgg_thing"}
         )
     nxt = _RE_NEXT_PAGE.search(body)
@@ -229,8 +250,7 @@ def parse_browse(url_canon: str, body: str) -> dict:
             {"url": BGG + nxt.group(1), "priority": 1,
              "callback_kind": "bgg_browse"}
         )
-    return {"spans": spans, "games": [], "users": [], "ratings": [],
-            "discovered": discovered}
+    return _page(spans, discovered=discovered)
 
 
 def _link_values(item: ET.Element, link_type: str) -> list[str]:
@@ -246,7 +266,7 @@ def _link_values(item: ET.Element, link_type: str) -> list[str]:
 def parse_thing(url_canon: str, body: str) -> dict:
     """bgg.py:429-652 parse_game + embedded rating comments."""
     root = ET.fromstring(body)
-    spans, games, ratings, discovered = [], [], [], []
+    games, ratings, discovered = [], [], []
     users_seen = []
     for item in root.findall("item"):
         gid = _int(item.get("id"))
@@ -331,15 +351,6 @@ def parse_thing(url_canon: str, body: str) -> dict:
         )
         games.append(game)
 
-        # Interleaved spans: text, text, image, video per item (input_hint).
-        spans.append(_span("text", len(spans), text=name))
-        if desc:
-            spans.append(_span("text", len(spans), text=desc))
-        if image_el is not None:
-            spans.append(_span("image", len(spans), media_ref=image_el.text))
-        for v in video_els:
-            spans.append(_span("video", len(spans), media_ref=v.get("link")))
-
         for c in item.findall("comment"):
             user = (c.get("username") or "").lower()  # items.py:554-556
             if not user:
@@ -362,15 +373,15 @@ def parse_thing(url_canon: str, body: str) -> dict:
                 users_seen.append(user)
     for user in users_seen:
         discovered.append(
-            {"url": _collection_url(user), "priority": 1,
+            {"url": collection_url(user), "priority": 1,
              "callback_kind": "bgg_collection"}  # bgg.py:686-688
         )
         discovered.append(
-            {"url": _user_url(user), "priority": 3,
+            {"url": user_url(user), "priority": 3,
              "callback_kind": "bgg_user"}  # bgg.py:375
         )
-    return {"spans": spans, "games": games, "users": [], "ratings": ratings,
-            "discovered": discovered}
+    return _page(_game_spans(games), games=games, ratings=ratings,
+                 discovered=discovered)
 
 
 def parse_user(url_canon: str, body: str) -> dict:
@@ -394,10 +405,8 @@ def parse_user(url_canon: str, body: str) -> dict:
         "image_url": None,
         "scraped_at": SCRAPED_AT,
     }
-    spans = [_span("text", 0, text=" ".join(
-        filter(None, [user["first_name"], user["last_name"]])) or name)]
-    return {"spans": spans, "games": [], "users": [user], "ratings": [],
-            "discovered": []}
+    text = " ".join(filter(None, [user["first_name"], user["last_name"]]))
+    return _page([("text", text or name)], users=[user])
 
 
 def parse_collection(url_canon: str, body: str) -> dict:
@@ -427,9 +436,8 @@ def parse_collection(url_canon: str, body: str) -> dict:
                 "scraped_at": SCRAPED_AT,
             }
         )
-        spans.append(_span("text", len(spans), text=f"{user} rates {gid}"))
-    return {"spans": spans, "games": [], "users": [], "ratings": ratings,
-            "discovered": []}
+        spans.append(("text", f"{user} rates {gid}"))
+    return _page(spans, ratings=ratings)
 
 
 def _interval(text: str | None) -> tuple[int | None, int | None]:
@@ -491,13 +499,7 @@ def parse_luding(url_canon: str, body: str) -> dict:
         max_players=_validate_range(hi, 1, None),
         min_age=_validate_range(age, 0, 21),
     )
-    spans = [_span("text", 0, text=name)]
-    if game["description"]:
-        spans.append(_span("text", len(spans), text=game["description"]))
-    for i in images:
-        spans.append(_span("image", len(spans), media_ref=i))
-    return {"spans": spans, "games": [game], "users": [], "ratings": [],
-            "discovered": []}
+    return _page(_game_spans([game]), games=[game])
 
 
 def parse_spielen(url_canon: str, body: str) -> dict:
@@ -598,15 +600,7 @@ def parse_spielen(url_canon: str, body: str) -> dict:
         avg_rating=_float(avg_el.text()) if avg_el else None,
         complexity=complexity,
     )
-    spans = [_span("text", 0, text=name)]
-    if desc:
-        spans.append(_span("text", len(spans), text=desc))
-    for i in images:
-        spans.append(_span("image", len(spans), media_ref=i))
-    for v in videos:
-        spans.append(_span("video", len(spans), media_ref=v))
-    return {"spans": spans, "games": [game], "users": [], "ratings": [],
-            "discovered": []}
+    return _page(_game_spans([game]), games=[game])
 
 
 def jmes_path(data, path: str):
@@ -649,7 +643,7 @@ def parse_wikidata_entity(url_canon: str, body: str) -> dict:
 
     doc = _json.loads(body)
     entities = doc.get("entities", {})
-    spans, games = [], []
+    games = []
     for qid, ent in entities.items():
         name = _first(
             jmes_path(ent, "labels.en.value")
@@ -688,11 +682,7 @@ def parse_wikidata_entity(url_canon: str, body: str) -> dict:
             max_players=_validate_range(amount("P1873"), 1, None),
         )
         games.append(game)
-        spans.append(_span("text", len(spans), text=name))
-        if image:
-            spans.append(_span("image", len(spans), media_ref=image))
-    return {"spans": spans, "games": games, "users": [], "ratings": [],
-            "discovered": []}
+    return _page(_game_spans(games), games=games)
 
 
 _SPARQL_NS = "{http://www.w3.org/2005/sparql-results#}"
@@ -709,15 +699,12 @@ def parse_sparql(url_canon: str, body: str) -> dict:
         if not m:
             continue
         qid = int(m.group(1))
-        from ..synth import wikidata_entity_url
-
         discovered.append(
             {"url": wikidata_entity_url(qid), "priority": 1,
              "callback_kind": "wikidata_entity"}
         )
-        spans.append(_span("text", len(spans), text=f"Q{qid}"))
-    return {"spans": spans, "games": [], "users": [], "ratings": [],
-            "discovered": discovered}
+        spans.append(("text", f"Q{qid}"))
+    return _page(spans, discovered=discovered)
 
 
 def parse_rank_history(url_canon: str, body: str) -> dict:
@@ -739,17 +726,14 @@ def parse_rank_history(url_canon: str, body: str) -> dict:
             published_at=ts,
         )
         games.append(game)
-        spans.append(
-            _span("text", len(spans), text=f"rank {rank} at {ts.date()}")
-        )
-    return {"spans": spans, "games": games, "users": [], "ratings": [],
-            "discovered": []}
+        spans.append(("text", f"rank {rank} at {ts.date()}"))
+    return _page(spans, games=games)
 
 
 def parse_hotness(url_canon: str, body: str) -> dict:
     """bgg_hotness.py:76-99: 50 ranked items with thumbnails."""
     root = ET.fromstring(body)
-    spans, games = [], []
+    games = []
     for item in root.findall("item"):
         gid = _int(item.get("id"))
         name_el = item.find("name")
@@ -764,11 +748,7 @@ def parse_hotness(url_canon: str, body: str) -> dict:
             image_url=[thumb] if thumb else None,
         )
         games.append(game)
-        spans.append(_span("text", len(spans), text=name))
-        if thumb:
-            spans.append(_span("image", len(spans), media_ref=thumb))
-    return {"spans": spans, "games": games, "users": [], "ratings": [],
-            "discovered": []}
+    return _page(_game_spans(games), games=games)
 
 
 _GAME_FIELDS = tuple(GAME_ITEM.fieldNames())
@@ -841,7 +821,7 @@ def parse_bgg_rankings(url_canon: str, body: str) -> dict:
 
     doc = parse_html(body)
     published_at = _archive_date(url_canon) or SCRAPED_AT
-    spans, games, discovered, seen_urls = [], [], [], set()
+    games, discovered, seen_urls = [], [], set()
 
     def follow(href: str, priority: int):
         target = _urljoin(url_canon, href)
@@ -849,13 +829,6 @@ def parse_bgg_rankings(url_canon: str, body: str) -> dict:
             seen_urls.add(target)
             discovered.append({"url": target, "priority": priority,
                                "callback_kind": "bgg_rankings"})
-
-    def emit(game: dict, image: str | None):
-        games.append(game)
-        if game.get("name"):
-            spans.append(_span("text", len(spans), text=game["name"]))
-        if image:
-            spans.append(_span("image", len(spans), media_ref=image))
 
     # pagination (all eras): //a[contains(@title,'page')]/@href, prio 1
     for a in doc.select("a[title]"):
@@ -891,7 +864,7 @@ def parse_bgg_rankings(url_canon: str, body: str) -> dict:
             game["bayes_rating"] = _float(ratings[0])
             game["avg_rating"] = _float(ratings[1])
             game["num_votes"] = _int(ratings[2])
-        emit(game, image)
+        games.append(game)
 
     # Era B: rankbrowse.php3 simplebox, exactly-3-cell rows
     # (bgg_rankings.py:247-277)
@@ -905,17 +878,14 @@ def parse_bgg_rankings(url_canon: str, body: str) -> dict:
         )
         if not bgg_id:
             continue
-        emit(
-            _game_row(
-                bgg_id=bgg_id,
-                rank=_lenient_int(cells[0].text()),
-                name=clean_text_one(cells[1].text()) or None,
-                bayes_rating=_float(cells[2].text()),
-                url=_urljoin(url_canon, link_el.get("href")),
-                published_at=published_at,
-            ),
-            None,
-        )
+        games.append(_game_row(
+            bgg_id=bgg_id,
+            rank=_lenient_int(cells[0].text()),
+            name=clean_text_one(cells[1].text()) or None,
+            bayes_rating=_float(cells[2].text()),
+            url=_urljoin(url_canon, link_el.get("href")),
+            published_at=published_at,
+        ))
 
     # Era C: browser.php gamebrowser_table, 5+-cell rows
     # (bgg_rankings.py:278-311)
@@ -932,19 +902,16 @@ def parse_bgg_rankings(url_canon: str, body: str) -> dict:
         img_el = cells[1].select_first("img")
         image = (_urljoin(url_canon, img_el.get("src"))
                  if img_el is not None else None)
-        emit(
-            _game_row(
-                bgg_id=bgg_id,
-                rank=_lenient_int(cells[0].text()),
-                name=clean_text_one(cells[2].text()) or None,
-                bayes_rating=_float(cells[3].text()),
-                num_votes=_lenient_int(cells[4].text()),
-                image_url=[image] if image else None,
-                url=_urljoin(url_canon, link_el.get("href")),
-                published_at=published_at,
-            ),
-            image,
-        )
+        games.append(_game_row(
+            bgg_id=bgg_id,
+            rank=_lenient_int(cells[0].text()),
+            name=clean_text_one(cells[2].text()) or None,
+            bayes_rating=_float(cells[3].text()),
+            num_votes=_lenient_int(cells[4].text()),
+            image_url=[image] if image else None,
+            url=_urljoin(url_canon, link_el.get("href")),
+            published_at=published_at,
+        ))
 
     # Era D: top50.htm / topn.php3 — table whose header row contains
     # <h3>Bayesian Average</h3> (bgg_rankings.py:313-344)
@@ -967,18 +934,15 @@ def parse_bgg_rankings(url_canon: str, body: str) -> dict:
             rank = _lenient_int(cells[0].text())
             if not bgg_id or not rank:
                 continue
-            emit(
-                _game_row(
-                    bgg_id=bgg_id,
-                    rank=rank,
-                    name=clean_text_one(cells[1].text()) or None,
-                    bayes_rating=_float(cells[2].text()),
-                    num_votes=_lenient_int(cells[3].text()),
-                    url=_urljoin(url_canon, link_el.get("href")),
-                    published_at=published_at,
-                ),
-                None,
-            )
+            games.append(_game_row(
+                bgg_id=bgg_id,
+                rank=rank,
+                name=clean_text_one(cells[1].text()) or None,
+                bayes_rating=_float(cells[2].text()),
+                num_votes=_lenient_int(cells[3].text()),
+                url=_urljoin(url_canon, link_el.get("href")),
+                published_at=published_at,
+            ))
 
     # Wayback toolbar navigation: archive snapshots whose anchor @title
     # parses as a date, prio -1 (bgg_rankings.py:345-354)
@@ -987,8 +951,7 @@ def parse_bgg_rankings(url_canon: str, body: str) -> dict:
         if title and href and _RE_WAYBACK_TITLE_DATE.match(title.strip()):
             follow(href, -1)
 
-    return {"spans": spans, "games": games, "users": [], "ratings": [],
-            "discovered": discovered}
+    return _page(_game_spans(games), games=games, discovered=discovered)
 
 
 # bgg_geeklist.py:34-35: not part of the rankings
@@ -1005,7 +968,7 @@ def parse_bgg_geeklist(url_canon: str, body: str) -> dict:
     from ..functions.html import parse_html
 
     doc = parse_html(body)
-    spans, games, discovered, seen_urls = [], [], [], set()
+    games, discovered, seen_urls = [], [], set()
 
     def follow(href: str):
         target = _urljoin(url_canon, href)
@@ -1067,10 +1030,6 @@ def parse_bgg_geeklist(url_canon: str, body: str) -> dict:
                     published_at=published_at,
                 )
             )
-            if name:
-                spans.append(_span("text", len(spans), text=name))
-            if image:
-                spans.append(_span("image", len(spans), media_ref=image))
             continue
         # not a game: follow a child geeklist link (bgg_geeklist.py:76-84)
         if len(anchors) > 1:
@@ -1078,15 +1037,12 @@ def parse_bgg_geeklist(url_canon: str, body: str) -> dict:
             if href and "/geeklist/" in href:
                 follow(href)
 
-    return {"spans": spans, "games": games, "users": [], "ratings": [],
-            "discovered": discovered}
+    return _page(_game_spans(games), games=games, discovered=discovered)
 
 
 def parse_dbpedia_games(url_canon: str, body: str) -> dict:
     """dbpedia.py:341-373 parse_games: game-URI bindings → one
     property-table SPARQL request per game (callback dbpedia_game)."""
-    from ..synth import dbpedia_game_url
-
     root = ET.fromstring(body)
     spans, discovered = [], []
     for b in root.iter(f"{_SPARQL_NS}binding"):
@@ -1101,9 +1057,8 @@ def parse_dbpedia_games(url_canon: str, body: str) -> dict:
         g = int(m.group(1))
         discovered.append({"url": dbpedia_game_url(g), "priority": 0,
                            "callback_kind": "dbpedia_game"})
-        spans.append(_span("text", len(spans), text=uri_el.text))
-    return {"spans": spans, "games": [], "users": [], "ratings": [],
-            "discovered": discovered}
+        spans.append(("text", uri_el.text))
+    return _page(spans, discovered=discovered)
 
 
 def _dbp_bindings(body: str):
@@ -1210,13 +1165,7 @@ def parse_dbpedia_game(url_canon: str, body: str) -> dict:
                 literals("http://dbpedia.org/property/ages"))), 0, 21),
         url=url_canon,
     )
-    spans = [_span("text", 0, text=name)]
-    if desc:
-        spans.append(_span("text", len(spans), text=desc))
-    for i in images or []:
-        spans.append(_span("image", len(spans), media_ref=i))
-    return {"spans": spans, "games": [game], "users": [], "ratings": [],
-            "discovered": []}
+    return _page(_game_spans([game]), games=[game])
 
 
 PARSERS = {
@@ -1240,15 +1189,13 @@ PARSERS = {
 def parse_page(url_canon: str, callback_kind: str, body: str) -> dict:
     parser = PARSERS.get(callback_kind)
     if parser is None or body is None:
-        return {"spans": [], "games": [], "users": [], "ratings": [],
-                "discovered": []}
+        return _page()
     try:
         return parser(url_canon, body)
     except (ET.ParseError, ValueError, KeyError, TypeError):
         # DROPMALFORMED semantics (merge.py:170): bad page → nothing.
         # (json.JSONDecodeError is a ValueError.)
-        return {"spans": [], "games": [], "users": [], "ratings": [],
-                "discovered": []}
+        return _page()
 
 
 # Pages per emitted Arrow batch.  One page can explode into ~10^3 item
@@ -1256,6 +1203,8 @@ def parse_page(url_canon: str, callback_kind: str, body: str) -> dict:
 # yielding per input partition would hold the whole partition's nested
 # output in worker memory at once.
 PARSE_CHUNK_PAGES = 64
+# The item kinds of a page, in their PARSE_FLAT column order.
+_ITEM_KINDS = ("game", "user", "rating")
 
 
 def parse_flat_batches(batches):
@@ -1306,15 +1255,11 @@ def parse_flat_batches(batches):
                                  "callback_kind": d["callback_kind"]})
             rows.append((url_canon, "page", parsed["spans"], disc,
                          None, None, None, None))
-            for g in parsed["games"]:
-                rows.append((url_canon, "game", None, None, g, None, None,
-                             None))
-            for u in parsed["users"]:
-                rows.append((url_canon, "user", None, None, None, u, None,
-                             None))
-            for r in parsed["ratings"]:
-                rows.append((url_canon, "rating", None, None, None, None,
-                             r, None))
+            for kind in _ITEM_KINDS:
+                for item in parsed[kind + "s"]:
+                    rows.append((url_canon, kind, None, None,
+                                 *(item if k == kind else None
+                                   for k in _ITEM_KINDS), None))
             if len(rows) >= PARSE_CHUNK_PAGES * 64:
                 yield emit(rows)
                 rows = []

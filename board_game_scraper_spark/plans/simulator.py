@@ -16,7 +16,9 @@ from dataclasses import dataclass, field
 from urllib.parse import urlparse
 
 from .. import synth
-from ..functions.canon import canonicalize_one
+from ..functions.canon import (
+    canonicalize_one, collection_url, thing_url, user_url,
+)
 from .frontier import MAX_ATTEMPTS, RETRYABLE, budget_k
 
 
@@ -49,7 +51,7 @@ def _discoveries(row: SimRow, n_browse: int, n_games: int,
         page = int(row.url_canon.rsplit("/", 1)[1])
         gids = synth.page_games(page, n_games)
         for i in range(0, len(gids), 10):
-            out.append((synth.thing_url(gids[i:i + 10]), 0, "bgg_thing"))
+            out.append((thing_url(gids[i:i + 10]), 0, "bgg_thing"))
         if page < n_browse:
             out.append((synth.browse_url(page + 1), 1, "bgg_browse"))
     elif row.callback_kind == "bgg_thing":
@@ -63,8 +65,8 @@ def _discoveries(row: SimRow, n_browse: int, n_games: int,
                 if u not in users:
                     users.append(u)
         for u in users:
-            out.append((synth.collection_url(u), 1, "bgg_collection"))
-            out.append((synth.user_url(u), 3, "bgg_user"))
+            out.append((collection_url(u), 1, "bgg_collection"))
+            out.append((user_url(u), 3, "bgg_user"))
     return out
 
 

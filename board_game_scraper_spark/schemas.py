@@ -32,14 +32,8 @@ SPAN = StructType(
         StructField("kind", StringType(), False),  # text | image | video | rules
         StructField("text", StringType(), True),  # null for media spans
         StructField("media_ref", StringType(), True),  # null for text spans
-        StructField("offset", IntegerType(), False),  # 0-based doc position
-    ]
-)
-
-DOCUMENTS = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("spans", ArrayType(SPAN), False),
+        # 0-based position in the page, numbered by plans/parse.py _page
+        StructField("offset", IntegerType(), False),
     ]
 )
 

@@ -27,9 +27,11 @@ from urllib.parse import urlencode
 
 import pandas as pd
 
-from .functions.canon import canonicalize_one
+from .functions.canon import (
+    BGG, DBPEDIA_SPARQL, canonicalize_one, collection_url, dbpedia_game_uri,
+    dbpedia_game_url, thing_url, user_url, wikidata_entity_url,
+)
 
-BGG = "https://boardgamegeek.com"
 LUDING = "https://www.luding.org"
 SPIELEN = "https://gesellschaftsspiele.spielen.de"
 
@@ -41,26 +43,6 @@ def _h(s: str) -> int:
 
 def browse_url(page: int) -> str:
     return f"{BGG}/browse/boardgame/page/{page}"
-
-
-def thing_url(ids: list[int]) -> str:
-    """Canonical thing-API URL — sorted params like bgg.py:244-249."""
-    params = urlencode(
-        sorted({"id": ",".join(map(str, sorted(ids))), "stats": "1"}.items())
-    )
-    return f"{BGG}/xmlapi2/thing?{params}"
-
-
-def user_url(name: str) -> str:
-    params = urlencode(sorted({"name": name}.items()))
-    return f"{BGG}/xmlapi2/user?{params}"
-
-
-def collection_url(name: str) -> str:
-    params = urlencode(
-        sorted({"username": name, "stats": "1", "version": "0"}.items())
-    )
-    return f"{BGG}/xmlapi2/collection?{params}"
 
 
 def luding_url(i: int) -> str:
@@ -241,13 +223,6 @@ def collection_body(name: str, n_games: int) -> str:
         '<?xml version="1.0" encoding="utf-8"?>'
         f'<items totalitems="{len(gids)}">' + items + "</items>"
     )
-
-
-WIKIDATA = "https://www.wikidata.org"
-
-
-def wikidata_entity_url(qid: int) -> str:
-    return f"{WIKIDATA}/wiki/Special:EntityData/Q{qid}.json"
 
 
 def sparql_url(page: int = 1) -> str:
@@ -465,27 +440,12 @@ def rankings_top50_body(date14: str, n: int = 50) -> str:
 
 # -- dbpedia (dbpedia.py:303-521) --------------------------------------------
 
-DBPEDIA_SPARQL = "http://dbpedia.org/sparql"
 _SPARQL_NS_URI = "http://www.w3.org/2005/sparql-results#"
-
-
-def dbpedia_game_uri(g: int) -> str:
-    return f"http://dbpedia.org/resource/Game_{g}"
 
 
 def dbpedia_games_url(game_type: str) -> str:
     """Type → game-list SPARQL query URL (dbpedia.py:342-346)."""
     q = f"SELECT DISTINCT ?game WHERE {{ ?game a <{game_type}> . }}"
-    return f"{DBPEDIA_SPARQL}?{urlencode(sorted({'query': q, 'format': 'text/xml'}.items()))}"
-
-
-def dbpedia_game_url(g: int) -> str:
-    """Game URI → property-table SPARQL query URL (dbpedia.py:356-372)."""
-    q = (
-        f"SELECT ?property ?value ?label WHERE {{ <{dbpedia_game_uri(g)}> "
-        "?property ?value . OPTIONAL { ?value "
-        "<http://www.w3.org/2000/01/rdf-schema#label> ?label . } }"
-    )
     return f"{DBPEDIA_SPARQL}?{urlencode(sorted({'query': q, 'format': 'text/xml'}.items()))}"
 
 

@@ -481,3 +481,52 @@ def test_compact_resync_mid_crawl_converges(spark, tmp_path):
     # converged: tracked == exact, and the crawl ran to quiescence
     assert eng.frontier_rows() == eng.frontier.read().count()
     assert out, "crawl ran no rounds"
+
+
+def test_dispatch_rules_agree(spark):
+    """The engine's JVM dispatch (callback_kind_col) and the simulator's
+    reference (synth.callback_kind_for) pick the same parser for every
+    corpus URL and for the edge cases their rule order exists for."""
+    from board_game_scraper_spark.plans.crawl import callback_kind_col
+
+    urls = set(synth.corpus()[1].url_canon)
+    for pages in (synth.extended_corpus(), synth.rankings_corpus(),
+                  synth.dbpedia_corpus()):
+        urls |= set(pages.url_canon)
+    urls |= {
+        "https://boardgamegeek.com/geeklist/66420/bgg-top50-2010",
+        "https://www.example.com/top50.htm",
+        synth.canonicalize_one(synth.dbpedia_game_url(3)),
+        "https://www.luding.org/robots.txt",
+    }
+    df = spark.createDataFrame([(u,) for u in sorted(urls)], "u string")
+    got = {r["u"]: r["k"] for r in df.select(
+        "u", callback_kind_col(F.col("u")).alias("k")).collect()}
+    assert got == {u: synth.callback_kind_for(u) for u in urls}
+    assert {"bgg_geeklist", "unknown", "dbpedia_game",
+            "luding_game"} <= set(got.values())
+
+
+def test_seed_releases_its_cached_rows(spark, tmp_path):
+    """seed() caches its rows for the seen + frontier writes and drops
+    that cache before it returns."""
+    _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
+    eng = make_engine(spark, pages_pd, tmp_path / "sd")
+    sc = spark.sparkContext
+    persisted = lambda: sc._jsc.getPersistentRDDs().size()  # a snapshot
+    before = persisted()
+    seed_one(spark, eng)
+    assert persisted() == before
+
+
+def test_seed_tie_keeps_least_raw_url(spark, tmp_path):
+    """Two raw seeds with one canonical URL and equal priority: the
+    frontier stores the least raw url, whatever the input order."""
+    a = "https://boardgamegeek.com/xmlapi2/thing?stats=1&id=13"
+    b = "https://boardgamegeek.com/xmlapi2/thing?id=13&stats=1"
+    _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
+    for i, order in enumerate(([a, b], [b, a])):
+        eng = make_engine(spark, pages_pd, tmp_path / f"tie{i}")
+        eng.seed(spark.createDataFrame(pd.DataFrame(
+            {"url": order, "source": "bgg", "priority": 0}), schemas.SEEDS))
+        assert [r["url"] for r in eng.frontier.read().collect()] == [b]

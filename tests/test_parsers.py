@@ -127,6 +127,26 @@ def test_malformed_bodies_dropped():
         assert out["games"] == [] and out["discovered"] == []
 
 
+def test_nameless_game_pages_yield_no_null_text_span():
+    """A game row without a name gets no text span: a thing item
+    without <name type="primary"> and a luding page without an <h1>
+    keep their description and media spans, numbered by position."""
+    body = synth.thing_body([42, 43], n_users=10).replace(
+        'type="primary"', 'type="alternate"', 1)
+    thing = parse_page("u", "bgg_thing", body)
+    assert [g["name"] for g in thing["games"]] == [None, "Game 43"]
+    luding = parse_page(synth.luding_url(7), "luding_game",
+                        synth.luding_body(7).replace(
+                            "<h1>Luding Game 7</h1>", ""))
+    assert luding["games"][0]["name"] is None
+    assert [s["kind"] for s in luding["spans"]] == ["text", "image"]
+    for page in (thing, luding):
+        assert all(s["text"] is not None for s in page["spans"]
+                   if s["kind"] == "text")
+        assert [s["offset"] for s in page["spans"]] == list(
+            range(len(page["spans"])))
+
+
 def test_parse_flat_hotness_pages(spark):
     from board_game_scraper_spark.plans.parse import run_parse_flat
     from board_game_scraper_spark.schemas import FETCHED
