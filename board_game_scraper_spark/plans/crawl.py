@@ -4,22 +4,20 @@ One round = one superstep (the Spark replacement for the reference's
 Twisted reactor loop, ``__main__.py:91-190``).  ``CrawlEngine.run_round``
 calls these stages in order:
 
-1. ``_consume_seed_requests`` — fold queued crawl requests (S10) into
-   the frontier; like ``requeue``, an out-of-band insert.
-2. ``_fused_stage`` (or its speculative run, ``_take_speculation``) —
+1. ``_fused_stage`` (or its speculative run, ``_take_speculation``) —
    frontier ──schedule (F1-F3 politeness top-K)──► fetch (S5/S6 join)
    ──► Arrow parse (E1-E16) ──► one uncommitted items write.
-3. ``_idle_round`` — only when nothing was scheduled: report done, or
+2. ``_idle_round`` — only when nothing was scheduled: report done, or
    the earliest round a backoff retry (F9) becomes eligible.
-4. ``_discover`` — discovered URLs ──canon (C1-C6) → two-level dedup →
+3. ``_discover`` — discovered URLs ──canon (C1-C6) → two-level dedup →
    seen filter (F6 bloom + anti-join)──► fresh frontier rows.
-5. ``_commit_side_tables`` — the commit pool: the frontier delta's
+4. ``_commit_side_tables`` — the commit pool: the frontier delta's
    writes (deletes, retries, fresh) and the items, url_seen, metrics
    (+ opt-in host_state) commits; on a retry-only tail it launches the
    next round's speculative fused stage.
-6. ``_flip_frontier`` — the frontier delta commit, the resume marker.
-7. ``_compact`` — the ``compact_every`` cadence.
-8. ``_hand_off`` — the fast-forward hint and the round's metric dict.
+5. ``_flip_frontier`` — the frontier delta commit, the resume marker.
+6. ``_compact`` — the ``compact_every`` cadence.
+7. ``_hand_off`` — the fast-forward hint and the round's metric dict.
 
 Every table is a SnapshotTable (Iceberg semantics): the commit at the
 end of a round is atomic per table, and the frontier commit carries the
@@ -92,6 +90,8 @@ def callback_kind_col(url_canon):
               F.lit("wikidata_sparql"))
         .when(url_canon.contains("/wiki/Special:EntityData/"),
               F.lit("wikidata_entity"))
+        # a robots.txt is never a game page (F5 reads it, no parser does)
+        .when(url_canon.endswith("/robots.txt"), F.lit("unknown"))
         .when(url_canon.contains("luding.org"), F.lit("luding_game"))
         .when(url_canon.contains("spielen.de"), F.lit("spielen_game"))
         .otherwise(F.lit("unknown"))
@@ -114,31 +114,6 @@ def _frontier_select(df: DataFrame, discovery_round: int,
         F.lit(not_before_round).alias("not_before_round"),
         F.lit(None).cast("map<string,string>").alias("meta"),
     )
-
-
-def _canonical_frontier_rows(urls: DataFrame, discovery_round: int,
-                             not_before_round: int) -> DataFrame:
-    """Frontier rows for raw ``url`` + ``priority`` rows (seeds,
-    requeues, seed requests): canonicalized, uncanonicalizable URLs
-    dropped, one row per canonical URL (highest priority wins; on a tie
-    the least raw ``url``, so the stored row is deterministic)."""
-    from ..functions.canon import canonicalize_url
-
-    c = urls.withColumn("_c", canonicalize_url(F.col("url")))
-    rows = _frontier_select(
-        c.where(F.col("_c.url_canon").isNotNull()).select(
-            "url", "priority",
-            F.col("_c.url_canon").alias("url_canon"),
-            F.xxhash64("_c.url_canon").alias("url_hash"),
-            F.col("_c.host").alias("host"),
-            callback_kind_col(F.col("_c.url_canon")).alias("callback_kind"),
-        ),
-        discovery_round, not_before_round,
-    )
-    w = Window.partitionBy("url_hash").orderBy(
-        F.col("priority").desc(), F.col("url_canon"), F.col("url"))
-    return (rows.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1).drop("_rn"))
 
 
 class _KindView:
@@ -208,7 +183,6 @@ class CrawlEngine:
         self.use_ids_seen = use_ids_seen
         self.frontier = t("frontier", schemas.FRONTIER)
         self.ids_seen = t("ids_seen", schemas.IDS_SEEN)
-        self.seed_requests = t("seed_requests", schemas.SEED_REQUESTS)
         self.seen = t("url_seen", schemas.URL_SEEN)
         self.robots = t("robots", schemas.ROBOTS)
         self.host_state = t("host_state", schemas.HOST_STATE)
@@ -256,10 +230,9 @@ class CrawlEngine:
         # pages cache and (post-stage-A) side tables, never a table
         # mid-commit.  Nothing is committed speculatively: the scratch
         # dir is an invisible orphan until the consuming round's
-        # add_files, so crash/resume semantics are unchanged.  Any
-        # out-of-band frontier insert cancels it.  Only active inside
-        # crawl() — _round_window_end gates the launch so a speculation
-        # is never started for a round the loop won't run.
+        # add_files, so crash/resume semantics are unchanged.  Only
+        # active inside crawl() — _round_window_end gates the launch so a
+        # speculation is never started for a round the loop won't run.
         self._spec: dict | None = None
         self._spec_pool = None
         self._round_window_end: int | None = None
@@ -271,9 +244,9 @@ class CrawlEngine:
 
     def frontier_rows(self) -> int:
         """Exact current frontier row count — manifest arithmetic, no
-        Spark job.  Every frontier commit (seed, insert, round flip,
-        compact) carries it as a metric, so resume reads it from the
-        current snapshot (0 before the first commit)."""
+        Spark job.  Every frontier commit (seed, round flip, compact)
+        carries it as a metric, so resume reads it from the current
+        snapshot (0 before the first commit)."""
         if self._frontier_rows is None:
             snap = self.frontier.current_snapshot()
             self._frontier_rows = int(
@@ -282,10 +255,30 @@ class CrawlEngine:
 
     def seed(self, seeds: DataFrame) -> int:
         """Round 0: canonicalize seeds, dedup, install frontier + seen.
+        Uncanonicalizable URLs are dropped; one row per canonical URL
+        (highest priority wins; on a tie the least raw ``url``, so the
+        stored row is deterministic).
 
         Reference: start_requests (bgg.py:198-227) + CSV seeds (S4).
         """
-        rows = _canonical_frontier_rows(seeds, 0, 0)
+        from ..functions.canon import canonicalize_url
+
+        c = seeds.withColumn("_c", canonicalize_url(F.col("url")))
+        rows = _frontier_select(
+            c.where(F.col("_c.url_canon").isNotNull()).select(
+                "url", "priority",
+                F.col("_c.url_canon").alias("url_canon"),
+                F.xxhash64("_c.url_canon").alias("url_hash"),
+                F.col("_c.host").alias("host"),
+                callback_kind_col(F.col("_c.url_canon"))
+                .alias("callback_kind"),
+            ),
+            0, 0,
+        )
+        w = Window.partitionBy("url_hash").orderBy(
+            F.col("priority").desc(), F.col("url_canon"), F.col("url"))
+        rows = (rows.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") == 1).drop("_rn"))
         obs = Observation()
         rows = rows.observe(obs, F.count(F.lit(1)).alias("n")).cache()
         try:
@@ -312,7 +305,7 @@ class CrawlEngine:
         self._frontier_rows = n
         return n
 
-    # --------------------------------------------------------- opt-in F4/F5/F11
+    # ------------------------------------------------------------ opt-in F4/F5
 
     def _refresh_robots(self, frontier: DataFrame, round_no: int) -> None:
         """Fetch robots.txt for hosts newly present in the frontier (F5;
@@ -348,164 +341,6 @@ class CrawlEngine:
             merged[r["host"]] = (float(r["delay_sec"]),
                                  int(r["concurrency"]))
         return merged
-
-    def requeue(self, urls: DataFrame, round_no: int,
-                window_rounds: int = 6) -> int:
-        """Re-crawl already-seen URLs (F11 + extensions.py:148-151
-        dont_filter): insert unless successfully fetched within the last
-        ``window_rounds`` rounds (PREVENT_RESCRAPE_FOR analog).
-
-        ``urls``: DataFrame with a raw ``url`` column (+ optional
-        priority).  The successful fetches are the status-200 'fetch'
-        rows of the items data dirs committed in the window — read from
-        the items table itself (partition-pruned to ``item_kind=fetch``),
-        so no second copy of crawl state is kept for this.
-        """
-        if "priority" not in urls.columns:
-            urls = urls.withColumn("priority", F.lit(1))
-        # discovery_round = round_no + 1, NOT round_no: a URL discovered
-        # in round_no, scheduled+failed in round_no, then requeued in
-        # round_no would otherwise collide with the round's pending
-        # equality-delete tuple (url_hash, 0, round_no) and be silently
-        # dropped at the next compact.  Requeued rows are a distinct
-        # generation, same as fresh discoveries.
-        rows = _canonical_frontier_rows(urls, round_no + 1, round_no)
-        # items is append-only (add_files), so each committed dir is the
-        # "added" dir of exactly one round-tagged snapshot
-        rels = [rel for snap in self.items.history()
-                if snap["lineage"]["round"] > round_no - window_rounds
-                for rel in snap["added"]]
-        recent = self.items.read_files(rels).where(
-            (F.col("item_kind") == "fetch") & (F.col("fetch.status") == 200)
-        ).select(F.col("fetch.url_hash").alias("url_hash"))
-        return self._insert_rows(
-            rows.join(recent, "url_hash", "left_anti"),
-            lineage={"stage": "requeue", "at_round": round_no})
-
-    def _insert_rows(self, rows: DataFrame, lineage: dict) -> int:
-        """Out-of-band frontier insert (requeue, seed-request fold):
-        append the ``rows`` not already pending in the frontier as one
-        delta; returns how many.  ONE action: the count rides the
-        prepared write job as an Observation, so the commit can carry
-        the exact post-commit row count (frontier_rows()).  A delta that
-        observed zero rows is removed, never committed: a no-op insert
-        leaves nothing on disk (ADVICE r04 #3).  ``lineage`` has no
-        "round" key — only end-of-round commits may advance the resume
-        marker (ADVICE r03 #4)."""
-        obs = Observation()
-        fresh = rows.join(self.frontier.read().select("url_hash"),
-                          "url_hash", "left_anti").observe(
-            obs, F.count(F.lit(1)).alias("n"))
-        prepared = self.frontier.prepare_delta(
-            appends=fresh, coalesce=WRITE_COALESCE,
-        )
-        n = int(obs.get["n"] or 0)
-        if n == 0:
-            self.frontier.discard_prepared(prepared)
-            return 0
-        rows_after = self.frontier_rows() + n
-        self.frontier.commit_prepared_delta(
-            prepared, lineage=lineage,
-            metrics={"frontier_rows": rows_after},
-        )
-        self._frontier_rows = rows_after
-        self._cancel_speculation()
-        return n
-
-    # ------------------------------------------------------- S10 seed requests
-
-    def enqueue_requests(self, urls: DataFrame) -> int:
-        """S10 (extensions.py:24-153, pubsub_pull.py:172-281): queue
-        externally-requested crawls — e.g. "crawl this username now"
-        messages.  Rows wait in the ``seed_requests`` table until the
-        next round consumes-with-ack them.  ``urls`` needs a raw ``url``
-        column (+ optional source/priority)."""
-        src = (F.col("source") if "source" in urls.columns
-               else F.lit("pubsub"))
-        prio = (F.col("priority") if "priority" in urls.columns
-                else F.lit(5))
-        rows = urls.select(
-            F.col("url"),
-            src.cast("string").alias("source"),
-            prio.cast("int").alias("priority"),
-            F.lit(self.last_round() + 1).cast("int")
-            .alias("enqueued_round"),
-        ).cache()
-        n = rows.count()
-        if n:
-            from ..tables import ConcurrentCommitError
-
-            # write the batch once, then CAS the manifest commit: the
-            # pending metric is a read-modify-write, so a concurrent
-            # enqueue/ack landing in between must force a re-read (the
-            # same lost-update class as the ack side, ADVICE r04 #4)
-            rel, _ = self.seed_requests.new_data_dir()
-            rows.repartition(1).write.mode("overwrite").parquet(
-                str(self.seed_requests.path / rel)
-            )
-            while True:
-                snap = self.seed_requests.current_snapshot()
-                pending = ((snap or {}).get("metrics") or {}).get(
-                    "pending", 0)
-                try:
-                    self.seed_requests.add_files(
-                        rel, lineage={"stage": "enqueue"},
-                        metrics={"pending": pending + n},
-                        expected_parent=(snap or {}).get("name") or "",
-                    )
-                    break
-                except ConcurrentCommitError:
-                    continue
-        rows.unpersist()
-        return n
-
-    def _consume_seed_requests(self, round_no: int) -> int:
-        """Fold pending requests into the frontier, then ack (empty the
-        queue).  The pending gate is a manifest-metrics read — zero Spark
-        jobs on the (common) empty case.  Requested URLs bypass the seen
-        set (the reference's dont_filter, extensions.py:148-151) but
-        anti-join the live frontier so a URL already queued for crawling
-        isn't duplicated.  Crash between fold and ack → the batch is
-        re-applied next start and the same anti-join makes it a no-op
-        (at-least-once delivery, idempotent effect)."""
-        snap = self.seed_requests.current_snapshot()
-        pending0 = ((snap or {}).get("metrics") or {}).get("pending", 0)
-        if not snap or not pending0:
-            return 0
-        # Consume exactly this snapshot's data files: rows enqueued
-        # AFTER this read land in new files and survive the ack below
-        # (an external producer may enqueue mid-round — ADVICE r03 #3).
-        consumed_files = list(snap["files"])
-        batch = self.seed_requests.read_files(consumed_files)
-        n = self._insert_rows(
-            _canonical_frontier_rows(batch, round_no, round_no),
-            lineage={"stage": "seed_requests", "at_round": round_no})
-        # ack: drop exactly the consumed files (manifest-only commit);
-        # files appended since the consuming read stay pending.  The
-        # replace compare-and-swaps on the snapshot the remaining list
-        # was computed from: an enqueue landing inside the manifest-IO
-        # window makes the CAS fail and we re-read, so the late
-        # producer's file is never silently clobbered (ADVICE r04 #4).
-        from ..tables import ConcurrentCommitError
-
-        consumed = set(consumed_files)
-        while True:
-            now = self.seed_requests.current_snapshot() or {}
-            remaining = [f for f in (now.get("files") or [])
-                         if f not in consumed]
-            rem_pending = ((now.get("metrics") or {}).get("pending", 0)
-                           - pending0)
-            try:
-                self.seed_requests.replace_files(
-                    remaining,
-                    lineage={"round": round_no, "stage": "ack"},
-                    metrics={"pending": max(int(rem_pending), 0)},
-                    expected_parent=now.get("name") or "",
-                )
-                break
-            except ConcurrentCommitError:
-                continue
-        return n
 
     # ------------------------------------------------------------- F7 ids_seen
 
@@ -740,8 +575,8 @@ class CrawlEngine:
         shutil.rmtree(fused["scratch"], ignore_errors=True)
 
     def _cancel_speculation(self) -> None:
-        """Invalidate any in-flight speculation (out-of-band frontier
-        inserts change what the next round must schedule)."""
+        """Discard any in-flight speculation: ``crawl()`` drops one that
+        targets a round its window will not run."""
         spec, self._spec = self._spec, None
         if spec is not None:
             self._discard_spec(spec)
@@ -753,7 +588,6 @@ class CrawlEngine:
         COUNTS THAT DRIVE THE LOOP (scheduled, retries, fresh, pending)
         come only from aggregates riding singly-materialized WRITE jobs
         and from manifest arithmetic — see ``_fused_stage``."""
-        self._consume_seed_requests(round_no)
         n_frontier = self.frontier_rows()
         fused = self._take_speculation(round_no)
         if fused is not None:
@@ -931,9 +765,9 @@ class CrawlEngine:
             # is never rewritten (VERDICT r01 #2).  The key triple
             # (url_hash, attempt, discovery_round) uniquely identifies a
             # frontier row generation: a retry re-enters with attempt+1
-            # and a requeue with discovery_round = round_no+1 (strictly
-            # newer than any generation deletable this round), so old
-            # delete tuples can never shadow newly appended rows.
+            # and a fresh discovery with discovery_round = round_no+1
+            # (strictly newer than any generation deletable this round),
+            # so old delete tuples can never shadow newly appended rows.
             #
             # Stage A — everything that depends only on the committed
             # scratch / caches: the delta's three data writes (deletes,
@@ -1136,13 +970,12 @@ class CrawlEngine:
     # ------------------------------------------------------------ lifecycle
 
     def last_round(self) -> int:
-        """Highest fully-committed round: the newest frontier snapshot
-        whose lineage carries a "round" key.  Out-of-band commits
-        (requeue, seed-request folds) are tagged with "at_round" instead
-        and are skipped — they must not advance the resume marker."""
-        return next((int(snap["lineage"]["round"])
-                     for snap in self.frontier.history()
-                     if "round" in (snap.get("lineage") or {})), -1)
+        """Highest fully-committed round: the current frontier snapshot's
+        ``lineage.round`` (-1 before the seed).  Every frontier commit is
+        a round commit — the seed (round 0), a round flip or its
+        compaction — so the current snapshot is the resume marker."""
+        snap = self.frontier.current_snapshot()
+        return int(snap["lineage"]["round"]) if snap else -1
 
     def crawl(self, n_rounds: int, start_round: int | None = None) -> list[dict]:
         """Run up to ``n_rounds`` supersteps in [start, start+n_rounds);

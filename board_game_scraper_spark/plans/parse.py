@@ -235,7 +235,9 @@ def parse_browse(url_canon: str, body: str) -> dict:
     spans, discovered, seen_ids, order = [], [], set(), []
     for m in _RE_GAME_LINK.finditer(body):
         gid = int(m.group(1))
-        spans.append(("text", clean_text_one(m.group(2))))
+        name = clean_text_one(m.group(2))
+        if name:  # _game_spans' rule: no text span for an empty name
+            spans.append(("text", name))
         if gid not in seen_ids:
             seen_ids.add(gid)
             order.append(gid)
@@ -282,7 +284,7 @@ def parse_thing(url_canon: str, body: str) -> dict:
         year = _validate_range(attr_val("yearpublished"), -4000, 2035)
         ratings_el = item.find("statistics/ratings")
         rank_el = item.find("statistics/ratings/ranks/rank[@name='boardgame']")
-        image_el = item.find("image")
+        image = item.findtext("image")  # "" for an empty <image/>
         video_els = item.findall("videos/video")
 
         avg = attr_val("average", _float, ratings_el) if ratings_el is not None else None
@@ -312,7 +314,7 @@ def parse_thing(url_canon: str, body: str) -> dict:
             artist=_link_values(item, "boardgameartist") or None,
             publisher=_link_values(item, "boardgamepublisher") or None,
             url=f"{BGG}/boardgame/{gid}/",
-            image_url=[image_el.text] if image_el is not None else None,
+            image_url=[image] if image else None,
             video_url=[v.get("link") for v in video_els] or None,
             min_players=min_p,
             max_players=max_p,

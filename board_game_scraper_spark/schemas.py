@@ -98,22 +98,6 @@ SEEDS = StructType(
     ]
 )
 
-# S10: externally-enqueued crawl requests (reference: the Pub/Sub pull
-# extension, extensions.py:24-153 / pubsub_pull.py:172-281 — e.g. "crawl
-# this username now" messages).  Rows are consumed-with-ack by the crawl
-# loop: folded into the frontier at round start, then acked (table
-# emptied) in the same consume step.  At-least-once: a crash between
-# fold and ack re-applies the batch, which the frontier anti-join makes
-# idempotent.
-SEED_REQUESTS = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("source", StringType(), False),
-        StructField("priority", IntegerType(), False),
-        StructField("enqueued_round", IntegerType(), False),
-    ]
-)
-
 # Fetch results (one per scheduled URL per round) — input to the parse stage.
 FETCHED = StructType(
     [

@@ -819,6 +819,8 @@ def callback_kind_for(url_canon: str) -> str:
         return "wikidata_sparql"
     if "/wiki/Special:EntityData/" in url_canon:
         return "wikidata_entity"
+    if url_canon.endswith("/robots.txt"):
+        return "unknown"
     if "luding.org" in url_canon:
         return "luding_game"
     if "spielen.de" in url_canon:

@@ -48,7 +48,6 @@ import json
 import os
 import shutil
 import uuid
-from collections.abc import Iterator
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -86,19 +85,16 @@ class SnapshotTable:
         manifest = self.path / "snapshots" / name
         return json.loads(manifest.read_text())
 
-    def history(self) -> Iterator[dict]:
-        """Committed snapshots, newest first: a lazy walk of the
-        manifest parent chain from CURRENT."""
-        snap = self.current_snapshot()
+    def snapshots(self) -> list[dict]:
+        """All committed snapshots, oldest first: the manifest parent
+        chain walked back from CURRENT."""
+        chain, snap = [], self.current_snapshot()
         while snap is not None:
-            yield snap
+            chain.append(snap)
             parent = snap.get("parent")
             snap = (json.loads((self.path / "snapshots" / parent).read_text())
                     if parent else None)
-
-    def snapshots(self) -> list[dict]:
-        """All committed snapshots, oldest first."""
-        return list(reversed(list(self.history())))
+        return chain[::-1]
 
     def _commit(self, files: list[str], mode: str, lineage: dict | None,
                 metrics: dict | None,
@@ -106,11 +102,12 @@ class SnapshotTable:
                 delete_keys: list[str] | None = None,
                 expected_parent: str | None = None) -> dict:
         # Serialize commits with an advisory file lock (flock) so a
-        # concurrent producer can't land between read-CURRENT and the
+        # concurrent commit can't land between read-CURRENT and the
         # pointer flip; with ``expected_parent`` the commit additionally
         # compare-and-swaps on the parent snapshot name — the Iceberg
-        # optimistic-commit protocol (ADVICE r04 #4: an enqueue landing
-        # inside an ack's manifest-IO window was silently clobbered).
+        # optimistic-commit protocol: ``compact_minor`` rewrites a file
+        # list it read before its rewrite job, so a commit landing during
+        # that job must fail the swap, not be silently dropped.
         import fcntl
 
         lock_path = self.path / "snapshots" / ".commit.lock"
@@ -127,14 +124,12 @@ class SnapshotTable:
                        delete_keys: list[str] | None,
                        expected_parent: str | None) -> dict:
         current = self.current_snapshot()
-        if expected_parent is not None:
-            # "" means "expect NO current snapshot" (first-ever commit)
-            cur_name = current["name"] if current else ""
-            if cur_name != expected_parent:
-                raise ConcurrentCommitError(
-                    f"CURRENT moved: expected {expected_parent!r}, "
-                    f"found {cur_name!r}"
-                )
+        cur_name = current["name"] if current else None
+        if expected_parent is not None and cur_name != expected_parent:
+            raise ConcurrentCommitError(
+                f"CURRENT moved: expected {expected_parent!r}, "
+                f"found {cur_name!r}"
+            )
         snap_id = (current["id"] + 1) if current else 1
         added = list(files)
         if mode in ("append", "delta") and current:
@@ -197,23 +192,19 @@ class SnapshotTable:
         return rel, self.path / rel
 
     def add_files(self, rel: str, lineage: dict | None = None,
-                  metrics: dict | None = None,
-                  expected_parent: str | None = None) -> dict:
+                  metrics: dict | None = None) -> dict:
         """Commit an already-written data dir without rewriting it."""
-        return self._commit([rel], "append", lineage, metrics,
-                            expected_parent=expected_parent)
+        return self._commit([rel], "append", lineage, metrics)
 
     def replace_files(self, files: list[str], lineage: dict | None = None,
                       metrics: dict | None = None,
                       expected_parent: str | None = None) -> dict:
         """Point the table at an explicit data-file list (manifest-only
-        commit, no Spark job).  Consume-with-ack uses it to drop exactly
-        the data files a consumer read, keeping files appended since —
-        an ack that truncated the whole table would silently drop rows
-        enqueued between the consuming read and the ack (ADVICE r03 #3).
-        Pass ``expected_parent`` (the snapshot name the file list was
-        computed from) to fail with :class:`ConcurrentCommitError` if a
-        producer landed in between — re-read and retry."""
+        commit, no Spark job).  ``compact_minor`` uses it to swap the
+        folded dirs for their rewrite.  Pass ``expected_parent`` (the
+        snapshot name the file list was computed from) to fail with
+        :class:`ConcurrentCommitError` if another commit landed in
+        between — re-read and retry."""
         return self._commit(list(files), "overwrite", lineage, metrics,
                             expected_parent=expected_parent)
 

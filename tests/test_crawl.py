@@ -1,8 +1,8 @@
 """End-to-end crawl: order equality vs the pure-Python simulator,
 URL-seen membership equality, span oracle, exact resume; the round
 loop's retry fast-forward, frontier-row accounting, compaction cadence
-and speculative fused stage (double-buffering, its invalidation by an
-out-of-band requeue, and the compact re-sync through a full crawl).
+and speculative fused stage (double-buffering, and the compact re-sync
+through a full crawl).
 """
 
 import json
@@ -418,48 +418,6 @@ def test_double_buffer_rounds_identical(spark, tmp_path, monkeypatch):
     assert eng_off._spec_hits == 0
 
 
-def test_requeue_cancels_speculation(spark, tmp_path):
-    """An out-of-band frontier insert between rounds invalidates the
-    in-flight speculation (its frontier is missing the new row); the
-    next round falls back to the table read and schedules the insert.
-    Manifest arithmetic stays exact throughout."""
-    import pandas as pd
-
-    seeds_pd, pages_pd = synth.corpus(n_browse=4, n_users=8, n_other=4)
-    pages_pd = with_retryables(pages_pd)
-    eng = make_engine(spark, pages_pd, tmp_path / "c", window_sec=1e6)
-    eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
-    # drive rounds manually inside an artificial window so speculation
-    # can launch exactly as crawl() would allow
-    eng._round_window_end = 100
-    r = 1
-    spec_round = None
-    for _ in range(12):
-        m = eng.run_round(r)
-        if eng._spec is not None:
-            spec_round = eng._spec["round"]
-            break
-        if m.get("done") or m.get("pending") == 0:
-            pytest.skip("corpus produced no retry tail to speculate on")
-        r = max(m.get("next_eligible_round") or r + 1, r + 1)
-    assert spec_round is not None
-    # out-of-band requeue of one successfully-crawled URL (index past
-    # the flipped-503 block: a 503 URL is still pending as a retry and
-    # the requeue's frontier anti-join would drop it) -> must cancel
-    url = pages_pd.iloc[10]["url_canon"]
-    n = eng.requeue(
-        spark.createDataFrame(pd.DataFrame({"url": [url]})), r,
-        window_rounds=0,
-    )
-    assert n == 1
-    assert eng._spec is None, "speculation must be invalidated by requeue"
-    m2 = eng.run_round(spec_round)
-    eng._round_window_end = None
-    # the requeued row was actually scheduled by the fallback path
-    assert m2["scheduled"] >= 1
-    assert eng.frontier_rows() == eng.frontier.read().count()
-
-
 # ------------------------- compact-cadence re-sync through a full crawl
 
 def test_compact_resync_mid_crawl_converges(spark, tmp_path):
@@ -498,11 +456,16 @@ def test_dispatch_rules_agree(spark):
         "https://www.example.com/top50.htm",
         synth.canonicalize_one(synth.dbpedia_game_url(3)),
         "https://www.luding.org/robots.txt",
+        "https://gesellschaftsspiele.spielen.de/robots.txt",
     }
     df = spark.createDataFrame([(u,) for u in sorted(urls)], "u string")
     got = {r["u"]: r["k"] for r in df.select(
         "u", callback_kind_col(F.col("u")).alias("k")).collect()}
     assert got == {u: synth.callback_kind_for(u) for u in urls}
+    # a robots.txt is read by the robots stage, never by a page parser
+    assert {got["https://www.luding.org/robots.txt"],
+            got["https://gesellschaftsspiele.spielen.de/robots.txt"]} == {
+        "unknown"}
     assert {"bgg_geeklist", "unknown", "dbpedia_game",
             "luding_game"} <= set(got.values())
 

@@ -130,7 +130,9 @@ def test_malformed_bodies_dropped():
 def test_nameless_game_pages_yield_no_null_text_span():
     """A game row without a name gets no text span: a thing item
     without <name type="primary"> and a luding page without an <h1>
-    keep their description and media spans, numbered by position."""
+    keep their description and media spans, numbered by position.  A
+    browse link with empty anchor text gets no text span either, and an
+    empty <image/> is no image."""
     body = synth.thing_body([42, 43], n_users=10).replace(
         'type="primary"', 'type="alternate"', 1)
     thing = parse_page("u", "bgg_thing", body)
@@ -140,7 +142,16 @@ def test_nameless_game_pages_yield_no_null_text_span():
                             "<h1>Luding Game 7</h1>", ""))
     assert luding["games"][0]["name"] is None
     assert [s["kind"] for s in luding["spans"]] == ["text", "image"]
-    for page in (thing, luding):
+    browse = parse_page(synth.browse_url(1), "bgg_browse",
+                        '<a href="/boardgame/7/x"></a>'
+                        '<a href="/boardgame/8/y">Game 8</a>')
+    assert [s["text"] for s in browse["spans"]] == ["Game 8"]
+    imageless = parse_page(
+        "u", "bgg_thing", '<items><item id="5"><name type="primary" '
+        'value="G"/><image/></item></items>')
+    assert imageless["games"][0]["image_url"] is None
+    assert [s["kind"] for s in imageless["spans"]] == ["text"]
+    for page in (thing, luding, browse, imageless):
         assert all(s["text"] is not None for s in page["spans"]
                    if s["kind"] == "text")
         assert [s["offset"] for s in page["spans"]] == list(

@@ -11,10 +11,10 @@ nothing runs; delete it with its tests instead of keeping it alive.
 The same holds for ``CrawlEngine`` options: each one is passed by keyword
 by at least one caller, in code or in a test, or it is a path nothing
 selects.  Package-wide, every defaulted parameter is passed by some call,
-and every public function (plus the public methods of ``SnapshotTable``
-and ``SnapshotBloom``) is referenced outside ``tests/``; ``synth.py`` is
-exempt from the second rule as the corpus generator tests and
-``perfbench/`` share.
+and every public function (plus the public methods of ``CrawlEngine``,
+``SnapshotTable`` and ``SnapshotBloom``) is referenced outside
+``tests/``; ``synth.py`` is exempt from the second rule as the corpus
+generator tests and ``perfbench/`` share.
 """
 
 import ast
@@ -165,6 +165,6 @@ def test_public_functions_have_non_test_callers():
     unreferenced = [
         f"{path.relative_to(ROOT)} {f.name}" for path, cls, f in _defs()
         if path.name != "synth.py" and not f.name.startswith("_")
-        and cls in (None, "SnapshotTable", "SnapshotBloom")
+        and cls in (None, "CrawlEngine", "SnapshotTable", "SnapshotBloom")
         and f.name not in referenced]
     assert unreferenced == []
