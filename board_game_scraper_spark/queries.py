@@ -9,8 +9,8 @@ the engine's regression surface.
 Inputs: every table read goes through ``_t``, which pins the schema
 from the parquet footer (so building a plan runs no Spark job) and, given
 spread keys, hash-spreads the one-row-group scan to the session's
-parallelism.  The four parser-backed extractions map one Python row
-function over their source columns with ``_map_rows``.
+parallelism.  The four parser-backed extractions build one page per
+source row and parse it with the crawl's page kernel (``_parse_pages``).
 
 Column-name discipline: every computed column is aliased identically in
 the Spark plan and the SQL oracle (driver hashes values under sorted
@@ -39,6 +39,7 @@ from .operators.textstats import (
     LANG_PROFILES, fingerprint, language_id, quality_score, token_count,
 )
 from .plans.frontier import batch_api_ids
+from .plans.parse import run_parse_flat
 
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
@@ -66,21 +67,20 @@ def _t(spark: SparkSession, sf_dir: str, name: str, *spread: str) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism, *spread)
 
 
-def _map_rows(src: DataFrame, row, schema: str) -> DataFrame:
-    """``row(*values)`` over each row of ``src``'s columns, in Arrow
-    batches (``mapInPandas``); a ``None`` result drops the row, a tuple
-    is one output row of the DDL ``schema``."""
-    cols = [f.split()[0] for f in schema.split(",")]
-
-    def _kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = map(row, *(pdf[c] for c in pdf.columns))
-            yield pd.DataFrame([r for r in out if r is not None],
-                               columns=cols)
-
-    return src.mapInPandas(_kernel, schema)
+def _parse_pages(src: DataFrame, key: str, kind: str, body) -> DataFrame:
+    """One 200-status ``kind`` page per row of ``src``, holding ``body``,
+    through the crawl's page kernel (``plans.parse.run_parse_flat``):
+    its ``page`` and ``game`` rows, with the long ``key`` column carried
+    in ``url_canon`` and given back under its own name."""
+    pages = src.select(
+        F.col(key).cast("string").alias("url_canon"),
+        F.lit(kind).alias("callback_kind"), body.alias("body"),
+        F.col(key).alias("url_hash"),
+    ).selectExpr("*", "STRING(NULL) AS host", "0 AS priority", "0 AS attempt",
+                 "200 AS status", "INT(NULL) AS latency_ms")
+    rows = run_parse_flat(pages).where(F.col("item_kind") != "fetch")
+    return rows.select(F.col("url_canon").cast("long").alias(key),
+                       "item_kind", "spans", "game")
 
 
 # ---------------------------------------------------------------------------
@@ -187,7 +187,7 @@ def q_anti_join_seen(spark, sf_dir):
 
 def q_extract_bgg_id(spark, sf_dir):
     """BGG id normalization (C5, utils.py:280-288 regex ^/(board)?game/(\\d+))
-    over synthesized paths."""
+    over paths built from ``orders``."""
     orders = _t(spark, sf_dir, "orders")
     url = F.concat(
         F.lit("/boardgame/"), F.col("o_orderkey").cast("string"), F.lit("/name")
@@ -585,10 +585,8 @@ def q_union_distinct(spark, sf_dir):
 def q_rankings_extract(spark, sf_dir):
     """bgg_rankings historical-layout extraction (E2,
     bgg_rankings.py:247-277): era-B HTML generated deterministically from
-    ``part``, parsed by the REAL parser (stdlib DOM, Arrow-batched); the
+    ``part``, parsed by the crawl's page kernel (``_parse_pages``); the
     oracle recomputes the planted ground truth directly."""
-    from .plans.parse import parse_bgg_rankings
-
     part = _t(spark, sf_dir, "part", "p_partkey")
     pk = F.col("p_partkey")
     rank_s = (pk % 997 + 1).cast("string")
@@ -606,26 +604,17 @@ def q_rankings_extract(spark, sf_dir):
         F.lit("</td></tr></table></div></body></html>"),
     )
 
-    def _row(k, b):
-        games = parse_bgg_rankings(
-            "https://boardgamegeek.com/rankbrowse.php3", b)["games"]
-        if games:
-            g = games[0]
-            return int(k), g["bgg_id"], g["rank"], g["name"], g["bayes_rating"]
-
-    return _map_rows(
-        part.select("p_partkey", body.alias("body")), _row,
-        "p_partkey long, bgg_id long, rank int, name string, "
-        "bayes_rating double",
-    )
+    rows = _parse_pages(part, "p_partkey", "bgg_rankings", body)
+    return rows.where(F.col("item_kind") == "game").select(
+        "p_partkey", "game.bgg_id", "game.rank", "game.name",
+        "game.bayes_rating")
 
 
 def q_geeklist_extract(spark, sf_dir):
     """bgg_geeklist item extraction (bgg_geeklist.py:49-106) incl. the
     excluded-id rule (197551): listitem HTML generated from ``customer``,
-    parsed by the real parser; oracle recomputes ground truth."""
-    from .plans.parse import parse_bgg_geeklist
-
+    parsed by the crawl's page kernel (``_parse_pages``); oracle
+    recomputes ground truth."""
     cust = _t(spark, sf_dir, "customer", "c_custkey")
     ck = F.col("c_custkey")
     gid = F.when(ck % 100 == 0, F.lit(197551)).otherwise(ck).cast("string")
@@ -638,40 +627,57 @@ def q_geeklist_extract(spark, sf_dir):
         F.lit("</a></div></div></body></html>"),
     )
 
-    def _row(k, b):
-        games = parse_bgg_geeklist(
-            "https://boardgamegeek.com/geeklist/1/x", b)["games"]
-        if games:
-            g = games[0]
-            return int(k), g["bgg_id"], g["rank"], g["name"]
-
-    return _map_rows(
-        cust.select("c_custkey", body.alias("body")), _row,
-        "c_custkey long, bgg_id long, rank int, name string",
-    )
+    rows = _parse_pages(cust, "c_custkey", "bgg_geeklist", body)
+    return rows.where(F.col("item_kind") == "game").select(
+        "c_custkey", "game.bgg_id", "game.rank", "game.name")
 
 
 def q_dbpedia_extract(spark, sf_dir):
-    """dbpedia property-table fold (dbpedia.py:375-521): the synthetic
-    SPARQL-XML generator is the planted ground truth — the kernel builds
-    each page from the key and runs the REAL parser; the oracle
-    recomputes the expected fields directly."""
-    from .plans.parse import parse_dbpedia_game
-    from .synth import dbpedia_game_body
-
+    """dbpedia property-table fold (dbpedia.py:375-521): one SPARQL-XML
+    property table per ``customer`` key, built by one ``format_string``
+    (en + de labels, literals, uri values with labels), parsed by the
+    crawl's page kernel (``_parse_pages``); the oracle recomputes the
+    expected fields directly."""
     cust = _t(spark, sf_dir, "customer", "c_custkey")
-
-    def _row(k):
-        k = int(k)
-        g = parse_dbpedia_game(f"dbp://{k}", dbpedia_game_body(k))["games"][0]
-        return (k, g["bgg_id"], g["name"], g["year"], g["designer"][0],
-                g["publisher"][0], g["min_players"], g["min_age"])
-
-    return _map_rows(
-        cust.select("c_custkey"), _row,
-        "c_custkey long, bgg_id long, name string, year int, "
-        "designer string, publisher string, min_players int, min_age int",
-    )
+    ck = F.col("c_custkey")
+    dbo, dbp = "http://dbpedia.org/ontology/", "http://dbpedia.org/property/"
+    rdfs, en = "http://www.w3.org/2000/01/rdf-schema#", ' xml:lang="en"'
+    rows = [  # (property, value[, English label]); %n$d: the args below
+        (f"{rdfs}label", f"<literal{en}>DBp Game %1$d</literal>"),
+        (f"{rdfs}label", '<literal xml:lang="de">DBp Spiel %1$d</literal>'),
+        (f"{dbo}abstract", f"<literal{en}>Abstract of game %1$d.</literal>"),
+        (f"{dbp}date", "<literal>%2$d</literal>"),
+        (f"{dbo}designer", "<uri>http://dbpedia.org/resource/Designer_%3$d"
+         "</uri>", "Designer %3$d"),
+        (f"{dbo}publisher", "<uri>http://dbpedia.org/resource/Publisher_%4$d"
+         "</uri>", "Publisher %4$d"),
+        ("http://xmlns.com/foaf/0.1/depiction", "<uri>http://commons."
+         "wikimedia.org/wiki/Special:FilePath/Game_%1$d.jpg</uri>"),
+        (f"{dbp}players", "<literal>%5$d</literal>"),
+        (f"{dbp}ages", "<literal>%6$d</literal>"),
+        (f"{dbp}bggid", "<literal>%1$d</literal>"),
+        ("http://www.w3.org/2002/07/owl#sameAs",
+         "<uri>https://www.wikidata.org/wiki/Q%7$d</uri>"),
+        (f"{dbo}wikiPageExternalLink",
+         "<uri>https://example.com/game%1$d</uri>"),
+    ]
+    body = F.format_string(
+        '<?xml version="1.0"?><sparql xmlns="http://www.w3.org/2005/sparql-'
+        'results#"><head><variable name="property"/><variable name="value"/>'
+        '<variable name="label"/></head><results>' + "".join(
+            f'<result><binding name="property"><uri>{prop}</uri></binding>'
+            f'<binding name="value">{value}</binding>' + "".join(
+                f'<binding name="label"><literal{en}>{lb}</literal></binding>'
+                for lb in label) + "</result>" for prop, value, *label in rows)
+        + "</results></sparql>",
+        ck, 1985 + ck % 40, ck % 20, ck % 10, 1 + ck % 4, 6 + ck % 10,
+        100000 + ck)
+    rows = _parse_pages(cust, "c_custkey", "dbpedia_game", body)
+    return rows.where(F.col("item_kind") == "game").select(
+        "c_custkey", "game.bgg_id", "game.name", "game.year",
+        F.col("game.designer")[0].alias("designer"),
+        F.col("game.publisher")[0].alias("publisher"),
+        "game.min_players", "game.min_age")
 
 
 def q_entity_resolution(spark, sf_dir):
@@ -763,10 +769,9 @@ def q_ann_ivf_topk(spark, sf_dir):
 def q_hotness_extract(spark, sf_dir):
     """bgg_hotness XMLAPI2 extraction (S7/E1 family,
     bgg_hotness.py:43-99): hotness XML generated deterministically from
-    ``part``, parsed by the REAL parse_hotness kernel (Arrow-batched);
-    the oracle recomputes the planted ground truth directly."""
-    from .plans.parse import parse_hotness
-
+    ``part``, parsed by the crawl's page kernel (``_parse_pages``); each
+    game is paired with its page's span count by one group on the key,
+    and the oracle recomputes the planted ground truth directly."""
     part = _t(spark, sf_dir, "part", "p_partkey")
     pk = F.col("p_partkey")
     gid_s = (pk + 1).cast("string")
@@ -779,19 +784,13 @@ def q_hotness_extract(spark, sf_dir):
         gid_s, F.lit('.jpg"/></item></items>'),
     )
 
-    def _row(k, b):
-        d = parse_hotness(
-            "https://boardgamegeek.com/xmlapi2/hot?type=boardgame", b)
-        if d["games"]:
-            g = d["games"][0]
-            return (int(k), g["bgg_id"], g["rank"], g["name"],
-                    g["image_url"][0], len(d["spans"]))
-
-    return _map_rows(
-        part.select("p_partkey", body.alias("body")), _row,
-        "p_partkey long, bgg_id long, rank int, name string, "
-        "thumb string, n_spans int",
-    )
+    rows = _parse_pages(part, "p_partkey", "bgg_hotness", body)
+    return rows.groupBy("p_partkey").agg(
+        F.first("game", ignorenulls=True).alias("g"),
+        F.max(F.size("spans")).alias("n_spans"),
+    ).where(F.col("g").isNotNull()).select(
+        "p_partkey", "g.bgg_id", "g.rank", "g.name",
+        F.col("g.image_url")[0].alias("thumb"), "n_spans")
 
 
 def q_media_features(spark, sf_dir):

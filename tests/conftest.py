@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -14,7 +15,10 @@ from board_game_scraper_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[4]", shuffle_partitions=4)
+    """One session as wide as ``SPARK_GRAFT_CPUS`` (default: the machine's
+    core count), with as many shuffle partitions."""
+    n = int(os.getenv("SPARK_GRAFT_CPUS") or os.cpu_count())
+    s = get_spark("tests", master=f"local[{n}]", shuffle_partitions=n)
     yield s
 
 

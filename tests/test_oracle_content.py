@@ -66,12 +66,16 @@ def test_query_plans_build_without_spark_jobs(spark):
 @pytest.mark.parametrize("name, most", [
     ("near_dup_pairs", 4), ("embedding_near_dup", 3),
     ("entity_resolution", 6), ("pagination", 2), ("cosine_topk", 2),
+    ("rankings_extract", 2), ("geeklist_extract", 2),
+    ("dbpedia_extract", 2), ("hotness_extract", 3),
 ])
 def test_queries_run_jobs(spark, name, most):
     """Building and collecting each query runs at most ``most`` Spark
     jobs: the candidate-pair queries score each pair inside its bucket
     (``dedup.bucket_pairs``) and join no payload back; pagination and
-    the cosine rank are each one global window, as in their oracles."""
+    the cosine rank are each one global window, as in their oracles;
+    the four extract queries are one pass of the crawl's page kernel,
+    and hotness adds one group that pairs each game with its page."""
     jobs, _ = jobs_to_build(
         spark, f"run-{name}",
         lambda: QUERIES[name](spark, str(DATA)).collect())
@@ -84,9 +88,9 @@ def test_par_spreads_unsplittable_scan_and_keeps_results(spark, monkeypatch):
     parallelism, and query results are identical with the spread off."""
     import board_game_scraper_spark.queries as q
 
-    sf = str(DATA)  # every table is a single row group
+    sf = str(DATA)  # every table is one row group under 4 MB: one split
     n = spark.sparkContext.defaultParallelism
-    assert q._t(spark, sf, "documents").rdd.getNumPartitions() < n
+    assert q._t(spark, sf, "documents").rdd.getNumPartitions() == 1
     spread = q._t(spark, sf, "documents", "doc_id")
     assert spread.rdd.getNumPartitions() == n
 

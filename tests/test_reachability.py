@@ -64,18 +64,36 @@ def imported_modules(path: Path, known: set[str]) -> set[str]:
     return found
 
 
-def test_every_package_module_is_reached_outside_tests():
-    files = {module_name(p): p for p in PKG.rglob("*.py")}
-    known = set(files)
+def reached_from(files: dict[str, Path], todo: set[str]) -> set[str]:
+    """The package modules ``todo`` names, plus every one they import,
+    directly or through each other."""
     reached = set()
-    todo = set().union(*(imported_modules(p, known) for p in ENTRY_POINTS))
     while todo:
         mod = todo.pop()
         reached.add(mod)
-        todo |= imported_modules(files[mod], known) - reached
+        todo |= imported_modules(files[mod], set(files)) - reached
+    return reached
+
+
+def test_every_package_module_is_reached_outside_tests():
+    files = {module_name(p): p for p in PKG.rglob("*.py")}
+    reached = reached_from(files, set().union(
+        *(imported_modules(p, set(files)) for p in ENTRY_POINTS)))
     unreached = sorted(m for m, p in files.items()
                        if p.name != "__init__.py" and m not in reached)
     assert unreached == []
+
+
+def test_queries_do_not_import_the_corpus_generator():
+    """The query surface builds its inputs with Spark columns: no module
+    reached from ``queries`` imports ``synth``, the corpus generator
+    (the crawl oracle ``plans/simulator.py`` is not reached from it)."""
+    files = {module_name(p): p for p in PKG.rglob("*.py")}
+    synth = f"{PKG.name}.synth"
+    importers = sorted(
+        m for m in reached_from(files, {f"{PKG.name}.queries"})
+        if synth in imported_modules(files[m], set(files)))
+    assert importers == []
 
 
 def test_crawl_engine_options_have_callers():

@@ -60,6 +60,10 @@ CHECKS = {
         ("PartitionFilters: [list_id", "IVF probe is a partition-pruned "
          "scan of the persisted index (never a full re-assignment)"),
     ],
+    **{name: [("MapInArrow", "parsed by the crawl's page kernel, "
+                             "run_parse_flat")]
+       for name in ("rankings_extract", "geeklist_extract",
+                    "dbpedia_extract", "hotness_extract")},
 }
 
 FORBIDDEN = ("CartesianProduct",)
